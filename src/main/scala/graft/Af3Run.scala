@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.af3._
@@ -24,9 +25,11 @@ object Af3Run {
     "partner_chain", "max_pae_cutoff", "min_iptm_cutoff", "min_ptm_cutoff",
     "min_residues_cutoff", "max_dist")
 
-  def main(args: Array[String]): Unit = {
-    // fail fast like the reference's argparse (py:581-592): odd arg count
-    // or an unknown/typo'd flag must not silently run with defaults
+  /** Parse `--flag value` pairs into (input dir, output dir, params).
+    * Fails fast like the reference's argparse (py:581-592): an odd arg
+    * count or an unknown/typo'd flag must not silently run with defaults.
+    */
+  def parseArgs(args: Array[String]): (String, String, Af3Params) = {
     if (args.length % 2 != 0)
       sys.error(s"dangling argument '${args.last}'; expected --flag value pairs")
     val a = args.sliding(2, 2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -35,7 +38,6 @@ object Af3Run {
       sys.error(s"unknown flag(s) ${unknown.toSeq.sorted.mkString(", ")}; " +
         s"accepted: ${knownFlags.map("--" + _).mkString(" ")}")
     val inputDir = a.getOrElse("input_dir", sys.error("--input_dir required"))
-    val outBase = a.getOrElse("output_dir", ".")
     val p = Af3Params(
       poiChain = a.getOrElse("poi_chain", "A"),
       partnerChain = a.getOrElse("partner_chain", "B"),
@@ -44,56 +46,52 @@ object Af3Run {
       minPtmCutoff = a.getOrElse("min_ptm_cutoff", "0.0").toDouble,
       minResidues = a.getOrElse("min_residues_cutoff", "5").toInt,
       maxDist = a.getOrElse("max_dist", "8.0").toDouble)
+    (inputDir, a.getOrElse("output_dir", "."), p)
+  }
 
-    val spark = GraftSession.build("graft-af3-run")
-
-    val binders = Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p)
-      .select("job_dir").distinct().cache()
-    val atoms = CifParser.readAtomsDf(spark, inputDir)
-      .join(broadcast(binders), Seq("job_dir"), "left_semi")
-      .cache()
-    val model0 = atoms.filter(col("model_idx") === 0)
-    val info = Af3Pipeline.chainInfo(model0).cache()
-    val pae = Af3Io.readPaeLong(spark, inputDir)
-      .join(broadcast(binders), Seq("job_dir"), "left_semi")
-    val interacting =
-      Af3Pipeline.interactingResidues(pae, info, p)
-    // model-0 contacts/islands computed once, fanned out to all models
-    // (the py:449-469 reuse, as a cached DataFrame)
-    val contacts = Af3Pipeline.contactPairs(model0, interacting, p).cache()
-    val members = Af3Pipeline.partnerIslandMembers(contacts).cache()
-
+  /** Analyze the bundles under `inputDir` and write the four outputs
+    * under `outBase`. Returns the number of report rows; the stages'
+    * caches are released before returning.
+    */
+  def run(spark: SparkSession, inputDir: String, outBase: String, p: Af3Params): Long = {
+    val st = Af3Pipeline.stages(spark, inputDir, p)
     val interactionDir = s"$outBase/Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
     val overlayDir = s"$outBase/Overlays_Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
 
-    // 1. CSV report (py:578) — cached: counted again for the summary line
-    val report = Af3Pipeline.report(Af3Pipeline.interactionIslands(contacts), info, p)
-      .cache()
-    CifWriter.writeReportCsv(report, outBase, p)
+    // 1. CSV report (py:578)
+    CifWriter.writeReportCsv(st.report, outBase, p)
 
     // 2. interaction CIFs: POI chain + island partner residues, model 0
     CifWriter.writeKeyedText(
       CifWriter.renderCif(
-        Af3Pipeline.interactionCifAtoms(atoms, members, p),
+        Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p),
         concat(col("job_dir"), lit("_interaction"))),
       interactionDir, ".cif", withCifHeader = true)
 
     // 3. per-model overlay CIFs, chains relabeled A/B (py:467-469)
     CifWriter.writeKeyedText(
       CifWriter.renderCif(
-        Af3Pipeline.modelExtractAtoms(atoms, members, p),
+        Af3Pipeline.modelExtractAtoms(st.atoms, st.members, p),
         concat(col("job_dir"), lit("/model_"), col("model_idx"))),
       overlayDir, ".cif", withCifHeader = true)
 
     // 4. PyMOL scripts (py:472, 533-535)
     CifWriter.writeKeyedText(
-      Af3Pipeline.pymolScripts(atoms)
+      Af3Pipeline.pymolScripts(st.atoms)
         .select(concat(col("job_dir"), lit("/align_and_save")).as("file_key"),
           lit(1L).as("ord"), col("script").as("line")),
       overlayDir, ".pml")
 
-    val n = report.count()
-    println(s"AF3RUN report_rows=$n binders=${binders.count()}")
-    spark.stop()
+    val n = st.report.count()
+    println(s"AF3RUN report_rows=$n binders=${st.binders.count()}")
+    st.unpersist()
+    n
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (inputDir, outBase, p) = parseArgs(args)
+    val spark = GraftSession.build("graft-af3-run")
+    try run(spark, inputDir, outBase, p)
+    finally spark.stop()
   }
 }

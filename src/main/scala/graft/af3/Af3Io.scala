@@ -32,22 +32,6 @@ object Af3Io {
     StructField("token_res_ids", ArrayType(IntegerType)),
     StructField("_corrupt", StringType)))
 
-  /** Discover job dirs: recursive walk keeping `*_summary_confidences_0
-    * .json`, skipping AppleDouble `._*` names (py:560-566). Returns
-    * (job_dir, summary_path).
-    */
-  def discoverJobs(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*_summary_confidences_0.json")
-      .load(inputDir)
-      .select(col("path").as("summary_path"))
-      .filter(!Scalars.baseName(col("path")).startsWith("._"))
-      .withColumn("job_dir", Scalars.parentDirName(col("summary_path")))
-
-  private def stripScheme(c: org.apache.spark.sql.Column) =
-    regexp_replace(c, "^file:/*", "/")
-
   private def rawSummaries(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(summarySchema)
       .option("multiLine", "true")
@@ -153,8 +137,9 @@ object Af3Io {
           .when(col("pae").isNull || col("token_res_ids").isNull, "missing_keys")
           .otherwise("parsed").as("status"))
 
-    // cif model files: parsed iff the _atom_site loop yielded atoms
-    val cifCounts = CifParser.readAtomsLeanDf(spark, inputDir)
+    // cif model files: parsed iff the _atom_site loop yielded atoms. The
+    // `cif` source prunes this (job_dir, model_idx) scan to its lean parse
+    val cifCounts = spark.read.format("cif").load(inputDir)
       .groupBy(col("job_dir"), col("model_idx"))
       .agg(count(lit(1)).as("__n"))
     val cifRe = "^(.*)_model_(\\d+)\\.cif$"

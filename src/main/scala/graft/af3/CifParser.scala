@@ -33,12 +33,11 @@ final case class CifAtom(
     occupancy: Option[Double] = None,
     b_iso: Option[Double] = None)
 
-/** The 9-field projection the analysis pipeline actually consumes
-  * (chainInfo/contacts/interacting need chain, residue identity and
-  * coordinates — py:156-174, 227-251). Parsing to this shape skips the
-  * fidelity-field extraction and halves the encoder row width; only the
-  * CIF-writing sinks (round-trip fidelity, py:341-345) pay for the full
-  * [[CifAtom]].
+/** The 9-field projection the analysis pipeline consumes (chain,
+  * residue identity and coordinates — py:156-174, 227-251). Parsing to
+  * this shape skips the fidelity-field extraction; the `cif` source
+  * ([[graft.sources.CifDataSource]]) routes scans pruned to these fields
+  * here.
   */
 final case class CifAtomLean(
     job_dir: String,
@@ -269,30 +268,4 @@ object CifParser {
 
   def readAtomsDf(spark: SparkSession, inputDir: String): DataFrame =
     readAtoms(spark, inputDir).toDF()
-
-  /** Lean analysis-projection read: same discovery/decoding as
-    * [[readAtoms]], parsing only the 9 fields the pipeline consumes.
-    * This is manual scan-level column pruning — the narrow schema saves
-    * both parse CPU and encoder row width on every downstream exchange.
-    */
-  def readAtomsLean(spark: SparkSession, inputDir: String): Dataset[CifAtomLean] = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.cif")
-      .load(inputDir)
-      .filter(!col("path").rlike("/\\._[^/]*$"))
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        path match {
-          case pathRe(job, m) =>
-            parseAtomSiteLean(job, m.toInt, decodeText(content))
-          case _ => Iterator.empty
-        }
-      }
-  }
-
-  def readAtomsLeanDf(spark: SparkSession, inputDir: String): DataFrame =
-    readAtomsLean(spark, inputDir).toDF()
 }

@@ -114,11 +114,6 @@ object CifWriter {
     c
   }
 
-  /** Write `(file_key, ord, line)` rows as `outDir/<file_key><suffix>`,
-    * one file per key, lines in `ord` order, optional per-file header.
-    * Scales: keys are hash-distributed across tasks; each task writes only
-    * its partition's keys, through the cluster filesystem.
-    */
   /** A filesystem view that writes no .crc siblings next to user-facing
     * output: unwrap the local ChecksumFileSystem to its raw form rather
     * than flipping setWriteChecksum on the JVM-shared cached instance
@@ -132,6 +127,18 @@ object CifWriter {
       case o => o
     }
 
+  /** Hadoop rename reports most failures via `false`, not an exception:
+    * an unchecked rename would drop output silently.
+    */
+  private def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(src, dst)) sys.error(s"rename $src -> $dst failed")
+
+  /** Write `(file_key, ord, line)` rows as `outDir/<file_key><suffix>`,
+    * one file per key, lines in `ord` order, optional per-file header.
+    * Scales: keys are hash-distributed across tasks; each task writes only
+    * its partition's keys, through the cluster filesystem.
+    */
   def writeKeyedText(
       rendered: DataFrame,
       outDir: String,
@@ -159,10 +166,7 @@ object CifWriter {
           writer.close(); writer = null
           fs.mkdirs(finalPath.getParent) // keys may carry subdirs (job/model_k)
           if (fs.exists(finalPath)) fs.delete(finalPath, false)
-          // Hadoop rename reports most failures via `false`, not an
-          // exception — an unchecked rename would drop output silently
-          if (!fs.rename(tmpPath, finalPath))
-            sys.error(s"rename $tmpPath -> $finalPath failed")
+          renameOrFail(fs, tmpPath, finalPath)
           tmpPath = null // renamed away: nothing for the failure path to clean
         }
         try {
@@ -221,7 +225,8 @@ object CifWriter {
       .headOption.getOrElse(sys.error(s"no csv part written under $tmp")).getPath
     val target = new org.apache.hadoop.fs.Path(outDir, s"$name.csv")
     if (fs.exists(target)) fs.delete(target, false)
-    fs.rename(part, target)
+    // a failed rename leaves the temp dir (and the report in it) in place
+    renameOrFail(fs, part, target)
     fs.delete(tmpPath, true)
   }
 }

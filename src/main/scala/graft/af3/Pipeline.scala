@@ -19,6 +19,44 @@ final case class Af3Params(
     minResidues: Int = 5,
     maxDist: Double = 8.0)
 
+/** The reference dataflow (py:543-579) wired once: summaries -> gate ->
+  * CIF parse -> chain info -> PAE block count -> contact join -> islands
+  * -> report. The CLI ([[graft.Af3Run]]), the `af3_*` suite queries and
+  * the specs all take their frames from here.
+  *
+  * Every stage is a lazy frame, so a consumer of `info` never plans the
+  * contact join. The six frames the CLI's sinks share are cached:
+  * binders, atoms (read once, full fidelity, for analysis and the CIF
+  * sinks alike), info, contacts, members and report. A stage forces its
+  * inputs before it caches itself, so each cached plan reads its inputs'
+  * caches instead of recomputing them.
+  */
+final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params) {
+  private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
+
+  lazy val binders: DataFrame = keep(
+    Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p).select("job_dir").distinct())
+  lazy val atoms: DataFrame = keep(CifParser.readAtomsDf(spark, inputDir)
+    .join(broadcast(binders), Seq("job_dir"), "left_semi"))
+  def model0: DataFrame = atoms.filter(col("model_idx") === 0)
+  lazy val info: DataFrame = keep(Af3Pipeline.chainInfo(model0))
+  lazy val interacting: DataFrame = Af3Pipeline.interactingResidues(
+    Af3Io.readPaeLong(spark, inputDir).join(broadcast(binders), Seq("job_dir"), "left_semi"),
+    info, p)
+  // model-0 contacts/islands computed once, fanned out to all models
+  // (the py:449-469 reuse)
+  lazy val contacts: DataFrame = keep(Af3Pipeline.contactPairs(model0, interacting, p))
+  lazy val members: DataFrame = keep(Af3Pipeline.partnerIslandMembers(contacts))
+  lazy val islands: DataFrame = Af3Pipeline.interactionIslands(contacts)
+  lazy val report: DataFrame = keep(Af3Pipeline.report(islands, info, p))
+
+  /** Release the cached stages, dependents first (uncaching an input
+    * while a cached dependent still reads it would re-plan the dependent).
+    */
+  def unpersist(): Unit = { cached.reverseIterator.foreach(_.unpersist()); cached.clear() }
+}
+
 /** The reference pipeline (E1-E3, SURVEY §3) as composable
   * DataFrame -> DataFrame stages. Everything is keyed and partitioned by
   * `job_dir`; per-job work never crosses executors after the first shuffle.
@@ -28,6 +66,12 @@ final case class Af3Params(
   * islands params (1,3) then (2,3) (py:292, 299).
   */
 object Af3Pipeline {
+
+  /** The reference dataflow over the bundles under `inputDir`, as named
+    * lazy frames (see [[Af3Stages]]).
+    */
+  def stages(spark: SparkSession, inputDir: String, p: Af3Params): Af3Stages =
+    Af3Stages(spark, inputDir, p)
 
   /** filter_confidence_gate (py:66-105): keep binder jobs. Missing keys
     * default to 0 (py:82-83); unknown chain or index out of bounds drops
@@ -74,16 +118,6 @@ object Af3Pipeline {
             array_sort(collect_list(struct(col("res_id"), Scalars.seq1(col("res_name")).as("c")))),
             _.getField("c"))).as("sequence"))
   }
-
-  /** win_prefix_sum_offsets (py:197-204): per job, token start/end offsets
-    * per chain, as a standalone queryable frame. NOTE: interactingResidues
-    * no longer consumes this — it derives positional offsets from
-    * chainInfo directly (fixed A-E index + bounds check); this stays as
-    * the registered prefix-sum operator surface.
-    */
-  def chainOffsets(chainInfoDf: DataFrame): DataFrame =
-    graft.operators.Windows.prefixOffsets(
-      chainInfoDf, Seq("job_dir"), "chain", "residue_length")
 
   /** agg_pae_threshold_count + project_rebase_index (py:185-224): partner
     * tokens j with `count_{i in POI}(pae[i][j] < cutoff) >= min_residues`,
@@ -170,18 +204,8 @@ object Af3Pipeline {
     * deterministic reading.
     */
   def interactionIslands(contacts: DataFrame): DataFrame = {
-    // island stats via a window over (job, island) instead of
-    // groupBy + join-back: one exchange fewer, same result
-    val iw = Window.partitionBy(col("job_dir"), col("p_island"))
-    val keptIslands = Islands.assignIds(
-        contacts.select(col("job_dir"), col("partner_res")).distinct(),
-        Seq("job_dir"), "partner_res", maxGap = 1L, idCol = "p_island")
-      .withColumn("partner_min", min(col("partner_res")).over(iw))
-      .withColumn("partner_max", max(col("partner_res")).over(iw))
-      .withColumn("p_size", count(lit(1)).over(iw))
-      .filter(col("p_size") >= 3)
     val contactsByIsland = contacts
-      .join(keptIslands, Seq("job_dir", "partner_res"))
+      .join(keptPartnerIslands(contacts), Seq("job_dir", "partner_res"))
       .select(col("job_dir"), col("p_island"), col("partner_min"), col("partner_max"),
         col("poi_res")).distinct()
     Islands.assignIds(contactsByIsland,
@@ -252,13 +276,25 @@ object Af3Pipeline {
     * contacts.
     */
   def partnerIslandMembers(contacts: DataFrame): DataFrame =
+    keptPartnerIslands(contacts).select("job_dir", "partner_res")
+
+  /** The kept-island rule shared by [[interactionIslands]] and
+    * [[partnerIslandMembers]] (py:292, 383): distinct contacted partner
+    * residues grouped into islands(gap=1), islands of >= 3 residues
+    * kept. One row per member with its island id and range. The island
+    * stats are a window over (job, island) instead of groupBy +
+    * join-back: one exchange fewer, same result.
+    */
+  private def keptPartnerIslands(contacts: DataFrame): DataFrame = {
+    val iw = Window.partitionBy(col("job_dir"), col("p_island"))
     Islands.assignIds(
         contacts.select(col("job_dir"), col("partner_res")).distinct(),
         Seq("job_dir"), "partner_res", maxGap = 1L, idCol = "p_island")
-      .withColumn("n",
-        count(lit(1)).over(Window.partitionBy(col("job_dir"), col("p_island"))))
-      .filter(col("n") >= 3)
-      .select("job_dir", "partner_res")
+      .withColumn("partner_min", min(col("partner_res")).over(iw))
+      .withColumn("partner_max", max(col("partner_res")).over(iw))
+      .withColumn("p_size", count(lit(1)).over(iw))
+      .filter(col("p_size") >= 3)
+  }
 
   /** sink_pymol_codegen (py:477-541): one `.pml` per job — loads, aligns
     * to model_0 on chain A, util.cbc(), save overlay session.
@@ -284,27 +320,5 @@ object Af3Pipeline {
           lit("util.cbc()"),
           concat(lit("save "), col("job_dir"), lit("_overlay.pse")))
           .as("script"))
-  }
-
-  /** End-to-end E1/E2 (py:543-579 -> 347-387): discover, gate, analyze,
-    * report. Returns the report DataFrame; intermediate frames are
-    * recomputed per call — callers that need several outputs should use
-    * the stage functions directly and `.cache()` shared inputs (the
-    * model-0-fanout reuse of py:449-469).
-    */
-  def run(spark: SparkSession, inputDir: String, p: Af3Params = Af3Params()): DataFrame = {
-    val binders = gate(Af3Io.readSummaries(spark, inputDir), p)
-      .select("job_dir").distinct().cache()
-    // analysis consumes only the lean projection — never pay the
-    // fidelity-field parse here (that's for the CIF-writing sinks)
-    val atoms = CifParser.readAtomsLeanDf(spark, inputDir)
-      .join(broadcast(binders), Seq("job_dir"), "left_semi")
-    val model0 = atoms.filter(col("model_idx") === 0).cache()
-    val info = chainInfo(model0)
-    val pae = Af3Io.readPaeLong(spark, inputDir)
-      .join(broadcast(binders), Seq("job_dir"), "left_semi")
-    val interacting = interactingResidues(pae, info, p)
-    val contacts = contactPairs(model0, interacting, p)
-    report(interactionIslands(contacts), info, p)
   }
 }

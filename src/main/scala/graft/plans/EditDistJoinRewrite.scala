@@ -172,8 +172,8 @@ class EditDistJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     // (sf1: 28.5M rows with array payloads — memory-thrash laps of
     // 8-89 s, and past ~10x it crosses the 8 GB / 512M-row broadcast
     // cap outright). SHUFFLE_MERGE is the graceful-spill strategy the
-    // r11 SHUFFLE_HASH negative already established; ProbeFastss
-    // round-robin minima at sf1: merge 7.8 s (worst lap 17 s) vs
+    // r11 SHUFFLE_HASH negative already established; a since-deleted
+    // probe's round-robin minima at sf1: merge 7.8 s (worst lap 17 s) vs
     // broadcast 7.7 s (worst lap 44 s). The hint goes on the Join node
     // DIRECTLY (a Dataset .hint() here would leave a ResolvedHint the
     // already-finished hint-elimination batch never merges — planner

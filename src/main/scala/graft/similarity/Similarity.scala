@@ -11,21 +11,14 @@ import org.apache.spark.sql.functions._
   * :226-251, to high dimensions).
   *
   * Determinism notes:
-  * - dot products use an ordered left fold (`aggregate` over `zip_with`),
-  *   so the result is bit-identical across engines — never a shuffled
-  *   `sum` of exploded products;
+  * - dot products sum left to right in one row
+  *   ([[graft.functions.VectorExpressions.dot]]), so the result is
+  *   bit-identical across engines — never a shuffled `sum` of exploded
+  *   products;
   * - the LSH path works on `floor(x*1000)` integers: order-free exact
   *   arithmetic, so bucket assignment is engine-independent.
   */
 object Similarity {
-
-  /** Ordered-fold dot product of two double arrays (reference
-    * implementation — [[graft.functions.VectorExpressions.dot]] is the
-    * codegen'd production path; both sum left-to-right, so they are
-    * bit-identical).
-    */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   /** Native codegen'd dot product — the hot-loop form. */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExpressions.dot(a, b)

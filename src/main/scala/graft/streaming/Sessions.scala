@@ -286,42 +286,4 @@ object Sessions {
       }
       .toDF("user_id", "n_events", "first_sec", "last_sec")
   }
-
-  /** [[statefulCounts]] with bounded state: event-time timeout evicts a
-    * user's running span once the watermark passes
-    * `last event + horizonSec` (same contract as
-    * [[statefulIslandsBounded]]). Streaming-only.
-    */
-  def statefulCountsBounded(
-      spark: SparkSession,
-      events: DataFrame,
-      horizonSec: Long,
-      lateness: String = "10 seconds"): DataFrame = {
-    import spark.implicits._
-    events.withWatermark("ts", lateness)
-      .select(col("user_id"), col("ts"), unix_timestamp(col("ts")).as("sec"))
-      .as[(Long, java.sql.Timestamp, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[UserSpanState, (Long, Long, Long, Long)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, rows, state: GroupState[UserSpanState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val secs = rows.map(_._3).toSeq
-            val prev = state.getOption.getOrElse(
-              UserSpanState(0, Long.MaxValue, Long.MinValue))
-            val next = UserSpanState(prev.n + secs.size,
-              math.min(prev.lo, if (secs.isEmpty) prev.lo else secs.min),
-              math.max(prev.hi, if (secs.isEmpty) prev.hi else secs.max))
-            state.update(next)
-            state.setTimeoutTimestamp(math.max(
-              (next.hi + horizonSec) * 1000L,
-              state.getCurrentWatermarkMs() + 1L))
-            Iterator((uid, next.n, next.lo, next.hi))
-          }
-      }
-      .toDF("user_id", "n_events", "first_sec", "last_sec")
-  }
 }

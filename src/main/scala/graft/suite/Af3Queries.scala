@@ -70,9 +70,8 @@ object Af3Queries {
     QDef(
       "af3_agg_chain_info",
       (s, _) =>
-        Af3Pipeline.chainInfo(
-          CifParser.readAtomsLeanDf(s, fx)
-            .filter(col("job_dir") === "job_binder" && col("model_idx") === 0))
+        Af3Pipeline.stages(s, fx, p).info
+          .filter(col("job_dir") === "job_binder")
           .select(col("chain"), col("residue_length"), col("sequence"))
           .orderBy("chain"),
       Some(s"""
@@ -82,14 +81,11 @@ object Af3Queries {
 
     QDef(
       "af3_interacting_residues",
-      (s, _) => {
-        val atoms = CifParser.readAtomsLeanDf(s, fx).filter(col("model_idx") === 0)
-        val info = Af3Pipeline.chainInfo(atoms)
-        Af3Pipeline.interactingResidues(Af3Io.readPaeLong(s, fx), info, p)
+      (s, _) =>
+        Af3Pipeline.stages(s, fx, p).interacting
           .filter(col("job_dir") === "job_binder")
           .select(col("partner_res").cast("long").as("partner_res"))
-          .orderBy("partner_res")
-      },
+          .orderBy("partner_res"),
       Some(s"""
         SELECT partner_res
         FROM read_csv('$fx/expected_interacting.csv', header=true)
@@ -97,18 +93,11 @@ object Af3Queries {
 
     QDef(
       "af3_contact_map",
-      (s, _) => {
-        // atoms feed two branches (offsets + contact pairs): cache so the
-        // CIF parse runs once
-        val atoms = CifParser.readAtomsLeanDf(s, fx).filter(col("model_idx") === 0).cache()
-        val info = Af3Pipeline.chainInfo(atoms)
-        val interacting =
-          Af3Pipeline.interactingResidues(Af3Io.readPaeLong(s, fx), info, p)
-        Af3Pipeline.contactPairs(atoms, interacting, p)
+      (s, _) =>
+        Af3Pipeline.stages(s, fx, p).contacts
           .select(col("partner_res").cast("long").as("partner_res"),
             col("poi_res").cast("long").as("poi_res"))
-          .orderBy("partner_res", "poi_res")
-      },
+          .orderBy("partner_res", "poi_res"),
       Some(s"""
         SELECT partner_res, poi_res
         FROM read_csv('$fx/expected_contacts.csv', header=true)
@@ -117,7 +106,7 @@ object Af3Queries {
     QDef(
       "af3_report",
       (s, _) =>
-        Af3Pipeline.run(s, fx, p)
+        Af3Pipeline.stages(s, fx, p).report
           .orderBy("folder_name", "contact_residues_poi", "interacting_residues_partner"),
       Some(s"""
         SELECT folder_name, contact_residues_poi, contact_sequence,
@@ -160,16 +149,11 @@ object Af3Queries {
         // chain + partner residues in kept islands, rendered + written;
         // the oracle recomputes the expected atom set from the fixture
         // CSVs (atoms x contact-island membership).
-        // shared stages cached the way Af3Run caches them: this query
-        // fires two actions (the file sink + the returned frame), and
-        // without the cache the full parse->contacts chain runs twice
-        val atoms = CifParser.readAtomsDf(s, fx).cache()
-        val info = Af3Pipeline.chainInfo(atoms.filter(col("model_idx") === 0))
-        val interacting = Af3Pipeline.interactingResidues(Af3Io.readPaeLong(s, fx), info, p)
-        val contacts = Af3Pipeline.contactPairs(
-          atoms.filter(col("model_idx") === 0), interacting, p)
-        val members = Af3Pipeline.partnerIslandMembers(contacts)
-        val sel = Af3Pipeline.interactionCifAtoms(atoms, members, p).cache()
+        // this query fires two actions (the file sink + the returned
+        // frame); the stages' caches keep the parse->contacts chain to
+        // one run
+        val st = Af3Pipeline.stages(s, fx, p)
+        val sel = Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p).cache()
         graft.af3.CifWriter.writeKeyedText(
           graft.af3.CifWriter.renderCif(sel, concat(col("job_dir"), lit("_interaction"))),
           sys.props("java.io.tmpdir") + "/graft_cif_filtered", ".cif",
@@ -194,13 +178,8 @@ object Af3Queries {
         // partner residues -> 'B', for every model 0..4. Oracle: the
         // per-model per-chain atom counts derived from the fixture CSVs
         // (identical across models; coordinates differ by jitter only).
-        val atoms = CifParser.readAtomsDf(s, fx).cache()
-        val model0 = atoms.filter(col("model_idx") === 0)
-        val info = Af3Pipeline.chainInfo(model0)
-        val interacting = Af3Pipeline.interactingResidues(Af3Io.readPaeLong(s, fx), info, p)
-        val members = Af3Pipeline.partnerIslandMembers(
-          Af3Pipeline.contactPairs(model0, interacting, p))
-        Af3Pipeline.modelExtractAtoms(atoms, members, p)
+        val st = Af3Pipeline.stages(s, fx, p)
+        Af3Pipeline.modelExtractAtoms(st.atoms, st.members, p)
           .groupBy(col("model_idx").cast("long").as("model_idx"), col("chain"))
           .agg(count(lit(1)).as("n_atoms"))
           .orderBy("model_idx", "chain")
@@ -223,7 +202,7 @@ object Af3Queries {
       "af3_pymol_script",
       (s, _) =>
         Af3Pipeline.pymolScripts(
-          CifParser.readAtomsLeanDf(s, fx).filter(col("job_dir") === "job_binder"))
+          Af3Pipeline.stages(s, fx, p).atoms.filter(col("job_dir") === "job_binder"))
           .select(col("job_dir"), col("script")).orderBy("job_dir"),
       Some("""
         SELECT 'job_binder' AS job_dir,

@@ -3032,8 +3032,9 @@ object ExtrasQueries {
         // association-mining shape. The pair join is a WEDGE join on
         // the order key: per-order fan-out is C(k,2), bounded by the
         // basket size (TPC-H orders carry ~4 lines), never all part
-        // pairs. Round-11 plan surgery, both from a measured probe
-        // (ProbeCopurchase at sf1, 12M pair rows):
+        // pairs. Round-11 plan surgery, both from a measured A/B of
+        // the plan shapes (a one-off probe, since deleted; sf1, 12M
+        // pair rows):
         //  - ONE width-pinned repartition on the order key up front;
         //    the (orderkey, partkey) dedup's clustering requirement is
         //    satisfied by hash(orderkey) (partitioning-subset rule), so
@@ -3379,10 +3380,10 @@ object ExtrasQueries {
         // FastSS index artifact — construction cost (the non-codegen
         // HOF chain) lands in the declared setup phase, the query pays
         // the explode + join + gates. Same frame, bit-identical rows.
-        // r13 layout + prune (guide §2.3/§2.4; ProbeEntity sf1
-        // round-robin: 4.5-5.1 s vs 7.9-8.9 s two-exchange base): ONE
-        // explicit exchange of the exploded stream on the join key
-        // (nk, blk) — REPARTITION_BY_COL, width conf-driven and
+        // r13 layout + prune (guide §2.3/§2.4; a since-deleted stage
+        // probe, sf1 round-robin: 4.5-5.1 s vs 7.9-8.9 s two-exchange
+        // base): ONE explicit exchange of the exploded stream on the
+        // join key (nk, blk) — REPARTITION_BY_COL, width conf-driven and
         // AQE-coalescible, NOT a local-core pin — then the multi-
         // member-bucket count, the semi-join prune and the pair join
         // all reuse that layout instead of shuffling the 19x-exploded
@@ -3391,8 +3392,8 @@ object ExtrasQueries {
         // distinct keys by definition. r12 measured and REJECTED this
         // prune because its duplicated subtrees re-ran the non-codegen
         // variant construction at four more plan sites (237 s cold,
-        // ProbeFastssCold) — with construction behind the artifact's
-        // cache scan every extra site is a memory read and the
+        // one variant per JVM in a since-deleted cold-run probe) — with
+        // construction behind the artifact's cache scan every extra site is a memory read and the
         // objection dissolves. Unique-name corpora (the driver's sf0.1
         // grain) prune ~all singleton buckets before the SMJ sorts;
         // MakeSf's replicated-name sf1/sf10 keep everything and the

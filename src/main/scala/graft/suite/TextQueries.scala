@@ -575,7 +575,8 @@ object TextQueries {
         // cross-document cut-and-paste that per-document dedup can't
         // see). The sliding window is a pure projection
         // (transform(sequence) + slice, all codegen'd builtins, no UDF).
-        // The support count is TWO-PHASE (round 11, ProbeBoiler A/B):
+        // The support count is TWO-PHASE (round 11, measured A/B in a
+        // since-deleted probe):
         // (gram, doc) grain first — map-side combine kills in-doc
         // repeats — then the gram grain with a plain count + sum; the
         // single-pass countDistinct alternative plans as an expand that

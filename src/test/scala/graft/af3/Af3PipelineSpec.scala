@@ -7,12 +7,11 @@ class Af3PipelineSpec extends SparkSpec {
   private val p = Af3Params()
 
   private lazy val summaries = Af3Io.readSummaries(spark, fixtureDir)
-  private lazy val atoms = CifParser.readAtomsDf(spark, fixtureDir).cache()
-  private lazy val model0 = atoms.filter(col("model_idx") === 0)
-  private lazy val chains = Af3Pipeline.chainInfo(model0).cache()
-  private lazy val interacting = Af3Pipeline.interactingResidues(
-    Af3Io.readPaeLong(spark, fixtureDir), chains, p).cache()
-  private lazy val contacts = Af3Pipeline.contactPairs(model0, interacting, p).cache()
+  private lazy val stages = Af3Pipeline.stages(spark, fixtureDir, p)
+  private lazy val atoms = stages.atoms
+  private lazy val chains = stages.info
+  private lazy val interacting = stages.interacting
+  private lazy val contacts = stages.contacts
 
   test("gate keeps binders (incl. latin-1 fallback), drops weak and corrupt jobs") {
     val binders = Af3Pipeline.gate(summaries, p)
@@ -88,7 +87,7 @@ class Af3PipelineSpec extends SparkSpec {
   }
 
   test("full report row (vs oracle CSV)") {
-    val got = Af3Pipeline.report(Af3Pipeline.interactionIslands(contacts), chains, p)
+    val got = stages.report
     val expected = spark.read.option("header", "true").csv(s"$fixtureDir/expected_report.csv")
     assert(got.count() === 1)
     assert(got.collect().head.toSeq ===
@@ -97,7 +96,7 @@ class Af3PipelineSpec extends SparkSpec {
   }
 
   test("interaction CIF atoms: whole POI chain + island partner residues only") {
-    val members = Af3Pipeline.partnerIslandMembers(contacts)
+    val members = stages.members
     assert(members.collect().map(_.getInt(1)).toSeq.sorted === Seq(2, 3, 4, 5, 6))
     val sel = Af3Pipeline.interactionCifAtoms(atoms, members, p)
     val poiRes = sel.filter(col("chain") === "A").select("res_id").distinct().count()
@@ -108,7 +107,7 @@ class Af3PipelineSpec extends SparkSpec {
   }
 
   test("model extract relabels chains across all 5 models") {
-    val members = Af3Pipeline.partnerIslandMembers(contacts)
+    val members = stages.members
     val ext = Af3Pipeline.modelExtractAtoms(atoms, members, p)
     assert(ext.select("chain").distinct().collect().map(_.getString(0)).toSet === Set("A", "B"))
     assert(ext.select("model_idx").distinct().count() === 5)
@@ -125,7 +124,7 @@ class Af3PipelineSpec extends SparkSpec {
   }
 
   test("cif writer round-trips through the parser") {
-    val members = Af3Pipeline.partnerIslandMembers(contacts)
+    val members = stages.members
     val sel = Af3Pipeline.interactionCifAtoms(atoms, members, p)
     val out = java.nio.file.Files.createTempDirectory("graft_cif").toString
     CifWriter.writeKeyedText(
@@ -139,8 +138,8 @@ class Af3PipelineSpec extends SparkSpec {
     assert(reparsed.filter(_.chain == "B").map(_.res_id).distinct.sorted === List(2, 3, 4, 5, 6))
   }
 
-  test("end-to-end run() on the fixture tree") {
-    val rep = Af3Pipeline.run(spark, fixtureDir, p)
+  test("end-to-end stages(...).report on the fixture tree") {
+    val rep = Af3Pipeline.stages(spark, fixtureDir, p).report
     assert(rep.collect().map(_.toSeq).toSeq ===
       Seq(Seq("job_binder", "2-8", "CDEFGHI", "2-6", "RSTVW")))
   }
