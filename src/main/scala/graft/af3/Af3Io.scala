@@ -44,6 +44,17 @@ object Af3Io {
       .withColumn("__path", input_file_name())
       .filter(!Scalars.baseName(col("__path")).startsWith("._"))
 
+  private def rawFullData(spark: SparkSession, inputDir: String): DataFrame =
+    spark.read.schema(fullDataSchema)
+      .option("multiLine", "true")
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt")
+      .option("recursiveFileLookup", "true")
+      .option("pathGlobFilter", "*_full_data_0.json")
+      .json(inputDir)
+      .withColumn("__path", input_file_name())
+      .filter(!Scalars.baseName(col("__path")).startsWith("._"))
+
   /** Read all summaries under `inputDir` keyed by job_dir. Exactly one
     * row per summary file; malformed files carry `_corrupt` and fall
     * out at the gate (≙ return False, py:74-77).
@@ -121,25 +132,15 @@ object Af3Io {
           .otherwise("corrupt_json").as("status"))
 
     // full_data: corrupt vs missing pae/token_res_ids vs parsed
-    val full = spark.read.schema(fullDataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*_full_data_0.json")
-      .json(inputDir)
-      .withColumn("__path", input_file_name())
-      .filter(!base.startsWith("._"))
-      .cache()
+    val full = rawFullData(spark, inputDir).cache()
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
         lit("full_data").as("kind"),
         when(col("_corrupt").isNotNull, "corrupt_json")
           .when(col("pae").isNull || col("token_res_ids").isNull, "missing_keys")
           .otherwise("parsed").as("status"))
 
-    // cif model files: parsed iff the _atom_site loop yielded atoms. The
-    // `cif` source prunes this (job_dir, model_idx) scan to its lean parse
-    val cifCounts = spark.read.format("cif").load(inputDir)
+    // cif model files: parsed iff the _atom_site loop yielded atoms
+    val cifCounts = CifParser.readAtomsDf(spark, inputDir)
       .groupBy(col("job_dir"), col("model_idx"))
       .agg(count(lit(1)).as("__n"))
     val cifRe = "^(.*)_model_(\\d+)\\.cif$"
@@ -160,14 +161,8 @@ object Af3Io {
     * holding it in one pandas frame.
     */
   def readPaeLong(spark: SparkSession, inputDir: String): DataFrame = {
-    val raw = spark.read.schema(fullDataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*_full_data_0.json")
-      .json(inputDir)
-      .withColumn("job_dir", Scalars.parentDirName(input_file_name()))
+    val raw = rawFullData(spark, inputDir)
+      .withColumn("job_dir", Scalars.parentDirName(col("__path")))
       // both keys must be present or the whole file is dropped (py:111-113)
       .filter(col("pae").isNotNull && col("token_res_ids").isNotNull)
     raw.select(col("job_dir"), posexplode(col("pae")).as(Seq("i", "row")))

@@ -33,23 +33,6 @@ final case class CifAtom(
     occupancy: Option[Double] = None,
     b_iso: Option[Double] = None)
 
-/** The 9-field projection the analysis pipeline consumes (chain,
-  * residue identity and coordinates — py:156-174, 227-251). Parsing to
-  * this shape skips the fidelity-field extraction; the `cif` source
-  * ([[graft.sources.CifDataSource]]) routes scans pruned to these fields
-  * here.
-  */
-final case class CifAtomLean(
-    job_dir: String,
-    model_idx: Int,
-    chain: String,
-    res_id: Int,
-    res_name: String,
-    atom_name: String,
-    x: Double,
-    y: Double,
-    z: Double)
-
 /** mmCIF `_atom_site` reader, Spark-native.
   *
   * Shape: `binaryFile` scan (one row per .cif, so the unit of parallelism
@@ -150,27 +133,42 @@ object CifParser {
       if (i >= 0 && i < t.length) t(i).toDoubleOption else None
   }
 
-  /** Single-pass `_atom_site` loop scan shared by the full and lean
-    * parsers. `make(ix, tokens, ordinal)` builds a row from a gated data
-    * line; a NumberFormatException inside it skips the row (malformed,
-    * never fatal) without consuming the ordinal.
+  /** Parse the `_atom_site` loop of one mmCIF text, full fidelity, in
+    * a single pass. Tolerant of field order: positions come from the
+    * `_atom_site.*` header lines. A row whose numeric field does not
+    * parse is skipped (malformed, never fatal) without consuming an
+    * ordinal.
     */
-  private def scanAtomSite[A](text: String)(
-      make: (FieldIdx, Array[String], Int) => A): Iterator[A] = {
+  def parseAtomSite(jobDir: String, modelIdx: Int, text: String): Iterator[CifAtom] = {
     val fields = scala.collection.mutable.ArrayBuffer.empty[String]
     var ix: FieldIdx = null
     var inHeader = false
     var inData = false
     var ordinal = 0
-    val out = scala.collection.mutable.ArrayBuffer.empty[A]
+    val out = scala.collection.mutable.ArrayBuffer.empty[CifAtom]
 
     def emit(l: String): Unit = {
       val t = tokenize(l)
       if (ix.usable(t)) {
         try {
-          val row = make(ix, t, ordinal + 1)
+          out += CifAtom(
+            jobDir, modelIdx,
+            if (ix.iChain >= 0) t(ix.iChain) else "",
+            if (ix.iRes >= 0) t(ix.iRes).toInt else -1,
+            if (ix.iResName >= 0) t(ix.iResName) else "",
+            if (ix.iAtom >= 0) t(ix.iAtom) else "",
+            t(ix.iX).toDouble, t(ix.iY).toDouble, t(ix.iZ).toDouble,
+            ordinal = ordinal + 1,
+            group_pdb = t(ix.iGrp),
+            type_symbol = ix.opt(t, ix.iType, "?"),
+            alt_id = ix.opt(t, ix.iAlt, "."),
+            label_asym_id = ix.opt(t, ix.iLabAsym, "?"),
+            entity_id = ix.opt(t, ix.iEntity, "?"),
+            label_seq_id = ix.opt(t, ix.iLabSeq, "?"),
+            ins_code = ix.opt(t, ix.iIns, "?"),
+            occupancy = ix.optD(t, ix.iOcc),
+            b_iso = ix.optD(t, ix.iB))
           ordinal += 1
-          out += row
         } catch { case _: NumberFormatException => } // malformed row: skip
       }
     }
@@ -200,46 +198,6 @@ object CifParser {
     }
     out.iterator
   }
-
-  /** Parse the `_atom_site` loop of one mmCIF text, full fidelity.
-    * Tolerant of field order: positions come from the `_atom_site.*`
-    * header lines.
-    */
-  def parseAtomSite(jobDir: String, modelIdx: Int, text: String): Iterator[CifAtom] =
-    scanAtomSite(text) { (ix, t, ordinal) =>
-      CifAtom(
-        jobDir, modelIdx,
-        if (ix.iChain >= 0) t(ix.iChain) else "",
-        if (ix.iRes >= 0) t(ix.iRes).toInt else -1,
-        if (ix.iResName >= 0) t(ix.iResName) else "",
-        if (ix.iAtom >= 0) t(ix.iAtom) else "",
-        t(ix.iX).toDouble, t(ix.iY).toDouble, t(ix.iZ).toDouble,
-        ordinal = ordinal,
-        group_pdb = t(ix.iGrp),
-        type_symbol = ix.opt(t, ix.iType, "?"),
-        alt_id = ix.opt(t, ix.iAlt, "."),
-        label_asym_id = ix.opt(t, ix.iLabAsym, "?"),
-        entity_id = ix.opt(t, ix.iEntity, "?"),
-        label_seq_id = ix.opt(t, ix.iLabSeq, "?"),
-        ins_code = ix.opt(t, ix.iIns, "?"),
-        occupancy = ix.optD(t, ix.iOcc),
-        b_iso = ix.optD(t, ix.iB))
-    }
-
-  /** Parse only the analysis projection — no fidelity-field extraction,
-    * no Option boxing. Same row gate and ordinal semantics as
-    * [[parseAtomSite]], so the two paths see identical atom sets.
-    */
-  def parseAtomSiteLean(jobDir: String, modelIdx: Int, text: String): Iterator[CifAtomLean] =
-    scanAtomSite(text) { (ix, t, _) =>
-      CifAtomLean(
-        jobDir, modelIdx,
-        if (ix.iChain >= 0) t(ix.iChain) else "",
-        if (ix.iRes >= 0) t(ix.iRes).toInt else -1,
-        if (ix.iResName >= 0) t(ix.iResName) else "",
-        if (ix.iAtom >= 0) t(ix.iAtom) else "",
-        t(ix.iX).toDouble, t(ix.iY).toDouble, t(ix.iZ).toDouble)
-    }
 
   private val pathRe = ".*/([^/]+)/[^/]+_model_(\\d+)\\.cif$".r
 

@@ -2,6 +2,7 @@ package graft.af3
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** mmCIF rendering + distributed per-key text file sink.
   *
@@ -95,25 +96,6 @@ object CifWriter {
       |_atom_site.pdbx_PDB_model_num
       |""".stripMargin
 
-  /** Snapshot the session Hadoop configuration as a serializable map —
-    * a fresh Configuration() on an executor would drop every
-    * spark.hadoop.* setting (credentials, custom schemes). Same pattern
-    * as CifScan.createReaderFactory.
-    */
-  private def confProps(df: DataFrame): Map[String, String] = {
-    val c = df.sparkSession.sparkContext.hadoopConfiguration
-    val b = Map.newBuilder[String, String]
-    val it = c.iterator()
-    while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-    b.result()
-  }
-
-  private def rebuildConf(props: Map[String, String]): org.apache.hadoop.conf.Configuration = {
-    val c = new org.apache.hadoop.conf.Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-
   /** A filesystem view that writes no .crc siblings next to user-facing
     * output: unwrap the local ChecksumFileSystem to its raw form rather
     * than flipping setWriteChecksum on the JVM-shared cached instance
@@ -145,13 +127,16 @@ object CifWriter {
       suffix: String,
       withCifHeader: Boolean = false): Unit = {
     val hdr = if (withCifHeader) header else ""
-    val props = confProps(rendered)
+    // ship the session's Hadoop conf to the tasks: a fresh
+    // Configuration() there would drop every spark.hadoop.* setting
+    // (credentials, custom schemes)
+    val conf = new SerializableConfiguration(
+      rendered.sparkSession.sparkContext.hadoopConfiguration)
     rendered
       .repartition(col("file_key"))
       .sortWithinPartitions(col("file_key"), col("ord"))
       .select("file_key", "line")
       .foreachPartition { (rows: Iterator[Row]) =>
-        val conf = rebuildConf(props)
         // task-attempt-scoped temp file + rename on close: a retried or
         // speculative attempt never truncates the final path mid-write;
         // the last attempt to finish a key wins with a complete file
@@ -177,7 +162,7 @@ object CifWriter {
               finalPath = new org.apache.hadoop.fs.Path(outDir, key + suffix)
               tmpPath = new org.apache.hadoop.fs.Path(outDir,
                 s".${key.replace('/', '_')}$suffix.__attempt_$attempt")
-              fs = rawFs(finalPath, conf)
+              fs = rawFs(finalPath, conf.value)
               writer = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
                 fs.create(tmpPath, true), java.nio.charset.StandardCharsets.UTF_8))
               if (hdr.nonEmpty) { writer.write(s"data_$key\n"); writer.write(hdr) }

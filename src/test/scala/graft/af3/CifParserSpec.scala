@@ -124,27 +124,6 @@ class CifParserSpec extends SparkSpec {
     }
   }
 
-  test("lean parse equals the projection of the full parse on every file") {
-    val full = CifParser.readAtoms(spark, fixtureDir).collect()
-      .map(a => CifAtomLean(a.job_dir, a.model_idx, a.chain, a.res_id,
-        a.res_name, a.atom_name, a.x, a.y, a.z))
-      .sortBy(a => (a.job_dir, a.model_idx, a.chain, a.res_id, a.atom_name, a.x))
-    // a `cif` scan pruned to the lean fields routes to the lean parse
-    import spark.implicits._
-    val leanCols = Seq("job_dir", "model_idx", "chain", "res_id", "res_name", "atom_name",
-      "x", "y", "z")
-    val pruned = spark.read.format("cif").load(fixtureDir).select(leanCols.map(col): _*)
-    val scanned = pruned.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan.readSchema().fieldNames.toSeq
-    }
-    assert(scanned === Seq(leanCols))
-    val lean = pruned.as[CifAtomLean].collect()
-      .sortBy(a => (a.job_dir, a.model_idx, a.chain, a.res_id, a.atom_name, a.x))
-    assert(lean.toSeq === full.toSeq)
-    assert(lean.nonEmpty)
-  }
-
   test("tolerates reordered fields and unknown categories") {
     val cif =
       """data_x

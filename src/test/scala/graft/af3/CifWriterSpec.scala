@@ -18,7 +18,35 @@ class ReportRenameFailsFs extends RawLocalFileSystem {
     !dst.getName.startsWith("interaction_analysis_") && super.rename(src, dst)
 }
 
+/** A local filesystem under a scheme that only the session's Hadoop conf
+  * maps to an implementation.
+  */
+class SessionOnlyFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("sessiononly:///")
+}
+
 class CifWriterSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("writeKeyedText writes through a filesystem known only to the session's Hadoop conf") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.sessiononly.impl", classOf[SessionOnlyFs].getName)
+    // no cached instance to fall back on: each task must resolve the
+    // scheme from the conf it was shipped
+    hc.set("fs.sessiononly.impl.disable.cache", "true")
+    val out = Files.createTempDirectory("graft_keyed_text").toFile
+    val rendered = Seq(("job_a", 2, "a2"), ("job_a", 1, "a1"), ("job_b/model_0", 1, "b1"))
+      .toDF("file_key", "ord", "line")
+
+    CifWriter.writeKeyedText(rendered, s"sessiononly://${out.getPath}", ".txt")
+
+    def read(name: String): Seq[String] =
+      Files.readAllLines(new File(out, name).toPath).toArray.toSeq.map(_.toString)
+    assert(read("job_a.txt") === Seq("a1", "a2"))
+    assert(read("job_b/model_0.txt") === Seq("b1"))
+    // every task-attempt temp file was renamed into place
+    assert(out.list().toSet === Set("job_a.txt", "job_b"))
+  }
 
   test("writeReportCsv fails on a rename that returns false and keeps the report") {
     spark.sparkContext.hadoopConfiguration
