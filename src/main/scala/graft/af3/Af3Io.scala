@@ -10,7 +10,8 @@ import graft.functions.Scalars
   * Every frame carries `job_dir` (parent folder name) as the end-to-end
   * partition key: one job's data stays co-located through the whole
   * pipeline, so per-job operators shuffle once on `job_dir` and never
-  * again.
+  * again. A job is also the unit of work: its largest frame,
+  * [[readPaeLong]], holds one complex's N x N PAE matrix in one row.
   */
 object Af3Io {
 
@@ -155,17 +156,17 @@ object Af3Io {
     summaries.unionByName(full).unionByName(cifs).unionByName(hidden)
   }
 
-  /** Read all full_data files under `inputDir`, exploded to long/COO form
-    * `(job_dir, i, j, pae)` — the transpose of py:215 is a no-op here, and
-    * the explode shards the N^2 matrix across the cluster instead of
-    * holding it in one pandas frame.
+  /** Read all full_data files under `inputDir`, one row per job:
+    * `(job_dir, pae)` with the whole N x N matrix as
+    * `array<array<double>>` (the transpose of py:215 is a no-op here).
+    * A job's matrix is the unit of work of the PAE block count
+    * ([[Af3Pipeline.interactingResidues]]), so the working set per task is
+    * one complex's N^2 cells, never the N^2 rows a long form would
+    * materialize; the frame scales with the number of jobs.
     */
-  def readPaeLong(spark: SparkSession, inputDir: String): DataFrame = {
-    val raw = rawFullData(spark, inputDir)
-      .withColumn("job_dir", Scalars.parentDirName(col("__path")))
+  def readPaeLong(spark: SparkSession, inputDir: String): DataFrame =
+    rawFullData(spark, inputDir)
       // both keys must be present or the whole file is dropped (py:111-113)
       .filter(col("pae").isNotNull && col("token_res_ids").isNotNull)
-    raw.select(col("job_dir"), posexplode(col("pae")).as(Seq("i", "row")))
-      .select(col("job_dir"), col("i"), posexplode(col("row")).as(Seq("j", "pae")))
-  }
+      .select(Scalars.parentDirName(col("__path")).as("job_dir"), col("pae"))
 }

@@ -1,11 +1,10 @@
 package graft.af3
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Islands, SpatialJoin}
-import graft.functions.Scalars
+import graft.operators.SpatialJoin
+import graft.functions.{Scalars, VectorExpressions}
 
 /** Analysis parameters — the reference CLI's 8 knobs with its defaults
   * (process_af3_outputs.py:581-592).
@@ -19,6 +18,30 @@ final case class Af3Params(
     minResidues: Int = 5,
     maxDist: Double = 8.0)
 
+/** One input row of the per-job contact grid: a POI atom, a partner
+  * atom, or a mark naming an interacting partner residue.
+  */
+private[af3] final case class ContactRow(job_dir: String, kind: Int, res: Int, x: Double, y: Double,
+    z: Double)
+
+private[af3] object ContactRow {
+  val Poi = 0
+  val Partner = 1
+  val Mark = 2
+}
+
+/** One kept contact island of a partner island (see
+  * `Af3Pipeline.nestedIslands`).
+  */
+private[af3] final case class ContactIsland(c_island: Long, contact_min: Int, contact_max: Int,
+    c_size: Long)
+
+/** One kept partner island of a job: its range, its member residues and
+  * its kept contact islands.
+  */
+private[af3] final case class PartnerIsland(job_dir: String, p_island: Long, partner_min: Int,
+    partner_max: Int, members: Seq[Int], contact_islands: Seq[ContactIsland])
+
 /** The reference dataflow (py:543-579) wired once: summaries -> gate ->
   * CIF parse -> chain info -> PAE block count -> contact join -> islands
   * -> report. The CLI ([[graft.Af3Run]]), the `af3_*` suite queries and
@@ -27,9 +50,17 @@ final case class Af3Params(
   * Every stage is a lazy frame, so a consumer of `info` never plans the
   * contact join. The six frames the CLI's sinks share are cached:
   * binders, atoms (read once, full fidelity, for analysis and the CIF
-  * sinks alike), info, contacts, members and report. A stage forces its
+  * sinks alike), info, contacts, the nested islands (members and islands
+  * are projections of them) and report. A stage forces its
   * inputs before it caches itself, so each cached plan reads its inputs'
   * caches instead of recomputing them.
+  *
+  * The analysis tail runs per job, as the reference's loop does: the PAE
+  * block count, the contact grid and the nested islands each hold one
+  * complex in one task — at most its N^2 PAE cells and its model-0 atoms
+  * (~50k for a large complex). The work therefore scales with the number
+  * of jobs; a single complex too big for one task's memory is out of
+  * scope.
   */
 final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params) {
   private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -47,8 +78,10 @@ final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params) 
   // model-0 contacts/islands computed once, fanned out to all models
   // (the py:449-469 reuse)
   lazy val contacts: DataFrame = keep(Af3Pipeline.contactPairs(model0, interacting, p))
-  lazy val members: DataFrame = keep(Af3Pipeline.partnerIslandMembers(contacts))
-  lazy val islands: DataFrame = Af3Pipeline.interactionIslands(contacts)
+  // the island rule runs once per job; members and islands project it
+  private lazy val nested: DataFrame = keep(Af3Pipeline.nestedIslands(contacts))
+  lazy val members: DataFrame = Af3Pipeline.membersOf(nested)
+  lazy val islands: DataFrame = Af3Pipeline.contactIslandsOf(nested)
   lazy val report: DataFrame = keep(Af3Pipeline.report(islands, info, p))
 
   /** Release the cached stages, dependents first (uncaching an input
@@ -121,10 +154,12 @@ object Af3Pipeline {
 
   /** agg_pae_threshold_count + project_rebase_index (py:185-224): partner
     * tokens j with `count_{i in POI}(pae[i][j] < cutoff) >= min_residues`,
-    * rebased to 1-based partner residue numbers. The long-form PAE join
-    * broadcast-joins the tiny per-job offset table into the big exploded
-    * matrix; ranges out of bounds simply select nothing (≙ py's empty
-    * returns at 209-211).
+    * rebased to 1-based partner residue numbers. `paePerJob` is
+    * [[Af3Io.readPaeLong]]'s one row per job; the tiny per-job offset table
+    * is broadcast-joined onto it and one codegen'd kernel
+    * ([[VectorExpressions.paeBlockHits]]) counts the POI x partner block of
+    * each matrix in place. Ranges out of bounds, ragged rows and missing
+    * cells simply count nothing (≙ py's empty returns at 209-211).
     *
     * Offsets are POSITIONAL, exactly as the reference indexes its
     * chain_lengths list (py:197-211): chain X's token range is
@@ -135,11 +170,11 @@ object Af3Pipeline {
     * C only, partner C -> idx 2 >= 2 lengths) yields no rows, mirroring
     * the reference's IndexError -> [] path.
     */
-  def interactingResidues(paeLong: DataFrame, chainInfoDf: DataFrame, p: Af3Params): DataFrame = {
+  def interactingResidues(paePerJob: DataFrame, chainInfoDf: DataFrame, p: Af3Params): DataFrame = {
     val (poiIdx, partnerIdx) =
       (Scalars.chainToIdx.get(p.poiChain), Scalars.chainToIdx.get(p.partnerChain)) match {
         case (Some(a), Some(b)) => (a, b)
-        case _ => return paeLong.sparkSession.emptyDataFrame
+        case _ => return paePerJob.sparkSession.emptyDataFrame
           .withColumn("job_dir", lit("")).withColumn("partner_res", lit(0))
           .limit(0) // invalid chain letter: nothing interacts (py:93-94)
       }
@@ -157,40 +192,52 @@ object Af3Pipeline {
         startOf(col("lens"), partnerIdx).as("start_partner"),
         (startOf(col("lens"), partnerIdx) + element_at(col("lens"), partnerIdx + 1))
           .as("end_partner"))
-    paeLong
+    paePerJob
       .join(broadcast(off), Seq("job_dir"))
-      .filter(
-        col("i") >= col("start_poi") && col("i") < col("end_poi") &&
-        col("j") >= col("start_partner") && col("j") < col("end_partner") &&
-        col("pae") < p.maxPaeCutoff)
-      .groupBy(col("job_dir"), col("j"), col("start_partner"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") >= p.minResidues)
-      .select(col("job_dir"),
-        (col("j") - col("start_partner") + 1).cast("int").as("partner_res"))
+      .select(col("job_dir"), explode(VectorExpressions.paeBlockHits(col("pae"),
+        col("start_poi"), col("end_poi"), col("start_partner"), col("end_partner"),
+        lit(p.maxPaeCutoff), lit(p.minResidues))).as("partner_res"))
   }
 
   /** join_contact_eps_distance (py:226-251): for each interacting partner
     * residue, the distinct POI residues with any atom pair within
-    * `maxDist`. Grid-cell eps-join partitioned by job_dir (the scale form
-    * of the reference's per-job KD-tree).
+    * `maxDist`. One task per job, as the reference's per-job KD-tree: the
+    * job's POI atoms, partner atoms and interacting residues meet in one
+    * group, and [[SpatialJoin.localPairs]] runs the ε-grid in memory.
+    * Rows come out sorted by (partner_res, poi_res) within a job.
     */
   def contactPairs(atoms: DataFrame, interacting: DataFrame, p: Af3Params): DataFrame = {
+    import atoms.sparkSession.implicits._
     // is_aa(standard=False) also admits modified residues (py:230-231)
     val isAA = col("res_name").isin(Scalars.extendedAA: _*)
-    val poiAtoms = atoms
-      .filter(col("chain") === p.poiChain && isAA)
-      .select(col("job_dir"), col("res_id").as("poi_res"), col("x"), col("y"), col("z"))
-    val partnerAtoms = atoms
-      .filter(col("chain") === p.partnerChain && isAA)
-      .join(interacting.withColumnRenamed("partner_res", "res_id"),
-        Seq("job_dir", "res_id"), "left_semi")
-      .select(col("job_dir"), col("res_id").as("partner_res"), col("x"), col("y"), col("z"))
-    SpatialJoin
-      .epsJoin(partnerAtoms, poiAtoms, p.maxDist, Seq("job_dir"), "p_", "q_")
-      .select(col("job_dir"), col("p_partner_res").as("partner_res"),
-        col("q_poi_res").as("poi_res"))
-      .distinct()
+    def side(chain: String, kind: Int): DataFrame = atoms
+      .filter(col("chain") === chain && isAA)
+      .select(col("job_dir"), lit(kind).as("kind"), col("res_id").as("res"),
+        col("x"), col("y"), col("z"))
+    // the interacting residues ride along as coordinate-less marks
+    val marks = interacting.select(col("job_dir"), lit(ContactRow.Mark).as("kind"),
+      col("partner_res").cast("int").as("res"), lit(0.0).as("x"), lit(0.0).as("y"),
+      lit(0.0).as("z"))
+    val eps = p.maxDist
+    side(p.poiChain, ContactRow.Poi).unionByName(side(p.partnerChain, ContactRow.Partner))
+      .unionByName(marks)
+      .as[ContactRow]
+      .groupByKey(_.job_dir)
+      .flatMapGroups((job, rows) => contactsOfJob(rows, eps).map { case (q, r) => (job, q, r) })
+      .toDF("job_dir", "partner_res", "poi_res")
+  }
+
+  /** One job's distinct (partner_res, poi_res) contacts, sorted. */
+  private def contactsOfJob(rows: Iterator[ContactRow], eps: Double): Iterator[(Int, Int)] = {
+    val all = rows.toArray
+    val interacting = all.filter(_.kind == ContactRow.Mark).map(_.res).toSet
+    val poi = all.filter(_.kind == ContactRow.Poi)
+    val partner = all.filter(r => r.kind == ContactRow.Partner && interacting(r.res))
+    def xyz(a: Array[ContactRow]) = a.flatMap(r => Array(r.x, r.y, r.z))
+    val pairs = scala.collection.mutable.HashSet.empty[(Int, Int)]
+    SpatialJoin.localPairs(xyz(partner), xyz(poi), eps)((l, r) =>
+      pairs += ((partner(l).res, poi(r).res)))
+    pairs.toArray.sorted.iterator
   }
 
   /** win_nested_islands (py:288-302): islands(gap=1,min=3) over partner
@@ -203,20 +250,16 @@ object Af3Pipeline {
     * CPython's ascending small-int set iteration, and the only
     * deterministic reading.
     */
-  def interactionIslands(contacts: DataFrame): DataFrame = {
-    val contactsByIsland = contacts
-      .join(keptPartnerIslands(contacts), Seq("job_dir", "partner_res"))
+  def interactionIslands(contacts: DataFrame): DataFrame =
+    contactIslandsOf(nestedIslands(contacts))
+
+  /** [[interactionIslands]] from a [[nestedIslands]] frame. */
+  private[af3] def contactIslandsOf(nested: DataFrame): DataFrame =
+    nested
       .select(col("job_dir"), col("p_island"), col("partner_min"), col("partner_max"),
-        col("poi_res")).distinct()
-    Islands.assignIds(contactsByIsland,
-        Seq("job_dir", "p_island"), "poi_res", maxGap = 2L, idCol = "c_island")
-      .groupBy(col("job_dir"), col("p_island"), col("partner_min"), col("partner_max"),
-        col("c_island"))
-      .agg(min(col("poi_res")).as("contact_min"),
-        max(col("poi_res")).as("contact_max"),
-        count(lit(1)).as("c_size"))
-      .filter(col("c_size") >= 3)
-  }
+        explode(col("contact_islands")).as("c"))
+      .select(col("job_dir"), col("p_island"), col("partner_min"), col("partner_max"),
+        col("c.c_island"), col("c.contact_min"), col("c.contact_max"), col("c.c_size"))
 
   /** The CSV report rows (py:372-380): one row per (partner island,
     * contact island) with range labels and sequence substrings.
@@ -275,25 +318,55 @@ object Af3Pipeline {
     * 409-411): partner residues in kept (gap=1, min=3) islands with
     * contacts.
     */
-  def partnerIslandMembers(contacts: DataFrame): DataFrame =
-    keptPartnerIslands(contacts).select("job_dir", "partner_res")
+  def partnerIslandMembers(contacts: DataFrame): DataFrame = membersOf(nestedIslands(contacts))
 
-  /** The kept-island rule shared by [[interactionIslands]] and
-    * [[partnerIslandMembers]] (py:292, 383): distinct contacted partner
-    * residues grouped into islands(gap=1), islands of >= 3 residues
-    * kept. One row per member with its island id and range. The island
-    * stats are a window over (job, island) instead of groupBy +
-    * join-back: one exchange fewer, same result.
+  /** [[partnerIslandMembers]] from a [[nestedIslands]] frame. */
+  private[af3] def membersOf(nested: DataFrame): DataFrame =
+    nested.select(col("job_dir"), explode(col("members")).as("partner_res"))
+
+  /** The island rule shared by [[interactionIslands]] and
+    * [[partnerIslandMembers]] (py:292, 299, 383), run once per job over
+    * sorted arrays: the distinct contacted partner residues grouped into
+    * islands(gap=1), islands of >= 3 residues kept; per kept island the
+    * distinct POI residues its members contact, grouped into
+    * islands(gap=2), islands of >= 3 residues kept. One row per kept
+    * partner island ([[PartnerIsland]]). Island ids count every island,
+    * kept or not, in ascending order from 0.
     */
-  private def keptPartnerIslands(contacts: DataFrame): DataFrame = {
-    val iw = Window.partitionBy(col("job_dir"), col("p_island"))
-    Islands.assignIds(
-        contacts.select(col("job_dir"), col("partner_res")).distinct(),
-        Seq("job_dir"), "partner_res", maxGap = 1L, idCol = "p_island")
-      .withColumn("partner_min", min(col("partner_res")).over(iw))
-      .withColumn("partner_max", max(col("partner_res")).over(iw))
-      .withColumn("p_size", count(lit(1)).over(iw))
-      .filter(col("p_size") >= 3)
+  private[af3] def nestedIslands(contacts: DataFrame): DataFrame = {
+    import contacts.sparkSession.implicits._
+    contacts
+      .select(col("job_dir"), col("partner_res").cast("int"), col("poi_res").cast("int"))
+      .as[(String, Int, Int)]
+      .groupByKey(_._1)
+      .flatMapGroups { (job, rows) =>
+        val byPartner = rows.toSeq.groupMap(_._2)(_._3)
+        val partners = byPartner.keys.toArray.sorted
+        runs(partners, maxGap = 1).zipWithIndex.collect {
+          case ((from, until), id) if until - from >= MinIsland =>
+            val members = partners.slice(from, until)
+            val pois = members.flatMap(byPartner).distinct.sorted
+            val contactIslands = runs(pois, maxGap = 2).zipWithIndex.collect {
+              case ((f, u), cid) if u - f >= MinIsland =>
+                ContactIsland(cid.toLong, pois(f), pois(u - 1), (u - f).toLong)
+            }
+            PartnerIsland(job, id.toLong, members.head, members.last, members.toSeq,
+              contactIslands.toSeq)
+        }.iterator
+      }
+      .toDF()
+  }
+
+  private val MinIsland = 3
+
+  /** find_consecutive_groups (py:253-286) over an ascending, distinct
+    * array: the `[from, until)` index ranges of its islands, a new island
+    * wherever the gap to the previous value exceeds `maxGap`.
+    */
+  private def runs(sorted: Array[Int], maxGap: Int): Array[(Int, Int)] = {
+    val starts = (0 until sorted.length).filter(k =>
+      k == 0 || sorted(k).toLong - sorted(k - 1) > maxGap).toArray
+    starts.zip(starts.drop(1) :+ sorted.length)
   }
 
   /** sink_pymol_codegen (py:477-541): one `.pml` per job — loads, aligns

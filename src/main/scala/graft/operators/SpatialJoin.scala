@@ -87,6 +87,36 @@ object SpatialJoin {
       .drop("__cx", "__cy", "__cz")
   }
 
+  /** In-memory form of [[epsJoin]] for the points of one group held by
+    * one task (one AF3 job's atoms): the same `cellSize(eps)` grid, the
+    * same 27-cell probe and the same exact `dx*dx + dy*dy + dz*dz <= eps²`
+    * test, with `dx = left - right` as in [[epsJoin]]. Points are packed
+    * `x, y, z` triples; `emit(l, r)` gets each qualifying pair of point
+    * indices exactly once.
+    */
+  def localPairs(left: Array[Double], right: Array[Double], eps: Double)(
+      emit: (Int, Int) => Unit): Unit = {
+    val cs = cellSize(eps)
+    val eps2 = eps * eps
+    def cell(c: Double): Long = math.floor(c / cs).toLong
+    val grid = scala.collection.mutable.HashMap.empty[(Long, Long, Long),
+      scala.collection.mutable.ArrayBuffer[Int]]
+    for (r <- 0 until right.length / 3)
+      grid.getOrElseUpdate((cell(right(3 * r)), cell(right(3 * r + 1)), cell(right(3 * r + 2))),
+        scala.collection.mutable.ArrayBuffer.empty[Int]) += r
+    for (l <- 0 until left.length / 3) {
+      val (x, y, z) = (left(3 * l), left(3 * l + 1), left(3 * l + 2))
+      val (cx, cy, cz) = (cell(x), cell(y), cell(z))
+      for (ox <- -1 to 1; oy <- -1 to 1; oz <- -1 to 1)
+        grid.get((cx + ox, cy + oy, cz + oz)).foreach(_.foreach { r =>
+          val dx = x - right(3 * r)
+          val dy = y - right(3 * r + 1)
+          val dz = z - right(3 * r + 2)
+          if (dx * dx + dy * dy + dz * dz <= eps2) emit(l, r)
+        })
+    }
+  }
+
   /** Self ε-join producing each unordered pair once (idCol asymmetry). */
   def selfEpsJoin(points: DataFrame, idCol: String, eps: Double,
       partCols: Seq[String] = Nil): DataFrame =

@@ -121,10 +121,10 @@ object Af3Queries {
         // per job, one line per row i with comma-joined values, written
         // next to the (writable) output dir; the query returns the
         // rendered lines for the oracle.
-        val pae = graft.af3.Af3Io.readPaeLong(s, fx)
-        val lines = graft.operators.Aggregates.orderedStringAgg(
-            pae.withColumn("v", col("pae").cast("string")),
-            Seq("job_dir", "i"), Seq("j"), col("v"), "line", sep = ",")
+        val lines = Af3Io.readPaeLong(s, fx)
+          .select(col("job_dir"), posexplode(col("pae")).as(Seq("i", "row")))
+          .select(col("job_dir"), col("i"),
+            array_join(col("row").cast("array<string>"), ",").as("line"))
         graft.af3.CifWriter.writeKeyedText(
           lines.select(concat(col("job_dir"), lit("_pae")).as("file_key"),
             col("i").cast("long").as("ord"), col("line")),

@@ -125,14 +125,30 @@ object Artifacts {
     * verify phases) are untouched.
     */
   def wipeSpill(s: SparkSession, dir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(spillRoot)
-    val fs = root.getFileSystem(conf)
-    val tag = s"_${dirTag(dir)}_"
+    wipeSpillUnder(root.getFileSystem(s.sparkContext.hadoopConfiguration), root,
+      s"_${dirTag(dir)}_")
+  }
+
+  /** [[wipeSpill]] over an explicit filesystem and root: delete every
+    * spill whose name contains `tag`.
+    */
+  private[graft] def wipeSpillUnder(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, tag: String): Unit =
     if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      if (st.getPath.getName.contains(tag))
-        try fs.delete(st.getPath, true) catch { case _: Throwable => () }
+      if (st.getPath.getName.contains(tag)) deleteOrWarn(fs, st.getPath)
     }
+
+  /** Recursive delete that never fails the caller but never hides a
+    * failure either: a delete that throws or returns `false` leaves one
+    * stderr line with the path and the cause.
+    */
+  private def deleteOrWarn(fs: org.apache.hadoop.fs.FileSystem,
+      path: org.apache.hadoop.fs.Path): Unit = {
+    val cause =
+      try { if (fs.delete(path, true)) None else Some("delete returned false") }
+      catch { case e: Throwable => Some(e.toString) }
+    cause.foreach(c => System.err.println(s"[artifacts] could not delete $path: $c"))
   }
 
   private def loadOrBuild(s: SparkSession, dir: String, table: String,
@@ -158,7 +174,7 @@ object Artifacts {
       val cut = n.lastIndexOf('_')
       val base = if (cut > 0) n.substring(0, cut) else n
       if ((base == scope || base == s"${table}_${key}") && n != name)
-        try fs.delete(st.getPath, true) catch { case _: Throwable => () }
+        deleteOrWarn(fs, st.getPath)
     }
     val tmp = new org.apache.hadoop.fs.Path(root,
       s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -166,11 +182,10 @@ object Artifacts {
     // a partial dest (killed mid-write, no _SUCCESS) blocks the rename:
     // clear it; if a racing writer completed meanwhile, the rename below
     // fails and we read the winner's files
-    if (fs.exists(dest) && !fs.exists(ok))
-      try fs.delete(dest, true) catch { case _: Throwable => () }
+    if (fs.exists(dest) && !fs.exists(ok)) deleteOrWarn(fs, dest)
     if (!fs.rename(tmp, dest)) {
       // a concurrent writer won the rename: discard ours, read theirs
-      try fs.delete(tmp, true) catch { case _: Throwable => () }
+      deleteOrWarn(fs, tmp)
     }
     s.read.parquet(dest.toString)
   }

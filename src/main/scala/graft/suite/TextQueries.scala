@@ -57,15 +57,16 @@ object TextQueries {
     * apply their own support thresholds (collocations keeps >= 5), and
     * the unfiltered total sum(c2) is the corpus bigram count the PMI
     * normalizer needs (equal to sum over docs of max(len-1, 0) — every
-    * doc emits exactly len-1 bigrams; `tokens` never returns an empty
-    * array, so the greatest() guard in the old inline form was
-    * vacuous).
+    * doc emits exactly len-1 bigrams). Documents with fewer than 2
+    * tokens emit none and are dropped before the slices: an empty token
+    * array would make `slice(ts, 1, -1)` throw.
     */
   private[suite] def sharedBigramCounts(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
     Artifacts.memo(s, dir, "documents", "bigram_counts")(
       Registry.tbl(s, dir, "documents")
         .select(TextFunctions.tokens(col("text")).as("ts"))
+        .filter(size(col("ts")) >= 2)
         .select(explode(zip_with(
           slice(col("ts"), lit(1), size(col("ts")) - 1),
           slice(col("ts"), lit(2), size(col("ts")) - 1),

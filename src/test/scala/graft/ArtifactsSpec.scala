@@ -1,8 +1,24 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, File, PrintStream}
+import java.net.URI
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.suite.Artifacts
+
+/** A local filesystem whose delete fails the two ways Hadoop reports a
+  * failure: by throwing (names ending `_throws`) and by returning `false`
+  * (names ending `_refuses`).
+  */
+class DeleteFailsFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("deletefails:///")
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (p.getName.endsWith("_throws")) throw new java.io.IOException("stub refuses to delete")
+    else !p.getName.endsWith("_refuses") && super.delete(p, recursive)
+}
 
 /** Pins the artifact spill tier's two deletion rules (both were live
   * bugs in round 7's prefix-matched, dir-agnostic form):
@@ -80,5 +96,27 @@ class ArtifactsSpec extends SparkSpec {
     val reloaded = Artifacts.memo(spark, dirA, "region", "spec_probe")(
       sys.error("spill reload expected — build must not re-run"))
     assert(reloaded.count() == 3)
+  }
+
+  test("wipeSpill logs the path and cause of each failed delete and wipes the rest") {
+    val root = Files.createTempDirectory("graft_wipe").toFile
+    val names = Seq("t_k_cafe0001_1", "t_k_cafe0001_throws", "t_k_cafe0001_refuses",
+      "t_k_beef0002_1")
+    names.foreach(n => new File(root, n).mkdir())
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set("fs.deletefails.impl", classOf[DeleteFailsFs].getName)
+    conf.set("fs.deletefails.impl.disable.cache", "true")
+    val rootPath = new Path(s"deletefails://${root.getPath}")
+    val err = new ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new PrintStream(err, true))
+    try Artifacts.wipeSpillUnder(rootPath.getFileSystem(conf), rootPath, "_cafe0001_")
+    finally System.setErr(saved)
+
+    assert(root.list().toSet === names.tail.toSet)
+    val log = err.toString
+    assert(log.contains("t_k_cafe0001_throws: java.io.IOException: stub refuses to delete"))
+    assert(log.contains("t_k_cafe0001_refuses: delete returned false"))
+    assert(!log.contains("t_k_cafe0001_1") && !log.contains("beef0002"))
   }
 }

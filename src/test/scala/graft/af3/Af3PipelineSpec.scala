@@ -39,8 +39,7 @@ class Af3PipelineSpec extends SparkSpec {
     // so a partner_chain=C analysis must yield no interacting residues
     val info = Seq(("jx", "A", 5L, "AAAAA"), ("jx", "C", 5L, "CCCCC"))
       .toDF("job_dir", "chain", "residue_length", "sequence")
-    val pae = Seq.tabulate(10, 10)((i, j) => ("jx", i, j, 1.0))
-      .flatten.toDF("job_dir", "i", "j", "pae")
+    val pae = Seq(("jx", Seq.fill(10, 10)(1.0))).toDF("job_dir", "pae")
     val out = Af3Pipeline.interactingResidues(
       pae, info, p.copy(partnerChain = "C", minResidues = 1))
     assert(out.count() === 0)
@@ -49,8 +48,7 @@ class Af3PipelineSpec extends SparkSpec {
     // length slot (B's tokens), exactly as the reference indexes the list
     val info2 = Seq(("jy", "B", 4L, "BBBB"), ("jy", "C", 6L, "CCCCCC"))
       .toDF("job_dir", "chain", "residue_length", "sequence")
-    val pae2 = Seq.tabulate(10, 10)((i, j) => ("jy", i, j, 1.0))
-      .flatten.toDF("job_dir", "i", "j", "pae")
+    val pae2 = Seq(("jy", Seq.fill(10, 10)(1.0))).toDF("job_dir", "pae")
     val out2 = Af3Pipeline.interactingResidues(
       pae2, info2, p.copy(partnerChain = "B", minResidues = 1))
     // partner B -> idx 1 -> range [4, 10): residues 1..6
