@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.af3._
 
@@ -61,26 +60,10 @@ object Af3Run {
     // 1. CSV report (py:578)
     CifWriter.writeReportCsv(st.report, outBase, p)
 
-    // 2. interaction CIFs: POI chain + island partner residues, model 0
-    CifWriter.writeKeyedText(
-      CifWriter.renderCif(
-        Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p),
-        concat(col("job_dir"), lit("_interaction"))),
-      interactionDir, ".cif", withCifHeader = true)
-
-    // 3. per-model overlay CIFs, chains relabeled A/B (py:467-469)
-    CifWriter.writeKeyedText(
-      CifWriter.renderCif(
-        Af3Pipeline.modelExtractAtoms(st.atoms, st.members, p),
-        concat(col("job_dir"), lit("/model_"), col("model_idx"))),
-      overlayDir, ".cif", withCifHeader = true)
-
-    // 4. PyMOL scripts (py:472, 533-535)
-    CifWriter.writeKeyedText(
-      Af3Pipeline.pymolScripts(st.atoms)
-        .select(concat(col("job_dir"), lit("/align_and_save")).as("file_key"),
-          lit(1L).as("ord"), col("script").as("line")),
-      overlayDir, ".pml")
+    // 2. per job: the interaction CIF (POI chain + island partner
+    // residues, model 0), the overlay CIFs with chains relabeled A/B
+    // (py:467-469) and the PyMOL script (py:472, 533-535)
+    CifWriter.writeJobFiles(st.atoms, st.members, p, interactionDir, overlayDir)
 
     val n = st.report.count()
     println(s"AF3RUN report_rows=$n binders=${st.binders.count()}")

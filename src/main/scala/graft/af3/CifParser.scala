@@ -66,6 +66,11 @@ object CifParser {
     }
   }
 
+  /** CIF whitespace, the separator between the tokens of a data line.
+    * [[CifWriter]] quotes every value that contains one.
+    */
+  def isCifSpace(c: Char): Boolean = Character.isWhitespace(c)
+
   /** Split one data line into CIF tokens, honoring quoted values: a
     * quote char at token start opens, and closes only when the same
     * quote is followed by whitespace or line end (so `'C1''` and
@@ -76,7 +81,7 @@ object CifParser {
     val n = line.length
     var i = 0
     while (i < n) {
-      while (i < n && Character.isWhitespace(line.charAt(i))) i += 1
+      while (i < n && isCifSpace(line.charAt(i))) i += 1
       if (i < n) {
         val c = line.charAt(i)
         if (c == '\'' || c == '"') {
@@ -84,7 +89,7 @@ object CifParser {
           var j = start
           var end = -1
           while (j < n && end < 0) {
-            if (line.charAt(j) == c && (j + 1 >= n || Character.isWhitespace(line.charAt(j + 1))))
+            if (line.charAt(j) == c && (j + 1 >= n || isCifSpace(line.charAt(j + 1))))
               end = j
             j += 1
           }
@@ -92,7 +97,7 @@ object CifParser {
           else { out += line.substring(start); i = n } // unterminated: rest of line
         } else {
           val start = i
-          while (i < n && !Character.isWhitespace(line.charAt(i))) i += 1
+          while (i < n && !isCifSpace(line.charAt(i))) i += 1
           out += line.substring(start, i)
         }
       }

@@ -4,74 +4,157 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
-/** mmCIF rendering + distributed per-key text file sink.
+/** mmCIF and PyMOL rendering + distributed per-key text file sinks.
   *
   * The reference writes one file per job via BioPython's MMCIFIO
   * (py:338-345, 423-427) and one `.pml` per job (py:533-535). Spark's
   * native writers produce one *directory* per partition; AF3 consumers
-  * expect single named files, so the sink repartitions by file key and has
-  * each executor task stream its keys' rows to exact paths — distributed,
-  * no driver collect, deterministic order via an explicit sort. All file
-  * IO goes through the Hadoop FileSystem API with the session's
-  * configuration shipped to executors, so the sink works on any cluster
-  * filesystem (HDFS/S3/local), not only a driver-shared local disk.
+  * expect single named files, so the sinks repartition by job or file key
+  * and have each executor task stream its keys' rows to exact paths —
+  * distributed, no driver collect, deterministic order via an explicit
+  * sort. An `_atom_site` line has one renderer ([[atomLine]]) and a
+  * `.pml` one ([[pml]]). All file IO goes through the Hadoop FileSystem
+  * API with the session's configuration shipped to executors, so the
+  * sinks work on any cluster filesystem (HDFS/S3/local), not only a
+  * driver-shared local disk.
   */
 object CifWriter {
 
-  /** Quote a CIF token the way mmCIF requires when it carries a quote or
-    * whitespace (nucleic-acid atom names like C1' -> "C1'"); plain tokens
-    * pass through. Mirrors BioPython MMCIFIO's quoting on write.
+  /** Append `t` as a CIF value, quoted the way mmCIF requires when it
+    * carries a quote or whitespace (nucleic-acid atom names like C1' ->
+    * "C1'"); plain tokens pass through. Mirrors BioPython MMCIFIO's
+    * quoting on write. Whitespace is [[CifParser.isCifSpace]], the
+    * reader's own token separator.
     */
-  private def cifQuote(c: Column): Column =
-    when(c.contains("'"), concat(lit("\""), c, lit("\"")))
-      // a bare token may not START with a quote char (the reader would
-      // treat it as an opening quote), nor contain whitespace
-      .when(c.rlike("\\s") || c === "" || c.startsWith("\""),
-        concat(lit("'"), c, lit("'")))
-      .otherwise(c)
+  private def appendToken(sb: java.lang.StringBuilder, t: String): Unit =
+    if (t.indexOf('\'') >= 0) sb.append('"').append(t).append('"')
+    // a bare token may not START with a quote char (the reader would
+    // treat it as an opening quote), nor contain whitespace
+    else if (t.isEmpty || t.charAt(0) == '"' || t.exists(CifParser.isCifSpace))
+      sb.append('\'').append(t).append('\'')
+    else sb.append(t)
 
-  // format_string renders a null argument as the literal "null"
-  // (java.util.Formatter), never SQL NULL — the null check must come
-  // BEFORE formatting, or missing values would emit "null" tokens
-  private def num2(c: Column): Column =
-    when(c.isNull, lit("?")).otherwise(format_string("%.2f", c))
+  /** `t` as a CIF value (see [[appendToken]]). */
+  private[af3] def cifToken(t: String): String = {
+    val sb = new java.lang.StringBuilder(t.length + 2)
+    appendToken(sb, t)
+    sb.toString
+  }
 
-  /** Render atoms as full-fidelity `_atom_site` mmCIF rows (the same
-    * field set BioPython's MMCIFIO preserves: type_symbol, alt id,
-    * label_* ids, insertion code, occupancy, B-factor — py:341-345).
-    * Atom order is the source file order (`ordinal`), not a re-sort, and
-    * serials are renumbered sequentially in that order, matching
-    * MMCIFIO's writer. Returns (file_key, ord, line) — callers pick
-    * `file_key` (e.g. job_dir or job_dir/model_idx) and feed
-    * [[writeKeyedText]]. `modelNum` fills pdbx_PDB_model_num (AF3 source
-    * files are single-model, so the default is 1).
+  private val scales = Array(1L, 10L, 100L, 1000L)
+  private val formats = Array("%.0f", "%.1f", "%.2f", "%.3f")
+
+  /** Append `String.format(Locale.US, "%.<digits>f", x)` (what Spark's
+    * `format_string` renders), for `digits` in 0..3. A value that
+    * already has at most `digits` decimals (`round(x * 10^digits)` scaled
+    * back is `x`) and a magnitude under 1e9 is written from that long
+    * directly: Java formats the shortest decimal that reads back as
+    * `x`, which is then exactly that long scaled down. Negative zero and
+    * negative values that round to zero print `-0.000`, so they take the
+    * formatter, as do NaN, the infinities, large magnitudes and values
+    * that need rounding (Java rounds HALF_UP on the shortest decimal:
+    * 0.125 -> 0.13 at two digits).
+    */
+  private[af3] def appendFixed(sb: java.lang.StringBuilder, x: Double, digits: Int): Unit = {
+    val scale = scales(digits)
+    val m = Math.round(x * scale)
+    if (Math.abs(x) < 1e9 && m.toDouble / scale == x &&
+        !(m == 0 && java.lang.Double.doubleToRawLongBits(x) < 0)) {
+      val a = Math.abs(m)
+      if (m < 0) sb.append('-')
+      sb.append(a / scale)
+      if (digits > 0) {
+        sb.append('.')
+        val frac = a % scale
+        var d = scale / 10
+        while (d > 0) { sb.append(('0' + frac / d % 10).toChar); d /= 10 }
+      }
+    } else sb.append(String.format(java.util.Locale.US, formats(digits), Double.box(x)))
+  }
+
+  /** The atom fields [[atomLine]] renders, in its column order. Numbers
+    * come as doubles and `res_id` as it is, so callers can sort on it.
+    */
+  private val lineCols: Seq[Column] =
+    (Seq("group_pdb", "type_symbol", "atom_name", "alt_id", "res_name", "label_asym_id",
+      "entity_id", "label_seq_id", "ins_code").map(c => col(c).cast("string").as(c)) ++
+      Seq("x", "y", "z", "occupancy", "b_iso").map(c => col(c).cast("double").as(c)) :+
+      col("res_id") :+ col("chain").cast("string").as("chain"))
+
+  /** One full-fidelity `_atom_site` row (the field set BioPython's
+    * MMCIFIO preserves: type_symbol, alt id, label_* ids, insertion
+    * code, occupancy, B-factor — py:341-345) from the [[lineCols]] of
+    * `r` starting at column `o`. A non-null `relabel` replaces both
+    * chain ids (the overlays' A/B); `modelNum` fills pdbx_PDB_model_num
+    * and is left out when null. Every other null field is written as its
+    * CIF unknown marker, so no field shifts.
+    */
+  private def atomLine(r: Row, o: Int, serial: Int, relabel: String, modelNum: String): String = {
+    val sb = new java.lang.StringBuilder(96)
+    def str(i: Int, dflt: String) =
+      if (relabel != null && (i == 5 || i == 15)) relabel
+      else if (r.isNullAt(o + i)) dflt
+      else r.getString(o + i)
+    def num(i: Int, digits: Int): Unit =
+      if (r.isNullAt(o + i)) sb.append('?') else appendFixed(sb, r.getDouble(o + i), digits)
+    sb.append(str(0, "ATOM")).append(' ').append(serial).append(' ')
+      .append(str(1, "?")).append(' ')
+    appendToken(sb, str(2, "?"))
+    sb.append(' ').append(str(3, ".")).append(' ').append(str(4, "?")).append(' ')
+      .append(str(5, "?")).append(' ').append(str(6, "?")).append(' ')
+      .append(str(7, "?")).append(' ').append(str(8, "?")).append(' ')
+    num(9, 3); sb.append(' '); num(10, 3); sb.append(' '); num(11, 3); sb.append(' ')
+    num(12, 2); sb.append(' '); num(13, 2); sb.append(' ')
+    sb.append(if (r.isNullAt(o + 14)) "?" else r.get(o + 14).toString).append(' ')
+      .append(str(15, "?"))
+    if (modelNum != null) sb.append(' ').append(modelNum)
+    sb.toString
+  }
+
+  /** Render atoms as `_atom_site` mmCIF rows ([[atomLine]]). Atom order
+    * is the source file order (`ordinal`, ties broken by chain, res_id
+    * and atom_name), not a re-sort, and serials are renumbered
+    * sequentially in that order, matching MMCIFIO's writer. Returns
+    * (file_key, ord, line) — callers pick `file_key` (e.g. job_dir or
+    * job_dir/model_idx) and feed [[writeKeyedText]]. `modelNum` fills
+    * pdbx_PDB_model_num (AF3 source files are single-model, so the
+    * default is 1).
     */
   def renderCif(
       atoms: DataFrame,
       fileKey: Column,
       modelNum: Column = lit(1)): DataFrame = {
-    // format_string, NOT format_number: the latter inserts thousands
-    // separators ("1,234.500") which no CIF consumer can read back.
-    // Every field is null-coalesced to its CIF unknown marker:
-    // concat_ws silently DROPS null columns, which would shift all
-    // subsequent fields left and misalign the whole row.
-    def coord(c: Column) = when(c.isNull, lit("?")).otherwise(format_string("%.3f", c))
-    def f(name: String, dflt: String) = coalesce(col(name), lit(dflt))
-    val line = concat_ws(" ",
-      f("group_pdb", "ATOM"), col("atom_serial"), f("type_symbol", "?"),
-      cifQuote(f("atom_name", "?")), f("alt_id", "."), f("res_name", "?"),
-      f("label_asym_id", "?"), f("entity_id", "?"), f("label_seq_id", "?"),
-      f("ins_code", "?"),
-      coord(col("x")), coord(col("y")), coord(col("z")),
-      num2(col("occupancy")), num2(col("b_iso")),
-      coalesce(col("res_id").cast("string"), lit("?")),
-      f("chain", "?"), modelNum)
+    import atoms.sparkSession.implicits._
     atoms
-      .withColumn("atom_serial",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy(fileKey).orderBy(col("ordinal"), col("chain"), col("res_id"), col("atom_name"))))
-      .select(fileKey.as("file_key"), col("atom_serial").as("ord"), line.as("line"))
+      .select(Seq(fileKey.as("file_key"), modelNum.cast("string").as("model_num"),
+        col("ordinal")) ++ lineCols: _*)
+      .repartition(col("file_key"))
+      .sortWithinPartitions(col("file_key"), col("ordinal"), col("chain"), col("res_id"),
+        col("atom_name"))
+      .mapPartitions { (rows: Iterator[Row]) =>
+        var key: String = null
+        var serial = 0
+        rows.map { r =>
+          val k = r.getString(0)
+          if (k != key) { key = k; serial = 0 }
+          serial += 1
+          (k, serial, atomLine(r, 3, serial, null, r.getString(1)))
+        }
+      }
+      .toDF("file_key", "ord", "line")
   }
+
+  /** The PyMOL script of one job (sink_pymol_codegen, py:477-541): load
+    * each of `models` (ascending), align every model but 0 to model_0 on
+    * chain A, util.cbc(), save the overlay session. A job with model 0
+    * alone keeps an empty align line.
+    */
+  private[af3] def pml(job: String, models: Seq[Int]): String =
+    Seq(models.map(k => s"load model_$k.cif, model_$k").mkString("\n"),
+      models.filter(_ >= 1).map(k => s"align model_$k and chain A, model_0 and chain A")
+        .mkString("\n"),
+      "util.cbc()",
+      s"save ${job}_overlay.pse").mkString("\n")
 
   private val header: String =
     """#
@@ -116,6 +199,47 @@ object CifWriter {
       src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
     if (!fs.rename(src, dst)) sys.error(s"rename $src -> $dst failed")
 
+  /** One output file `outDir/<key><suffix>`, written from an executor
+    * task: to a task-attempt-scoped temp file, renamed into place on
+    * [[commit]]. A retried or speculative attempt never truncates the
+    * final path mid-write; the last attempt to finish a key wins with a
+    * complete file.
+    */
+  private final class KeyedFile(outDir: String, val key: String, suffix: String,
+      conf: org.apache.hadoop.conf.Configuration) {
+    private val attempt = Option(org.apache.spark.TaskContext.get())
+      .map(_.taskAttemptId()).getOrElse(0L)
+    private val finalPath = new org.apache.hadoop.fs.Path(outDir, key + suffix)
+    private val tmpPath = new org.apache.hadoop.fs.Path(outDir,
+      s".${key.replace('/', '_')}$suffix.__attempt_$attempt")
+    private val fs = rawFs(finalPath, conf)
+    private var renamed = false
+    private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+      fs.create(tmpPath, true), java.nio.charset.StandardCharsets.UTF_8))
+
+    /** Start the file with `data_<key>` and the `_atom_site` loop header. */
+    def cifHeader(): Unit = { out.write(s"data_$key\n"); out.write(header) }
+
+    def line(l: String): Unit = { out.write(l); out.write("\n") }
+
+    def commit(): Unit = {
+      out.close()
+      fs.mkdirs(finalPath.getParent) // keys may carry subdirs (job/model_k)
+      if (fs.exists(finalPath)) fs.delete(finalPath, false)
+      renameOrFail(fs, tmpPath, finalPath)
+      renamed = true
+    }
+
+    /** Failure path: a temp that was never renamed (whether or not the
+      * writer reached close — e.g. [[commit]]'s rename threw) must not
+      * survive as an orphan in outDir. A no-op after a commit.
+      */
+    def abort(): Unit = {
+      out.close()
+      if (!renamed && fs.exists(tmpPath)) fs.delete(tmpPath, false)
+    }
+  }
+
   /** Write `(file_key, ord, line)` rows as `outDir/<file_key><suffix>`,
     * one file per key, lines in `ord` order, optional per-file header.
     * Scales: keys are hash-distributed across tasks; each task writes only
@@ -126,7 +250,6 @@ object CifWriter {
       outDir: String,
       suffix: String,
       withCifHeader: Boolean = false): Unit = {
-    val hdr = if (withCifHeader) header else ""
     // ship the session's Hadoop conf to the tasks: a fresh
     // Configuration() there would drop every spark.hadoop.* setting
     // (credentials, custom schemes)
@@ -137,46 +260,101 @@ object CifWriter {
       .sortWithinPartitions(col("file_key"), col("ord"))
       .select("file_key", "line")
       .foreachPartition { (rows: Iterator[Row]) =>
-        // task-attempt-scoped temp file + rename on close: a retried or
-        // speculative attempt never truncates the final path mid-write;
-        // the last attempt to finish a key wins with a complete file
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        var current: String = null
-        var writer: java.io.BufferedWriter = null
-        var tmpPath: org.apache.hadoop.fs.Path = null
-        var finalPath: org.apache.hadoop.fs.Path = null
-        var fs: org.apache.hadoop.fs.FileSystem = null
-        def commit(): Unit = if (writer != null) {
-          writer.close(); writer = null
-          fs.mkdirs(finalPath.getParent) // keys may carry subdirs (job/model_k)
-          if (fs.exists(finalPath)) fs.delete(finalPath, false)
-          renameOrFail(fs, tmpPath, finalPath)
-          tmpPath = null // renamed away: nothing for the failure path to clean
-        }
+        var file: KeyedFile = null
         try {
           rows.foreach { r =>
             val key = r.getString(0)
-            if (key != current) {
-              commit(); current = key
-              finalPath = new org.apache.hadoop.fs.Path(outDir, key + suffix)
-              tmpPath = new org.apache.hadoop.fs.Path(outDir,
-                s".${key.replace('/', '_')}$suffix.__attempt_$attempt")
-              fs = rawFs(finalPath, conf.value)
-              writer = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-                fs.create(tmpPath, true), java.nio.charset.StandardCharsets.UTF_8))
-              if (hdr.nonEmpty) { writer.write(s"data_$key\n"); writer.write(hdr) }
+            if (file == null || key != file.key) {
+              if (file != null) file.commit()
+              file = null
+              file = new KeyedFile(outDir, key, suffix, conf.value)
+              if (withCifHeader) file.cifHeader()
             }
-            writer.write(r.getString(1)); writer.write("\n")
+            file.line(r.getString(1))
           }
-          commit()
+          if (file != null) file.commit()
+        } finally if (file != null) file.abort()
+      }
+  }
+
+  /** [[graft.Af3Run]]'s structure outputs, per job in one pass: the
+    * interaction CIF `interactionDir/<job>_interaction.cif` (model 0,
+    * py:326-345), the overlay CIFs `overlayDir/<job>/model_<k>.cif`
+    * with the POI chain relabeled A and the partner B (py:389-430,
+    * 467-469) and the PyMOL script `overlayDir/<job>/align_and_save.pml`
+    * (py:472, 533-535). The bytes are those of [[writeKeyedText]] over
+    * [[renderCif]] of [[Af3Pipeline.interactionCifAtoms]] and
+    * [[Af3Pipeline.modelExtractAtoms]], and over
+    * [[Af3Pipeline.pymolScripts]].
+    *
+    * `atoms` is shuffled once, by job: the kept rows
+    * ([[Af3Pipeline.withSinkRoles]]) plus each model file's first atom
+    * (ordinal 1, as [[CifParser.readAtoms]] numbers them), which lists
+    * the model in the script even when nothing of it is kept. One task
+    * gets a job's rows sorted by (model, ordinal, relabeled chain,
+    * res_id, atom_name), streams each overlay and, from model 0, the
+    * interaction CIF beside it, and writes the script last. renderCif
+    * breaks ordinal ties on the source chain instead; ordinals are
+    * unique within a model file, so the orders differ only when two
+    * input folders share a job name.
+    */
+  def writeJobFiles(atoms: DataFrame, members: DataFrame, p: Af3Params,
+      interactionDir: String, overlayDir: String): Unit = {
+    val conf = new SerializableConfiguration(
+      atoms.sparkSession.sparkContext.hadoopConfiguration)
+    val o = 6 // first of the lineCols
+    Af3Pipeline.withSinkRoles(atoms, members, p)
+      .filter(col("__poi") || col("__partner") || col("ordinal") === 1)
+      .select(Seq(col("job_dir"), col("model_idx"), col("ordinal"), col("__poi"),
+        col("__partner"), when(col("__poi"), "A").otherwise("B").as("__chain")) ++ lineCols: _*)
+      .repartition(col("job_dir"))
+      .sortWithinPartitions(col("job_dir"), col("model_idx"), col("ordinal"), col("__chain"),
+        col("res_id"), col("atom_name"))
+      .foreachPartition { (rows: Iterator[Row]) =>
+        val roles = Seq(3 -> "A", 4 -> "B") // (flag column, relabeled chain)
+        var job: String = null
+        val models = scala.collection.mutable.ArrayBuffer.empty[Int]
+        var overlay: KeyedFile = null
+        var interaction: KeyedFile = null
+        var serial = 0
+        def endModel(): Unit = {
+          if (overlay != null) { overlay.commit(); overlay = null }
+          if (interaction != null) { interaction.commit(); interaction = null }
+        }
+        def endJob(): Unit = if (job != null) {
+          endModel()
+          val f = new KeyedFile(overlayDir, s"$job/align_and_save", ".pml", conf.value)
+          try { f.line(pml(job, models.toSeq)); f.commit() } finally f.abort()
+        }
+        try {
+          rows.foreach { r =>
+            val j = r.getString(0)
+            val m = r.getInt(1)
+            if (j != job) { endJob(); job = j; models.clear() }
+            if (models.isEmpty || models.last != m) { endModel(); models += m; serial = 0 }
+            for ((role, label) <- roles if r.getBoolean(role)) {
+              serial += 1
+              // a file is held before its header is written, so a failed
+              // write still reaches the abort below
+              if (overlay == null) {
+                overlay = new KeyedFile(overlayDir, s"$job/model_$m", ".cif", conf.value)
+                overlay.cifHeader()
+              }
+              overlay.line(atomLine(r, o, serial, label, "1"))
+              if (m == 0) {
+                if (interaction == null) {
+                  interaction = new KeyedFile(interactionDir, s"${job}_interaction", ".cif",
+                    conf.value)
+                  interaction.cifHeader()
+                }
+                interaction.line(atomLine(r, o, serial, null, "1"))
+              }
+            }
+          }
+          endJob()
         } finally {
-          // failure path: a temp that was never renamed (whether or not
-          // the writer reached close — e.g. commit()'s rename threw) must
-          // not survive as an orphan in outDir
-          if (writer != null) writer.close()
-          if (fs != null && tmpPath != null && fs.exists(tmpPath))
-            fs.delete(tmpPath, false)
+          if (overlay != null) overlay.abort()
+          if (interaction != null) interaction.abort()
         }
       }
   }

@@ -284,34 +284,44 @@ object Af3Pipeline {
           .as("interacting_sequence"))
   }
 
+  /** `atoms` with the two role flags of the structure sinks: `__poi`
+    * for the POI chain, `__partner` for partner residues inside a kept
+    * partner island (py:326-336, 409-411). An atom holds both when the
+    * POI and the partner chain are the same. Island membership is a
+    * join on the island member list, not a range test.
+    */
+  private[af3] def withSinkRoles(atoms: DataFrame, islandMembers: DataFrame,
+      p: Af3Params): DataFrame = {
+    val members = islandMembers
+      .select(col("job_dir"), col("partner_res").as("res_id"), lit(true).as("__member"))
+      .distinct()
+    atoms.join(broadcast(members), Seq("job_dir", "res_id"), "left")
+      .select(atoms.columns.map(col).toSeq ++ Seq(
+        (col("chain") <=> p.poiChain).as("__poi"),
+        (col("chain") <=> p.partnerChain && col("__member").isNotNull).as("__partner")): _*)
+  }
+
   /** filter_residue_select (py:326-336): atoms of the interaction CIF —
     * the whole POI chain plus partner residues inside any kept partner
-    * island. `islandsDf` is the interactionIslands output (partner ranges
-    * are contiguous up to gap 1, so range membership == island membership
-    * is NOT assumed: we re-join via the island member list).
+    * island, model 0 only.
     */
   def interactionCifAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame = {
-    val members = islandMembers.select(col("job_dir"), col("partner_res").as("res_id")).distinct()
-    val model0 = atoms.filter(col("model_idx") === 0)
-    model0.filter(col("chain") === p.poiChain)
-      .unionByName(
-        model0.filter(col("chain") === p.partnerChain)
-          .join(members, Seq("job_dir", "res_id"), "left_semi"))
+    val roles = withSinkRoles(atoms.filter(col("model_idx") === 0), islandMembers, p)
+    roles.filter(col("__poi")).unionByName(roles.filter(col("__partner")))
+      .drop("__poi", "__partner")
   }
 
   /** sink_cif_model_extract (py:389-430): for every model 0..4, POI chain
     * relabeled 'A', member partner residues relabeled 'B'.
     */
   def modelExtractAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame = {
-    val members = islandMembers.select(col("job_dir"), col("partner_res").as("res_id")).distinct()
+    val roles = withSinkRoles(atoms, islandMembers, p)
     // relabel both the auth and the label chain id, as BioPython does when
     // it writes the extracted structure's chains as 'A'/'B' (py:398-405)
-    def relabel(df: DataFrame, id: String) =
-      df.withColumn("chain", lit(id)).withColumn("label_asym_id", lit(id))
-    relabel(atoms.filter(col("chain") === p.poiChain), "A")
-      .unionByName(
-        relabel(atoms.filter(col("chain") === p.partnerChain)
-          .join(members, Seq("job_dir", "res_id"), "left_semi"), "B"))
+    def relabel(role: String, id: String) = roles.filter(col(role))
+      .withColumn("chain", lit(id)).withColumn("label_asym_id", lit(id))
+      .drop("__poi", "__partner")
+    relabel("__poi", "A").unionByName(relabel("__partner", "B"))
   }
 
   /** Partner-island members (keys of consecutive_interactions, py:383,
@@ -369,29 +379,15 @@ object Af3Pipeline {
     starts.zip(starts.drop(1) :+ sorted.length)
   }
 
-  /** sink_pymol_codegen (py:477-541): one `.pml` per job — loads, aligns
-    * to model_0 on chain A, util.cbc(), save overlay session.
+  /** sink_pymol_codegen (py:477-541): one `.pml` per job
+    * ([[CifWriter.pml]] over the job's models), `(job_dir, script)`.
     */
   def pymolScripts(atoms: DataFrame): DataFrame = {
-    val models = atoms.select(col("job_dir"), col("model_idx")).distinct()
-      .withColumn("load_line",
-        concat(lit("load model_"), col("model_idx"), lit(".cif, model_"), col("model_idx")))
-      .withColumn("align_line",
-        when(col("model_idx") >= 1,
-          concat(lit("align model_"), col("model_idx"),
-            lit(" and chain A, model_0 and chain A"))))
-    models.groupBy(col("job_dir"))
-      .agg(
-        concat_ws("\n",
-          concat_ws("\n", transform(
-            array_sort(collect_list(struct(col("model_idx"), col("load_line")))),
-            _.getField("load_line"))),
-          coalesce(concat_ws("\n", transform(
-            array_sort(collect_list(when(col("align_line").isNotNull,
-              struct(col("model_idx"), col("align_line"))))),
-            _.getField("align_line"))), lit("")),
-          lit("util.cbc()"),
-          concat(lit("save "), col("job_dir"), lit("_overlay.pse")))
-          .as("script"))
+    import atoms.sparkSession.implicits._
+    atoms.select(col("job_dir"), col("model_idx")).distinct()
+      .as[(String, Int)]
+      .groupByKey(_._1)
+      .mapGroups((job, rows) => (job, CifWriter.pml(job, rows.map(_._2).toSeq.sorted)))
+      .toDF("job_dir", "script")
   }
 }

@@ -24,17 +24,19 @@ class Af3RunSpec extends SparkSpec {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
 
+  private val interDir = "Interaction_cif_files_PAE_15.0_maxdist_8.0"
+  private val overDir = s"Overlays_$interDir"
+
   /** sha256 of every output file of a default-flag run on the fixture
     * tree: the report, the interaction CIF, the overlays and the `.pml`
     * must stay byte-identical, not only the report rows.
     */
   private val goldenDigests = {
-    val inter = "Interaction_cif_files_PAE_15.0_maxdist_8.0"
-    val over = "Overlays_Interaction_cif_files_PAE_15.0_maxdist_8.0/job_binder"
+    val over = s"$overDir/job_binder"
     Map(
       "interaction_analysis_PAE_15.0_max_dist_8.0.csv" ->
         "c99f0944c5fdd810ee15719fd3cd17d35a20c94ee83f949a2917f53597279ac9",
-      s"$inter/job_binder_interaction.cif" ->
+      s"$interDir/job_binder_interaction.cif" ->
         "2add3449a9ea8c1ef586b87ab48e5541c11be2c2431e710cd32facfa8ee22dff",
       s"$over/align_and_save.pml" ->
         "03693ff5fcbd3b26eb819c22a985954946f4f0928179cf477d2aa3fc806cb033",
@@ -69,6 +71,177 @@ class Af3RunSpec extends SparkSpec {
     val got = listRel(out).toSeq.map(f => f -> sha256(new File(out, f))).toMap
     assert(got === goldenDigests)
   }
+
+  /** A bundle tree for the sink edges, built from the fixture binder:
+    * `edge_gap` lacks `model_2.cif` (FIXTURES.md), `edge_single` has
+    * model 0 only and `edge_none` has no PAE hit, so it keeps no island.
+    * The PAE matrices are the fixture's made symmetric, so a run with
+    * the chains swapped finds islands too. `edge_gap`'s model 0 carries
+    * the renderer's edge values: rounding ties, a negative value that
+    * rounds to zero, -0.0, a magnitude of 1e9 and more, a missing
+    * B-factor and atom names that need quotes.
+    */
+  private lazy val edgeTree: String = {
+    val src = new File(fixtureDir, "job_binder")
+    val root = Files.createTempDirectory("graft_sink_edges").toFile
+    def read(name: String): String =
+      new String(Files.readAllBytes(new File(src, s"job_binder_$name").toPath), "UTF-8")
+    def put(job: String, name: String, body: String): Unit = {
+      val d = new File(root, job)
+      d.mkdirs()
+      Files.write(new File(d, s"${job}_$name").toPath, body.getBytes("UTF-8"))
+    }
+    // fixture hits: POI rows 0-7 x partner columns 13-17, 19, 25 of 30
+    def hit(i: Int, j: Int) = i <= 7 && (j >= 13 && j <= 17 || j == 19 || j == 25)
+    def fullData(hits: Boolean): String = {
+      val rows = (0 until 30).map(i => (0 until 30)
+        .map(j => if (hits && (hit(i, j) || hit(j, i))) "5.0" else "25.0").mkString("[", ", ", "]"))
+      s"""{"pae": ${rows.mkString("[", ", ", "]")}, "token_res_ids": ${(1 to 30).mkString("[", ", ", "]")}}"""
+    }
+    val edgeValues = Seq(
+      "ATOM 1 N N . ALA A 1 1 ? 0.000 0.000 0.000 1.00 50.00 1 A 1" ->
+        "ATOM 1 N N . ALA A 1 1 ? -0.0004 1.0005 -0.0 0.125 ? 1 A 1",
+      "ATOM 3 N N . CYS A 1 2 ? 4.000 0.000 0.000 1.00 50.00 2 A 1" ->
+        "ATOM 3 N 'N X' . CYS A 1 2 ? 4.000 0.000 0.000 1.00 50.00 2 A 1",
+      "ATOM 5 N N . ASP A 1 3 ? 8.000 0.000 0.000 1.00 50.00 3 A 1" ->
+        "ATOM 5 N '\"N' . ASP A 1 3 ? 8.000 12.3456 0.000 1.00 50.00 3 A 1",
+      "ATOM 7 N N . GLU A 1 4 ? 12.000 0.000 0.000 1.00 50.00 4 A 1" ->
+        "ATOM 7 N N . GLU A 1 4 ? 1234567890.5 -1000000000.0 0.000 1.00 50.00 4 A 1")
+    val model0 = edgeValues.foldLeft(read("model_0.cif")) { case (t, (from, to)) =>
+      assert(t.contains(from), s"fixture line changed: $from")
+      t.replace(from, to)
+    }
+    val summary = read("summary_confidences_0.json")
+    for ((job, models, hits) <- Seq(("edge_gap", Seq(0, 1, 3, 4), true),
+        ("edge_single", Seq(0), true), ("edge_none", 0 to 4, false))) {
+      put(job, "summary_confidences_0.json", summary)
+      put(job, "full_data_0.json", fullData(hits))
+      models.foreach { k =>
+        put(job, s"model_$k.cif",
+          if (job == "edge_gap" && k == 0) model0 else read(s"model_$k.cif"))
+      }
+    }
+    root.getPath
+  }
+
+  private def digests(out: File): Map[String, String] =
+    listRel(out).toSeq.map(f => f -> sha256(new File(out, f))).toMap
+
+  /** Every `_atom_site` row of a written CIF. */
+  private def atomRows(f: File): Seq[String] =
+    lines(f).filter(l => l.startsWith("ATOM") || l.startsWith("HETATM"))
+
+  test("run on the sink edge tree: a missing model, a single model, a binder with no island") {
+    val out = Files.createTempDirectory("graft_sink_edges_out").toFile
+    val (in, _, p) = Af3Run.parseArgs(Array("--input_dir", edgeTree))
+    Af3Run.run(spark, in, out.getPath, p)
+    val inter = new File(out, interDir)
+    val over = new File(out, overDir)
+
+    assert(lines(new File(over, "edge_gap/align_and_save.pml")) === Seq(
+      "load model_0.cif, model_0", "load model_1.cif, model_1",
+      "load model_3.cif, model_3", "load model_4.cif, model_4",
+      "align model_1 and chain A, model_0 and chain A",
+      "align model_3 and chain A, model_0 and chain A",
+      "align model_4 and chain A, model_0 and chain A",
+      "util.cbc()", "save edge_gap_overlay.pse"))
+    assert(!new File(over, "edge_gap/model_2.cif").exists())
+    // one model: the align block is an empty line
+    assert(lines(new File(over, "edge_single/align_and_save.pml")) ===
+      Seq("load model_0.cif, model_0", "", "util.cbc()", "save edge_single_overlay.pse"))
+    // no island: the POI chain alone, in the interaction CIF and every overlay
+    for (f <- new File(inter, "edge_none_interaction.cif") +:
+        (0 to 4).map(k => new File(over, s"edge_none/model_$k.cif"))) {
+      val chains = atomRows(f).map(_.split(" ").takeRight(2).head).distinct
+      assert(chains === Seq("A"), f.getPath)
+    }
+    assert(atomRows(new File(inter, "edge_gap_interaction.cif")).head ===
+      "ATOM 1 N N . ALA A 1 1 ? -0.000 1.001 -0.000 0.13 ? 1 A 1")
+
+    assert(digests(out) === edgeDigests)
+  }
+
+  test("run on the sink edge tree with --poi_chain B --partner_chain A") {
+    val out = Files.createTempDirectory("graft_sink_edges_swap").toFile
+    val (in, _, p) = Af3Run.parseArgs(
+      Array("--input_dir", edgeTree, "--poi_chain", "B", "--partner_chain", "A"))
+    Af3Run.run(spark, in, out.getPath, p)
+    assert(digests(out) === swappedEdgeDigests)
+  }
+
+  /** sha256 of every output file of the default-flag edge-tree run. */
+  private val edgeDigests = Map(
+    s"$interDir/edge_gap_interaction.cif" ->
+      "45256187e269f4a740e04f395d553630938db0d04710a4c1c35f5b08c03822b6",
+    s"$interDir/edge_none_interaction.cif" ->
+      "e463c8def025cb725582fc8f19a10db584c6d4a825ed6969021f209d66ccfec5",
+    s"$interDir/edge_single_interaction.cif" ->
+      "2fafa5e3e0ecceaa05ec60a66a91515324f48ea4d7e77c7d89163aeb4c3420e8",
+    s"$overDir/edge_gap/align_and_save.pml" ->
+      "26293f41a1bd67a2aaae1edbba3415e12aaad1f70a07becdd0d066ae84559a6d",
+    s"$overDir/edge_gap/model_0.cif" ->
+      "41763e13d9ebed5d895319967deba365235541ea0f2dc2dc9da8eca04da36ac4",
+    s"$overDir/edge_gap/model_1.cif" ->
+      "2c10b10db9fae4a81e8f3ec44f0999a2f4e9082473f8ef6411b51a16a50dc988",
+    s"$overDir/edge_gap/model_3.cif" ->
+      "27ac8d8572151ca1e7c8be1bd9ace5d5de9b6ba498709d82e6b02df7b8ebff9b",
+    s"$overDir/edge_gap/model_4.cif" ->
+      "c8dd521b51297e4a35b7b6e573be01ec6a2bb3108d2c7e262a5885620ef71c44",
+    s"$overDir/edge_none/align_and_save.pml" ->
+      "1f77778c70a1a657ba451fd7038577bd90f77224f25a109d98a6a800f0e500a2",
+    s"$overDir/edge_none/model_0.cif" ->
+      "bd85378f2e3f8e347e8ce4d4c74d651da53f63c575c8159ce932e79e69eb92c4",
+    s"$overDir/edge_none/model_1.cif" ->
+      "997e453cc0842f131f5e4f467f84bcf44d7a3c80f88b16154463c4f4ce801d7b",
+    s"$overDir/edge_none/model_2.cif" ->
+      "e29ab5ff5bbff50bddd31b2ccae27ee2fa896fc039d732a3ac351a20533e09fc",
+    s"$overDir/edge_none/model_3.cif" ->
+      "6ff7901c527bd42b14c219e2ec47cf9afbb35f7ef6adb221803eaf2ec80266e7",
+    s"$overDir/edge_none/model_4.cif" ->
+      "2d4aa158016e9724ebf839837dd0f0df27d6e3a9b3ad1a7034e2d930a8fc7983",
+    s"$overDir/edge_single/align_and_save.pml" ->
+      "34e91301171744204ea873372355194540a77630773ce7f3a468572311b35aee",
+    s"$overDir/edge_single/model_0.cif" ->
+      "65f9f4ea8052a1d38b63d4f2f54977c4b494647e8c01041c13e9eee884b70f78",
+    "interaction_analysis_PAE_15.0_max_dist_8.0.csv" ->
+      "8ae85ef2a94e8bb6e0c85827ad86a7b2e08695ad8397166d0a97a8eaa9872b24")
+
+  /** sha256 of every output file of the swapped-chain edge-tree run. */
+  private val swappedEdgeDigests = Map(
+    s"$interDir/edge_gap_interaction.cif" ->
+      "7dd192e5c2bc3547820cb953096fe718dee9849a163b1e796ad1e0254f0defa2",
+    s"$interDir/edge_none_interaction.cif" ->
+      "4c4582f6ec8912288a5bb5f40452ce6f2d74c6d797e3b6881f9dd5823b4354f5",
+    s"$interDir/edge_single_interaction.cif" ->
+      "341fa0acca72aa238569bf4ba8fa8ed73d21325770cdb2c990dc9d532d58d502",
+    s"$overDir/edge_gap/align_and_save.pml" ->
+      "26293f41a1bd67a2aaae1edbba3415e12aaad1f70a07becdd0d066ae84559a6d",
+    s"$overDir/edge_gap/model_0.cif" ->
+      "e6a305ad26262f784ceb6f5dd3dd704eb780ae28895bbd2db8ea3f04136b8b3c",
+    s"$overDir/edge_gap/model_1.cif" ->
+      "ef51a089127ec410a254776d9f302f1d233b8ed3fb80c7dc72626d9bb4664712",
+    s"$overDir/edge_gap/model_3.cif" ->
+      "20052e102d2d3bb690ab493a7b89eb73a4f12a44924870b5da702bad3363a899",
+    s"$overDir/edge_gap/model_4.cif" ->
+      "286aeb25820806b1505e89584e00dae077b7baf49e20dadb9dce80263e50678d",
+    s"$overDir/edge_none/align_and_save.pml" ->
+      "1f77778c70a1a657ba451fd7038577bd90f77224f25a109d98a6a800f0e500a2",
+    s"$overDir/edge_none/model_0.cif" ->
+      "9f69f7ae0c67a36c383798bb97057e0eb915990bff405a7776bc512d076fa98a",
+    s"$overDir/edge_none/model_1.cif" ->
+      "e04e79f72449b7db4a4ce798315351e26e26cfb2be224458fe2cef45ab3a8318",
+    s"$overDir/edge_none/model_2.cif" ->
+      "e76c714c87a4dd13853c0f5b4cfb52fbb12b494b2f333edb8bce1d89eb0de795",
+    s"$overDir/edge_none/model_3.cif" ->
+      "a7830027760a326f99a3de792e5efd22cded2b13712b1371cc9f443e938d339f",
+    s"$overDir/edge_none/model_4.cif" ->
+      "5d52f861e56acb3f1a954ef6309f28bcff61f8a1fde75bf26980897d86b8caf6",
+    s"$overDir/edge_single/align_and_save.pml" ->
+      "34e91301171744204ea873372355194540a77630773ce7f3a468572311b35aee",
+    s"$overDir/edge_single/model_0.cif" ->
+      "656ae3e3df0d9eeed9dc8cf3e8643c7350cb33f6ab23970fba84083151ad0c21",
+    "interaction_analysis_PAE_15.0_max_dist_8.0.csv" ->
+      "d5da6127aab9fcfd875564e9992e6118c73acb26029005d1b38f919fd1e1ceb6")
 
   test("parseArgs rejects a dangling argument and an unknown flag") {
     val dangling = intercept[RuntimeException] {

@@ -320,6 +320,52 @@ class PlanShapeSpec extends SparkSpec {
         s"in: ${offenders.mkString(", ")}")
   }
 
+  /** `join_entity_resolution`'s r13 layout: the exploded variant stream
+    * is pruned to multi-key buckets by a left-semi join and then crosses
+    * ONE REPARTITION_BY_COL exchange on the join key (nk, blk), which both
+    * inputs of the MERGE-hinted pair join share. The bucket count under
+    * the prune has its own exchange on (nk, blk), of the narrow (k, nk,
+    * blk) rows; no other exchange partitions on columns.
+    */
+  test("join_entity_resolution plans one (nk, blk) exchange and a left-semi prune into the MERGE join") {
+    import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ReusedExchangeExec,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
+    val plan = plans.collectFirst { case ("join_entity_resolution", p) => p }.get
+    def keys(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+      case _ => Nil
+    }
+    // the exchange a join input reads, through unary operators
+    def exchangeOf(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case ReusedExchangeExec(_, e: ShuffleExchangeExec) => Some(e)
+      case u if u.children.size == 1 => exchangeOf(u.children.head)
+      case _ => None
+    }
+    val merge = plan.collect { case j: SortMergeJoinExec if j.joinType == Inner => j }
+    assert(merge.size === 1, plan.treeString)
+    val Seq(left, right) = merge.head.children.map(exchangeOf)
+    assert(left.nonEmpty && right.nonEmpty && left.get.sameResult(right.get), plan.treeString)
+    val pairInput = left.get
+    assert(pairInput.shuffleOrigin === REPARTITION_BY_COL && keys(pairInput) === Seq("nk", "blk"))
+    val prune = pairInput.child.collect {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j
+    }
+    assert(prune.size === 1, plan.treeString)
+    assert(prune.head.right.collect {
+      case a: HashAggregateExec if a.groupingExpressions.map(_.references.head.name) ==
+        Seq("nk", "blk") => a
+    }.nonEmpty, plan.treeString)
+    val byCol = plan.collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
+    }
+    assert(byCol.size === 2 && byCol.forall(keys(_) == Seq("nk", "blk")), plan.treeString)
+  }
+
   test("no registered query output schema carries ARRAY/MAP columns") {
     // The official correctness comparer canonicalizes result frames via
     // pandas sort_values over all columns; ndarray cells are unhashable

@@ -6,6 +6,8 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 /** A local filesystem under its own scheme whose rename of the final
@@ -46,6 +48,63 @@ class CifWriterSpec extends SparkSpec {
     assert(read("job_b/model_0.txt") === Seq("b1"))
     // every task-attempt temp file was renamed into place
     assert(out.list().toSet === Set("job_a.txt", "job_b"))
+  }
+
+  private def fixed(x: Double, digits: Int): String = {
+    val sb = new java.lang.StringBuilder
+    CifWriter.appendFixed(sb, x, digits)
+    sb.toString
+  }
+
+  private def javaFixed(x: Double, digits: Int): String =
+    String.format(java.util.Locale.US, s"%.${digits}f", Double.box(x))
+
+  test("the fixed-point formatter equals String.format on random values (seeded)") {
+    val rnd = new scala.util.Random(20261018)
+    (1 to 100000).foreach { _ =>
+      // a 3-decimal value of up to 12 digits, either sign: the fast path
+      // below 1e9, the formatter above
+      val x = (rnd.nextLong() % math.pow(10, 1 + rnd.nextInt(12)).toLong) / 1000.0
+      assert(fixed(x, 3) === javaFixed(x, 3), s"x=$x")
+      assert(fixed(x, 2) === javaFixed(x, 2), s"x=$x")
+      // a 2-decimal value
+      val y = (rnd.nextLong() % math.pow(10, 1 + rnd.nextInt(11)).toLong) / 100.0
+      assert(fixed(y, 2) === javaFixed(y, 2), s"y=$y")
+      // any double: mostly rounding, through the formatter
+      val z = (rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(13) - 3)
+      assert(fixed(z, 3) === javaFixed(z, 3), s"z=$z")
+    }
+  }
+
+  test("the fixed-point formatter on ties, negative zero, non-finite and large values") {
+    assert(fixed(0.125, 2) === "0.13")
+    assert(fixed(1.0005, 3) === "1.001")
+    assert(fixed(-0.0004, 3) === "-0.000")
+    assert(fixed(-0.0, 3) === "-0.000")
+    assert(fixed(-0.0, 2) === "-0.00")
+    val edges = Seq(0.125, -0.125, 1.0005, -1.0005, 2.675, 0.0005, -0.0005, -0.0004, -0.0,
+      0.0, -0.001, 0.001, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      1e9, -1e9, 1e9 - 0.001, -(1e9 - 0.001), 1e9 + 0.5, 123456789012.345, Double.MaxValue,
+      Double.MinPositiveValue, -Double.MinPositiveValue)
+    for (x <- edges; d <- Seq(2, 3))
+      assert(fixed(x, d) === javaFixed(x, d), s"x=$x digits=$d")
+  }
+
+  test("renderCif writes a null field as its CIF unknown marker and numbers serials per file") {
+    val atoms = Seq(
+      CifAtom("j", 0, "A", 7, "GLY", "CA", 1.0, 2.0, 3.0, ordinal = 2, b_iso = Some(12.5)),
+      CifAtom("j", 0, "A", 7, "GLY", "N", 0.5, 2.0, 3.0, ordinal = 1, occupancy = Some(1.0)),
+      CifAtom("k", 0, "B", 1, "ALA", "N", 0.0, 0.0, 0.0, ordinal = 1))
+      .toDF()
+      .withColumn("y", when(col("ordinal") === 2, lit(null)).otherwise(col("y")))
+      .withColumn("alt_id", lit(null).cast("string"))
+      .withColumn("atom_name", when(col("chain") === "B", lit(null)).otherwise(col("atom_name")))
+    val got = CifWriter.renderCif(atoms, col("job_dir"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(r => (r._1, r._2))
+    assert(got.toSeq === Seq(
+      ("j", 1, "ATOM 1 ? N . GLY ? ? ? ? 0.500 2.000 3.000 1.00 ? 7 A 1"),
+      ("j", 2, "ATOM 2 ? CA . GLY ? ? ? ? 1.000 ? 3.000 ? 12.50 7 A 1"),
+      ("k", 1, "ATOM 1 ? ? . ALA ? ? ? ? 0.000 0.000 0.000 ? ? 1 B 1")))
   }
 
   test("writeReportCsv fails on a rename that returns false and keeps the report") {
