@@ -1,5 +1,6 @@
 package graft
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Protocol (hardened round 5):
@@ -30,7 +31,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** Between-lap cache reset: drop per-query cache accumulation, keep
     * the shared indexes warm. clearCache() only reaches SQL-cached
-    * relations; localCheckpoint RDDs (BPE/CC/PCA iteration pins, the
+    * relations; localCheckpoint RDDs (BPE/CC/graph iteration pins, the
     * prefix-sum phase pin, any library-default checkpoint) live in the
     * raw persistent-RDD registry and silently accumulated across laps —
     * the r8 sf1 replay measured the SECOND warm lap up to 37x slower
@@ -82,6 +83,50 @@ object Bench {
         else (rs(rs.size / 2 - 1) + rs(rs.size / 2)) / 2.0
       medR >= 1.5
     }
+  }
+
+  // JSON numbers must be locale-independent: the f-interpolator formats
+  // under the DEFAULT locale (a comma-decimal locale emits `0,52`)
+  private def num(v: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
+  /** Cap on the result line, so a capture of the stdout tail holds it whole. */
+  val MaxLine = 1000
+
+  private def jsonString(s: String, maxChars: Int): String = "\"" +
+    new String(JsonStringEncoder.getInstance.quoteAsString(s.take(maxChars))) + "\""
+
+  /** The one stdout line of a bench run, `{"metric":"total",...}`, at
+    * most [[MaxLine]] chars: the headline total, counts, up to 5 error
+    * names, the disturbed laps and as many of the slowest queries'
+    * medians (descending, then by name) as fit. Every list is cut where
+    * the next item would break the cap; the complete per-query maps are
+    * in BENCH_full.json.
+    */
+  def resultLine(total: Double, medians: Map[String, Double], errors: Seq[String],
+      warmLaps: Int, setupSec: Double, sfDir: String, disturbed: Seq[Int]): String = {
+    val qs, errs, laps = scala.collection.mutable.ArrayBuffer.empty[String]
+    def line: String =
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec"""" +
+        s""","queries":{${qs.mkString(",")}},"queries_total_n":${medians.size}""" +
+        s""","queries_in_line_n":${qs.size},"errors_n":${errors.size}""" +
+        s""","error_queries":[${errs.mkString(",")}],"warm_laps":$warmLaps""" +
+        s""","setup_sec":${num(setupSec, 3)},"sf":${jsonString(sfDir, 120)}""" +
+        s""","disturbed_laps":[${laps.mkString(",")}],"full_file":"BENCH_full.json"}"""
+    def fill(buf: scala.collection.mutable.ArrayBuffer[String], items: Seq[String]): Unit = {
+      val it = items.iterator
+      var fits = true
+      while (fits && it.hasNext) {
+        buf += it.next()
+        fits = line.length <= MaxLine
+        if (!fits) buf.remove(buf.size - 1)
+      }
+    }
+    fill(errs, errors.take(5).map(jsonString(_, 80)))
+    fill(laps, disturbed.map(_.toString))
+    fill(qs, medians.filter(_._2 >= 0).toSeq.sortBy { case (k, v) => (-v, k) }
+      .map { case (k, v) => jsonString(k, 80) + ":" + num(v, 3) })
+    line
   }
 
   def main(args: Array[String]): Unit = {
@@ -244,20 +289,15 @@ object Bench {
     val mn = stat(_.head)
     val mx = stat(_.last)
 
-    // JSON numbers must be locale-independent: the f-interpolator
-    // formats under the DEFAULT locale, so a comma-decimal locale would
-    // emit `0,52` — invalid JSON (driver-advice r10). Every numeric
-    // field goes through this Locale.ROOT formatter.
-    def num(v: Double, digits: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
     def fmt(m: Map[String, Double]): String =
       m.map { case (k, v) => "\"" + k + "\":" + num(v, 4) }.mkString("{", ",", "}")
     def fmtS(m: scala.collection.Map[String, String]): String =
       m.map { case (k, v) => "\"" + k + "\":\"" + v.replace("\"", "'") + "\"" }
         .mkString("{", ",", "}")
 
+    val total = med.values.filter(_ >= 0).sum
     val json =
-      s"""{"metric":"total","value":${num(med.values.filter(_ >= 0).sum, 3)},"unit":"sec"""" +
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec"""" +
         s""","queries":${fmt(med)},"queries_min":${fmt(mn)},"queries_max":${fmt(mx)}""" +
         s""","warm_laps":$WarmLaps,"cold_value":${num(cold.values.filter(_ >= 0).sum, 3)}""" +
         s""","queries_cold":${fmt(cold)}""" +
@@ -270,42 +310,12 @@ object Bench {
         s""","load_avg_end":${num(java.lang.management.ManagementFactory
           .getOperatingSystemMXBean.getSystemLoadAverage.toDouble, 2)}""" +
         s""","storage_used_at_lap_start_bytes":[${lapStorageStart.mkString(",")}]}}"""
-    println(json)
-    // stdout capture can truncate a multi-KB line; keep a durable copy so
-    // per-query round deltas stay computable
+    // the per-query detail goes to the file only: stdout carries the
+    // one result line below, printed last
     java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_full.json"), json + "\n")
-    // Parse-safe compact summary (r12 verdict #2): the full line above
-    // carries 352 per-query entries and has outgrown the driver's
-    // 2000-char tail capture since round 9 — its JSON has NEVER parsed
-    // (every BENCH_r*.json: parsed=null), so the driver's round-over-
-    // round PERF comparison has been empty. This SECOND line is an
-    // addition, not a replacement: same headline total, same schema
-    // keys, with the per-query map truncated to the slowest queries
-    // that fit a fixed byte budget (deterministic: sorted by median
-    // desc, then name; stop at first overflow). The complete map stays
-    // in the full line above and in BENCH_full.json.
-    val lineBudget = 1500
-    val slowest = med.filter(_._2 >= 0).toSeq.sortBy { case (k, v) => (-v, k) }
-    val qsb = new StringBuilder
-    var qn = 0
-    var full = false
-    slowest.foreach { case (k, v) =>
-      if (!full) {
-        val entry = (if (qn > 0) "," else "") + "\"" + k + "\":" + num(v, 3)
-        if (qsb.length + entry.length <= lineBudget) { qsb.append(entry); qn += 1 }
-        else full = true
-      }
-    }
-    val errNames = errors.keys.take(5).map("\"" + _ + "\"").mkString(",")
-    val compact =
-      s"""{"metric":"total","value":${num(med.values.filter(_ >= 0).sum, 3)},"unit":"sec"""" +
-        s""","queries":{${qsb}},"queries_total_n":${med.size},"queries_in_line_n":$qn""" +
-        s""","errors_n":${errors.size},"error_queries":[$errNames]""" +
-        s""","warm_laps":$WarmLaps,"setup_sec":${num(setup.values.sum, 3)}""" +
-        s""","sf":"$sfDir","disturbed_laps":[${disturbed.mkString(",")}]""" +
-        s""","full_line_above":true,"full_file":"BENCH_full.json"}"""
-    println(compact)
     spark.stop()
+    println(resultLine(total, med, errors.keys.toSeq, WarmLaps, setup.values.sum,
+      sfDir, disturbed))
     if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -43,7 +43,6 @@ object Af3Io {
       .option("pathGlobFilter", "*_summary_confidences_0.json")
       .json(inputDir)
       .withColumn("__path", input_file_name())
-      .filter(!Scalars.baseName(col("__path")).startsWith("._"))
 
   private def rawFullData(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(fullDataSchema)
@@ -54,7 +53,6 @@ object Af3Io {
       .option("pathGlobFilter", "*_full_data_0.json")
       .json(inputDir)
       .withColumn("__path", input_file_name())
-      .filter(!Scalars.baseName(col("__path")).startsWith("._"))
 
   /** Read all summaries under `inputDir` keyed by job_dir. Exactly one
     * row per summary file; malformed files carry `_corrupt` and fall
@@ -69,10 +67,7 @@ object Af3Io {
     * UTF-8). One scan covers both of the reference's cases.
     */
   def readSummaries(spark: SparkSession, inputDir: String): DataFrame =
-    // cache: Spark forbids filtering a raw JSON scan on only the corrupt
-    // column (QUERY_ONLY_CORRUPT_RECORD_COLUMN); materializing first is
-    // the documented workaround, and the summaries table is tiny
-    rawSummaries(spark, inputDir).cache()
+    rawSummaries(spark, inputDir)
       .withColumn("job_dir", Scalars.parentDirName(col("__path")))
       .drop("__path")
 
@@ -125,7 +120,10 @@ object Af3Io {
           lit("hidden").as("kind"), lit("skipped_hidden").as("status"))
     }
 
-    // summaries: one scan; _corrupt == structural corruption (see note)
+    // summaries: one scan; _corrupt == structural corruption (see note).
+    // cache: Spark forbids a raw JSON scan that reads only the corrupt
+    // column (QUERY_ONLY_CORRUPT_RECORD_COLUMN); materializing first is
+    // the documented workaround, and the summaries table is tiny
     val summaries = rawSummaries(spark, inputDir).cache()
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
         lit("summary").as("kind"),
@@ -133,7 +131,7 @@ object Af3Io {
           .otherwise("corrupt_json").as("status"))
 
     // full_data: corrupt vs missing pae/token_res_ids vs parsed
-    val full = rawFullData(spark, inputDir).cache()
+    val full = rawFullData(spark, inputDir)
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
         lit("full_data").as("kind"),
         when(col("_corrupt").isNotNull, "corrupt_json")
@@ -146,7 +144,6 @@ object Af3Io {
       .agg(count(lit(1)).as("__n"))
     val cifRe = "^(.*)_model_(\\d+)\\.cif$"
     val cifs = paths("*.cif")
-      .filter(!base.startsWith("._"))
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"))
       .withColumn("model_idx", regexp_extract(col("file"), cifRe, 2).cast("int"))
       .join(cifCounts, Seq("job_dir", "model_idx"), "left")

@@ -208,7 +208,9 @@ object CifParser {
 
   /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
     * atoms Dataset. `job_dir` = name of the containing folder, `model_idx`
-    * from the filename (py:348-349, 440-441).
+    * from the filename (py:348-349, 440-441). AppleDouble `._` siblings
+    * (py:560-566) never reach it: Spark's file index hides names that
+    * start with `.` or `_`.
     */
   def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] = {
     import spark.implicits._
@@ -216,8 +218,6 @@ object CifParser {
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.cif")
       .load(inputDir)
-      // AppleDouble siblings are junk, not structures (py:560-566)
-      .filter(!col("path").rlike("/\\._[^/]*$"))
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>

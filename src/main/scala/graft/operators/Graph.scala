@@ -418,8 +418,8 @@ object Graph {
     * Shape per round: two equi-joins + two map-side-combined sums over
     * the edge grain — O(E) per round, every stage keyed. Lineage is
     * localCheckpoint-cut per half-round (the renorm references its
-    * input twice; an uncut loop doubles the plan per round — the
-    * sim_pca_power lesson).
+    * input twice; an uncut loop doubles the plan per round — see
+    * Dedup.connectedComponents).
     *
     * Output: (v, auth_c, hub_c) with zero-filled absences.
     */

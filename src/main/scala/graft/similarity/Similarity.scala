@@ -1,7 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import java.math.BigInteger
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`):
@@ -715,122 +718,110 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("approx_d2"), col("rank"))
   }
 
-  /** Exact integer Gram cells of the per-label second-moment matrix:
-    * g(label, i, j) = Σ_vectors ie_i·ie_j over the floor(x*1000) integer
-    * embedding — an order-free integer sum, so the matrix is
-    * engine-exact. Shape: one narrow 4096-wide explode per vector, then
-    * a map-side-combined groupBy that collapses to |labels|·dims² rows —
-    * the only pass over the fact table the whole PCA makes.
-    */
-  def gramCells(vectors: DataFrame, embCol: String, labelCol: String,
-      dims: Int): DataFrame = {
-    val ie = intEmbedding(col(embCol))
-    vectors
-      .select(col(labelCol).as("label"), ie.as("ie"))
-      .select(col("label"), posexplode(flatten(
-        transform(col("ie"), a => transform(col("ie"), b => a * b))))
-        .as(Seq("pos", "p")))
-      .groupBy(col("label"), expr(s"pos div $dims").as("i"),
-        (col("pos") % dims).cast("long").as("j"))
-      .agg(sum(col("p")).as("g"))
-  }
-
   /** Leading eigenvalue of each label's Gram matrix by POWER ITERATION
-    * EXPRESSED RELATIONALLY — every iterate stays an exact integer, so
-    * the result is engine-deterministic without any float summation:
+    * in exact integers, so the result is engine-deterministic without
+    * any float summation. One aggregation per label ([[PcaPowerAgg]])
+    * keeps the Gram g(i, j) = Σ ie_i·ie_j of the floor(x*1000) integer
+    * embedding ([[intEmbedding]]); its `finish` runs the loop:
     *
-    *  - the Gram is pre-scaled per label to |g2| < 2^24 by an arithmetic
-    *    right shift (floor semantics in BOTH engines, unlike `div`'s
-    *    truncation, so negatives agree);
-    *  - each round is matvec-as-join: cells ⋈ v on (label, j), then an
-    *    order-free integer SUM per (label, i) — bounded by
-    *    64·2^24·2^32 < 2^63, no overflow;
-    *  - the iterate is renormalized by shifting back under 2^32, with
-    *    the shift count derived from the binary-string length (exact
-    *    floor-log2, no libm);
-    *  - after `iters` rounds the Rayleigh quotient closes in
-    *    decimal(38,0) exact dot products with ONE double division, and
-    *    the per-label Gram shift is undone by an exact power-of-two
-    *    multiply.
+    *  - the Gram is pre-scaled to |g2| < 2^24 by an arithmetic right
+    *    shift (floor semantics, as the DuckDB oracle's `>>`);
+    *  - each of the `iters` rounds is a Long matvec (< dims·2^56, so no
+    *    overflow for dims ≤ 128) renormalized by shifting back under
+    *    2^32, the shift count being the binary length (exact floor-log2);
+    *  - a closing matvec gives the Rayleigh quotient from exact
+    *    BigInteger dot products with ONE double division, and the Gram
+    *    shift is undone by an exact power-of-two multiply.
     *
-    * Scale: the fact table is touched once (gramCells); all iteration
-    * frames are |labels|·dims rows joined against |labels|·dims² cells —
-    * broadcast-sized at any corpus size. Returns (label, n_vecs, trace,
-    * eig1, expl_ratio); eig1/trace is the variance share of the top
-    * component (uncentered PCA — the ANN-relevant spectrum).
+    * Returns (label, n_vecs, trace, eig1, expl_ratio) ordered by label;
+    * eig1/trace is the variance share of the top component (uncentered
+    * PCA — the ANN-relevant spectrum). `n_vecs` counts null embeddings
+    * too; null labels, and labels with no non-null embedding, have no
+    * row. A null component adds nothing, as SQL sums skip nulls, and a
+    * label whose components are all null gets null trace, eig1 and
+    * expl_ratio. The query fails on a non-null embedding whose length is
+    * not `dims` (naming the label), on Long overflow, and, as ANSI
+    * division does, on a zero divisor.
     */
   def gramPowerTopEig(vectors: DataFrame, embCol: String, labelCol: String,
-      dims: Int, iters: Int, cellsOpt: Option[DataFrame] = None): DataFrame = {
-    // the Gram frame is referenced ~iters+2 times in the lazy plan —
-    // callers should pass a persisted copy (Artifacts.memo) so the
-    // single fact-table pass isn't replayed per reference
-    val cells = cellsOpt.getOrElse(gramCells(vectors, embCol, labelCol, dims))
-    val d = (c: Column) => c.cast("decimal(38,0)")
-    val dbl = (c: Column) => c.cast("double")
-    def bitlen(c: Column): Column = length(bin(c)).cast("int")
-    def shr(c: Column, n: Column): Column =
-      call_function("shiftright", c, n.cast("int"))
-    val sg = cells.groupBy(col("label"))
-      .agg(max(abs(col("g"))).as("mg"))
-      .select(col("label"), greatest(bitlen(col("mg")) - 24, lit(0)).as("sg"))
-    // the scaled Gram is referenced in every round plus the closing
-    // matvec: checkpoint it once so those references are plan leaves,
-    // not iters+1 replays of the fact-table pass. The frame is
-    // |labels|·dims² rows with a BOUNDED label domain (class labels) —
-    // a handful of partitions is the right layout; spreading ~40k rows
-    // over 32 shuffle partitions just buys 32 near-empty tasks per
-    // matvec round (for an unbounded grouping key, partition by label
-    // instead).
-    val scaled = cells.join(broadcast(sg), "label")
-      .select(col("label"), col("i"), col("j"), col("g"),
-        shr(col("g"), col("sg")).as("g2"))
-      .coalesce(4)
-      .localCheckpoint(true)
-    def matvec(v: DataFrame): DataFrame =
-      scaled.join(broadcast(v), Seq("label", "j"))
-        .groupBy(col("label"), col("i"))
-        .agg(sum(col("g2") * col("vj")).as("raw"))
-    def renorm(raw: DataFrame): DataFrame = {
-      val mv = raw.groupBy(col("label")).agg(max(abs(col("raw"))).as("mv"))
-        .select(col("label"), greatest(bitlen(col("mv")) - 32, lit(0)).as("sv"))
-      raw.join(broadcast(mv), "label")
-        .select(col("label"), col("i").as("j"), shr(col("raw"), col("sv")).as("vj"))
-    }
-    val v0 = cells.select(col("label")).distinct()
-      .select(col("label"), explode(sequence(lit(0L), lit(dims - 1L))).as("j"),
-        lit(1L).as("vj"))
-    // lineage MUST be cut every round: renorm references its input
-    // twice, so an uncut loop doubles the logical plan per round —
-    // 2^iters plan replication (the exact failure
-    // Dedup.connectedComponents guards against; see SCALE.md "OOM in
-    // the explain string"). localCheckpoint(true) is eager, so each
-    // round is one tiny job over a |labels|·dims-row frame.
-    // iterate frames are |labels|·dims rows — broadcast-sized at ANY
-    // corpus scale (the fact table was already collapsed by gramCells),
-    // so each round runs as ONE task instead of shuffle.partitions
-    // near-empty ones
-    var v = v0.coalesce(1).localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val next = renorm(matvec(v)).coalesce(1).localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(v)
-      v = next
-    }
-    val w = matvec(v).withColumnRenamed("i", "j").withColumnRenamed("raw", "wj")
-    val ray = v.join(w, Seq("label", "j"))
-      .groupBy(col("label"))
-      .agg(sum(d(col("vj")) * d(col("wj"))).as("num"),
-        sum(d(col("vj")) * d(col("vj"))).as("den"))
-    val tr = cells.filter(col("i") === col("j"))
-      .groupBy(col("label")).agg(sum(col("g")).as("trace"))
-    val ns = vectors.groupBy(col(labelCol).as("label"))
-      .agg(count(lit(1)).as("n_vecs"))
-    ray.join(broadcast(sg), "label").join(broadcast(tr), "label")
-      .join(broadcast(ns), "label")
-      .select(col("label"), col("n_vecs"), col("trace"),
-        ((dbl(col("num")) / dbl(col("den"))) *
-          dbl(call_function("shiftleft", lit(1L), col("sg").cast("int"))))
-          .as("eig1"))
-      .withColumn("expl_ratio", col("eig1") / dbl(col("trace")))
+      dims: Int, iters: Int): DataFrame = {
+    val pca = udaf(new PcaPowerAgg(dims, iters), Encoders.product[PcaRow])
+    vectors.filter(col(labelCol).isNotNull)
+      .groupBy(col(labelCol).as("label"))
+      .agg(pca(col(labelCol).cast("string"), intEmbedding(col(embCol))).as("r"))
+      .filter(col("r").isNotNull)
+      .select(col("label"), col("r.*"))
       .orderBy(col("label"))
+  }
+
+  final case class PcaRow(label: String, ie: Array[java.lang.Long])
+  final case class PcaBuf(var rows: Long, var vecs: Long, var comps: Long, gram: Array[Long])
+  final case class PcaOut(n_vecs: Long, trace: Option[Long], eig1: Option[Double],
+      expl_ratio: Option[Double])
+
+  /** One label's exact Gram (row-major, dims² cells), its row, non-null
+    * embedding and non-null component counts; `finish` is the power
+    * iteration of [[gramPowerTopEig]], `None` for a label with no
+    * non-null embedding.
+    */
+  final class PcaPowerAgg(dims: Int, iters: Int)
+      extends Aggregator[PcaRow, PcaBuf, Option[PcaOut]] {
+    def zero: PcaBuf = PcaBuf(0L, 0L, 0L, new Array[Long](dims * dims))
+
+    def reduce(b: PcaBuf, r: PcaRow): PcaBuf = {
+      b.rows += 1
+      if (r.ie != null) {
+        require(r.ie.length == dims, s"gramPowerTopEig: label ${r.label} has an " +
+          s"embedding of length ${r.ie.length}, expected $dims")
+        b.vecs += 1
+        b.comps += r.ie.count(_ != null)
+        val x = r.ie.map(v => if (v == null) 0L else v.longValue)
+        for (i <- 0 until dims; j <- 0 until dims)
+          b.gram(i * dims + j) = Math.addExact(b.gram(i * dims + j),
+            Math.multiplyExact(x(i), x(j)))
+      }
+      b
+    }
+
+    def merge(a: PcaBuf, b: PcaBuf): PcaBuf = {
+      a.rows += b.rows
+      a.vecs += b.vecs
+      a.comps += b.comps
+      for (k <- a.gram.indices) a.gram(k) = Math.addExact(a.gram(k), b.gram(k))
+      a
+    }
+
+    def finish(b: PcaBuf): Option[PcaOut] =
+      if (b.vecs == 0) None
+      // every Gram cell is a sum of nulls: so is every sum after it
+      else if (b.comps == 0) Some(PcaOut(b.rows, None, None, None))
+      else {
+        // the oracle's `length(bin(x))`
+        def bitlen(x: Long): Int = math.max(64 - java.lang.Long.numberOfLeadingZeros(x), 1)
+        def maxAbs(xs: Array[Long]): Long = xs.foldLeft(0L)((m, x) => math.max(m, Math.absExact(x)))
+        def div(n: Double, d: Double): Double =
+          if (d == 0) throw new ArithmeticException("gramPowerTopEig: division by zero") else n / d
+        val sg = math.max(bitlen(maxAbs(b.gram)) - 24, 0)
+        val g2 = b.gram.map(_ >> sg)
+        def matvec(v: Array[Long]): Array[Long] = Array.tabulate(dims) { i =>
+          (0 until dims).foldLeft(0L)((s, j) =>
+            Math.addExact(s, Math.multiplyExact(g2(i * dims + j), v(j))))
+        }
+        var v = Array.fill(dims)(1L)
+        for (_ <- 1 to iters) {
+          val raw = matvec(v)
+          val sv = math.max(bitlen(maxAbs(raw)) - 32, 0)
+          v = raw.map(_ >> sv)
+        }
+        val w = matvec(v)
+        def dot(a: Array[Long], c: Array[Long]): Double = a.indices.foldLeft(BigInteger.ZERO)(
+          (s, k) => s.add(BigInteger.valueOf(a(k)).multiply(BigInteger.valueOf(c(k))))).doubleValue
+        val eig1 = div(dot(v, w), dot(v, v)) * (1L << sg).toDouble
+        val trace = (0 until dims).foldLeft(0L)((s, i) => Math.addExact(s, b.gram(i * dims + i)))
+        Some(PcaOut(b.rows, Some(trace), Some(eig1), Some(div(eig1, trace.toDouble))))
+      }
+
+    def bufferEncoder: Encoder[PcaBuf] = Encoders.product[PcaBuf]
+    def outputEncoder: Encoder[Option[PcaOut]] = ExpressionEncoder[Option[PcaOut]]()
   }
 }

@@ -3384,14 +3384,15 @@ object ExtrasQueries {
         // probe, sf1 round-robin: 4.5-5.1 s vs 7.9-8.9 s two-exchange
         // base): ONE explicit exchange of the exploded stream on the
         // join key (nk, blk) — REPARTITION_BY_COL, width conf-driven and
-        // AQE-coalescible, NOT a local-core pin — then the multi-
-        // member-bucket count, the semi-join prune and the pair join
-        // all reuse that layout instead of shuffling the 19x-exploded
-        // frame twice more. The prune (keep buckets with >= 2 distinct
-        // keys) is bit-exact: `a.k < b.k` inside one bucket needs two
-        // distinct keys by definition. r12 measured and REJECTED this
-        // prune because its duplicated subtrees re-ran the non-codegen
-        // variant construction at four more plan sites (237 s cold,
+        // AQE-coalescible, NOT a local-core pin. The plan has two such
+        // (nk, blk) exchanges (PlanShapeSpec pins them): the pruned
+        // stream's, shared by both pair-join inputs, and the narrow
+        // (k, nk, blk) rows' under the multi-member-bucket count. The
+        // prune (keep buckets with >= 2 distinct keys) is bit-exact:
+        // `a.k < b.k` inside one bucket needs two distinct keys by
+        // definition. r12 measured and REJECTED this prune because its
+        // duplicated subtrees re-ran the non-codegen variant
+        // construction at four more plan sites (237 s cold,
         // one variant per JVM in a since-deleted cold-run probe) — with
         // construction behind the artifact's cache scan every extra site is a memory read and the
         // objection dissolves. Unique-name corpora (the driver's sf0.1

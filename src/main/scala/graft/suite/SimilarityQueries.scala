@@ -1407,24 +1407,20 @@ object SimilarityQueries {
       "sim_pca_power",
       (s, dir) => {
         // per-label leading eigenvalue of the embedding second-moment
-        // matrix — power iteration expressed RELATIONALLY with every
-        // iterate an exact integer (matvec-as-join + arithmetic-shift
-        // renormalization), so a linear-algebra result passes the hash
-        // gate. The Gram build is the single fact-table pass and is a
-        // shared session artifact; eight matvec rounds then run on
-        // |labels|·4096-row broadcast-sized frames.
-        val cells = Artifacts.memo(s, dir, "embeddings", "gram_cells")(
-          Similarity.gramCells(tbl(s, dir, "embeddings"), "embedding",
-            "label", Dims))
+        // matrix — power iteration with every iterate an exact integer
+        // (Long matvec + arithmetic-shift renormalization), so a
+        // linear-algebra result passes the hash gate. One aggregation
+        // per label keeps its 64×64 Gram and runs the PcaIters rounds
+        // in memory.
         Similarity.gramPowerTopEig(tbl(s, dir, "embeddings"), "embedding",
-          "label", Dims, PcaIters, Some(cells))
+          "label", Dims, PcaIters)
       },
       Some(pcaOracleSql(Dims, PcaIters)))
   )
 
   // 5 rounds: the Rayleigh quotient is already converged to <1e-3 rel
   // error on this spectrum by round 4 (PcaPowerSpec brute-force check);
-  // extra rounds only buy per-round scheduling overhead on both engines
+  // extra rounds only buy the oracle's per-round CTE scans
   private val PcaIters = 5
 
   /** DuckDB mirror of [[Similarity.gramPowerTopEig]]: the same integer

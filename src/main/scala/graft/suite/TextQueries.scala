@@ -1370,7 +1370,7 @@ object TextQueries {
   /** DuckDB mirror of [[graft.text.Bpe.trainMerges]]: `rounds` unrolled
     * (pair-count → argmax → replace) CTE layers, each MATERIALIZED —
     * every layer reads the previous twice, so inlining would replay
-    * 2^rounds plans (the sim_pca_power lesson). Merge application is
+    * 2^rounds plans (see Dedup.connectedComponents). Merge application is
     * the double-the-separators trick ([[graft.text.Bpe.applyMerge]]):
     * plain `replace` is a non-rescanning leftmost scan in both engines,
     * and with doubled separators that scan IS greedy leftmost merging,

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * tokenization upstream). Every round localCheckpoints
   * the word frame: the iterate is referenced twice per round (pair
   * count + rewrite) and an uncut lineage loop doubles the plan per
-  * round (see Dedup.connectedComponents / Similarity.gramPowerTopEig).
+  * round (see Dedup.connectedComponents).
   *
   * All outputs are exact integers/strings with a total-order argmax
   * tie-break (count desc, then (l, r) lexicographic), so results are

@@ -243,6 +243,65 @@ class Af3RunSpec extends SparkSpec {
     "interaction_analysis_PAE_15.0_max_dist_8.0.csv" ->
       "d5da6127aab9fcfd875564e9992e6118c73acb26029005d1b38f919fd1e1ceb6")
 
+  private def runLogRows(dir: String): Seq[Seq[String]] =
+    graft.af3.Af3Io.runLog(spark, dir).select("job_dir", "file", "kind", "status").collect()
+      .map(r => (0 until 4).map(r.getString)).toSeq.sortBy(_.mkString("\t"))
+
+  test("AppleDouble `._` siblings with valid content change no output, only runLog's hidden rows") {
+    val src = new File(fixtureDir, "job_binder")
+    val root = Files.createTempDirectory("graft_appledouble").toFile
+    def read(name: String): String =
+      new String(Files.readAllBytes(new File(src, s"job_binder_$name").toPath), "UTF-8")
+    def put(job: String, name: String, body: String): Unit = {
+      val d = new File(root, job)
+      d.mkdirs()
+      Files.write(new File(d, name).toPath, body.getBytes("UTF-8"))
+    }
+    // job_keep passes the gate; job_reject fails it on chain_pair_pae_min
+    for (job <- Seq("job_keep", "job_reject")) {
+      put(job, s"${job}_summary_confidences_0.json",
+        if (job == "job_keep") read("summary_confidences_0.json")
+        else """{"iptm": 0.85, "ptm": 0.8, "chain_pair_pae_min": [[0.5, 30.0], [30.1, 0.6]]}""")
+      put(job, s"${job}_full_data_0.json", read("full_data_0.json"))
+      (0 to 4).foreach(k => put(job, s"${job}_model_$k.cif", read(s"model_$k.cif")))
+    }
+    def run(): Map[String, String] = {
+      val out = Files.createTempDirectory("graft_appledouble_out").toFile
+      Af3Run.run(spark, root.getPath, out.getPath, Af3Params())
+      digests(out)
+    }
+    val (before, logBefore) = (run(), runLogRows(root.getPath))
+    assert(before.keySet.exists(_.contains("job_keep")))
+
+    // each sibling would change the outputs if a reader parsed it: a
+    // summary that passes job_reject, a model 0 with one more POI atom,
+    // and a PAE with every cell below the cutoff
+    val model0 = read("model_0.cif")
+    val lastAtom = model0.lastIndexOf("\n#")
+    assert(lastAtom > 0)
+    val planted = Seq(
+      ("job_reject", "._job_reject_summary_confidences_0.json", read("summary_confidences_0.json")),
+      ("job_keep", "._job_keep_model_0.cif", model0.substring(0, lastAtom) +
+        "\nATOM 57 C CA . ALA A 1 99 ? 0.000 50.000 0.000 1.00 50.00 99 A 1" +
+        model0.substring(lastAtom)),
+      ("job_keep", "._job_keep_full_data_0.json", read("full_data_0.json")
+        .replaceAll("\"pae\": \\[.*\\]\\]", "\"pae\": " +
+          Seq.fill(30)(Seq.fill(30)("0.0").mkString("[", ", ", "]")).mkString("[", ", ", "]"))))
+    planted.foreach { case (job, name, body) => put(job, name, body) }
+    assert(planted.forall { case (job, name, _) => new File(new File(root, job), name).isFile })
+
+    assert(run() === before)
+    assert(runLogRows(root.getPath) === (logBefore ++ planted.map { case (job, name, _) =>
+      Seq(job, name, "hidden", "skipped_hidden") }).sortBy(_.mkString("\t")))
+  }
+
+  test("run releases every cache it makes in the caller's session") {
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("graft_af3run_caches").toFile
+    Af3Run.run(spark, fixtureDir, out.getPath, Af3Params())
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("parseArgs rejects a dangling argument and an unknown flag") {
     val dangling = intercept[RuntimeException] {
       Af3Run.parseArgs(Array("--input_dir", "in", "--max_dist"))
