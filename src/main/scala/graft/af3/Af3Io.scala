@@ -121,10 +121,14 @@ object Af3Io {
     }
 
     // summaries: one scan; _corrupt == structural corruption (see note).
-    // cache: Spark forbids a raw JSON scan that reads only the corrupt
-    // column (QUERY_ONLY_CORRUPT_RECORD_COLUMN); materializing first is
-    // the documented workaround, and the summaries table is tiny
-    val summaries = rawSummaries(spark, inputDir).cache()
+    // The status must come from a parse against the full schema, as the
+    // gate reads it: Spark refuses a JSON scan pruned to the corrupt
+    // column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and a scan pruned
+    // to fewer fields would call a summary whose pruned field has the
+    // wrong type `parsed`. The RDD boundary stops the pruning without
+    // caching anything in the session.
+    val raw = rawSummaries(spark, inputDir)
+    val summaries = spark.createDataFrame(raw.rdd, raw.schema)
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
         lit("summary").as("kind"),
         when(col("_corrupt").isNull, "parsed")

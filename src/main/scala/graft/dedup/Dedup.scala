@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Graph
 import graft.text.TextFunctions
 
 /** Deduplication operators for the training-data pipeline extension:
@@ -384,10 +385,11 @@ object Dedup {
     * assumptions on component count. The label-of-label shortcut makes
     * convergence O(log diameter) rounds instead of O(diameter), so even
     * pathological near-dup chains (each doc similar only to its
-    * neighbor) settle in a handful of rounds. Convergence is detected
-    * with a scalar changed-count per round; `maxRounds` bounds the worst
-    * case. 2^maxRounds with the shortcut covers any diameter that could
-    * arise in practice (20 rounds ~ diameter 2^20); exhausting the bound
+    * neighbor) settle in a handful of rounds. The rounds run in
+    * [[graft.operators.Graph.iterate]], whose stop test is a scalar
+    * changed-count per round; `maxRounds` bounds the worst case.
+    * 2^maxRounds with the shortcut covers any diameter that could arise
+    * in practice (20 rounds ~ diameter 2^20); exhausting the bound
     * without converging logs a warning and returns the partial labels.
     *
     * Lifecycle contract: the returned frame is `localCheckpoint`ed (its
@@ -401,53 +403,36 @@ object Dedup {
       aCol: String,
       bCol: String,
       maxRounds: Int = 20): DataFrame = {
-    val edges = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .unionByName(pairs.select(col(bCol).cast("long").as("u"), col(aCol).cast("long").as("v")))
-      .distinct().cache()
-    // lineage must be cut every round (localCheckpoint, not cache): the
-    // round's self-join doubles the logical plan, so an uncut loop goes
-    // exponential in plan size long before it goes wrong in data. On a
-    // cluster with reliable storage, sparkContext.setCheckpointDir +
-    // .checkpoint() is the fault-tolerant equivalent.
+    val edges = Graph.adjacency(pairs, aCol, bCol).cache()
     // seed labels with min(node, min neighbor) — one groupBy over edges,
     // no join, and exactly what round 1 of plain propagation would
     // produce: shallow graphs (isolated pairs/triangles, the typical
     // near-dup shape) start converged and pay a single confirm round
-    var labels = edges.groupBy(col("u"))
+    val init = edges.groupBy(col("u"))
       .agg(min(col("v")).as("__mn"))
       .select(col("u").as("node"), least(col("u"), col("__mn")).as("label"))
-      .localCheckpoint(true)
-    var round = 0
+    // carry the pre-step label (__old) through the round so convergence
+    // detection is a filter over the already-checkpointed frame — not
+    // another labels-vs-labels join per round
     var converged = false
-    while (round < maxRounds && !converged) {
+    def unchanged(next: DataFrame): Boolean = {
+      converged = next.filter(col("label") =!= col("__old")).count() == 0L
+      converged
+    }
+    val labels = Graph.iterate(init, maxRounds, unchanged) { (labels, _) =>
       val base = labels.select(col("node"), col("label"))
       val nbr = edges
         .join(base.select(col("node").as("v"), col("label").as("vl")), Seq("v"))
         .groupBy(col("u").as("node")).agg(min(col("vl")).as("nl"))
-      // carry the pre-step label (__old) through the round so convergence
-      // detection is a filter over the already-checkpointed frame — not
-      // another labels-vs-labels join per round
       val stepped = base.join(nbr, Seq("node"), "left")
         .select(col("node"), col("label").as("__old"),
           least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
       // path shortcut: also take the label of my label-node this round
-      val next = stepped
+      stepped
         .join(stepped.select(col("node").as("label"), col("label").as("__ll")),
           Seq("label"), "left")
         .select(col("node"), col("__old"),
           least(col("label"), coalesce(col("__ll"), col("label"))).as("label"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("label") =!= col("__old")).count()
-      // drop the previous round's checkpointed copy now that the change
-      // count consumed it — otherwise O(rounds) full label frames stay
-      // resident in executor storage for the rest of the application.
-      // Dataset.unpersist is a no-op on a checkpoint (storage is on the
-      // underlying RDD, not in the CacheManager) — go through the
-      // LogicalRDD leaf instead.
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(labels)
-      labels = next
-      converged = changed == 0L
-      round += 1
     }
     edges.unpersist(false)
     if (!converged)

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 /** Distributed graph primitives over plain edge DataFrames — everything
   * here is equi-joins and aggregations, so Catalyst/AQE handle the
@@ -93,6 +95,53 @@ object Graph {
       .select("a", "b", "c")
   }
 
+  /** The doubled undirected adjacency every iterative operator here
+    * walks: each edge in both directions as `(u, v)` with long ids,
+    * plus the `carry` columns (e.g. SSSP's weight) copied onto both
+    * directions, and duplicates dropped. Self-loops stay as one `(x, x)`
+    * row. Callers cache it for their loop and release it before
+    * returning.
+    */
+  private[graft] def adjacency(edges: DataFrame, src: String = "src", dst: String = "dst",
+      carry: Seq[Column] = Nil): DataFrame = {
+    def direction(from: String, to: String) = edges.select(
+      Seq(col(from).cast("long").as("u"), col(to).cast("long").as("v")) ++ carry: _*)
+    direction(src, dst).unionByName(direction(dst, src)).distinct()
+  }
+
+  /** The round loop of the iterative operators. `init` is checkpointed,
+    * then each of up to `rounds` rounds computes `step(state, round)`
+    * (`round` counts from 1), checkpoints it and releases the previous
+    * round's checkpoint. Lineage is cut every round (`localCheckpoint`,
+    * not `cache`): a round that reads its state twice doubles an uncut
+    * plan per round, which goes exponential in plan size long before it
+    * goes wrong in data. On a cluster with reliable storage,
+    * `setCheckpointDir` + `.checkpoint()` is the fault-tolerant
+    * equivalent. `stop` sees each new state (connected components counts
+    * its changed labels) and ends the loop when it answers true.
+    *
+    * The returned frame is the last checkpoint (the initial one when no
+    * round runs) and is never released here: the caller releases it
+    * with `ColumnBridge.unpersistCheckpoint` once consumed.
+    * `Dataset.unpersist` is a no-op on a checkpoint, whose storage
+    * lives on the RDD behind the plan's `LogicalRDD` leaf.
+    */
+  private[graft] def iterate(init: DataFrame, rounds: Int,
+      stop: DataFrame => Boolean = _ => false)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var state = init.localCheckpoint(true)
+    var round = 1
+    var stopped = false
+    while (round <= rounds && !stopped) {
+      val next = step(state, round).localCheckpoint(true)
+      stopped = stop(next)
+      ColumnBridge.unpersistCheckpoint(state)
+      state = next
+      round += 1
+    }
+    state
+  }
+
   /** Fixed-round k-core peeling over an UNDIRECTED edge list: each round
     * recomputes degrees within the surviving vertex set and drops
     * vertices below `k`. Peeling is monotone (the survivor set only
@@ -104,30 +153,21 @@ object Graph {
     *
     * Shape per round: two semi-joins of the edge list against the
     * (shrinking) survivor set + one map-side-combined degree count —
-    * all equi-joins on vertex ids. Lineage is checkpoint-cut per round
-    * (as in [[connectedComponents]] / [[pageRankScaled]]); the doubled
+    * all equi-joins on vertex ids, run by [[iterate]]; the doubled
     * adjacency is cached for the loop and released before returning.
     * Output: (v, core_deg) for round-R survivors, with their degree
-    * inside the surviving subgraph.
+    * inside the surviving subgraph. It reads the round-R survivor
+    * checkpoint: release it with `ColumnBridge.unpersistCheckpoint`
+    * once consumed.
     */
   def kCoreFixed(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct().cache()
-    var verts = adj.select(col("u").as("x")).distinct().localCheckpoint(true)
+    val adj = adjacency(edges).cache()
     def degreesWithin(vs: DataFrame): DataFrame = adj
       .join(vs, col("u") === col("x"), "left_semi")
       .join(vs.select(col("x").as("y")), col("v") === col("y"), "left_semi")
       .groupBy("u").agg(count(lit(1)).as("core_deg"))
-    var i = 0
-    while (i < rounds) {
-      val next = degreesWithin(verts)
-        .filter(col("core_deg") >= k)
-        .select(col("u").as("x"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(verts)
-      verts = next
-      i += 1
+    val verts = iterate(adj.select(col("u").as("x")).distinct(), rounds) { (vs, _) =>
+      degreesWithin(vs).filter(col("core_deg") >= k).select(col("u").as("x"))
     }
     val out = degreesWithin(verts).select(col("u").as("v"), col("core_deg"))
     adj.unpersist(false)
@@ -143,13 +183,11 @@ object Graph {
     * unrolling the same recurrence agrees hash-for-hash. Floating-point
     * PageRank cannot promise either (summation order varies per run).
     *
-    * Shape per iteration: one hash equi-join (adjacency x ranks) + one
-    * map-side-combined aggregation — the textbook distributed PageRank
-    * step. Lineage is cut every round (localCheckpoint, as in
-    * [[graft.dedup.Dedup.connectedComponents]]) so the plan stays flat;
-    * the adjacency (joined once with outdegrees) is cached for the loop
-    * and released before returning. Undirected doubling means every
-    * vertex has out-edges — no dangling-mass redistribution term needed.
+    * This is [[personalizedPageRankScaled]] with every vertex a seed:
+    * the teleport base then reaches every vertex, and undirected
+    * doubling gives every vertex out-edges, so no dangling-mass
+    * redistribution term is needed. An empty graph has no seed and
+    * throws `IllegalArgumentException`.
     *
     * Output: (v, rank_c) with sum(rank_c) ~= scale (minus truncation
     * dust). Fixed `iters` rather than convergence detection: this is the
@@ -160,41 +198,25 @@ object Graph {
       edges: DataFrame,
       iters: Int = 5,
       scale: Long = 1000000000000L,
-      damp: Int = 85): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct()
-    val deg = adj.groupBy("u").agg(count(lit(1)).as("od"))
-    val adjDeg = adj.join(deg, Seq("u")).cache()
-    val n = adjDeg.select(col("u")).distinct().count()
-    require(n > 0, "pageRankScaled: empty graph")
-    val base = (15L * scale) / (100L * n)
-    var ranks = adjDeg.select(col("u").as("v")).distinct()
-      .select(col("v"), lit(scale / n).as("rank_c"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val next = adjDeg
-        .join(ranks.select(col("v").as("u"), col("rank_c").as("rc")), Seq("u"))
-        .select(col("v"), expr(s"(rc * $damp) div (100 * od)").as("c"))
-        .groupBy("v").agg((sum(col("c")) + lit(base)).as("rank_c"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ranks)
-      ranks = next
-      i += 1
-    }
-    adjDeg.unpersist(false)
-    ranks
-  }
+      damp: Int = 85): DataFrame =
+    personalizedPageRankScaled(edges,
+      edges.select(col("src").as("v")).unionByName(edges.select(col("dst").as("v"))),
+      iters, scale, damp)
 
-  /** Personalized PageRank (topic-sensitive; Haveliwala 2002) in the
-    * same exact scaled-integer arithmetic as [[pageRankScaled]], with
-    * the teleport mass restricted to the SEED set: rank(v) =
-    * [v ∈ S]·(15·scale)/(100·|S|) + Σ_in (rank·85) div (100·od).
-    * Rank frames stay SPARSE — only vertices mass has reached carry a
-    * row (a BFS-like expansion from the seeds), so the per-round cost
-    * is proportional to the reached subgraph, not the whole graph.
-    * Lineage checkpoint-cut per round as always.
+  /** Personalized PageRank (topic-sensitive; Haveliwala 2002) in exact
+    * scaled-integer arithmetic, with the teleport mass restricted to the
+    * SEED set: rank(v) = [v ∈ S]·(15·scale)/(100·|S|) +
+    * Σ_in (rank·damp) div (100·od). Rank frames stay SPARSE — only
+    * vertices mass has reached carry a row (a BFS-like expansion from
+    * the seeds), so the per-round cost is proportional to the reached
+    * subgraph, not the whole graph.
+    *
+    * Shape per iteration: one hash equi-join (adjacency x ranks) + one
+    * map-side-combined aggregation — the textbook distributed PageRank
+    * step, run by [[iterate]]. The adjacency (with its outdegree
+    * column) and the seeds are cached for the loop and released before
+    * returning. Output: (v, rank_c), the last round's checkpoint:
+    * release it with `ColumnBridge.unpersistCheckpoint` once consumed.
     */
   def personalizedPageRankScaled(
       edges: DataFrame,
@@ -202,29 +224,25 @@ object Graph {
       iters: Int = 4,
       scale: Long = 1000000000000L,
       damp: Int = 85): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct()
-    val deg = adj.groupBy("u").agg(count(lit(1)).as("od"))
-    val adjDeg = adj.join(deg, Seq("u")).cache()
     val sd = seeds.select(col("v").cast("long").as("v")).distinct().cache()
-    val nSeeds = sd.count()
-    require(nSeeds > 0, "personalizedPageRankScaled: empty seed set")
-    val base = (15L * scale) / (100L * nSeeds)
-    val baseDf = sd.select(col("v"), lit(base).as("c"))
-    var ranks = sd.select(col("v"), lit(scale / nSeeds).as("rank_c"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < iters) {
-      val contrib = adjDeg
-        .join(ranks.select(col("v").as("u"), col("rank_c").as("rc")), Seq("u"))
-        .select(col("v"), expr(s"(rc * $damp) div (100 * od)").as("c"))
-      val next = contrib.unionByName(baseDf)
-        .groupBy("v").agg(sum(col("c")).as("rank_c"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(ranks)
-      ranks = next
-      i += 1
+    // an RDD count is one job; Dataset.count plans an aggregation with a shuffle
+    val nSeeds = sd.rdd.count()
+    if (nSeeds == 0) {
+      sd.unpersist(false)
+      throw new IllegalArgumentException("personalizedPageRankScaled: empty seed set")
+    }
+    // outdegree as a window over the adjacency: one shuffle on u, where
+    // a join with a per-u count takes two
+    val adjDeg = adjacency(edges)
+      .withColumn("od", count(lit(1)).over(Window.partitionBy("u"))).cache()
+    val baseDf = sd.select(col("v"), lit((15L * scale) / (100L * nSeeds)).as("c"))
+    val ranks = iterate(sd.select(col("v"), lit(scale / nSeeds).as("rank_c")), iters) {
+      (ranks, _) =>
+        adjDeg
+          .join(ranks.select(col("v").as("u"), col("rank_c").as("rc")), Seq("u"))
+          .select(col("v"), expr(s"(rc * $damp) div (100 * od)").as("c"))
+          .unionByName(baseDf)
+          .groupBy("v").agg(sum(col("c")).as("rank_c"))
     }
     adjDeg.unpersist(false)
     sd.unpersist(false)
@@ -244,25 +262,20 @@ object Graph {
     * Shape per round: one hash equi-join (adjacency x labels) + one
     * map-side-combined count + one argmax aggregation — same cost class
     * as a PageRank step, O(E) per round with no shuffle beyond the two
-    * aggregations. Lineage is cut every round (localCheckpoint, as in
-    * [[pageRankScaled]]). Fixed `rounds` rather than convergence: the
-    * oracle-friendly form; on community-structured graphs a few
-    * synchronous rounds already coalesce dense blocks onto their minimum
-    * member id.
+    * aggregations, run by [[iterate]]. Fixed `rounds` rather than
+    * convergence: the oracle-friendly form; on community-structured
+    * graphs a few synchronous rounds already coalesce dense blocks onto
+    * their minimum member id.
     *
     * Output: (v, label) — vertices sharing a label are one detected
-    * community.
+    * community. It is the last round's checkpoint: release it with
+    * `ColumnBridge.unpersistCheckpoint` once consumed.
     */
   def labelPropagationFixed(edges: DataFrame, rounds: Int): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct().cache()
-    var labels = adj.select(col("u").as("v")).distinct()
-      .select(col("v"), col("v").as("label"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
-      val next = adj
+    val adj = adjacency(edges).cache()
+    val init = adj.select(col("u").as("v")).distinct().select(col("v"), col("v").as("label"))
+    val labels = iterate(init, rounds) { (labels, _) =>
+      adj
         .join(labels.select(col("v").as("nv"), col("label")), col("v") === col("nv"))
         .groupBy(col("u"), col("label")).agg(count(lit(1)).as("c"))
         // argmax via lexicographic max over (count, -label): largest
@@ -270,10 +283,6 @@ object Graph {
         .groupBy(col("u"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("u").as("v"), (-col("m.nl")).as("label"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(labels)
-      labels = next
-      i += 1
     }
     adj.unpersist(false)
     labels
@@ -281,81 +290,52 @@ object Graph {
 
   /** Multi-source breadth-first distances over an UNDIRECTED edge list:
     * every seed starts at distance 0 and each round expands the frontier
-    * one hop, keeping the FIRST (= minimum) distance per vertex. Exact
-    * and engine-deterministic by construction — hop counts are integers
-    * and the frontier recurrence (neighbors of round k-1 minus everything
-    * already visited) is order-independent, so a fixed SQL unroll of the
-    * same rounds agrees hash-for-hash.
+    * one hop, keeping the FIRST (= minimum) distance per vertex. This is
+    * [[bfsPerSeed]] with one search shared by all seeds. Exact and
+    * engine-deterministic by construction — hop counts are integers and
+    * the frontier recurrence is order-independent, so a fixed SQL unroll
+    * of the same rounds agrees hash-for-hash. Unreached vertices are
+    * simply absent (no +inf sentinel to disagree on).
     *
-    * Shape per round: one hash equi-join (adjacency x CURRENT frontier —
-    * not the full visited set) + distinct + one anti join. Cost is
-    * O(edges touched by the frontier), the textbook distributed BFS; at
-    * 100 TB the frontier frames stay skinny (vertex id + int) while the
-    * adjacency is scanned once per round from cache. Lineage is cut
-    * every round as in [[pageRankScaled]]. Unreached vertices are simply
-    * absent (no +inf sentinel to disagree on).
-    *
-    * Output: (v, dist) for every vertex within `maxDepth` hops of a seed.
+    * Output: (v, dist) for every vertex within `maxDepth` hops of a seed;
+    * at `maxDepth <= 0`, the seeds at distance 0. It is the last round's
+    * checkpoint: release it with `ColumnBridge.unpersistCheckpoint` once
+    * consumed.
     */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct().cache()
-    var visited = seeds.select(col("v").cast("long").as("v"), lit(0).as("dist"))
-      .distinct().localCheckpoint(true)
-    var frontier = visited
-    var d = 1
-    while (d <= maxDepth) {
-      val next = adj
-        .join(frontier.select(col("v").as("u")), Seq("u"))
-        .select(col("v")).distinct()
-        .join(visited.select(col("v")), Seq("v"), "left_anti")
-        .select(col("v"), lit(d).as("dist"))
-        .localCheckpoint(true)
-      val grown = visited.unionByName(next).localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
-      if (d > 1) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(visited)
-      frontier = next
-      visited = grown
-      d += 1
-    }
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
-    adj.unpersist(false)
-    visited
-  }
+  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+    bfsLabeled(edges, seeds.select(lit(0L).as("seed"), col("v")), maxDepth).drop("seed")
 
-  /** Per-seed BFS out to `maxDepth`: like [[bfsDistances]] but each seed
-    * runs its own labeled search — the landmark pass behind sampled
-    * centrality measures. Frontiers carry (seed, v) pairs; expansion is
-    * still one adjacency equi-join per round (on the frontier vertex)
-    * with a keyed anti-join against that seed's visited set, so cost per
-    * round is O(Σ_seeds frontier-boundary), never seeds × |E| scans.
-    * Returns (seed, v, dist) with dist 0..maxDepth.
+  /** Per-seed BFS out to `maxDepth`: each seed runs its own labeled
+    * search — the landmark pass behind sampled centrality measures.
+    * Returns (seed, v, dist) with dist 0..maxDepth, the last round's
+    * checkpoint (release it with `ColumnBridge.unpersistCheckpoint` once
+    * consumed).
     */
-  def bfsPerSeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame = {
-    val adj = edges.select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"))
-      .unionByName(edges.select(col("dst").cast("long").as("u"), col("src").cast("long").as("v")))
-      .distinct().cache()
-    var visited = seeds.select(col("v").cast("long").as("seed"),
-        col("v").cast("long").as("v"), lit(0).as("dist"))
-      .distinct().localCheckpoint(true)
-    var frontier = visited
-    var d = 1
-    while (d <= maxDepth) {
+  def bfsPerSeed(edges: DataFrame, seeds: DataFrame, maxDepth: Int): DataFrame =
+    bfsLabeled(edges, seeds.select(col("v").as("seed"), col("v")), maxDepth)
+
+  /** BFS over (seed, v) start rows: each seed label is its own search.
+    * Round d expands the label's frontier — its rows at dist d-1, not
+    * the whole visited set — by one adjacency equi-join on the frontier
+    * vertex, and a keyed anti-join against that label's visited rows
+    * keeps only first visits, so cost per round is O(Σ_labels
+    * frontier-boundary), never labels × |E| scans. The frames stay
+    * skinny (label, vertex id, int) while the adjacency is scanned once
+    * per round from cache.
+    */
+  private def bfsLabeled(edges: DataFrame, start: DataFrame, maxDepth: Int): DataFrame = {
+    val adj = adjacency(edges).cache()
+    val init = start.select(col("seed").cast("long").as("seed"),
+      col("v").cast("long").as("v"), lit(0).as("dist")).distinct()
+    val visited = iterate(init, maxDepth) { (visited, d) =>
       val next = adj
-        .join(frontier.select(col("seed"), col("v").as("u")), Seq("u"))
+        .join(visited.filter(col("dist") === d - 1).select(col("seed"), col("v").as("u")),
+          Seq("u"))
         .select(col("seed"), col("v")).distinct()
         .join(visited.select(col("seed"), col("v")), Seq("seed", "v"), "left_anti")
         .select(col("seed"), col("v"), lit(d).as("dist"))
-        .localCheckpoint(true)
-      val grown = visited.unionByName(next).localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
-      if (d > 1) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(visited)
-      frontier = next
-      visited = grown
-      d += 1
+      visited.unionByName(next)
     }
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(frontier)
     adj.unpersist(false)
     visited
   }
@@ -372,34 +352,23 @@ object Graph {
     * Shape per round: one hash equi-join (weighted adjacency x reached
     * set) + one map-side-combined min aggregation — O(E) per round, the
     * classic frontier-free Bellman-Ford step that a 1000-executor
-    * cluster runs as two shuffles. `rounds` bounds path LENGTH (hops),
-    * the oracle-friendly form; paths longer than `rounds` hops keep
-    * their best bounded-length distance, exactly as the unrolled oracle
-    * computes.
+    * cluster runs as two shuffles, run by [[iterate]]. `rounds` bounds
+    * path LENGTH (hops), the oracle-friendly form; paths longer than
+    * `rounds` hops keep their best bounded-length distance, exactly as
+    * the unrolled oracle computes.
     *
-    * Output: (v, dist_c) for every vertex reachable within `rounds` hops.
+    * Output: (v, dist_c) for every vertex reachable within `rounds`
+    * hops, the last round's checkpoint (release it with
+    * `ColumnBridge.unpersistCheckpoint` once consumed).
     */
   def ssspScaled(weightedEdges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val adj = weightedEdges
-      .select(col("src").cast("long").as("u"), col("dst").cast("long").as("v"),
-        col("w").cast("long").as("w"))
-      .unionByName(weightedEdges
-        .select(col("dst").cast("long").as("u"), col("src").cast("long").as("v"),
-          col("w").cast("long").as("w")))
-      .distinct().cache()
-    var dist = seeds.select(col("v").cast("long").as("v"), lit(0L).as("dist_c"))
-      .distinct().localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
+    val adj = adjacency(weightedEdges, carry = Seq(col("w").cast("long").as("w"))).cache()
+    val init = seeds.select(col("v").cast("long").as("v"), lit(0L).as("dist_c")).distinct()
+    val dist = iterate(init, rounds) { (dist, _) =>
       val relaxed = adj
         .join(dist.select(col("v").as("u"), col("dist_c").as("du")), Seq("u"))
         .select(col("v"), (col("du") + col("w")).as("dist_c"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("v").agg(min(col("dist_c")).as("dist_c"))
-        .localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(dist)
-      dist = next
-      i += 1
+      dist.unionByName(relaxed).groupBy("v").agg(min(col("dist_c")).as("dist_c"))
     }
     adj.unpersist(false)
     dist
@@ -419,7 +388,8 @@ object Graph {
     * the edge grain — O(E) per round, every stage keyed. Lineage is
     * localCheckpoint-cut per half-round (the renorm references its
     * input twice; an uncut loop doubles the plan per round — see
-    * Dedup.connectedComponents).
+    * [[iterate]], which this loop does not use because each round
+    * carries two frames).
     *
     * Output: (v, auth_c, hub_c) with zero-filled absences.
     */
@@ -432,7 +402,7 @@ object Graph {
     def renorm(raw: DataFrame, vCol: String, sCol: String): DataFrame = {
       val mx = raw.agg(max(abs(col("raw"))).as("m"))
         .select(greatest(bitlen(col("m")) - 32, lit(0)).as("sh"))
-      val sh = org.apache.spark.sql.graft.ColumnBridge.scalar(mx)
+      val sh = ColumnBridge.scalar(mx)
       raw.select(col("v").as(vCol),
         call_function("shiftright", col("raw"), sh.cast("int")).as(sCol))
     }
@@ -444,12 +414,12 @@ object Graph {
       val rawA = e.join(h.select(col("v").as("src"), col("h")), Seq("src"))
         .groupBy(col("dst").as("v")).agg(sum(col("h")).as("raw"))
       val a2 = renorm(rawA, "v", "a").localCheckpoint(true)
-      if (a != null) org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(a)
+      if (a != null) ColumnBridge.unpersistCheckpoint(a)
       a = a2
       val rawH = e.join(a.select(col("v").as("dst"), col("a")), Seq("dst"))
         .groupBy(col("src").as("v")).agg(sum(col("a")).as("raw"))
       val h2 = renorm(rawH, "v", "h").localCheckpoint(true)
-      org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(h)
+      ColumnBridge.unpersistCheckpoint(h)
       h = h2
       i += 1
     }

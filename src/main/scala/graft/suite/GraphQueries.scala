@@ -78,7 +78,8 @@ object GraphQueries {
               GROUP BY 1, 2)"""
 
   /** One unrolled PageRank round for the oracle: the SAME scaled-integer
-    * recurrence [[graft.operators.Graph.pageRankScaled]] iterates —
+    * recurrence [[graft.operators.Graph.pageRankScaled]] (personalized
+    * PageRank with every vertex a seed) iterates —
     * per-edge `(rank*85) // (100*outdeg)` truncation, order-independent
     * integer sum, `15e12 // (100n)` teleport base — so a fixed unroll
     * depth agrees with the Spark loop bit-for-bit (DuckDB's `//` and
@@ -253,9 +254,11 @@ object GraphQueries {
       (s, dir) =>
         // 5-round PageRank over the support>=2 affinity graph in scaled
         // integer arithmetic (exact, partitioning-independent — see
-        // operators/Graph.pageRankScaled). Per round: one equi-join +
-        // one map-side-combined sum; lineage checkpoint-cut each round
-        // so the submitted plan is a flat scan of the final rank frame.
+        // operators/Graph.pageRankScaled, which runs
+        // personalizedPageRankScaled with every vertex a seed). Per
+        // round: one equi-join + one map-side-combined sum; lineage
+        // checkpoint-cut each round (Graph.iterate) so the submitted
+        // plan is a flat scan of the final rank frame.
         graft.operators.Graph.pageRankScaled(sharedSupportEdges(s, dir), iters = 5)
           .select(col("v").as("part"), col("rank_c"))
           .orderBy(col("rank_c").desc, col("part")),
@@ -520,10 +523,11 @@ object GraphQueries {
         // part id present in the affinity graph) out to 3 hops —
         // "how far is everything from the anchor SKUs". Frontier
         // expansion joins adjacency against the CURRENT frontier only
-        // (operators/Graph.bfsDistances), never the visited set, so
-        // per-round cost tracks the frontier's edge boundary; the
-        // oracle unrolls the identical recurrence (neighbors minus
-        // already-seen) three times.
+        // (operators/Graph.bfsDistances, the per-seed search of
+        // Graph.bfsPerSeed with one label shared by all seeds), never
+        // the visited set, so per-round cost tracks the frontier's edge
+        // boundary; the oracle unrolls the identical recurrence
+        // (neighbors minus already-seen) three times.
         val e = sharedSupportEdges(s, dir)
         val verts = e.select(col("src").as("v")).unionAll(e.select(col("dst").as("v")))
           .distinct()

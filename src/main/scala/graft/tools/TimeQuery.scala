@@ -3,9 +3,13 @@ package graft.tools
 import graft.{GraftSession, SparkEntry}
 
 /** Per-query timing loop: `runMain graft.tools.TimeQuery <name>[,<name>...]
-  * [sfDir] [laps]` — one cold + N warm laps for the named queries only,
-  * the fast feedback loop for single-operator performance work (the full
-  * `graft.Bench` protocol costs ~10 minutes; this costs seconds).
+  * [sfDir] [laps] [explain]` — one cold + N warm laps for the named
+  * queries only, the fast feedback loop for single-operator performance
+  * work (the full `graft.Bench` protocol costs ~10 minutes; this costs
+  * seconds). Every lap starts with [[graft.Bench.resetCaches]], as a
+  * bench lap does: a query that persists an intermediate inside its own
+  * execution would otherwise read the previous lap's copy and report a
+  * number the bench cannot reproduce.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -15,20 +19,12 @@ object TimeQuery {
     val spark = GraftSession.build("graft-timequery")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     val doExplain = args.length > 3 && args(3) == "explain"
-    // "reset" mode: clear the session cache between laps exactly like
-    // Bench.resetCaches, so a query that persists an intermediate
-    // INSIDE its own execution (pipeline_corpus_training_set's
-    // contaminated set, join_interval_overlap's session frame) is
-    // timed per-lap as the bench will time it — without this, lap 2+
-    // reads lap 1's materialized cache and reports a number the bench
-    // protocol can never reproduce (r13).
-    val doReset = args.length > 3 && args.drop(3).contains("reset")
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
       if (doExplain) fn(spark, sfDir).explain("formatted")
       val times = (0 to laps).map { _ =>
-        if (doReset) graft.Bench.resetCaches(spark)
+        graft.Bench.resetCaches(spark)
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9

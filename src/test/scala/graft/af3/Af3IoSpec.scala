@@ -55,4 +55,25 @@ class Af3IoSpec extends SparkSpec {
       ("job_edge", "job_edge_model_0.cif", "cif", "no_atoms"),
       ("job_edge", "job_edge_summary_confidences_0.json", "summary", "parsed")))
   }
+
+  test("runLog reads a summary with a mistyped field as corrupt_json, as the gate rejects it") {
+    val root = Files.createTempDirectory("graft_run_log_types")
+    // both are well-formed JSON: only a parse against the full schema
+    // sees the wrong type
+    write(root.resolve("job_iptm"), "job_iptm_summary_confidences_0.json",
+      """{"iptm": "high", "ptm": 0.8, "chain_pair_pae_min": [[1.0, 2.0], [2.0, 1.0]]}""")
+    write(root.resolve("job_pae"), "job_pae_summary_confidences_0.json",
+      """{"iptm": 0.9, "ptm": 0.8, "chain_pair_pae_min": "oops"}""")
+    assert(runLog(root.toString) === Seq(
+      ("job_iptm", "job_iptm_summary_confidences_0.json", "summary", "corrupt_json"),
+      ("job_pae", "job_pae_summary_confidences_0.json", "summary", "corrupt_json")))
+    assert(Af3Pipeline.gate(Af3Io.readSummaries(spark, root.toString), Af3Params())
+      .count() === 0L)
+  }
+
+  test("runLog leaves nothing cached in the session") {
+    spark.catalog.clearCache()
+    runLog(fixtureDir)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

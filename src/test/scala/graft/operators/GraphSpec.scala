@@ -122,6 +122,16 @@ class GraphSpec extends SparkSpec {
     assert(multi.groupBy($"v").count().filter($"count" > 1).count() == 0)
     val m = multi.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(m(6L) == 0 && m(7L) == 1 && m(8L) == 1 && m(4L) == 1 && m(1L) == 2)
+    // no round at all: both operators return the seeds at distance 0
+    for (depth <- Seq(0, -1)) {
+      val two = Seq(5L, 6L).toDF("v")
+      val d = Graph.bfsDistances(fixtureEdges, two, maxDepth = depth)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toSet
+      assert(d == Set(5L -> 0, 6L -> 0), s"bfsDistances maxDepth=$depth")
+      val p = Graph.bfsPerSeed(fixtureEdges, two, maxDepth = depth)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      assert(p == Set((5L, 5L, 0), (6L, 6L, 0)), s"bfsPerSeed maxDepth=$depth")
+    }
   }
 
   test("sssp: weighted min-plus distances prefer the cheap long way round") {
