@@ -49,25 +49,24 @@ object Af3Run {
   }
 
   /** Analyze the bundles under `inputDir` and write the four outputs
-    * under `outBase`. Returns the number of report rows; the stages'
-    * caches are released before returning.
+    * under `outBase`: one task per binder job writes the job's
+    * interaction CIF, overlay CIFs and PyMOL script, then the driver
+    * writes the CSV report (py:578). Returns the number of report rows
+    * and prints one `AF3RUN` line with the summed task counters.
     */
   def run(spark: SparkSession, inputDir: String, outBase: String, p: Af3Params): Long = {
-    val st = Af3Pipeline.stages(spark, inputDir, p)
-    val interactionDir = s"$outBase/Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
-    val overlayDir = s"$outBase/Overlays_Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
-
-    // 1. CSV report (py:578)
+    val inter = s"Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
+    val out = Af3Outputs(s"$outBase/$inter", s"$outBase/Overlays_$inter")
+    val st = Af3Pipeline.stages(spark, inputDir, p, Some(out))
     CifWriter.writeReportCsv(st.report, outBase, p)
-
-    // 2. per job: the interaction CIF (POI chain + island partner
-    // residues, model 0), the overlay CIFs with chains relabeled A/B
-    // (py:467-469) and the PyMOL script (py:472, 533-535)
-    CifWriter.writeJobFiles(st.atoms, st.members, p, interactionDir, overlayDir)
-
-    val n = st.report.count()
-    println(s"AF3RUN report_rows=$n binders=${st.binders.count()}")
-    st.unpersist()
+    // one report row per kept contact island: a job with contacts has
+    // both chains in its chain info, so the report's joins drop none
+    val n = st.jobs.map(_.islands.map(_.contact_islands.size).sum).sum.toLong
+    val sums = Af3Jobs.Counters.zipWithIndex.map { case (k, i) =>
+      val v = st.jobs.map(_.counters(i)).sum
+      if (k.endsWith("_ns")) k.stripSuffix("_ns") + f"_ms=${v / 1e6}%.1f" else s"$k=$v"
+    }
+    println(s"AF3RUN report_rows=$n binders=${st.binderDirs.size} ${sums.mkString(" ")}")
     n
   }
 

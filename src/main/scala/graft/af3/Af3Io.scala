@@ -1,17 +1,18 @@
 package graft.af3
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JsonFileReader
+import org.apache.spark.sql.sources.IsNotNull
 import org.apache.spark.sql.types._
 
 import graft.functions.Scalars
 
 /** AF3 bundle readers — explicit schemas, never inferred (SURVEY §1.2).
-  * Every frame carries `job_dir` (parent folder name) as the end-to-end
-  * partition key: one job's data stays co-located through the whole
-  * pipeline, so per-job operators shuffle once on `job_dir` and never
-  * again. A job is also the unit of work: its largest frame,
-  * [[readPaeLong]], holds one complex's N x N PAE matrix in one row.
+  * Every frame carries `job_dir` (parent folder name), the unit of work:
+  * [[readPaeLong]] holds one complex's N x N PAE matrix in one row.
   */
 object Af3Io {
 
@@ -33,26 +34,43 @@ object Af3Io {
     StructField("token_res_ids", ArrayType(IntegerType)),
     StructField("_corrupt", StringType)))
 
+  private def options(glob: String) = Map("multiLine" -> "true", "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> "_corrupt", "recursiveFileLookup" -> "true",
+    "pathGlobFilter" -> glob)
+
+  private val fullDataOptions = options("*_full_data_0.json")
+
   private def rawSummaries(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(summarySchema)
-      .option("multiLine", "true")
-      .option("encoding", "UTF-8")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*_summary_confidences_0.json")
-      .json(inputDir)
-      .withColumn("__path", input_file_name())
+      .options(options("*_summary_confidences_0.json") + ("encoding" -> "UTF-8"))
+      .json(inputDir).withColumn("__path", input_file_name())
 
   private def rawFullData(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.schema(fullDataSchema)
-      .option("multiLine", "true")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*_full_data_0.json")
-      .json(inputDir)
+    spark.read.schema(fullDataSchema).options(fullDataOptions).json(inputDir)
       .withColumn("__path", input_file_name())
+
+  /** The `full_data` files under `inputDir`, as URL-encoded paths:
+    * listed by Spark's file index with [[readPaeLong]]'s rules (hidden
+    * names skipped, same glob), without running a job.
+    */
+  private[af3] def fullDataFiles(spark: SparkSession, inputDir: String): Seq[String] =
+    rawFullData(spark, inputDir).inputFiles.toSeq
+
+  /** [[readPaeLong]]'s scan of one file, for a task that reads it
+    * itself: Spark's JSON parser with the options, pruned read schema and
+    * pushed not-null filters Spark plans for that scan. Its rows go
+    * through [[paeMatrices]].
+    */
+  private[af3] def fullDataReader(spark: SparkSession): JsonFileReader =
+    JsonFileReader(spark, fullDataOptions,
+      StructType(fullDataSchema.filter(_.name != "_corrupt")),
+      Seq(IsNotNull("pae"), IsNotNull("token_res_ids")))
+
+  /** The PAE matrices [[readPaeLong]] keeps from the rows of one file
+    * ([[fullDataReader]]): both keys must be present (py:111-113).
+    */
+  private[af3] def paeMatrices(rows: Iterator[InternalRow]): Seq[ArrayData] =
+    rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(_.getArray(0)).toSeq
 
   /** Read all summaries under `inputDir` keyed by job_dir. Exactly one
     * row per summary file; malformed files carry `_corrupt` and fall
@@ -92,13 +110,6 @@ object Af3Io {
     */
   def runLog(spark: SparkSession, inputDir: String): DataFrame = {
     val base = Scalars.baseName(col("__path"))
-
-    def paths(glob: String): DataFrame =
-      spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", glob)
-        .load(inputDir)
-        .select(col("path").as("__path"))
 
     // hidden AppleDouble files of any kind: reported, never parsed.
     // Spark's file index hides dot-files from every source, so this
@@ -147,7 +158,7 @@ object Af3Io {
       .groupBy(col("job_dir"), col("model_idx"))
       .agg(count(lit(1)).as("__n"))
     val cifRe = "^(.*)_model_(\\d+)\\.cif$"
-    val cifs = paths("*.cif")
+    val cifs = CifParser.modelScan(spark, inputDir).select(col("path").as("__path"))
       .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"))
       .withColumn("model_idx", regexp_extract(col("file"), cifRe, 2).cast("int"))
       .join(cifCounts, Seq("job_dir", "model_idx"), "left")

@@ -33,14 +33,9 @@ final case class CifAtom(
     occupancy: Option[Double] = None,
     b_iso: Option[Double] = None)
 
-/** mmCIF `_atom_site` reader, Spark-native.
-  *
-  * Shape: `binaryFile` scan (one row per .cif, so the unit of parallelism
-  * is the file — at 100 TB the bundles are many small independent files,
-  * which is exactly the partitioning Spark's file scan gives us) followed
-  * by a typed `flatMap` running a single-pass tokenizer. No Python/BioPython
-  * dependency, no driver-side work; the parse runs inside executors and
-  * feeds straight into columnar DataFrames.
+/** mmCIF `_atom_site` reader: a single-pass tokenizer over one file's
+  * text, run inside executors — over a `binaryFile` scan ([[readAtoms]])
+  * or in a job's task ([[Af3Jobs]]). No Python/BioPython dependency.
   *
   * Tokenization follows the CIF quoting rule BioPython implements
   * (py:146 via MMCIF2Dict): a `'` or `"` at token start opens a quoted
@@ -206,6 +201,17 @@ object CifParser {
 
   private val pathRe = ".*/([^/]+)/[^/]+_model_(\\d+)\\.cif$".r
 
+  private[af3] def modelScan(spark: SparkSession, inputDir: String): DataFrame =
+    spark.read.format("binaryFile")
+      .options(Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "*.cif")).load(inputDir)
+
+  /** The files [[readAtoms]] reads, as (job_dir, model_idx, URL-encoded
+    * path), listed by Spark's file index without running a job.
+    */
+  private[af3] def modelFiles(spark: SparkSession, inputDir: String): Seq[(String, Int, String)] =
+    modelScan(spark, inputDir).inputFiles.toSeq.collect { case u @ pathRe(job, m) =>
+      (job, m.toInt, u) }
+
   /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
     * atoms Dataset. `job_dir` = name of the containing folder, `model_idx`
     * from the filename (py:348-349, 440-441). AppleDouble `._` siblings
@@ -214,18 +220,12 @@ object CifParser {
     */
   def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.cif")
-      .load(inputDir)
+    modelScan(spark, inputDir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        path match {
-          case pathRe(job, m) =>
-            parseAtomSite(job, m.toInt, decodeText(content))
-          case _ => Iterator.empty
-        }
+      .flatMap {
+        case (pathRe(job, m), content) => parseAtomSite(job, m.toInt, decodeText(content))
+        case _ => Iterator.empty
       }
   }
 

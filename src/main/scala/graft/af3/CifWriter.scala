@@ -4,19 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
-/** mmCIF and PyMOL rendering + distributed per-key text file sinks.
+/** mmCIF and PyMOL rendering + per-key text file sinks.
   *
   * The reference writes one file per job via BioPython's MMCIFIO
   * (py:338-345, 423-427) and one `.pml` per job (py:533-535). Spark's
   * native writers produce one *directory* per partition; AF3 consumers
-  * expect single named files, so the sinks repartition by job or file key
-  * and have each executor task stream its keys' rows to exact paths —
-  * distributed, no driver collect, deterministic order via an explicit
-  * sort. An `_atom_site` line has one renderer ([[atomLine]]) and a
-  * `.pml` one ([[pml]]). All file IO goes through the Hadoop FileSystem
-  * API with the session's configuration shipped to executors, so the
-  * sinks work on any cluster filesystem (HDFS/S3/local), not only a
-  * driver-shared local disk.
+  * expect single named files, so each executor task streams its keys'
+  * rows to exact paths, in a deterministic order. An `_atom_site` line
+  * has one renderer ([[atomLine]]) and a `.pml` one ([[pml]]). All file
+  * IO goes through the Hadoop FileSystem API with the session's
+  * configuration shipped to executors, so the sinks work on any cluster
+  * filesystem (HDFS/S3/local), not only a driver-shared local disk.
   */
 object CifWriter {
 
@@ -277,86 +275,65 @@ object CifWriter {
       }
   }
 
-  /** [[graft.Af3Run]]'s structure outputs, per job in one pass: the
-    * interaction CIF `interactionDir/<job>_interaction.cif` (model 0,
-    * py:326-345), the overlay CIFs `overlayDir/<job>/model_<k>.cif`
-    * with the POI chain relabeled A and the partner B (py:389-430,
-    * 467-469) and the PyMOL script `overlayDir/<job>/align_and_save.pml`
-    * (py:472, 533-535). The bytes are those of [[writeKeyedText]] over
-    * [[renderCif]] of [[Af3Pipeline.interactionCifAtoms]] and
-    * [[Af3Pipeline.modelExtractAtoms]], and over
-    * [[Af3Pipeline.pymolScripts]].
-    *
-    * `atoms` is shuffled once, by job: the kept rows
-    * ([[Af3Pipeline.withSinkRoles]]) plus each model file's first atom
-    * (ordinal 1, as [[CifParser.readAtoms]] numbers them), which lists
-    * the model in the script even when nothing of it is kept. One task
-    * gets a job's rows sorted by (model, ordinal, relabeled chain,
-    * res_id, atom_name), streams each overlay and, from model 0, the
-    * interaction CIF beside it, and writes the script last. renderCif
-    * breaks ordinal ties on the source chain instead; ordinals are
-    * unique within a model file, so the orders differ only when two
-    * input folders share a job name.
+  /** [[atomLine]]'s columns ([[lineCols]]) of a parsed atom. */
+  private def lineRow(a: CifAtom): Row = Row(a.group_pdb, a.type_symbol, a.atom_name, a.alt_id,
+    a.res_name, a.label_asym_id, a.entity_id, a.label_seq_id, a.ins_code, a.x, a.y, a.z,
+    a.occupancy.getOrElse(null), a.b_iso.getOrElse(null), a.res_id, a.chain)
+
+  /** [[graft.Af3Run]]'s structure outputs of one job, from its task: per
+    * model (ascending, pulled one at a time) the overlay CIF
+    * `<job>/model_<k>.cif` with the POI chain relabeled A and the partner
+    * B (py:389-430, 467-469), from model 0 also `<job>_interaction.cif`
+    * (py:326-345), then `<job>/align_and_save.pml` over every model with
+    * atoms (py:472, 533-535). An atom gets one line per
+    * [[Af3Pipeline.sinkRoles]] role, in file order (ordinal; then role,
+    * res_id and atom_name when two files share a model). The bytes are
+    * those of [[writeKeyedText]] over [[renderCif]] of
+    * [[Af3Pipeline.interactionCifAtoms]] / [[Af3Pipeline.modelExtractAtoms]]
+    * and over [[Af3Pipeline.pymolScripts]]. Returns the files written.
     */
-  def writeJobFiles(atoms: DataFrame, members: DataFrame, p: Af3Params,
-      interactionDir: String, overlayDir: String): Unit = {
-    val conf = new SerializableConfiguration(
-      atoms.sparkSession.sparkContext.hadoopConfiguration)
-    val o = 6 // first of the lineCols
-    Af3Pipeline.withSinkRoles(atoms, members, p)
-      .filter(col("__poi") || col("__partner") || col("ordinal") === 1)
-      .select(Seq(col("job_dir"), col("model_idx"), col("ordinal"), col("__poi"),
-        col("__partner"), when(col("__poi"), "A").otherwise("B").as("__chain")) ++ lineCols: _*)
-      .repartition(col("job_dir"))
-      .sortWithinPartitions(col("job_dir"), col("model_idx"), col("ordinal"), col("__chain"),
-        col("res_id"), col("atom_name"))
-      .foreachPartition { (rows: Iterator[Row]) =>
-        val roles = Seq(3 -> "A", 4 -> "B") // (flag column, relabeled chain)
-        var job: String = null
-        val models = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var overlay: KeyedFile = null
-        var interaction: KeyedFile = null
+  private[af3] def writeJob(job: String, models: Iterator[(Int, Seq[CifAtom])],
+      members: Set[Int], p: Af3Params, out: Af3Outputs,
+      conf: org.apache.hadoop.conf.Configuration): Int = {
+    val listed = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var files = 0
+    for ((m, atoms) <- models if atoms.nonEmpty) {
+      listed += m
+      val kept = atoms.map(a => a -> Af3Pipeline.sinkRoles(a, members, p)).filter(_._2.nonEmpty)
+        .sortBy { case (a, roles) => (a.ordinal, roles.head, a.res_id, a.atom_name) }
+      var overlay: KeyedFile = null
+      var interaction: KeyedFile = null
+      try {
         var serial = 0
-        def endModel(): Unit = {
-          if (overlay != null) { overlay.commit(); overlay = null }
-          if (interaction != null) { interaction.commit(); interaction = null }
-        }
-        def endJob(): Unit = if (job != null) {
-          endModel()
-          val f = new KeyedFile(overlayDir, s"$job/align_and_save", ".pml", conf.value)
-          try { f.line(pml(job, models.toSeq)); f.commit() } finally f.abort()
-        }
-        try {
-          rows.foreach { r =>
-            val j = r.getString(0)
-            val m = r.getInt(1)
-            if (j != job) { endJob(); job = j; models.clear() }
-            if (models.isEmpty || models.last != m) { endModel(); models += m; serial = 0 }
-            for ((role, label) <- roles if r.getBoolean(role)) {
-              serial += 1
-              // a file is held before its header is written, so a failed
-              // write still reaches the abort below
-              if (overlay == null) {
-                overlay = new KeyedFile(overlayDir, s"$job/model_$m", ".cif", conf.value)
-                overlay.cifHeader()
-              }
-              overlay.line(atomLine(r, o, serial, label, "1"))
-              if (m == 0) {
-                if (interaction == null) {
-                  interaction = new KeyedFile(interactionDir, s"${job}_interaction", ".cif",
-                    conf.value)
-                  interaction.cifHeader()
-                }
-                interaction.line(atomLine(r, o, serial, null, "1"))
-              }
-            }
+        for ((a, roles) <- kept; label <- roles) {
+          serial += 1
+          val r = lineRow(a)
+          // a file is held before its header is written, so a failed
+          // write still reaches the abort below
+          if (overlay == null) {
+            overlay = new KeyedFile(out.overlayDir, s"$job/model_$m", ".cif", conf)
+            overlay.cifHeader()
           }
-          endJob()
-        } finally {
-          if (overlay != null) overlay.abort()
-          if (interaction != null) interaction.abort()
+          overlay.line(atomLine(r, 0, serial, label, "1"))
+          if (m == 0) {
+            if (interaction == null) {
+              interaction = new KeyedFile(out.interactionDir, s"${job}_interaction", ".cif", conf)
+              interaction.cifHeader()
+            }
+            interaction.line(atomLine(r, 0, serial, null, "1"))
+          }
         }
+        for (f <- Seq(overlay, interaction) if f != null) { f.commit(); files += 1 }
+      } finally {
+        if (overlay != null) overlay.abort()
+        if (interaction != null) interaction.abort()
       }
+    }
+    if (listed.nonEmpty) {
+      val f = new KeyedFile(out.overlayDir, s"$job/align_and_save", ".pml", conf)
+      try { f.line(pml(job, listed.toSeq)); f.commit(); files += 1 } finally f.abort()
+    }
+    files
   }
 
   /** The reference's dynamic-named CSV report sink (py:304-318): exact

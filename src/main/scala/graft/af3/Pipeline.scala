@@ -1,6 +1,6 @@
 package graft.af3
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialJoin
@@ -18,93 +18,64 @@ final case class Af3Params(
     minResidues: Int = 5,
     maxDist: Double = 8.0)
 
-/** One input row of the per-job contact grid: a POI atom, a partner
-  * atom, or a mark naming an interacting partner residue.
-  */
-private[af3] final case class ContactRow(job_dir: String, kind: Int, res: Int, x: Double, y: Double,
-    z: Double)
-
-private[af3] object ContactRow {
-  val Poi = 0
-  val Partner = 1
-  val Mark = 2
-}
-
-/** One kept contact island of a partner island (see
-  * `Af3Pipeline.nestedIslands`).
-  */
-private[af3] final case class ContactIsland(c_island: Long, contact_min: Int, contact_max: Int,
+/** One kept contact island of a partner island ([[Af3Pipeline.islandsOf]]). */
+final case class ContactIsland(c_island: Long, contact_min: Int, contact_max: Int,
     c_size: Long)
 
-/** One kept partner island of a job: its range, its member residues and
-  * its kept contact islands.
-  */
-private[af3] final case class PartnerIsland(job_dir: String, p_island: Long, partner_min: Int,
+/** One kept partner island of a job: its range, members and contact islands. */
+final case class PartnerIsland(job_dir: String, p_island: Long, partner_min: Int,
     partner_max: Int, members: Seq[Int], contact_islands: Seq[ContactIsland])
 
-/** The reference dataflow (py:543-579) wired once: summaries -> gate ->
-  * CIF parse -> chain info -> PAE block count -> contact join -> islands
-  * -> report. The CLI ([[graft.Af3Run]]), the `af3_*` suite queries and
-  * the specs all take their frames from here.
-  *
-  * Every stage is a lazy frame, so a consumer of `info` never plans the
-  * contact join. The six frames the CLI's sinks share are cached:
-  * binders, atoms (read once, full fidelity, for analysis and the CIF
-  * sinks alike), info, contacts, the nested islands (members and islands
-  * are projections of them) and report. A stage forces its
-  * inputs before it caches itself, so each cached plan reads its inputs'
-  * caches instead of recomputing them.
-  *
-  * The analysis tail runs per job, as the reference's loop does: the PAE
-  * block count, the contact grid and the nested islands each hold one
-  * complex in one task — at most its N^2 PAE cells and its model-0 atoms
-  * (~50k for a large complex). The work therefore scales with the number
-  * of jobs; a single complex too big for one task's memory is out of
-  * scope.
+/** The reference dataflow (py:543-579) wired once, for the CLI
+  * ([[graft.Af3Run]]), the `af3_*` suite queries and the specs: the gate
+  * is one small Spark job collecting the binder jobs, then [[jobs]] runs
+  * one task per binder job ([[Af3Jobs]]; with `out` the tasks also write
+  * the structure outputs). The analysis frames `info` .. `report` are
+  * local frames over the collected results: nothing is cached or
+  * recomputed. Only `atoms`, for the `sink_*` queries, reads files again.
   */
-final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params) {
-  private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private def keep(df: DataFrame): DataFrame = { cached += df; df.cache() }
+final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
+    out: Option[Af3Outputs] = None) {
+  import spark.implicits._
 
-  lazy val binders: DataFrame = keep(
-    Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p).select("job_dir").distinct())
-  lazy val atoms: DataFrame = keep(CifParser.readAtomsDf(spark, inputDir)
-    .join(broadcast(binders), Seq("job_dir"), "left_semi"))
-  def model0: DataFrame = atoms.filter(col("model_idx") === 0)
-  lazy val info: DataFrame = keep(Af3Pipeline.chainInfo(model0))
-  lazy val interacting: DataFrame = Af3Pipeline.interactingResidues(
-    Af3Io.readPaeLong(spark, inputDir).join(broadcast(binders), Seq("job_dir"), "left_semi"),
-    info, p)
+  // ordered by hash partition (Spark's `hash`, pmod the shuffle
+  // partitions), then by name: the report row order of the shuffled
+  // stage-by-stage pipeline, kept so report files stay byte-identical
+  lazy val binderDirs: Seq[String] = Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p)
+    .select(pmod(hash(col("job_dir")), lit(spark.conf.get("spark.sql.shuffle.partitions").toInt)),
+      col("job_dir")).collect().map(r => (r.getInt(0), r.getString(1))).distinct.sorted
+    .map(_._2).toSeq
+  lazy val atoms: DataFrame =
+    CifParser.readAtomsDf(spark, inputDir).filter(col("job_dir").isin(binderDirs: _*))
+  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, inputDir, binderDirs, p, out)
+  lazy val info: DataFrame = jobs.flatMap(j => j.info.map(c => (j.job_dir, c.chain,
+    c.residue_length, c.sequence))).toDF("job_dir", "chain", "residue_length", "sequence")
+  lazy val interacting: DataFrame =
+    jobs.flatMap(j => j.interacting.map(j.job_dir -> _)).toDF("job_dir", "partner_res")
   // model-0 contacts/islands computed once, fanned out to all models
   // (the py:449-469 reuse)
-  lazy val contacts: DataFrame = keep(Af3Pipeline.contactPairs(model0, interacting, p))
-  // the island rule runs once per job; members and islands project it
-  private lazy val nested: DataFrame = keep(Af3Pipeline.nestedIslands(contacts))
+  lazy val contacts: DataFrame = jobs.flatMap(j => j.contacts.map { case (q, r) =>
+    (j.job_dir, q, r) }).toDF("job_dir", "partner_res", "poi_res")
+  private lazy val nested: DataFrame = jobs.flatMap(_.islands).toDF()
   lazy val members: DataFrame = Af3Pipeline.membersOf(nested)
   lazy val islands: DataFrame = Af3Pipeline.contactIslandsOf(nested)
-  lazy val report: DataFrame = keep(Af3Pipeline.report(islands, info, p))
-
-  /** Release the cached stages, dependents first (uncaching an input
-    * while a cached dependent still reads it would re-plan the dependent).
-    */
-  def unpersist(): Unit = { cached.reverseIterator.foreach(_.unpersist()); cached.clear() }
+  lazy val report: DataFrame = Af3Pipeline.report(islands, info, p)
 }
 
-/** The reference pipeline (E1-E3, SURVEY §3) as composable
-  * DataFrame -> DataFrame stages. Everything is keyed and partitioned by
-  * `job_dir`; per-job work never crosses executors after the first shuffle.
-  * All thresholds reproduce the reference's exact comparison directions:
+/** The reference pipeline (E1-E3, SURVEY §3): each rule is one per-job
+  * routine, which [[Af3Jobs]] runs in a job's task and the DataFrame
+  * stages run as thin `groupByKey(job_dir)` wrappers. All thresholds
+  * reproduce the reference's exact comparison directions:
   * gate iptm/ptm reject on `<` (py:86), pae gate passes on strict `<`
   * (py:102), threshold count strict `<` with `>=` min_residues (py:218),
   * islands params (1,3) then (2,3) (py:292, 299).
   */
 object Af3Pipeline {
 
-  /** The reference dataflow over the bundles under `inputDir`, as named
-    * lazy frames (see [[Af3Stages]]).
-    */
-  def stages(spark: SparkSession, inputDir: String, p: Af3Params): Af3Stages =
-    Af3Stages(spark, inputDir, p)
+  /** The reference dataflow over the bundles under `inputDir` ([[Af3Stages]]). */
+  def stages(spark: SparkSession, inputDir: String, p: Af3Params,
+      out: Option[Af3Outputs] = None): Af3Stages =
+    Af3Stages(spark, inputDir, p, out)
 
   /** filter_confidence_gate (py:66-105): keep binder jobs. Missing keys
     * default to 0 (py:82-83); unknown chain or index out of bounds drops
@@ -129,69 +100,57 @@ object Af3Pipeline {
     }
   }
 
-  /** agg_chain_info (py:152-176): per (job, chain) the 1-letter sequence in
-    * residue order and the token-count approximation `residue_length`
-    * (AA residues count 1, others their atom count).
-    */
+  /** agg_chain_info (py:152-176), [[chainInfoOf]] per job. */
   def chainInfo(atoms: DataFrame): DataFrame = {
-    val perResidue = atoms
-      .groupBy(col("job_dir"), col("chain"), col("res_id"), col("res_name"))
-      .agg(count(lit(1)).as("atom_count"))
-    // residue_length gates on `residue_name in seq1_dict` (py:165) — the 20
-    // standard AAs only; modified residues (MSE, SEP, ...) contribute their
-    // atom_count. The extended is_aa(standard=False) set belongs only to the
-    // contactPairs/modelExtract paths that mirror BioPython's is_aa.
-    val isAA = col("res_name").isin(Scalars.standardAA: _*)
-    perResidue
-      .groupBy(col("job_dir"), col("chain"))
-      .agg(
-        sum(when(isAA, lit(1L)).otherwise(col("atom_count"))).as("residue_length"),
-        concat_ws("",
-          transform(
-            array_sort(collect_list(struct(col("res_id"), Scalars.seq1(col("res_name")).as("c")))),
-            _.getField("c"))).as("sequence"))
+    import atoms.sparkSession.implicits._
+    atomsByJob(atoms).flatMapGroups((job, rows) => chainInfoOf(rows.toSeq)
+      .map(c => (job, c.chain, c.residue_length, c.sequence)))
+      .toDF("job_dir", "chain", "residue_length", "sequence")
   }
+
+  /** The analysis columns of an atoms frame as [[CifAtom]]s, by job. */
+  private def atomsByJob(atoms: DataFrame): KeyValueGroupedDataset[String, CifAtom] = {
+    import atoms.sparkSession.implicits._
+    atoms.select("job_dir", "chain", "res_id", "res_name", "x", "y", "z")
+      .as[(String, String, Int, String, Double, Double, Double)]
+      .map { case (j, c, r, n, x, y, z) => CifAtom(j, 0, c, r, n, "", x, y, z) }
+      .groupByKey(_.job_dir)
+  }
+
+  private lazy val extendedAA = Scalars.extendedAA.toSet
+
+  /** One job's chain info, by chain: the 1-letter sequence of its
+    * residues (distinct (res_id, res_name)) ordered by (res_id, letter),
+    * and `residue_length`, where a residue counts 1 if it is one of the
+    * 20 standard AAs (`residue_name in seq1_dict`, py:165) and its atom
+    * count otherwise (modified residues such as MSE or SEP too).
+    */
+  private[af3] def chainInfoOf(atoms: Seq[CifAtom]): Seq[ChainRow] =
+    atoms.groupMapReduce(a => (a.chain, a.res_id, a.res_name))(_ => 1L)(_ + _)
+      .groupBy(_._1._1).toSeq.sortBy(_._1).map { case (chain, residues) =>
+        val letters = residues.keys.toSeq
+          .map { case (_, res, name) => (res, Scalars.seq1Map.getOrElse(name, "X")) }.sorted
+        ChainRow(chain,
+          residues.map { case ((_, _, nm), n) => if (Scalars.seq1Map.contains(nm)) 1L else n }.sum,
+          letters.map(_._2).mkString)
+      }
 
   /** agg_pae_threshold_count + project_rebase_index (py:185-224): partner
     * tokens j with `count_{i in POI}(pae[i][j] < cutoff) >= min_residues`,
     * rebased to 1-based partner residue numbers. `paePerJob` is
-    * [[Af3Io.readPaeLong]]'s one row per job; the tiny per-job offset table
-    * is broadcast-joined onto it and one codegen'd kernel
-    * ([[VectorExpressions.paeBlockHits]]) counts the POI x partner block of
-    * each matrix in place. Ranges out of bounds, ragged rows and missing
-    * cells simply count nothing (≙ py's empty returns at 209-211).
-    *
-    * Offsets are POSITIONAL, exactly as the reference indexes its
-    * chain_lengths list (py:197-211): chain X's token range is
-    * `[sum(lens[:idx(X)]), sum(lens[:idx(X)]) + lens[idx(X)])` where
-    * `idx` is the fixed A-E map and `lens` is the per-job length list in
-    * file (alphabetical) order — NOT a lookup by chain identity. A job
-    * whose chain list is shorter than the fixed index (e.g. chains A and
-    * C only, partner C -> idx 2 >= 2 lengths) yields no rows, mirroring
-    * the reference's IndexError -> [] path.
+    * [[Af3Io.readPaeLong]]'s one row per job; each job's [[paeBlock]] is
+    * broadcast-joined onto it and [[VectorExpressions.paeBlockHits]]
+    * counts the block in place. Out-of-bounds ranges, ragged rows and
+    * missing cells count nothing (≙ py's empty returns at 209-211).
     */
   def interactingResidues(paePerJob: DataFrame, chainInfoDf: DataFrame, p: Af3Params): DataFrame = {
-    val (poiIdx, partnerIdx) =
-      (Scalars.chainToIdx.get(p.poiChain), Scalars.chainToIdx.get(p.partnerChain)) match {
-        case (Some(a), Some(b)) => (a, b)
-        case _ => return paePerJob.sparkSession.emptyDataFrame
-          .withColumn("job_dir", lit("")).withColumn("partner_res", lit(0))
-          .limit(0) // invalid chain letter: nothing interacts (py:93-94)
-      }
-    def startOf(lens: Column, idx: Int): Column =
-      aggregate(slice(lens, 1, idx), lit(0L), _ + _)
-    val off = chainInfoDf
-      .groupBy(col("job_dir"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("chain"), col("residue_length")))),
-        _.getField("residue_length")).as("lens"))
-      .filter(size(col("lens")) > math.max(poiIdx, partnerIdx))
-      .select(col("job_dir"),
-        startOf(col("lens"), poiIdx).as("start_poi"),
-        (startOf(col("lens"), poiIdx) + element_at(col("lens"), poiIdx + 1)).as("end_poi"),
-        startOf(col("lens"), partnerIdx).as("start_partner"),
-        (startOf(col("lens"), partnerIdx) + element_at(col("lens"), partnerIdx + 1))
-          .as("end_partner"))
+    import paePerJob.sparkSession.implicits._
+    val off = chainInfoDf.select(col("job_dir"), col("chain"), col("residue_length").cast("long"))
+      .as[(String, String, Long)]
+      .groupByKey(_._1)
+      .flatMapGroups((job, rows) => paeBlock(rows.map(r => (r._2, r._3)).toSeq, p)
+        .map { case (a, b, c, d) => (job, a, b, c, d) })
+      .toDF("job_dir", "start_poi", "end_poi", "start_partner", "end_partner")
     paePerJob
       .join(broadcast(off), Seq("job_dir"))
       .select(col("job_dir"), explode(VectorExpressions.paeBlockHits(col("pae"),
@@ -199,56 +158,57 @@ object Af3Pipeline {
         lit(p.maxPaeCutoff), lit(p.minResidues))).as("partner_res"))
   }
 
-  /** join_contact_eps_distance (py:226-251): for each interacting partner
-    * residue, the distinct POI residues with any atom pair within
-    * `maxDist`. One task per job, as the reference's per-job KD-tree: the
-    * job's POI atoms, partner atoms and interacting residues meet in one
-    * group, and [[SpatialJoin.localPairs]] runs the ε-grid in memory.
-    * Rows come out sorted by (partner_res, poi_res) within a job.
+  /** One job's POI and partner token ranges `(start_poi, end_poi,
+    * start_partner, end_partner)` from its `(chain, residue_length)` rows.
+    * They are POSITIONAL, as the reference indexes its chain_lengths list
+    * (py:197-211): chain X spans `[sum(lens[:idx(X)]), sum(lens[:idx(X)+1]))`
+    * with `idx` the fixed A-E map and `lens` in chain order — not a
+    * lookup by chain identity. An unknown chain letter (py:93-94) or a
+    * chain list shorter than the index (chains A and C, partner C) gives
+    * `None`, the reference's IndexError -> [] path.
     */
+  private[af3] def paeBlock(chains: Seq[(String, Long)], p: Af3Params)
+      : Option[(Long, Long, Long, Long)] = {
+    val lens = chains.sortBy(_._1).map(_._2)
+    for {
+      a <- Scalars.chainToIdx.get(p.poiChain)
+      b <- Scalars.chainToIdx.get(p.partnerChain)
+      if lens.size > math.max(a, b)
+    } yield (lens.take(a).sum, lens.take(a + 1).sum, lens.take(b).sum, lens.take(b + 1).sum)
+  }
+
+  /** join_contact_eps_distance (py:226-251), [[contactsOf]] per job. */
   def contactPairs(atoms: DataFrame, interacting: DataFrame, p: Af3Params): DataFrame = {
     import atoms.sparkSession.implicits._
-    // is_aa(standard=False) also admits modified residues (py:230-231)
-    val isAA = col("res_name").isin(Scalars.extendedAA: _*)
-    def side(chain: String, kind: Int): DataFrame = atoms
-      .filter(col("chain") === chain && isAA)
-      .select(col("job_dir"), lit(kind).as("kind"), col("res_id").as("res"),
-        col("x"), col("y"), col("z"))
-    // the interacting residues ride along as coordinate-less marks
-    val marks = interacting.select(col("job_dir"), lit(ContactRow.Mark).as("kind"),
-      col("partner_res").cast("int").as("res"), lit(0.0).as("x"), lit(0.0).as("y"),
-      lit(0.0).as("z"))
-    val eps = p.maxDist
-    side(p.poiChain, ContactRow.Poi).unionByName(side(p.partnerChain, ContactRow.Partner))
-      .unionByName(marks)
-      .as[ContactRow]
-      .groupByKey(_.job_dir)
-      .flatMapGroups((job, rows) => contactsOfJob(rows, eps).map { case (q, r) => (job, q, r) })
-      .toDF("job_dir", "partner_res", "poi_res")
+    val marks = interacting.select(col("job_dir"), col("partner_res").cast("int"))
+      .as[(String, Int)].groupByKey(_._1)
+    atomsByJob(atoms).cogroup(marks) { (job, rows, res) =>
+      val ia = res.map(_._2).toSet
+      contactsOf(rows.toSeq, ia, p).iterator.map { case (q, r) => (job, q, r) }
+    }.toDF("job_dir", "partner_res", "poi_res")
   }
 
-  /** One job's distinct (partner_res, poi_res) contacts, sorted. */
-  private def contactsOfJob(rows: Iterator[ContactRow], eps: Double): Iterator[(Int, Int)] = {
-    val all = rows.toArray
-    val interacting = all.filter(_.kind == ContactRow.Mark).map(_.res).toSet
-    val poi = all.filter(_.kind == ContactRow.Poi)
-    val partner = all.filter(r => r.kind == ContactRow.Partner && interacting(r.res))
-    def xyz(a: Array[ContactRow]) = a.flatMap(r => Array(r.x, r.y, r.z))
+  /** One job's distinct (partner_res, poi_res) contacts within `maxDist`,
+    * sorted: [[SpatialJoin.localPairs]] in memory, as the reference's
+    * per-job KD-tree, over the POI chain's atoms and those of the
+    * `interacting` partner residues; both sides keep is_aa(standard=False)
+    * residues, modified ones included (py:230-231).
+    */
+  private[af3] def contactsOf(atoms: Seq[CifAtom], interacting: Set[Int],
+      p: Af3Params): Array[(Int, Int)] = {
+    def side(chain: String, keep: Int => Boolean) = atoms.filter(a =>
+      a.chain == chain && extendedAA(a.res_name) && keep(a.res_id)).toArray
+    val poi = side(p.poiChain, _ => true)
+    val partner = side(p.partnerChain, interacting)
+    def xyz(a: Array[CifAtom]) = a.flatMap(r => Array(r.x, r.y, r.z))
     val pairs = scala.collection.mutable.HashSet.empty[(Int, Int)]
-    SpatialJoin.localPairs(xyz(partner), xyz(poi), eps)((l, r) =>
-      pairs += ((partner(l).res, poi(r).res)))
-    pairs.toArray.sorted.iterator
+    SpatialJoin.localPairs(xyz(partner), xyz(poi), p.maxDist)((l, r) =>
+      pairs += ((partner(l).res_id, poi(r).res_id)))
+    pairs.toArray.sorted
   }
 
-  /** win_nested_islands (py:288-302): islands(gap=1,min=3) over partner
-    * residues that have contacts; per island the union of contact sets;
-    * islands(gap=2,min=3) over that union. Returns one row per
-    * (partner island, contact island) with min/max of both.
-    *
-    * Note: the reference feeds `list(set(...))` (unsorted) into its
-    * group-finder; we use the documented sorted semantics — identical for
-    * CPython's ascending small-int set iteration, and the only
-    * deterministic reading.
+  /** win_nested_islands (py:288-302): one row per (partner island,
+    * contact island) of [[islandsOf]], with the min/max of both.
     */
   def interactionIslands(contacts: DataFrame): DataFrame =
     contactIslandsOf(nestedIslands(contacts))
@@ -284,45 +244,47 @@ object Af3Pipeline {
           .as("interacting_sequence"))
   }
 
-  /** `atoms` with the two role flags of the structure sinks: `__poi`
-    * for the POI chain, `__partner` for partner residues inside a kept
-    * partner island (py:326-336, 409-411). An atom holds both when the
-    * POI and the partner chain are the same. Island membership is a
-    * join on the island member list, not a range test.
+  /** The relabeled chains an atom takes in the structure sinks, in
+    * output order: "A" for the POI chain, "B" for a partner residue
+    * inside a kept partner island (py:326-336, 409-411), both when the
+    * POI and the partner chain are the same. Island membership is the
+    * island member list, not a range test.
     */
-  private[af3] def withSinkRoles(atoms: DataFrame, islandMembers: DataFrame,
-      p: Af3Params): DataFrame = {
-    val members = islandMembers
-      .select(col("job_dir"), col("partner_res").as("res_id"), lit(true).as("__member"))
-      .distinct()
-    atoms.join(broadcast(members), Seq("job_dir", "res_id"), "left")
-      .select(atoms.columns.map(col).toSeq ++ Seq(
-        (col("chain") <=> p.poiChain).as("__poi"),
-        (col("chain") <=> p.partnerChain && col("__member").isNotNull).as("__partner")): _*)
+  private[af3] def sinkRoles(a: CifAtom, members: Set[Int], p: Af3Params): Seq[String] = {
+    val partner = a.chain == p.partnerChain && members(a.res_id)
+    if (a.chain == p.poiChain) { if (partner) Seq("A", "B") else Seq("A") }
+    else if (partner) Seq("B")
+    else Nil
+  }
+
+  /** `emit(atom, role)` per [[sinkRoles]] role of each atom of a
+    * [[CifAtom]] frame, per job.
+    */
+  private def withSinkRoles(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params)(
+      emit: (CifAtom, String) => CifAtom): DataFrame = {
+    import atoms.sparkSession.implicits._
+    val members = islandMembers.select(col("job_dir"), col("partner_res").cast("int"))
+      .as[(String, Int)].groupByKey(_._1)
+    atoms.as[CifAtom].groupByKey(_.job_dir).cogroup(members) { (_, rows, ms) =>
+      val keep = ms.map(_._2).toSet
+      rows.flatMap(a => sinkRoles(a, keep, p).map(emit(a, _)))
+    }.toDF()
   }
 
   /** filter_residue_select (py:326-336): atoms of the interaction CIF —
     * the whole POI chain plus partner residues inside any kept partner
     * island, model 0 only.
     */
-  def interactionCifAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame = {
-    val roles = withSinkRoles(atoms.filter(col("model_idx") === 0), islandMembers, p)
-    roles.filter(col("__poi")).unionByName(roles.filter(col("__partner")))
-      .drop("__poi", "__partner")
-  }
+  def interactionCifAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame =
+    withSinkRoles(atoms.filter(col("model_idx") === 0), islandMembers, p)((a, _) => a)
 
   /** sink_cif_model_extract (py:389-430): for every model 0..4, POI chain
-    * relabeled 'A', member partner residues relabeled 'B'.
+    * relabeled 'A', member partner residues relabeled 'B'. Both the auth
+    * and the label chain id are relabeled, as BioPython does when it
+    * writes the extracted structure's chains as 'A'/'B' (py:398-405).
     */
-  def modelExtractAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame = {
-    val roles = withSinkRoles(atoms, islandMembers, p)
-    // relabel both the auth and the label chain id, as BioPython does when
-    // it writes the extracted structure's chains as 'A'/'B' (py:398-405)
-    def relabel(role: String, id: String) = roles.filter(col(role))
-      .withColumn("chain", lit(id)).withColumn("label_asym_id", lit(id))
-      .drop("__poi", "__partner")
-    relabel("__poi", "A").unionByName(relabel("__partner", "B"))
-  }
+  def modelExtractAtoms(atoms: DataFrame, islandMembers: DataFrame, p: Af3Params): DataFrame =
+    withSinkRoles(atoms, islandMembers, p)((a, id) => a.copy(chain = id, label_asym_id = id))
 
   /** Partner-island members (keys of consecutive_interactions, py:383,
     * 409-411): partner residues in kept (gap=1, min=3) islands with
@@ -334,37 +296,40 @@ object Af3Pipeline {
   private[af3] def membersOf(nested: DataFrame): DataFrame =
     nested.select(col("job_dir"), explode(col("members")).as("partner_res"))
 
-  /** The island rule shared by [[interactionIslands]] and
-    * [[partnerIslandMembers]] (py:292, 299, 383), run once per job over
-    * sorted arrays: the distinct contacted partner residues grouped into
-    * islands(gap=1), islands of >= 3 residues kept; per kept island the
-    * distinct POI residues its members contact, grouped into
-    * islands(gap=2), islands of >= 3 residues kept. One row per kept
-    * partner island ([[PartnerIsland]]). Island ids count every island,
-    * kept or not, in ascending order from 0.
-    */
+  /** [[islandsOf]] per job, one [[PartnerIsland]] row per kept island. */
   private[af3] def nestedIslands(contacts: DataFrame): DataFrame = {
     import contacts.sparkSession.implicits._
     contacts
       .select(col("job_dir"), col("partner_res").cast("int"), col("poi_res").cast("int"))
       .as[(String, Int, Int)]
       .groupByKey(_._1)
-      .flatMapGroups { (job, rows) =>
-        val byPartner = rows.toSeq.groupMap(_._2)(_._3)
-        val partners = byPartner.keys.toArray.sorted
-        runs(partners, maxGap = 1).zipWithIndex.collect {
-          case ((from, until), id) if until - from >= MinIsland =>
-            val members = partners.slice(from, until)
-            val pois = members.flatMap(byPartner).distinct.sorted
-            val contactIslands = runs(pois, maxGap = 2).zipWithIndex.collect {
-              case ((f, u), cid) if u - f >= MinIsland =>
-                ContactIsland(cid.toLong, pois(f), pois(u - 1), (u - f).toLong)
-            }
-            PartnerIsland(job, id.toLong, members.head, members.last, members.toSeq,
-              contactIslands.toSeq)
-        }.iterator
-      }
+      .flatMapGroups((job, rows) => islandsOf(job, rows.map(r => (r._2, r._3)).toSeq))
       .toDF()
+  }
+
+  /** The island rule of [[interactionIslands]] and [[partnerIslandMembers]]
+    * (py:292, 299, 383) over one job's (partner_res, poi_res) contacts:
+    * the distinct contacted partner residues grouped into islands(gap=1),
+    * islands of >= 3 residues kept; per kept island the distinct POI
+    * residues its members contact, grouped into islands(gap=2), islands
+    * of >= 3 kept. Island ids count every island, kept or not, ascending
+    * from 0. The reference feeds `list(set(...))` to its group-finder;
+    * the sorted reading is the same for CPython's small-int sets.
+    */
+  private[af3] def islandsOf(job: String, contacts: Seq[(Int, Int)]): Seq[PartnerIsland] = {
+    val byPartner = contacts.groupMap(_._1)(_._2)
+    val partners = byPartner.keys.toArray.sorted
+    runs(partners, maxGap = 1).zipWithIndex.toSeq.collect {
+      case ((from, until), id) if until - from >= MinIsland =>
+        val members = partners.slice(from, until)
+        val pois = members.flatMap(byPartner).distinct.sorted
+        val contactIslands = runs(pois, maxGap = 2).zipWithIndex.collect {
+          case ((f, u), cid) if u - f >= MinIsland =>
+            ContactIsland(cid.toLong, pois(f), pois(u - 1), (u - f).toLong)
+        }
+        PartnerIsland(job, id.toLong, members.head, members.last, members.toSeq,
+          contactIslands.toSeq)
+    }
   }
 
   private val MinIsland = 3

@@ -76,11 +76,16 @@ object Scalars {
              x2: Column, y2: Column, z2: Column): Column =
     sqrt(distSq(x1, y1, z1, x2, y2, z2))
 
+  private val parentDirRe = "([^/]+)/[^/]+$"
+
   /** `os.path.basename(os.path.dirname(p))` — job-dir name from a file
     * path (py:115, 348–349, 522–523).
     */
-  def parentDirName(path: Column): Column =
-    regexp_extract(path, "([^/]+)/[^/]+$", 1)
+  def parentDirName(path: Column): Column = regexp_extract(path, parentDirRe, 1)
+
+  /** [[parentDirName]] of one path string. */
+  def parentDirName(path: String): String =
+    parentDirRe.r.findFirstMatchIn(path).map(_.group(1)).getOrElse("")
 
   def baseName(path: Column): Column =
     regexp_extract(path, "([^/]+)$", 1)

@@ -150,8 +150,8 @@ object Af3Queries {
         // the oracle recomputes the expected atom set from the fixture
         // CSVs (atoms x contact-island membership).
         // this query fires two actions (the file sink + the returned
-        // frame); the stages' caches keep the parse->contacts chain to
-        // one run
+        // frame); `members` is a local frame of the per-job results and
+        // `sel` is cached, so the model files are parsed once
         val st = Af3Pipeline.stages(s, fx, p)
         val sel = Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p).cache()
         graft.af3.CifWriter.writeKeyedText(

@@ -1,0 +1,59 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptionsInRead}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.json.MultiLineJsonDataSource
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
+
+/** Spark's multi-line JSON reader for one file, callable from any task:
+  * the options, Hadoop conf, `JacksonParser` and `FailureSafeParser`
+  * (through `MultiLineJsonDataSource.readFile`) that a
+  * `spark.read.schema(schema).options(options).json(..)` scan builds for
+  * each file it reads, with `schema` the scan's pruned read schema and
+  * `filters` its pushed data filters. A task that reads the file itself
+  * therefore gets the rows that scan would get: the same parse mode,
+  * partial results and corrupt-record handling. Build it on the driver.
+  */
+final class JsonFileReader private (options: JSONOptionsInRead, schema: StructType,
+    filters: Seq[Filter], conf: SerializableConfiguration) extends Serializable {
+
+  /** The rows of the file at `url` (a URL-encoded path, as
+    * `DataFrame.inputFiles` lists it).
+    */
+  def read(url: String): Iterator[InternalRow] = {
+    val parser = new JacksonParser(
+      StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord)), options,
+      allowArrayAsStructs = true, filters)
+    val file = PartitionedFile(InternalRow.empty, SparkPath.fromUrlString(url), 0L, 0L,
+      Array.empty[String], 0L, 0L, Map.empty[String, Any])
+    MultiLineJsonDataSource.readFile(conf.value, file, parser, schema)
+  }
+}
+
+object JsonFileReader {
+  private def classic(spark: SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  def apply(spark: SparkSession, options: Map[String, String], schema: StructType,
+      filters: Seq[Filter]): JsonFileReader = {
+    val state = classic(spark).sessionState
+    val parsed = new JSONOptionsInRead(options, state.conf.sessionLocalTimeZone,
+      state.conf.columnNameOfCorruptRecord)
+    require(parsed.multiLine, "JsonFileReader reads whole-file (multiLine) JSON only")
+    new JsonFileReader(parsed, schema, filters,
+      new SerializableConfiguration(state.newHadoopConfWithOptions(options)))
+  }
+
+  /** Run `body`, which launches the jobs that call [[JsonFileReader.read]],
+    * with the session's SQL conf visible to their tasks, as a Dataset
+    * action has it: the parser reads its settings from there.
+    */
+  def withSessionConf[T](spark: SparkSession)(body: => T): T =
+    SQLExecution.withSQLConfPropagated(classic(spark))(body)
+}

@@ -3,7 +3,12 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.af3.Af3Params
 
@@ -300,6 +305,65 @@ class Af3RunSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_af3run_caches").toFile
     Af3Run.run(spark, fixtureDir, out.getPath, Af3Params())
     assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  /** The Spark jobs `body` starts, counted by a listener on its job group.
+    * The listener bus is asynchronous: one more job, posted after the
+    * body's events, marks the point where all of them were delivered.
+    */
+  private def sparkJobs(body: => Unit): Int = {
+    val (group, markerGroup) = ("af3run-jobs", "af3run-jobs-marker")
+    val starts = new AtomicInteger
+    val markerJob = new AtomicInteger(-1)
+    val markerDone = new CountDownLatch(1)
+    def groupOf(e: SparkListenerJobStart) =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e) == group) starts.incrementAndGet()
+        else if (groupOf(e) == markerGroup) markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) markerDone.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "Af3Run.run")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(markerGroup, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(30, TimeUnit.SECONDS))
+      starts.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("run on the fixture tree takes 5 Spark jobs: gate, per-job tasks, report") {
+    val out = Files.createTempDirectory("graft_af3run_jobs").toFile
+    val n = sparkJobs(Af3Run.run(spark, fixtureDir, out.getPath, Af3Params()))
+    // the gate's collect, the one job of per-job tasks, and the report
+    // CSV: two broadcasts of the local chain-info frame and the write
+    assert(n === 5)
+  }
+
+  test("the AF3RUN line reports the task counters of the fixture run") {
+    val out = Files.createTempDirectory("graft_af3run_counters").toFile
+    val stdout = new java.io.ByteArrayOutputStream
+    Console.withOut(stdout)(Af3Run.run(spark, fixtureDir, out.getPath, Af3Params()))
+    val line = stdout.toString("UTF-8").linesIterator.filter(_.startsWith("AF3RUN ")).toSeq
+    assert(line.size === 1)
+    val fields = line.head.split(" ").tail.map { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      k -> v
+    }.toMap
+    // 1 binder with files (job_latin1 has a summary only), 5 models of
+    // 56 atoms, one 30x30 PAE; 7 files: 5 overlays, the interaction CIF
+    // and the .pml
+    assert(fields.filter(!_._1.endsWith("_ms")) === Map("report_rows" -> "1",
+      "binders" -> "2", "models" -> "5", "atoms" -> "280", "pae_cells" -> "900",
+      "interacting" -> "7", "contacts" -> "15", "islands" -> "1", "files" -> "7"))
+    assert(fields.keySet.filter(_.endsWith("_ms")) ===
+      Set("parse_ms", "pae_ms", "contacts_ms", "islands_ms", "sinks_ms"))
+    assert(fields.filter(_._1.endsWith("_ms")).values.forall(_.toDouble >= 0.0))
   }
 
   test("parseArgs rejects a dangling argument and an unknown flag") {

@@ -1,0 +1,133 @@
+package graft.af3
+
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
+import java.nio.file.Files
+
+import org.apache.spark.sql.catalyst.util.ArrayData
+
+import graft.SparkSpec
+
+/** The in-task `full_data` reader ([[Af3Io.fullDataReader]] +
+  * [[Af3Io.paeMatrices]]) against the scan it stands in for,
+  * [[Af3Io.readPaeLong]]: over an edge corpus, both must keep and drop
+  * the same files and rows and yield every PAE cell with the same bits
+  * (`doubleToRawLongBits`) and the same nulls.
+  */
+class FullDataReaderSpec extends SparkSpec {
+
+  private val row = "[[1.0, 2.5], [3.0, 4.0]]"
+
+  /** (job dir, file bytes): one `full_data` file per job. */
+  private val corpus: Seq[(String, Array[Byte])] = Seq(
+    "plain" -> s"""{"pae": $row, "token_res_ids": [1, 2]}""",
+    // a missing key, or a key set to null (py:111-113)
+    "no_pae" -> """{"token_res_ids": [1, 2]}""",
+    "no_ids" -> s"""{"pae": $row}""",
+    "null_pae" -> """{"pae": null, "token_res_ids": [1, 2]}""",
+    "null_ids" -> s"""{"pae": $row, "token_res_ids": null}""",
+    // wrong types, at the top level and nested
+    "pae_string" -> """{"pae": "oops", "token_res_ids": [1, 2]}""",
+    "pae_flat" -> """{"pae": [1.0, 2.0], "token_res_ids": [1, 2]}""",
+    "pae_cell_string" -> """{"pae": [[1.0, "x"], [2.0, 3.0]], "token_res_ids": [1, 2]}""",
+    "pae_cell_object" -> """{"pae": [[1.0, {"a": 1}]], "token_res_ids": [1]}""",
+    "pae_cell_bool" -> """{"pae": [[true, 1.0]], "token_res_ids": [1]}""",
+    "ids_string" -> s"""{"pae": $row, "token_res_ids": "abc"}""",
+    "ids_object" -> s"""{"pae": $row, "token_res_ids": {"a": 1}}""",
+    "ids_cell_string" -> s"""{"pae": $row, "token_res_ids": [1, "a"]}""",
+    "ids_cell_float" -> s"""{"pae": $row, "token_res_ids": [1.5, 2]}""",
+    "ids_nested" -> s"""{"pae": $row, "token_res_ids": [[1], [2]]}""",
+    "ids_huge" -> s"""{"pae": $row, "token_res_ids": [1, 99999999999]}""",
+    // non-finite, integer, signed-zero and out-of-range cells
+    "nan_strings" -> """{"pae": [["NaN", "Infinity"], ["-Infinity", "1.5"]], "token_res_ids": [1, 2]}""",
+    "nan_bare" -> """{"pae": [[NaN, Infinity], [-Infinity, 1.5]], "token_res_ids": [1, 2]}""",
+    "integers" -> """{"pae": [[1, 2], [30, 4]], "token_res_ids": [1, 2]}""",
+    "signed_zero" -> """{"pae": [[-0.0, 0.0], [-0, 1e-320]], "token_res_ids": [1, 2]}""",
+    "overflow" -> """{"pae": [[1e400, -1e400], [4.9e-324, 1.7976931348623157e308]], "token_res_ids": [1, 2]}""",
+    // null rows, null cells, ragged and empty rows
+    "null_rows" -> """{"pae": [[1.0, 2.0], null, [3.0]], "token_res_ids": [1, 2, 3]}""",
+    "null_cells" -> """{"pae": [[null, 2.0], [3.0, null]], "token_res_ids": [1, 2]}""",
+    "ragged" -> """{"pae": [[1.0], [2.0, 3.0, 4.0], []], "token_res_ids": [1, 2, 3]}""",
+    "empty_matrix" -> """{"pae": [], "token_res_ids": []}""",
+    // keys in either order, duplicated, and unknown keys holding nested
+    // arrays or objects
+    "ids_first" -> s"""{"token_res_ids": [1, 2], "pae": $row}""",
+    "dup_pae" -> s"""{"pae": [[9.0]], "token_res_ids": [1], "pae": $row}""",
+    "unknown_keys" -> (s"""{"atom_plddts": [1.0, 2.0], "contact_probs": [[0.1, 0.2], [0.3]], """ +
+      s""""meta": {"a": [1, {"b": [null, "c"]}], "d": {}}, "pae": $row, "x": null, """ +
+      """"token_res_ids": [1, 2], "y": [[[]]]}"""),
+    // truncated after both keys, top-level arrays, empty and blank files
+    "truncated" -> s"""{"pae": $row, "token_res_ids": [1, 2], "atom_plddts": [1.0, 2.""",
+    "truncated_in_pae" -> """{"token_res_ids": [1, 2], "pae": [[1.0, 2.0], [3.""",
+    "top_array" -> s"""[{"pae": $row, "token_res_ids": [1, 2]}, {"pae": [[7.0]], "token_res_ids": [1]}]""",
+    "top_array_mixed" -> s"""[{"pae": $row, "token_res_ids": [1, 2]}, {"pae": [[7.0]]}, 5]""",
+    "top_array_bad" -> s"""[{"pae": $row, "token_res_ids": [1, 2]}, {"pae": "x", "token_res_ids": [1]}]""",
+    "top_scalar" -> "42",
+    "empty" -> "",
+    "blank" -> " \n ",
+    "two_objects" -> s"""{"pae": $row, "token_res_ids": [1, 2]} {"pae": [[7.0]], "token_res_ids": [1]}"""
+  ).map { case (job, text) => job -> text.getBytes(UTF_8) } ++ Seq(
+    // latin-1 bytes: in an unknown string, in a key and in a cell
+    "latin1_value" -> s"""{"name": "Protéine", "pae": $row, "token_res_ids": [1, 2]}""",
+    "latin1_key" -> s"""{"é": 1, "pae": $row, "token_res_ids": [1, 2]}""",
+    "latin1_cell" -> """{"pae": [["1é"]], "token_res_ids": [1]}"""
+  ).map { case (job, text) => job -> text.getBytes(ISO_8859_1) } :+
+    ("utf16" -> s"""{"pae": $row, "token_res_ids": [1, 2]}""".getBytes("UTF-16"))
+
+  private lazy val tree: String = {
+    val root = Files.createTempDirectory("graft_full_data_corpus")
+    for ((job, bytes) <- corpus) {
+      val d = Files.createDirectories(root.resolve(job))
+      Files.write(d.resolve(s"${job}_full_data_0.json"), bytes)
+    }
+    root.toString
+  }
+
+  /** A cell as its raw bits, `None` for a null cell. */
+  private type Matrix = Seq[Option[Seq[Option[Long]]]]
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  private def fromScan(rows: collection.Seq[collection.Seq[java.lang.Double]]): Matrix =
+    rows.toSeq.map(r => Option(r).map(_.toSeq.map(c => Option(c).map(x => bits(x.doubleValue)))))
+
+  private def fromTask(m: ArrayData): Matrix =
+    (0 until m.numElements()).map { i =>
+      if (m.isNullAt(i)) None
+      else {
+        val r = m.getArray(i)
+        Some((0 until r.numElements()).map(j => if (r.isNullAt(j)) None else Some(bits(r.getDouble(j)))))
+      }
+    }
+
+  private def scan(): Map[String, Seq[Matrix]] =
+    Af3Io.readPaeLong(spark, tree).collect().toSeq
+      .groupBy(_.getString(0))
+      .map { case (job, rows) => job -> rows.map(r => fromScan(r.getSeq[collection.Seq[java.lang.Double]](1))) }
+
+  private def inTask(): Map[String, Seq[Matrix]] = {
+    val reader = Af3Io.fullDataReader(spark)
+    Af3Io.fullDataFiles(spark, tree).map { url =>
+      url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).map(fromTask)
+    }.filter(_._2.nonEmpty).toMap
+  }
+
+  test("the in-task reader keeps, drops and reads every corpus file as readPaeLong does") {
+    val want = scan()
+    val got = inTask()
+    for (job <- corpus.map(_._1))
+      assert(got.get(job) === want.get(job), s"job $job")
+    info("kept: " + want.toSeq.sortBy(_._1).map { case (j, ms) => s"$j(${ms.size})" }.mkString(" "))
+    // the corpus exercises both outcomes
+    assert(want.contains("plain") && want.contains("nan_bare") && want.contains("top_array"))
+    assert(!want.contains("no_ids") && !want.contains("null_ids") && !want.contains("empty"))
+  }
+
+  test("the reader is serializable and reads the same inside a task") {
+    val reader = Af3Io.fullDataReader(spark)
+    val urls = Af3Io.fullDataFiles(spark, tree)
+    val kept = spark.sparkContext.parallelize(urls, 4)
+      .map(url => url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).size)
+      .collect().toMap
+    assert(kept.filter(_._2 > 0) === inTask().map { case (job, ms) => job -> ms.size })
+  }
+}
