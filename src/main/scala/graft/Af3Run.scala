@@ -60,7 +60,7 @@ object Af3Run {
     val st = Af3Pipeline.stages(spark, inputDir, p, Some(out))
     CifWriter.writeReportCsv(st.report, outBase, p)
     // one report row per kept contact island: a job with contacts has
-    // both chains in its chain info, so the report's joins drop none
+    // both chains in its chain info, so the report drops none
     val n = st.jobs.map(_.islands.map(_.contact_islands.size).sum).sum.toLong
     val sums = Af3Jobs.Counters.zipWithIndex.map { case (k, i) =>
       val v = st.jobs.map(_.counters(i)).sum

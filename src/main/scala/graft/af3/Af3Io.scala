@@ -175,6 +175,13 @@ object Af3Io {
     * ([[Af3Pipeline.interactingResidues]]), so the working set per task is
     * one complex's N^2 cells, never the N^2 rows a long form would
     * materialize; the frame scales with the number of jobs.
+    *
+    * Decoding is strict on purpose: unlike [[readSummaries]] the scan
+    * sets no `encoding`, so a file with a byte that is not UTF-8, even in
+    * a string of a key nothing reads, is dropped whole, and its job gets
+    * no interacting residues. The reference's `extract_pae_data` returns
+    * None on any error (py:107-124); its latin-1 retry (py:68-73) is for
+    * summaries only. [[fullDataReader]] decodes the same way.
     */
   def readPaeLong(spark: SparkSession, inputDir: String): DataFrame =
     rawFullData(spark, inputDir)

@@ -38,13 +38,9 @@ final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
     out: Option[Af3Outputs] = None) {
   import spark.implicits._
 
-  // ordered by hash partition (Spark's `hash`, pmod the shuffle
-  // partitions), then by name: the report row order of the shuffled
-  // stage-by-stage pipeline, kept so report files stay byte-identical
+  // in job-name order, which is the report's row order
   lazy val binderDirs: Seq[String] = Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p)
-    .select(pmod(hash(col("job_dir")), lit(spark.conf.get("spark.sql.shuffle.partitions").toInt)),
-      col("job_dir")).collect().map(r => (r.getInt(0), r.getString(1))).distinct.sorted
-    .map(_._2).toSeq
+    .select(col("job_dir")).collect().map(_.getString(0)).distinct.sorted.toSeq
   lazy val atoms: DataFrame =
     CifParser.readAtomsDf(spark, inputDir).filter(col("job_dir").isin(binderDirs: _*))
   lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, inputDir, binderDirs, p, out)
@@ -59,7 +55,18 @@ final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
   private lazy val nested: DataFrame = jobs.flatMap(_.islands).toDF()
   lazy val members: DataFrame = Af3Pipeline.membersOf(nested)
   lazy val islands: DataFrame = Af3Pipeline.contactIslandsOf(nested)
-  lazy val report: DataFrame = Af3Pipeline.report(islands, info, p)
+  /** [[Af3Pipeline.report]]'s rows, joined in Scala: a job lacking the
+    * POI or the partner chain has none, as the inner joins drop it.
+    */
+  lazy val report: DataFrame = Af3Pipeline.reportOf((for {
+    j <- jobs
+    poi <- j.info.filter(_.chain == p.poiChain)
+    partner <- j.info.filter(_.chain == p.partnerChain)
+    i <- j.islands
+    c <- i.contact_islands
+  } yield (j.job_dir, c.contact_min, c.contact_max, poi.sequence, i.partner_min,
+    i.partner_max, partner.sequence)).toDF("job_dir", "contact_min", "contact_max",
+    "poi_sequence", "partner_min", "partner_max", "partner_sequence"))
 }
 
 /** The reference pipeline (E1-E3, SURVEY §3): each rule is one per-job
@@ -229,20 +236,23 @@ object Af3Pipeline {
       .select(col("job_dir"), col("sequence").as("poi_sequence"))
     val partnerSeq = chainInfoDf.filter(col("chain") === p.partnerChain)
       .select(col("job_dir"), col("sequence").as("partner_sequence"))
-    islands
-      .join(poiSeq, Seq("job_dir"))
-      .join(partnerSeq, Seq("job_dir"))
-      .select(
-        col("job_dir").as("folder_name"),
-        Scalars.rangeLabel(col("contact_min"), col("contact_max"))
-          .as("contact_residues_poi"),
-        Scalars.substrRange(col("poi_sequence"), col("contact_min"), col("contact_max"))
-          .as("contact_sequence"),
-        Scalars.rangeLabel(col("partner_min"), col("partner_max"))
-          .as("interacting_residues_partner"),
-        Scalars.substrRange(col("partner_sequence"), col("partner_min"), col("partner_max"))
-          .as("interacting_sequence"))
+    reportOf(islands.join(poiSeq, Seq("job_dir")).join(partnerSeq, Seq("job_dir")))
   }
+
+  /** The report columns of island rows that carry their job's
+    * `poi_sequence` and `partner_sequence`.
+    */
+  private[af3] def reportOf(rows: DataFrame): DataFrame =
+    rows.select(
+      col("job_dir").as("folder_name"),
+      Scalars.rangeLabel(col("contact_min"), col("contact_max"))
+        .as("contact_residues_poi"),
+      Scalars.substrRange(col("poi_sequence"), col("contact_min"), col("contact_max"))
+        .as("contact_sequence"),
+      Scalars.rangeLabel(col("partner_min"), col("partner_max"))
+        .as("interacting_residues_partner"),
+      Scalars.substrRange(col("partner_sequence"), col("partner_min"), col("partner_max"))
+        .as("interacting_sequence"))
 
   /** The relabeled chains an atom takes in the structure sinks, in
     * output order: "A" for the POI chain, "B" for a partner residue

@@ -179,198 +179,100 @@ object Dedup {
 
   // ---- SimHash ----------------------------------------------------------
 
-  /** SimHash over the document's distinct words: word w hashes to
-    * h = (a*word_id + b) mod 2^bits; each bit contributes +1/-1; the
-    * signature bit is 1 iff the sum is positive. `bits` up to 45 keeps
-    * every product within a signed long. At 100 TB use a wide signature
-    * (32-64 bits) so banded blocking keeps buckets small.
+  /** The affine word hashes of the SimHash halves: half `j` hashes a word
+    * to `(word_id * a_j + b_j) mod 2^32`. Word ids are below 2^31, so
+    * every product stays below 2^63.
+    */
+  private val SimhashCoeffs = Seq((40503L, 9973L), (31973L, 7919L),
+    (27673L, 6841L), (23911L, 5527L))
+
+  /** The 64-bit columns a `bits`-wide [[simhash]] packs its bits into,
+    * low bits first: `simhash` up to 64 bits, `(sim_lo, sim_hi)` above.
+    */
+  def simhashCols(bits: Int): Seq[String] =
+    if (bits <= 64) Seq("simhash") else Seq("sim_lo", "sim_hi")
+
+  /** SimHash over the document's distinct words, `bits` wide (1..128):
+    * bit `k` is the vote of bit `k mod 32` of half `k / 32`'s word hash
+    * (+1 per word that sets it, -1 per word that does not), set iff the
+    * sum is positive. One groupBy(doc) of `bits` sums; bit `k` lands at
+    * bit `k mod 64` of column `k / 64` of [[simhashCols]]. Up to 32 bits
+    * this is the single-modulus form `(a·w + b) mod 2^bits`, whose low
+    * bits are those of the mod-2^32 residue.
+    *
+    * Width is the scale lever of [[bandedHammingPairs]]: `maxHam + 1`
+    * bands key on `bits / (maxHam + 1)` bits each, so expected candidate
+    * pairs grow as ~N²·(maxHam + 1)/2^(bits/(maxHam + 1)) — at 128 bits
+    * and maxHam 3, 32-bit band keys keep candidates at the base near-dup
+    * rate out to ~10^10 docs, where 64 bits' 16-bit keys cannot.
     */
   def simhash(wordIds: DataFrame, bits: Int = 16): DataFrame = {
-    require(bits <= 45, "word_id * a must stay below 2^63")
-    val h = (col("word_id") * 40503L + 9973L) % (1L << bits)
-    val perWord = wordIds.select(col("doc_id"), col("word_id")).distinct()
-      .withColumn("h", h)
-    val bitSums = (0 until bits).map { k =>
-      sum(when(shiftright(col("h"), k) % 2 === 1, 1).otherwise(-1)).as(s"s_$k")
+    require(bits >= 1 && bits <= 32 * SimhashCoeffs.size,
+      s"simhash width must be 1..${32 * SimhashCoeffs.size} bits")
+    val perWord = SimhashCoeffs.take((bits + 31) / 32).zipWithIndex.foldLeft(
+        wordIds.select(col("doc_id"), col("word_id")).distinct()) {
+      case (df, ((a, b), j)) => df.withColumn(s"h$j", (col("word_id") * a + b) % (1L << 32))
     }
-    val sig = (0 until bits).map { k =>
-      when(col(s"s_$k") > 0, lit(1L << k)).otherwise(0L)
-    }.reduce(_ + _)
-    perWord.groupBy(col("doc_id"))
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), sig.as("simhash"))
-  }
-
-  /** 64-bit SimHash assembled from two independent 32-bit halves (the
-    * single-modulus form of [[simhash]] caps at 45 bits: `word_id * a`
-    * must stay below 2^63, and a 2^64 modulus doesn't exist in checked
-    * BIGINT arithmetic on either engine). Each half runs the same
-    * per-bit vote aggregation under its own affine word hash; the halves
-    * compose as `hi << 32 | lo` — in the oracle the sign-safe equivalent
-    * `(hi - 2^32·[hi ≥ 2^31]) * 2^32 + lo`, which never overflows
-    * checked BIGINT math yet reproduces the Java bit pattern exactly.
-    *
-    * Width is the banding lever at scale: 4 bands of 16 bits put band
-    * populations at N/65536 (vs N/256 for the 32-bit form) — candidate
-    * volume per band shrinks ~2^8 per width doubling while pigeonhole
-    * recall at maxHam 3 is unchanged.
-    */
-  def simhash64(wordIds: DataFrame): DataFrame = {
-    val perWord = wordIds.select(col("doc_id"), col("word_id")).distinct()
-      .withColumn("h0", (col("word_id") * 40503L + 9973L) % (1L << 32))
-      .withColumn("h1", (col("word_id") * 31973L + 7919L) % (1L << 32))
-    val sums =
-      (0 until 32).map { k =>
-        sum(when(shiftright(col("h0"), k) % 2 === 1, 1).otherwise(-1)).as(s"s_$k")
-      } ++ (0 until 32).map { k =>
-        sum(when(shiftright(col("h1"), k) % 2 === 1, 1).otherwise(-1)).as(s"t_$k")
-      }
-    val lo = (0 until 32).map { k =>
-      when(col(s"s_$k") > 0, lit(1L << k)).otherwise(0L)
-    }.reduce(_ + _)
-    val hi = (0 until 32).map { k =>
-      when(col(s"t_$k") > 0, lit(1L << k)).otherwise(0L)
-    }.reduce(_ + _)
+    val sums = (0 until bits).map { k =>
+      sum(when(shiftright(col(s"h${k / 32}"), k % 32) % 2 === 1, 1).otherwise(-1)).as(s"s_$k")
+    }
+    val words = simhashCols(bits).zipWithIndex.map { case (name, w) =>
+      (64 * w until math.min(bits, 64 * w + 64)).map { k =>
+        when(col(s"s_$k") > 0, lit(1L << (k % 64))).otherwise(0L)
+      }.reduce(_ + _).as(name)
+    }
     perWord.groupBy(col("doc_id"))
       .agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"), shiftleft(hi, 32).bitwiseOR(lo).as("simhash"))
+      .select(col("doc_id") +: words: _*)
   }
 
-  /** All (a, b) id pairs whose `bits`-wide integer hashes are within
-    * Hamming distance `maxHam`, with FULL recall: (maxHam + 1)-band LSH
-    * blocking (pigeonhole — a pair differing in <= maxHam bits must
-    * share at least one untouched band), equi-join on (band, band-bits),
-    * exact popcount verification, then distinct. Never all-pairs: the
-    * join shuffles on the band value only, and bucket population shrinks
-    * as 2^(-bits/(maxHam+1)) — use a wide hash so blocks stay small at
-    * scale. Band extraction masks (never mods), so sign-bit-set 64-bit
-    * hashes band correctly. Shared by [[simhashNear]] and
-    * [[graft.multimodal.Multimodal.phashNearDup]].
+  /** All (a, b) id pairs whose `bits`-wide hashes are within Hamming
+    * distance `maxHam`, with FULL recall. The hash lies in the 64-bit
+    * `hashCols`, low bits first, `bits / hashCols.size` bits each; every
+    * column carries an equal share of `maxHam + 1` bands, band `b` of `n`
+    * at bits `[b·w/n, (b+1)·w/n)` of its `w`-bit column. By pigeonhole a
+    * pair differing in <= maxHam bits shares at least one untouched band,
+    * so an equi-join on (band, band bits), the summed popcount of the
+    * words' XORs as exact verification, then distinct find them all.
+    * Never all-pairs: the join shuffles on the band value only. Band
+    * extraction masks after the arithmetic shift (never mods), so
+    * sign-bit-set words band correctly. Shared by the SimHash near-dup
+    * queries and [[graft.multimodal.Multimodal.phashNearDup]].
     */
   def bandedHammingPairs(
       hashes: DataFrame,
       idCol: String,
-      hashCol: String,
+      hashCols: Seq[String],
       bits: Int,
       maxHam: Int): DataFrame = {
-    require(bits >= 1 && bits <= 64, "hash width must be 1..64 bits")
-    require(maxHam >= 0 && maxHam + 1 <= bits,
-      "need maxHam + 1 bands of >= 1 bit each")
-    val nBands = maxHam + 1
-    val bounds = (0 to nBands).map(b => b * bits / nBands)
-    val bands = (0 until nBands).map { b =>
+    val width = bits / hashCols.size
+    val nBands = (maxHam + 1) / hashCols.size
+    require(width >= 1 && width <= 64 && width * hashCols.size == bits,
+      "hash width must split into 1..64 bits per column")
+    require(maxHam >= 0 && nBands * hashCols.size == maxHam + 1 && nBands <= width,
+      "need maxHam + 1 bands, as many of >= 1 bit each in every column")
+    val bounds = (0 to nBands).map(b => b * width / nBands)
+    val bands = for ((h, c) <- hashCols.zipWithIndex; b <- 0 until nBands) yield {
       val lo = bounds(b)
-      val width = bounds(b + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      struct(lit(b).as("band"),
-        shiftright(col(hashCol), lo).bitwiseAND(lit(mask)).as("key"))
+      val w = bounds(b + 1) - lo
+      val mask = if (w >= 64) -1L else (1L << w) - 1
+      struct(lit(c * nBands + b).as("band"),
+        shiftright(col(h), lo).bitwiseAND(lit(mask)).as("key"))
     }
-    val keyed = hashes.select(col(idCol).as("__id"), col(hashCol).as("__h"),
-        explode(array(bands: _*)).as("bk"))
-      .select(col("__id"), col("__h"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
+    val hs = hashCols.indices.map(c => s"__h$c")
+    val keyed = hashes.select(col(idCol).as("__id") +:
+        hashCols.zip(hs).map { case (h, a) => col(h).as(a) } :+
+        explode(array(bands: _*)).as("bk"): _*)
+      .select(col("__id") +: hs.map(col) :+
+        col("bk.band").as("band") :+ col("bk.key").as("key"): _*)
+    val hamming = hs.map(h => bit_count(col(s"x.$h").bitwiseXOR(col(s"y.$h")))).reduce(_ + _)
     keyed.as("x")
       .join(keyed.as("y"), Seq("band", "key"))
       .filter(col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("a"), col("y.__id").as("b"),
-        bit_count(col("x.__h").bitwiseXOR(col("y.__h"))).as("hamming"))
+      .select(col("x.__id").as("a"), col("y.__id").as("b"), hamming.as("hamming"))
       .filter(col("hamming") <= maxHam)
       .distinct()
   }
-
-  /** SimHash near-dup candidates within Hamming distance `maxHam` — the
-    * banded blocking of [[bandedHammingPairs]] over the signature column.
-    */
-  def simhashNear(sig: DataFrame, bits: Int, maxHam: Int = 3): DataFrame =
-    bandedHammingPairs(sig, "doc_id", "simhash", bits, maxHam)
-
-  /** 128-bit SimHash as TWO 64-bit words `(sim_lo, sim_hi)`, assembled
-    * from four independent 32-bit affine-hash halves the same way
-    * [[simhash64]] assembles two (that single-modulus form caps at 45
-    * bits; two-long composition has no cap). Words 0-1 pack into
-    * `sim_lo`, words 2-3 into `sim_hi`.
-    *
-    * Width is the SCALE lever (r10 verdict #1): banding a `w`-bit
-    * signature into `maxHam+1` bands keys each band on `w/(maxHam+1)`
-    * bits, so expected candidate pairs grow ~N²·(maxHam+1)/2^(w/(maxHam+1))
-    * — a CONSTANT key space, quadratic in the corpus no matter the
-    * width. At 64 bits (4×16-bit bands) the 2^16-way blocking was
-    * already the #2 sf1 head and is computationally impossible at 10^9
-    * docs; at 128 bits the same 4-band pigeonhole guarantee holds while
-    * band populations drop 2^16× (N/2^32), keeping candidate density at
-    * the base near-dup rate out to ~10^10 docs. Same plan shape, same
-    * recall proof, one extra long per row.
-    */
-  def simhash128(wordIds: DataFrame): DataFrame = {
-    val coeffs = Seq((40503L, 9973L), (31973L, 7919L),
-      (27673L, 6841L), (23911L, 5527L))
-    val perWord = coeffs.zipWithIndex.foldLeft(
-        wordIds.select(col("doc_id"), col("word_id")).distinct()) {
-      case (df, ((a, b), j)) =>
-        df.withColumn(s"h$j", (col("word_id") * a + b) % (1L << 32))
-    }
-    val sums = (0 until 4).flatMap { j =>
-      (0 until 32).map { k =>
-        sum(when(shiftright(col(s"h$j"), k) % 2 === 1, 1).otherwise(-1))
-          .as(s"s_${j}_$k")
-      }
-    }
-    def word(j: Int) = (0 until 32).map { k =>
-      when(col(s"s_${j}_$k") > 0, lit(1L << k)).otherwise(0L)
-    }.reduce(_ + _)
-    perWord.groupBy(col("doc_id"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("doc_id"),
-        shiftleft(word(1), 32).bitwiseOR(word(0)).as("sim_lo"),
-        shiftleft(word(3), 32).bitwiseOR(word(2)).as("sim_hi"))
-  }
-
-  /** All (a, b) id pairs whose 128-bit hashes (as two 64-bit words) are
-    * within Hamming distance `maxHam`, FULL recall: fixed 4 bands of 32
-    * bits (two per word — the pigeonhole argument needs maxHam+1 = 4
-    * bands; 32-bit keys are the width dividend of the 128-bit
-    * signature). Same certified-superset plan as [[bandedHammingPairs]]:
-    * equi-join on (band, 32-bit key), exact two-word popcount verify,
-    * distinct. Masking AFTER the arithmetic shift extracts each band
-    * correctly for sign-bit-set words on both engines.
-    */
-  def bandedHammingPairs128(
-      hashes: DataFrame,
-      idCol: String,
-      loCol: String,
-      hiCol: String,
-      maxHam: Int = 3): DataFrame = {
-    require(maxHam == 3,
-      "128-bit banding is fixed at 4 bands of 32 bits (pigeonhole radius 3)")
-    val m32 = (1L << 32) - 1
-    val bands = Seq(
-      col("__lo").bitwiseAND(lit(m32)),
-      shiftright(col("__lo"), 32).bitwiseAND(lit(m32)),
-      col("__hi").bitwiseAND(lit(m32)),
-      shiftright(col("__hi"), 32).bitwiseAND(lit(m32)))
-    val keyed = hashes
-      .select(col(idCol).as("__id"), col(loCol).as("__lo"), col(hiCol).as("__hi"))
-      .select(col("__id"), col("__lo"), col("__hi"),
-        explode(array(bands.zipWithIndex.map { case (k, b) =>
-          struct(lit(b).as("band"), k.as("key"))
-        }: _*)).as("bk"))
-      .select(col("__id"), col("__lo"), col("__hi"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    keyed.as("x")
-      .join(keyed.as("y"), Seq("band", "key"))
-      .filter(col("x.__id") < col("y.__id"))
-      .select(col("x.__id").as("a"), col("y.__id").as("b"),
-        (bit_count(col("x.__lo").bitwiseXOR(col("y.__lo"))) +
-          bit_count(col("x.__hi").bitwiseXOR(col("y.__hi")))).as("hamming"))
-      .filter(col("hamming") <= maxHam)
-      .distinct()
-  }
-
-  /** 128-bit SimHash near-dup candidates — the 4×32 banding of
-    * [[bandedHammingPairs128]] over a [[simhash128]] signature frame.
-    */
-  def simhashNear128(sig: DataFrame, maxHam: Int = 3): DataFrame =
-    bandedHammingPairs128(sig, "doc_id", "sim_lo", "sim_hi", maxHam)
 
   // ---- connected components (survivor selection) -----------------------
 

@@ -381,7 +381,7 @@ object Multimodal {
     * all-pairs join.
     */
   def phashNearDup(hashes: DataFrame, maxHam: Int): DataFrame =
-    graft.dedup.Dedup.bandedHammingPairs(hashes, "doc_id", "ahash", 64, maxHam)
+    graft.dedup.Dedup.bandedHammingPairs(hashes, "doc_id", Seq("ahash"), 64, maxHam)
       .select(col("a").as("a_id"), col("b").as("b_id"),
         col("hamming").cast("long").as("ham"))
 

@@ -127,7 +127,7 @@ object DedupQueries {
     */
   private[suite] def sharedSimhash128(
       s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    memo(s, dir, "simhash128_sig")(Dedup.simhash128(docWordIds(s, dir)))
+    memo(s, dir, "simhash128_sig")(Dedup.simhash(docWordIds(s, dir), bits = 128))
 
   /** Build every shared corpus-index artifact for `dir` up front — the
     * bench's declared setup phase, so one-time index cost is measured as
@@ -775,8 +775,8 @@ object DedupQueries {
         // [[sharedSimhash128]] (r12): built once per corpus in setup
         // like the MinHash sig8 table, probed here — the query is the
         // banded equi-join + two-word popcount verify only.
-        Dedup.simhashNear128(sharedSimhash128(s, dir), maxHam = 3)
-          .orderBy("a", "b"),
+        Dedup.bandedHammingPairs(sharedSimhash128(s, dir), "doc_id",
+          Dedup.simhashCols(128), 128, maxHam = 3).orderBy("a", "b"),
       Some {
         val coeffs = Seq((40503L, 9973L), (31973L, 7919L),
           (27673L, 6841L), (23911L, 5527L))
@@ -794,7 +794,7 @@ object DedupQueries {
         // two-long composition, sign-safe: w1/w3 are 32-bit unsigned in
         // BIGINT; subtract 2^32 when the sign bit is set so the *2^32
         // never overflows checked BIGINT math yet reproduces the Java
-        // bit pattern of shiftleft(w,32)|lo exactly (the simhash64 trick)
+        // bit pattern of shiftleft(w,32)|lo exactly
         s"""WITH $vocabSql,
             pw AS (SELECT DISTINCT doc_id, word_id FROM ids),
             hs AS (SELECT doc_id, $hs FROM pw),

@@ -80,9 +80,10 @@ object ScaleProbe {
         maxGap = 1800L, minLen = 3L)
     }
     probe("simhash_banded", docs, Seq("doc_id"), rotate = Some("text")) { d =>
-      val sig = graft.dedup.Dedup.simhash64(
-        graft.dedup.Dedup.docWordIds(d, "doc_id", "text"))
-      graft.dedup.Dedup.bandedHammingPairs(sig, "doc_id", "simhash", 64, 3)
+      val sig = graft.dedup.Dedup.simhash(
+        graft.dedup.Dedup.docWordIds(d, "doc_id", "text"), bits = 64)
+      graft.dedup.Dedup.bandedHammingPairs(sig, "doc_id", graft.dedup.Dedup.simhashCols(64),
+        64, 3)
     }
 
     // IVF corpus-vs-corpus top-k: the cell count is the knob that decides

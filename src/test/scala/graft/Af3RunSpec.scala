@@ -25,6 +25,11 @@ class Af3RunSpec extends SparkSpec {
 
   private def lines(f: File): Seq[String] = Files.readAllLines(f.toPath).asScala.toSeq
 
+  private def deleteTree(f: File): Unit = {
+    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
+    f.delete()
+  }
+
   private def sha256(f: File): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(Files.readAllBytes(f.toPath)).map("%02x".format(_)).mkString
@@ -337,12 +342,34 @@ class Af3RunSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("run on the fixture tree takes 5 Spark jobs: gate, per-job tasks, report") {
+  test("run on the fixture tree takes 3 Spark jobs: gate, per-job tasks, report") {
     val out = Files.createTempDirectory("graft_af3run_jobs").toFile
     val n = sparkJobs(Af3Run.run(spark, fixtureDir, out.getPath, Af3Params()))
     // the gate's collect, the one job of per-job tasks, and the report
-    // CSV: two broadcasts of the local chain-info frame and the write
-    assert(n === 5)
+    // CSV's write
+    assert(n === 3)
+  }
+
+  test("report rows come in job-name order, whatever the shuffle partitions") {
+    val root = Files.createTempDirectory("graft_af3run_order").toFile
+    val tree = new File(root, "tree")
+    perfbench.Af3Gen.generate("af3_screen", 1L, tree)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    val reports = try Seq("4", "7").map { n =>
+      spark.conf.set(key, n)
+      val out = new File(root, s"out_$n")
+      Af3Run.run(spark, tree.getPath, out.getPath, Af3Params())
+      Files.readAllBytes(new File(out, "interaction_analysis_PAE_15.0_max_dist_8.0.csv").toPath)
+    } finally {
+      spark.conf.set(key, saved)
+      deleteTree(root)
+    }
+    assert(reports(0).sameElements(reports(1)),
+      s"\n${new String(reports(0), "UTF-8")}\nvs\n${new String(reports(1), "UTF-8")}")
+    val jobs = new String(reports(0), "UTF-8").linesIterator.drop(1).map(_.split(",")(0)).toSeq
+    assert(jobs.distinct.size >= 3)
+    assert(jobs === jobs.sorted)
   }
 
   test("the AF3RUN line reports the task counters of the fixture run") {

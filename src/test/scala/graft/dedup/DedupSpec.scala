@@ -56,14 +56,15 @@ class DedupSpec extends SparkSpec {
 
   test("simhashNear: identical docs pair at hamming 0; banding finds them without all-pairs") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val near = Dedup.simhashNear(Dedup.simhash(ids, bits = 32), bits = 32, maxHam = 3)
+    val near = Dedup.bandedHammingPairs(Dedup.simhash(ids, bits = 32), "doc_id",
+        Dedup.simhashCols(32), bits = 32, maxHam = 3)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(near((1L, 2L)) === 0) // exact dup: identical signature
   }
 
   test("simhash64: identical texts equal; halves compose as hi<<32|lo") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val sh = Dedup.simhash64(ids).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sh = Dedup.simhash(ids, bits = 64).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sh(1L) === sh(2L))
     def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(hamming(sh(1L), sh(3L)) <= hamming(sh(1L), sh(4L)))
@@ -76,7 +77,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhash128: identical texts equal; low word equals the 32-bit simhash") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val sh = Dedup.simhash128(ids).collect()
+    val sh = Dedup.simhash(ids, bits = 128).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(sh(1L) === sh(2L))
     // word 0 of sim_lo shares simhash(bits=32)'s hash coefficients —
@@ -95,7 +96,7 @@ class DedupSpec extends SparkSpec {
       }
       (i, words.mkString(" "), "s")
     }.toDF("doc_id", "text", "source")
-    val sig = Dedup.simhash128(Dedup.docWordIds(many, "doc_id", "text"))
+    val sig = Dedup.simhash(Dedup.docWordIds(many, "doc_id", "text"), bits = 128)
     val rows = sig.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val brute = (for {
       (a, alo, ahi) <- rows; (b, blo, bhi) <- rows if a < b
@@ -103,7 +104,8 @@ class DedupSpec extends SparkSpec {
       if h <= 3
     } yield ((a, b), h)).toMap
     assert(brute.nonEmpty, "fixture must produce near pairs")
-    val banded = Dedup.simhashNear128(sig, maxHam = 3).collect()
+    val banded = Dedup.bandedHammingPairs(sig, "doc_id", Dedup.simhashCols(128), 128, 3)
+      .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getInt(2))).toMap
     assert(banded === brute) // recall AND precision: exactly the <=3 set
   }
