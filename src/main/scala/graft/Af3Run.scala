@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.af3._
 
 /** The reference CLI, Spark-native (process_af3_outputs.py:581-598 —
-  * same 8 parameters, same defaults, same outputs):
+  * same 8 parameters, same defaults):
   *
   * {{{
   * runMain graft.Af3Run --input_dir DIR [--poi_chain A] [--partner_chain B]
@@ -18,6 +18,10 @@ import graft.af3._
   *  - `Interaction_cif_files_PAE_{pae}_maxdist_{d}/{job}_interaction.cif`
   *  - `Overlays_.../{job}/model_{k}.cif` (chains relabeled A/B) and
   *    `{job}/align_and_save.pml` PyMOL scripts
+  *
+  * Not written: the reference's `<base>_pae.csv`, each binder's raw PAE
+  * matrix as CSV next to its `full_data` (py:114-117). Only the
+  * `sink_csv_pae_sideoutput` suite query renders it.
   */
 object Af3Run {
   private val knownFlags = Seq("input_dir", "output_dir", "poi_chain",
@@ -49,10 +53,12 @@ object Af3Run {
   }
 
   /** Analyze the bundles under `inputDir` and write the four outputs
-    * under `outBase`: one task per binder job writes the job's
-    * interaction CIF, overlay CIFs and PyMOL script, then the driver
-    * writes the CSV report (py:578). Returns the number of report rows
-    * and prints one `AF3RUN` line with the summed task counters.
+    * under `outBase`: the driver lists the tree once, one Spark job runs
+    * one task per job directory that holds a summary, which applies the
+    * gate and, for a binder, writes the job's interaction CIF, overlay
+    * CIFs and PyMOL script; then the driver writes the CSV report
+    * (py:578). Returns the number of report rows and prints one `AF3RUN`
+    * line with the summed task counters.
     */
   def run(spark: SparkSession, inputDir: String, outBase: String, p: Af3Params): Long = {
     val inter = s"Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"

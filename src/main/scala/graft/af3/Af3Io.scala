@@ -1,10 +1,18 @@
 package graft.af3
 
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.JsonParser.NumberType
+import com.fasterxml.jackson.core.JsonToken._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, GlobFilter, Path}
+
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JsonFileReader
+import org.apache.spark.sql.graft.{FileIndexRules, JsonFileReader, PaeBlockHitsExpr}
 import org.apache.spark.sql.sources.IsNotNull
 import org.apache.spark.sql.types._
 
@@ -34,27 +42,67 @@ object Af3Io {
     StructField("token_res_ids", ArrayType(IntegerType)),
     StructField("_corrupt", StringType)))
 
+  private val summaryGlob = "*_summary_confidences_0.json"
+  private val fullDataGlob = "*_full_data_0.json"
+
   private def options(glob: String) = Map("multiLine" -> "true", "mode" -> "PERMISSIVE",
     "columnNameOfCorruptRecord" -> "_corrupt", "recursiveFileLookup" -> "true",
     "pathGlobFilter" -> glob)
 
-  private val fullDataOptions = options("*_full_data_0.json")
+  private val summaryOptions = options(summaryGlob) + ("encoding" -> "UTF-8")
+  private val fullDataOptions = options(fullDataGlob)
 
   private def rawSummaries(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.schema(summarySchema)
-      .options(options("*_summary_confidences_0.json") + ("encoding" -> "UTF-8"))
-      .json(inputDir).withColumn("__path", input_file_name())
+    spark.read.schema(summarySchema).options(summaryOptions).json(inputDir)
+      .withColumn("__path", input_file_name())
 
   private def rawFullData(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.schema(fullDataSchema).options(fullDataOptions).json(inputDir)
       .withColumn("__path", input_file_name())
 
-  /** The `full_data` files under `inputDir`, as URL-encoded paths:
-    * listed by Spark's file index with [[readPaeLong]]'s rules (hidden
-    * names skipped, same glob), without running a job.
+  /** The bundle files under a tree, as URL-encoded paths, and its
+    * AppleDouble `._` files ([[bundleFiles]]).
     */
-  private[af3] def fullDataFiles(spark: SparkSession, inputDir: String): Seq[String] =
-    rawFullData(spark, inputDir).inputFiles.toSeq
+  private[af3] final case class BundleFiles(summaries: Seq[String], fullData: Seq[String],
+      models: Seq[String], appleDouble: Seq[Path])
+
+  /** The files [[readSummaries]], [[readPaeLong]] and
+    * [[CifParser.readAtoms]] would read under `inputDir`, from one
+    * `listStatus` walk on the driver that applies their file index's
+    * rules: no file or directory whose name [[FileIndexRules.hidden]]
+    * marks, each scan's glob on the file name. Also every `._` file,
+    * in the directories walked; with `hiddenDirs` the walk enters hidden
+    * directories too, for their `._` files only.
+    */
+  private[af3] def bundleFiles(conf: Configuration, inputDir: String,
+      hiddenDirs: Boolean = false): BundleFiles = {
+    val visible = Vector.newBuilder[Path]
+    val appleDouble = Vector.newBuilder[Path]
+    def walk(fs: FileSystem, dir: Path, shown: Boolean): Unit = fs.listStatus(dir).foreach { st =>
+      val name = st.getPath.getName
+      val show = shown && !FileIndexRules.hidden(name)
+      if (st.isDirectory) { if (show || hiddenDirs) walk(fs, st.getPath, show) }
+      else {
+        if (name.startsWith("._")) appleDouble += st.getPath
+        if (show) visible += st.getPath
+      }
+    }
+    FileIndexRules.roots(inputDir, conf).foreach(r => walk(r.getFileSystem(conf), r, shown = true))
+    val files = visible.result()
+    def matching(glob: String) = {
+      val g = new GlobFilter(glob)
+      files.filter(g.accept).map(SparkPath.fromPath(_).urlEncoded)
+    }
+    BundleFiles(matching(summaryGlob), matching(fullDataGlob), matching(CifParser.cifGlob),
+      appleDouble.result())
+  }
+
+  /** [[readSummaries]]' scan of one file, for a task that reads it
+    * itself: its options and full schema, `_corrupt` included. Its rows
+    * go through [[Af3Pipeline.passesGate]].
+    */
+  private[af3] def summaryReader(spark: SparkSession): JsonFileReader =
+    JsonFileReader(spark, summaryOptions, summarySchema, Nil)
 
   /** [[readPaeLong]]'s scan of one file, for a task that reads it
     * itself: Spark's JSON parser with the options, pruned read schema and
@@ -71,6 +119,112 @@ object Af3Io {
     */
   private[af3] def paeMatrices(rows: Iterator[InternalRow]): Seq[ArrayData] =
     rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(_.getArray(0)).toSeq
+
+  /** One `full_data` file's partner hits for a PAE block, as
+    * [[PaeBlockHitsExpr.hits]] over its [[paeMatrices]] gives them, the
+    * count of cells in those matrices' non-null rows, and whether the
+    * token stream ([[streamPaeHits]]) served them or the file fell back
+    * to the whole parse.
+    */
+  private[af3] final case class PaeHits(hits: Array[Int], cells: Long, streamed: Boolean)
+
+  /** [[PaeHits]] of the file at `url` for the block `(start_poi,
+    * end_poi, start_partner, end_partner)` of [[Af3Pipeline.paeBlock]]:
+    * streamed when the file has the shape [[streamPaeHits]] reads, else
+    * from `reader`'s rows, as [[readPaeLong]] reads the file.
+    */
+  private[af3] def paeHits(reader: JsonFileReader, url: String, block: (Long, Long, Long, Long),
+      cutoff: Double, minHits: Int): PaeHits = {
+    val (a, b, c, d) = block
+    def cells(m: ArrayData) = (0 until m.numElements()).map(i =>
+      if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum
+    streamPaeHits(reader, url, block, cutoff, minHits).getOrElse {
+      val ms = paeMatrices(reader.read(url))
+      PaeHits(ms.flatMap(m => PaeBlockHitsExpr.hits(m, a, b, c, d, cutoff, minHits).toIntArray())
+        .toArray, ms.map(cells).sum, streamed = false)
+    }
+  }
+
+  /** [[paeHits]] from Jackson's token stream of the file, without
+    * building the matrix: only the block's cells are converted to
+    * doubles (`getDoubleValue`, as Spark's parser converts them); every
+    * other value has its token type checked. The stream serves exactly
+    * one top-level object with one `pae` key, an array of rows that are
+    * null or arrays of numbers and nulls, or null, and one
+    * `token_res_ids` key, an array of `NumberType.INT`s; other keys are
+    * skipped as Spark's parser skips them. Anything else, a parse or
+    * decode error included, gives `None`, and nothing of the stream is
+    * counted.
+    */
+  private def streamPaeHits(reader: JsonFileReader, url: String,
+      block: (Long, Long, Long, Long), cutoff: Double, minHits: Int): Option[PaeHits] = {
+    val (startPoi, endPoi, startPartner, endPartner) = block
+    val jLo = math.max(startPartner, 0L)
+    try reader.tokens(url) { in =>
+      val counts = new Array[Int](math.max(endPartner - jLo, 0L).toInt)
+      var cells = 0L
+      // the pae value: false unless it is null or a matrix of numbers
+      def matrix(): Boolean = in.currentToken match {
+        case VALUE_NULL => true
+        case START_ARRAY =>
+          var i = 0L
+          var ok = true
+          var t = in.nextToken()
+          while (ok && t != END_ARRAY) {
+            if (t == START_ARRAY) {
+              val poi = i >= startPoi && i < endPoi
+              var j = 0L
+              t = in.nextToken()
+              while (ok && t != END_ARRAY) {
+                if (t == VALUE_NUMBER_FLOAT || t == VALUE_NUMBER_INT) {
+                  if (poi && j >= jLo && j < endPartner && in.getDoubleValue < cutoff)
+                    counts((j - jLo).toInt) += 1
+                } else ok = t == VALUE_NULL
+                j += 1
+                t = in.nextToken()
+              }
+              cells += j
+            } else ok = t == VALUE_NULL
+            i += 1
+            if (ok) t = in.nextToken()
+          }
+          ok
+        case _ => false
+      }
+      def ids(): Boolean = in.currentToken == START_ARRAY && {
+        var t = in.nextToken()
+        while (t == VALUE_NUMBER_INT && in.getNumberType == NumberType.INT) t = in.nextToken()
+        t == END_ARRAY
+      }
+      var paeKeys, idKeys = 0
+      var paeNull = false
+      var ok = in.nextToken() == START_OBJECT
+      var t = if (ok) in.nextToken() else null
+      while (ok && t == FIELD_NAME) {
+        val name = in.currentName
+        in.nextToken()
+        name match {
+          case "pae" =>
+            paeKeys += 1
+            paeNull = in.currentToken == VALUE_NULL
+            ok = paeKeys == 1 && matrix()
+          case "token_res_ids" => idKeys += 1; ok = idKeys == 1 && ids()
+          case _ => in.skipChildren()
+        }
+        if (ok) t = in.nextToken()
+      }
+      if (!ok || t != END_OBJECT || in.nextToken() != null || paeKeys != 1 || idKeys != 1) None
+      // a null pae drops the file, as readPaeLong's not-null filter does
+      else if (paeNull) Some(PaeHits(Array.emptyIntArray, 0L, streamed = true))
+      else {
+        // PaeBlockHitsExpr.hits' rule: a column counts once it has
+        // max(minHits, 1) hits, numbered from 1 at start_partner
+        val need = math.max(minHits, 1)
+        Some(PaeHits(counts.indices.filter(counts(_) >= need)
+          .map(k => (jLo + k - startPartner + 1).toInt).toArray, cells, streamed = true))
+      }
+    } catch { case NonFatal(_) => None }
+  }
 
   /** Read all summaries under `inputDir` keyed by job_dir. Exactly one
     * row per summary file; malformed files carry `_corrupt` and fall
@@ -117,16 +271,8 @@ object Af3Io {
     // file metadata, the same driver-side listing any Spark scan does.
     val hidden = {
       import spark.implicits._
-      val fs = new org.apache.hadoop.fs.Path(inputDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(inputDir), true)
-      val found = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      while (it.hasNext) {
-        val p = it.next().getPath
-        if (p.getName.startsWith("._"))
-          found += ((p.getParent.getName, p.getName))
-      }
-      found.toSeq.toDF("job_dir", "file")
+      bundleFiles(spark.sparkContext.hadoopConfiguration, inputDir, hiddenDirs = true)
+        .appleDouble.map(p => (p.getParent.getName, p.getName)).toDF("job_dir", "file")
         .select(col("job_dir"), col("file"),
           lit("hidden").as("kind"), lit("skipped_hidden").as("status"))
     }

@@ -2,7 +2,7 @@ package graft.af3
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graft.{JsonFileReader, PaeBlockHitsExpr}
+import org.apache.spark.sql.graft.JsonFileReader
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.Scalars
@@ -19,9 +19,10 @@ final case class Af3Outputs(interactionDir: String, overlayDir: String)
 final case class JobResult(job_dir: String, info: Seq[ChainRow], interacting: Seq[Int],
     contacts: Seq[(Int, Int)], islands: Seq[PartnerIsland], counters: Seq[Long])
 
-/** The fused per-job executor: one Spark task per binder job reads the
-  * job's bytes and runs every per-job rule of [[Af3Pipeline]] in memory
-  * (the reference's per-folder loop, py:543-579).
+/** The fused per-job executor: one Spark task per job directory that
+  * holds a summary reads the job's bytes, applies the gate and, for a
+  * binder, runs every per-job rule of [[Af3Pipeline]] in memory (the
+  * reference's per-folder loop, py:543-579).
   */
 object Af3Jobs {
 
@@ -29,32 +30,52 @@ object Af3Jobs {
   val Counters: Seq[String] = Seq("models", "atoms", "pae_cells", "interacting", "contacts",
     "islands", "files", "parse_ns", "pae_ns", "contacts_ns", "islands_ns", "sinks_ns")
 
-  /** One job's model files as (model_idx, path) and `full_data` paths. */
-  private final case class JobFiles(job: String, models: Seq[(Int, String)], fullData: Seq[String])
-
-  /** Run the `binders` under `inputDir` as one Spark job of one task per
-    * binder, results in `binders` order, over the files [[CifParser.modelFiles]] and
-    * [[Af3Io.fullDataFiles]] list. With `out`, each task also writes its
-    * job's structure outputs ([[CifWriter.writeJob]]).
+  /** One job's summaries, model files as (model_idx, path) and
+    * `full_data` paths, each sorted.
     */
-  private[af3] def run(spark: SparkSession, inputDir: String, binders: Seq[String], p: Af3Params,
+  private[af3] final case class JobFiles(job: String, summaries: Seq[String],
+      models: Seq[(Int, String)], fullData: Seq[String])
+
+  /** The jobs of a listing, in job-name order: every parent-directory
+    * name that holds a summary, as [[Af3Io.readSummaries]] names it.
+    */
+  private[af3] def jobFiles(files: Af3Io.BundleFiles): Seq[JobFiles] = {
+    val models = files.models.flatMap(u => CifParser.modelOf(u).map { case (j, m) => j -> (m, u) })
+      .groupMap(_._1)(_._2)
+    val fullData = files.fullData.groupBy(Scalars.parentDirName)
+    files.summaries.groupBy(Scalars.parentDirName).toSeq.sortBy(_._1).map { case (j, s) =>
+      JobFiles(j, s.sorted, models.getOrElse(j, Nil).sorted, fullData.getOrElse(j, Nil).sorted)
+    }
+  }
+
+  /** Run the bundles under `inputDir` as one driver-side listing
+    * ([[Af3Io.bundleFiles]]) and one Spark job of one task per job
+    * ([[jobFiles]]); results of the binders, in job-name order. With
+    * `out`, each binder's task also writes its structure outputs
+    * ([[CifWriter.writeJob]]).
+    */
+  private[af3] def run(spark: SparkSession, inputDir: String, p: Af3Params,
       out: Option[Af3Outputs]): Seq[JobResult] = {
-    val models = CifParser.modelFiles(spark, inputDir).groupMap(_._1)(f => (f._2, f._3))
-    val fullData = Af3Io.fullDataFiles(spark, inputDir).groupBy(Scalars.parentDirName)
-    val jobs = binders.map(j => JobFiles(j, models.getOrElse(j, Nil).sorted,
-      fullData.getOrElse(j, Nil).sorted))
-    if (jobs.isEmpty) return Nil
-    val reader = Af3Io.fullDataReader(spark)
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val jobs = jobFiles(Af3Io.bundleFiles(conf.value, inputDir))
+    if (jobs.isEmpty) return Nil
+    val summaries = Af3Io.summaryReader(spark)
+    val fullData = Af3Io.fullDataReader(spark)
     JsonFileReader.withSessionConf(spark) {
       spark.sparkContext.parallelize(jobs, jobs.size)
-        .map(runJob(_, p, reader, conf, out))
+        .flatMap(runJob(_, p, summaries, fullData, conf, out))
         .collect().toSeq
     }
   }
 
-  private def runJob(f: JobFiles, p: Af3Params, reader: JsonFileReader,
-      conf: SerializableConfiguration, out: Option[Af3Outputs]): JobResult = {
+  /** One job's task: `None` unless one of its summaries passes the gate
+    * ([[Af3Pipeline.passesGate]]), before any other file is opened.
+    */
+  private def runJob(f: JobFiles, p: Af3Params, summaries: JsonFileReader,
+      fullData: JsonFileReader, conf: SerializableConfiguration,
+      out: Option[Af3Outputs]): Option[JobResult] = {
+    if (!f.summaries.exists(u => summaries.read(u).exists(Af3Pipeline.passesGate(_, p))))
+      return None
     val counters = scala.collection.mutable.LinkedHashMap(Counters.map(_ -> 0L): _*)
     def add(k: String, n: Long): Unit = counters(k) += n
     def timed[T](k: String)(body: => T): T = {
@@ -75,13 +96,12 @@ object Af3Jobs {
     val model0 = parse(0)
     val info = Af3Pipeline.chainInfoOf(model0)
     val interacting = timed("pae_ns") {
-      Af3Pipeline.paeBlock(info.map(c => (c.chain, c.residue_length)), p).toSeq.flatMap {
-        case (a, b, c, d) =>
-          f.fullData.flatMap(url => Af3Io.paeMatrices(reader.read(url))).flatMap { pae =>
-            add("pae_cells", (0 until pae.numElements()).map(i =>
-              if (pae.isNullAt(i)) 0L else pae.getArray(i).numElements().toLong).sum)
-            PaeBlockHitsExpr.hits(pae, a, b, c, d, p.maxPaeCutoff, p.minResidues).toIntArray()
-          }
+      Af3Pipeline.paeBlock(info.map(c => (c.chain, c.residue_length)), p).toSeq.flatMap { block =>
+        f.fullData.flatMap { url =>
+          val h = Af3Io.paeHits(fullData, url, block, p.maxPaeCutoff, p.minResidues)
+          add("pae_cells", h.cells)
+          h.hits
+        }
       }
     }
     val contacts = timed("contacts_ns")(Af3Pipeline.contactsOf(model0, interacting.toSet, p))
@@ -99,6 +119,6 @@ object Af3Jobs {
       // the sink's time without the parses of models 1.. it pulled
       add("sinks_ns", System.nanoTime() - t0 - (counters("parse_ns") - parsed))
     }
-    JobResult(f.job, info, interacting, contacts.toSeq, islands, counters.values.toSeq)
+    Some(JobResult(f.job, info, interacting, contacts.toSeq, islands, counters.values.toSeq))
   }
 }

@@ -201,16 +201,19 @@ object CifParser {
 
   private val pathRe = ".*/([^/]+)/[^/]+_model_(\\d+)\\.cif$".r
 
+  private[af3] val cifGlob = "*.cif"
+
   private[af3] def modelScan(spark: SparkSession, inputDir: String): DataFrame =
     spark.read.format("binaryFile")
-      .options(Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "*.cif")).load(inputDir)
+      .options(Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> cifGlob)).load(inputDir)
 
-  /** The files [[readAtoms]] reads, as (job_dir, model_idx, URL-encoded
-    * path), listed by Spark's file index without running a job.
+  /** (job_dir, model_idx) of a `*.cif` path [[readAtoms]] reads, or
+    * `None` for a name that is no model file.
     */
-  private[af3] def modelFiles(spark: SparkSession, inputDir: String): Seq[(String, Int, String)] =
-    modelScan(spark, inputDir).inputFiles.toSeq.collect { case u @ pathRe(job, m) =>
-      (job, m.toInt, u) }
+  private[af3] def modelOf(path: String): Option[(String, Int)] = path match {
+    case pathRe(job, m) => Some((job, m.toInt))
+    case _ => None
+  }
 
   /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
     * atoms Dataset. `job_dir` = name of the containing folder, `model_idx`

@@ -1,6 +1,8 @@
 package graft.af3
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 
@@ -340,9 +342,14 @@ object CifWriter {
     * reference headers (chain ids interpolated into column names,
     * py:306-312) and a single file named
     * `interaction_analysis_PAE_{pae}_max_dist_{d}.csv`, not a part-file
-    * directory — so downstream tooling written for the reference reads it
-    * unchanged. The part-file promotion runs through the Hadoop
-    * FileSystem of `outDir` (local, HDFS, or object store alike).
+    * directory, so downstream tooling written for the reference reads it
+    * unchanged. The driver renders the rows with Spark's own CSV writer
+    * (`UnivocityGenerator`, `CSVOptions` with `header=true`), the bytes
+    * `write.option("header", "true").csv` gives, and writes them through
+    * the Hadoop FileSystem of `outDir` (local, HDFS, or object store
+    * alike) as the part file of a temp dir, `.<name>.tmp/part-00000.csv`,
+    * renamed into place. A local frame such as [[Af3Stages.report]] runs
+    * no Spark job.
     */
   def writeReportCsv(report: DataFrame, outDir: String, p: Af3Params): Unit = {
     val renamed = report
@@ -354,19 +361,30 @@ object CifWriter {
         s"Interacting_residues_Partner_chain_${p.partnerChain}")
       .withColumnRenamed("interacting_sequence", "Interacting_sequence")
     val name = s"interaction_analysis_PAE_${p.maxPaeCutoff}_max_dist_${p.maxDist}"
-    val tmp = s"$outDir/.$name.tmp"
-    renamed.coalesce(1).write.mode("overwrite").option("header", "true").csv(tmp)
-    val conf = report.sparkSession.sparkContext.hadoopConfiguration
-    val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-    // raw fs: the rename moves only the csv, leaving any .crc sibling
-    // behind in the temp dir, which is deleted wholesale below
-    val fs = rawFs(tmpPath, conf)
-    val part = fs.globStatus(new org.apache.hadoop.fs.Path(tmp, "part-*.csv"))
-      .headOption.getOrElse(sys.error(s"no csv part written under $tmp")).getPath
+    val qe = renamed.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("writeReportCsv"))(
+      qe.executedPlan.executeCollect())
+    val sql = qe.sparkSession.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"), sql.csvColumnPruning,
+      sql.sessionLocalTimeZone)
     val target = new org.apache.hadoop.fs.Path(outDir, s"$name.csv")
+    val tmpDir = new org.apache.hadoop.fs.Path(outDir, s".$name.tmp")
+    val part = new org.apache.hadoop.fs.Path(tmpDir, "part-00000.csv")
+    val fs = rawFs(target, qe.sparkSession.sparkContext.hadoopConfiguration)
+    fs.delete(tmpDir, true)
+    val writer = new java.io.OutputStreamWriter(fs.create(part, true),
+      java.nio.charset.Charset.forName(options.charset))
+    try {
+      val gen = new UnivocityGenerator(renamed.schema, writer, options)
+      gen.writeHeaders()
+      rows.foreach(gen.write)
+      gen.close()
+    } catch {
+      case e: Throwable => writer.close(); fs.delete(tmpDir, true); throw e
+    }
     if (fs.exists(target)) fs.delete(target, false)
     // a failed rename leaves the temp dir (and the report in it) in place
     renameOrFail(fs, part, target)
-    fs.delete(tmpPath, true)
+    fs.delete(tmpDir, true)
   }
 }

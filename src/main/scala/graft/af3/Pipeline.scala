@@ -1,6 +1,9 @@
 package graft.af3
 
 import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialJoin
@@ -27,23 +30,23 @@ final case class PartnerIsland(job_dir: String, p_island: Long, partner_min: Int
     partner_max: Int, members: Seq[Int], contact_islands: Seq[ContactIsland])
 
 /** The reference dataflow (py:543-579) wired once, for the CLI
-  * ([[graft.Af3Run]]), the `af3_*` suite queries and the specs: the gate
-  * is one small Spark job collecting the binder jobs, then [[jobs]] runs
-  * one task per binder job ([[Af3Jobs]]; with `out` the tasks also write
-  * the structure outputs). The analysis frames `info` .. `report` are
-  * local frames over the collected results: nothing is cached or
-  * recomputed. Only `atoms`, for the `sink_*` queries, reads files again.
+  * ([[graft.Af3Run]]), the `af3_*` suite queries and the specs: [[jobs]]
+  * lists the tree once and runs one Spark job of one task per job
+  * directory, which applies the gate and runs a binder's analysis
+  * ([[Af3Jobs]]; with `out` the tasks also write the structure outputs).
+  * The analysis frames `info` .. `report` are local frames over the
+  * collected results: nothing is cached or recomputed. Only `atoms`, for
+  * the `sink_*` queries, reads files again.
   */
 final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
     out: Option[Af3Outputs] = None) {
   import spark.implicits._
 
+  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, inputDir, p, out)
   // in job-name order, which is the report's row order
-  lazy val binderDirs: Seq[String] = Af3Pipeline.gate(Af3Io.readSummaries(spark, inputDir), p)
-    .select(col("job_dir")).collect().map(_.getString(0)).distinct.sorted.toSeq
+  lazy val binderDirs: Seq[String] = jobs.map(_.job_dir)
   lazy val atoms: DataFrame =
     CifParser.readAtomsDf(spark, inputDir).filter(col("job_dir").isin(binderDirs: _*))
-  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, inputDir, binderDirs, p, out)
   lazy val info: DataFrame = jobs.flatMap(j => j.info.map(c => (j.job_dir, c.chain,
     c.residue_length, c.sequence))).toDF("job_dir", "chain", "residue_length", "sequence")
   lazy val interacting: DataFrame =
@@ -106,6 +109,28 @@ object Af3Pipeline {
       case _ => summaries.limit(0) // invalid chain id: nothing passes (py:93-94)
     }
   }
+
+  /** [[gate]]'s rule over one row of [[Af3Io.readSummaries]]' scan, in
+    * [[Af3Io.summarySchema]] order, for a task that reads the summary
+    * itself ([[Af3Io.summaryReader]]): the comparisons are Spark SQL's
+    * (`SQLOrderingUtil.compareDoubles`: NaN above every number, -0.0
+    * equal to 0.0), and an out-of-bounds or null PAE cell fails as the
+    * null `get` does.
+    */
+  private[af3] def passesGate(r: InternalRow, p: Af3Params): Boolean =
+    (Scalars.chainToIdx.get(p.poiChain), Scalars.chainToIdx.get(p.partnerChain)) match {
+      case (Some(pi), Some(qi)) =>
+        def orZero(i: Int) = if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+        def at(a: ArrayData, i: Int) = i < a.numElements() && !a.isNullAt(i)
+        r.isNullAt(3) &&
+          compareDoubles(orZero(0), p.minIptmCutoff) >= 0 &&
+          compareDoubles(orZero(1), p.minPtmCutoff) >= 0 &&
+          !r.isNullAt(2) && at(r.getArray(2), pi) && {
+            val row = r.getArray(2).getArray(pi)
+            at(row, qi) && compareDoubles(row.getDouble(qi), p.maxPaeCutoff) < 0
+          }
+      case _ => false
+    }
 
   /** agg_chain_info (py:152-176), [[chainInfoOf]] per job. */
   def chainInfo(atoms: DataFrame): DataFrame = {

@@ -271,14 +271,6 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling: every `step`-th frame index per video. Relational
-    * explode — one output row per sampled frame.
-    */
-  def sampleFrames(meta: DataFrame, step: Int): DataFrame =
-    meta.filter(col("n_frames") > 0)
-      .select(col("doc_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(step))).as("frame_idx"))
-
   /** Build a MediaBlob dataset from the documents table (text bytes stand
     * in for media payloads; fmt cycles deterministically).
     */

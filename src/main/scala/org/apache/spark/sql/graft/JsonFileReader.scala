@@ -1,11 +1,13 @@
 package org.apache.spark.sql.graft
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.json.{JacksonParser, JSONOptionsInRead}
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JacksonParser, JSONOptionsInRead}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.PartitionedFile
+import org.apache.spark.sql.execution.datasources.{CodecStreams, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.json.MultiLineJsonDataSource
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
@@ -23,9 +25,7 @@ import org.apache.spark.util.SerializableConfiguration
 final class JsonFileReader private (options: JSONOptionsInRead, schema: StructType,
     filters: Seq[Filter], conf: SerializableConfiguration) extends Serializable {
 
-  /** The rows of the file at `url` (a URL-encoded path, as
-    * `DataFrame.inputFiles` lists it).
-    */
+  /** The rows of the file at `url` (a URL-encoded path). */
   def read(url: String): Iterator[InternalRow] = {
     val parser = new JacksonParser(
       StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord)), options,
@@ -33,6 +33,23 @@ final class JsonFileReader private (options: JSONOptionsInRead, schema: StructTy
     val file = PartitionedFile(InternalRow.empty, SparkPath.fromUrlString(url), 0L, 0L,
       Array.empty[String], 0L, 0L, Map.empty[String, Any])
     MultiLineJsonDataSource.readFile(conf.value, file, parser, schema)
+  }
+
+  @transient private lazy val factory: JsonFactory = options.buildJsonFactory()
+
+  /** `body` over the Jackson token stream of the file at `url`, opened
+    * as [[read]] opens it: the same codec streams, the factory the
+    * options build and the same decoding (the `encoding` option, or
+    * Jackson's detection without it). The stream is closed after `body`.
+    */
+  def tokens[T](url: String)(body: JsonParser => T): T = {
+    val in = CodecStreams.createInputStreamWithCloseResource(conf.value,
+      SparkPath.fromUrlString(url).toPath)
+    val parser = try options.encoding
+      .map(CreateJacksonParser.inputStream(_, factory, in))
+      .getOrElse(CreateJacksonParser.inputStream(factory, in))
+    catch { case e: Throwable => in.close(); throw e }
+    try body(parser) finally parser.close()
   }
 }
 

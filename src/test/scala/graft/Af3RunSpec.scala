@@ -342,12 +342,16 @@ class Af3RunSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("run on the fixture tree takes 3 Spark jobs: gate, per-job tasks, report") {
-    val out = Files.createTempDirectory("graft_af3run_jobs").toFile
-    val n = sparkJobs(Af3Run.run(spark, fixtureDir, out.getPath, Af3Params()))
-    // the gate's collect, the one job of per-job tasks, and the report
-    // CSV's write
-    assert(n === 3)
+  test("run takes 1 Spark job on the fixture tree and on an af3_screen tree") {
+    val root = Files.createTempDirectory("graft_af3run_jobs").toFile
+    val screen = new File(root, "screen")
+    perfbench.Af3Gen.generate("af3_screen", 1L, screen)
+    // the listing runs on the driver, the gate in the tasks and the
+    // report CSV is rendered on the driver: only the per-job tasks' job
+    try for (tree <- Seq(fixtureDir, screen.getPath)) {
+      val out = new File(root, s"out_${new File(tree).getName}")
+      assert(sparkJobs(Af3Run.run(spark, tree, out.getPath, Af3Params())) === 1, tree)
+    } finally deleteTree(root)
   }
 
   test("report rows come in job-name order, whatever the shuffle partitions") {

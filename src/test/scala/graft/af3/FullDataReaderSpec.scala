@@ -3,7 +3,8 @@ package graft.af3
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.Files
 
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.PaeBlockHitsExpr
 
 import graft.SparkSpec
 
@@ -11,7 +12,9 @@ import graft.SparkSpec
   * [[Af3Io.paeMatrices]]) against the scan it stands in for,
   * [[Af3Io.readPaeLong]]: over an edge corpus, both must keep and drop
   * the same files and rows and yield every PAE cell with the same bits
-  * (`doubleToRawLongBits`) and the same nulls.
+  * (`doubleToRawLongBits`) and the same nulls. The streamed block count
+  * ([[Af3Io.paeHits]]) must give what [[PaeBlockHitsExpr.hits]] gives
+  * over those matrices, for a grid of blocks and cutoffs.
   */
 class FullDataReaderSpec extends SparkSpec {
 
@@ -64,7 +67,16 @@ class FullDataReaderSpec extends SparkSpec {
     "top_scalar" -> "42",
     "empty" -> "",
     "blank" -> " \n ",
-    "two_objects" -> s"""{"pae": $row, "token_res_ids": [1, 2]} {"pae": [[7.0]], "token_res_ids": [1]}"""
+    "two_objects" -> s"""{"pae": $row, "token_res_ids": [1, 2]} {"pae": [[7.0]], "token_res_ids": [1]}""",
+    // cells at, around and beyond the cutoffs of the block grid below
+    "at_cutoff" -> ("""{"pae": [[2.5, 2.4999999999999996, 2.5000000000000004, 1], """ +
+      """[-0.0, 0.0, NaN, 2.5], [null, 2.5, -Infinity, Infinity], [3, 2, 1, 0]], """ +
+      """"token_res_ids": [1, 2, 3, 4]}"""),
+    "wide_ragged" -> ("""{"meta": [1, 2], "pae": [[1.0, 2.0, 3.0, 4.0, 5.0], [1.0], null, """ +
+      """[5.0, 4.0, 3.0, 2.0, 1.0, 0.5], []], "token_res_ids": [1, 2, 3, 4, 5]}"""),
+    "dup_ids" -> s"""{"pae": $row, "token_res_ids": [1, 2], "token_res_ids": [1]}""",
+    "ids_null_cell" -> s"""{"pae": $row, "token_res_ids": [1, null]}""",
+    "no_pae_null_ids" -> """{"token_res_ids": null}"""
   ).map { case (job, text) => job -> text.getBytes(UTF_8) } ++ Seq(
     // latin-1 bytes: in an unknown string, in a key and in a cell
     "latin1_value" -> s"""{"name": "Protéine", "pae": $row, "token_res_ids": [1, 2]}""",
@@ -72,6 +84,9 @@ class FullDataReaderSpec extends SparkSpec {
     "latin1_cell" -> """{"pae": [["1é"]], "token_res_ids": [1]}"""
   ).map { case (job, text) => job -> text.getBytes(ISO_8859_1) } :+
     ("utf16" -> s"""{"pae": $row, "token_res_ids": [1, 2]}""".getBytes("UTF-16"))
+
+  private def fullDataFiles: Seq[String] =
+    Af3Io.bundleFiles(spark.sparkContext.hadoopConfiguration, tree).fullData
 
   private lazy val tree: String = {
     val root = Files.createTempDirectory("graft_full_data_corpus")
@@ -106,7 +121,7 @@ class FullDataReaderSpec extends SparkSpec {
 
   private def inTask(): Map[String, Seq[Matrix]] = {
     val reader = Af3Io.fullDataReader(spark)
-    Af3Io.fullDataFiles(spark, tree).map { url =>
+    fullDataFiles.map { url =>
       url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).map(fromTask)
     }.filter(_._2.nonEmpty).toMap
   }
@@ -127,10 +142,55 @@ class FullDataReaderSpec extends SparkSpec {
 
   test("the reader is serializable and reads the same inside a task") {
     val reader = Af3Io.fullDataReader(spark)
-    val urls = Af3Io.fullDataFiles(spark, tree)
+    val urls = fullDataFiles
     val kept = spark.sparkContext.parallelize(urls, 4)
       .map(url => url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).size)
       .collect().toMap
     assert(kept.filter(_._2 > 0) === inTask().map { case (job, ms) => job -> ms.size })
+  }
+
+  /** A collected `pae` value as the scan's `ArrayData`, nulls kept. */
+  private def arrayData(rows: collection.Seq[collection.Seq[java.lang.Double]]): ArrayData =
+    new GenericArrayData(rows.map(r =>
+      if (r == null) null else new GenericArrayData(r.map(c => c: Any).toArray)).toArray[Any])
+
+  test("streamed PAE hits and cells equal PaeBlockHitsExpr.hits over readPaeLong's matrices") {
+    val scanned = Af3Io.readPaeLong(spark, tree).collect().toSeq.groupBy(_.getString(0))
+      .map { case (job, rows) =>
+        job -> rows.map(r => arrayData(r.getSeq[collection.Seq[java.lang.Double]](1))) }
+    val reader = Af3Io.fullDataReader(spark)
+    // empty, in range, ragged, partly and wholly out of range, inverted
+    val blocks = Seq((0L, 0L, 0L, 0L), (0L, 1L, 1L, 2L), (0L, 2L, 0L, 2L), (1L, 4L, 0L, 4L),
+      (0L, 5L, 2L, 6L), (3L, 9L, 4L, 9L), (7L, 9L, 7L, 9L), (2L, 1L, 3L, 1L))
+    val cutoffs = Seq(2.5, 1.0, 0.0, -0.0, 1e-320, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity)
+    var (streamed, fellBack) = (Set.empty[String], Set.empty[String])
+    for (url <- fullDataFiles; block <- blocks; cutoff <- cutoffs; minHits <- Seq(0, 1, 2)) {
+      val job = url.split("/").init.last
+      val ms = scanned.getOrElse(job, Nil)
+      val (a, b, c, d) = block
+      val wantHits = ms.flatMap(m => PaeBlockHitsExpr.hits(m, a, b, c, d, cutoff, minHits)
+        .toIntArray().toSeq)
+      val wantCells = ms.map(m => (0 until m.numElements())
+        .map(i => if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum).sum
+      val got = Af3Io.paeHits(reader, url, block, cutoff, minHits)
+      val at = s"job $job, block $block, cutoff $cutoff, min $minHits"
+      assert(got.hits.toSeq === wantHits, at)
+      // a stream that aborts part-way counts none of the cells it read
+      assert(got.cells === wantCells, at)
+      if (got.streamed) streamed += job else fellBack += job
+    }
+    info(s"streamed: ${streamed.toSeq.sorted.mkString(" ")}")
+    info(s"fell back: ${fellBack.toSeq.sorted.mkString(" ")}")
+    assert((streamed & fellBack).isEmpty)
+    // a file the stream reads, whether readPaeLong keeps or drops it
+    assert(Set("plain", "at_cutoff", "wide_ragged", "nan_bare", "signed_zero", "integers",
+      "null_rows", "ragged", "unknown_keys", "ids_first", "null_pae").subsetOf(streamed))
+    // a string, bool or object cell, a duplicate or missing key, a
+    // top-level array, trailing bytes, a parse or decode error
+    assert(Set("nan_strings", "pae_cell_bool", "pae_cell_object", "dup_pae", "dup_ids",
+      "no_pae", "no_ids", "ids_null_cell", "ids_huge", "top_array", "two_objects",
+      "truncated", "truncated_in_pae", "empty", "latin1_value", "pae_string")
+      .subsetOf(fellBack))
   }
 }
