@@ -26,6 +26,8 @@ object Similarity {
   /** Native codegen'd dot product — the hot-loop form. */
   def dot(a: Column, b: Column): Column = graft.functions.VectorExpressions.dot(a, b)
 
+  private val dotL = graft.functions.VectorExpressions.dotLong _
+
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column =
@@ -147,8 +149,7 @@ object Similarity {
       outDims: Int, dims: Int): DataFrame =
     emb.select(col(idCol), intEmbedding(col(vecCol)).as("__ie"))
       .select(col(idCol),
-        array(planeWeights(outDims, dims).map(w =>
-          graft.functions.VectorExpressions.dotLong(col("__ie"), typedLit(w))): _*)
+        array(planeWeights(outDims, dims).map(w => dotL(col("__ie"), typedLit(w))): _*)
           .as("proj"))
 
   /** Random-hyperplane LSH bucket id: bit k = [intdot(emb, plane_k) >= 0].
@@ -158,46 +159,120 @@ object Similarity {
   def lshBucket(embCol: Column, numPlanes: Int, dims: Int): Column = {
     val ie = intEmbedding(embCol)
     planeWeights(numPlanes, dims).zipWithIndex.map { case (w, k) =>
-      val d = graft.functions.VectorExpressions.dotLong(ie, typedLit(w))
+      val d = dotL(ie, typedLit(w))
       when(d >= 0, lit(1L << k)).otherwise(lit(0L))
     }.reduce(_ + _)
   }
 
-  /** Deterministic fixed-iteration k-means codebook over the integer
-    * embedding. Seed = the `numCells` lowest-id vectors; each iteration
-    * (1) assigns every vector to its nearest centroid (integer d2, ties
-    * by cid) and (2) recomputes each centroid as the per-dimension
-    * `floor(mean)` of its members — floor-of-double-division on sums
-    * < 2^52, so the arithmetic is bit-reproducible in SQL. Empty cells
-    * keep their previous centroid. `iters = 0` degenerates to the
-    * training-free lowest-id codebook.
-    *
-    * Scale shape: centroids are a broadcast dimension each round;
-    * assignment is map-side; the mean is one (cell, dim) groupBy — the
-    * classic Spark k-means sans MLlib, with every step a DataFrame op.
-    * Returns (cid, ce).
+  // ---- integer k-means: the IVF cells and the PQ sub-quantizers ----------
+  //
+  // The IVF coarse quantizer and the PQ sub-quantizers are one k-means
+  // (Jégou et al., "Product Quantization for Nearest Neighbor Search",
+  // TPAMI 2011) over two grains: IVF clusters whole integer embeddings
+  // into one codebook, PQ clusters each block's subvectors into one
+  // codebook per block. Every IVF, PQ and label-centroid operator below
+  // is built from one copy of each kernel: the d2 table
+  // ([[d2Table]]), the nearest-centroid argmin ([[nearestCell]]), the
+  // floor-mean centroid ([[floorMean]]) and the integer cosine
+  // ([[intCosine]]).
+
+  /** The grain of a vector frame: `v_id`, the optional `keys` (one
+    * codebook per key value), the integer vector column `vec` and its
+    * self-dot `self`.
     */
-  def kmeansCodebook(v: DataFrame, numCells: Int, iters: Int): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
-    var cents = v.orderBy(col("v_id")).limit(numCells)
-      .select(col("v_id").as("cid"), col("ie").as("ce"))
+  final case class Grain(keys: Seq[String], vec: String, self: String)
+
+  /** IVF: `(v_id, ie, aa)` ([[ivfVectors]]), one codebook. */
+  val Ivf: Grain = Grain(Nil, "ie", "aa")
+
+  /** PQ: `(v_id, block, sv, ss)` ([[pqSubvectors]]), one codebook per
+    * block.
+    */
+  val Pq: Grain = Grain(Seq("block"), "sv", "ss")
+
+  /** `(v_id, ie, aa)`: the integer embedding and its self-dot. */
+  def ivfVectors(vectors: DataFrame, idCol: String, embCol: String): DataFrame =
+    vectors.select(col(idCol).as("v_id"), intEmbedding(col(embCol)).as("ie"))
+      .withColumn("aa", dotL(col("ie"), col("ie")))
+
+  /** Every vector x centroid pair with equal keys and its integer
+    * squared distance `d2 = self - 2·dot(vec, ce) + cc`: `v`'s columns
+    * plus `(cid, ce, cc, d2)`. `cents` is a `(keys, cid, ce)` codebook,
+    * broadcast with `cc = ce·ce` computed once per centroid. The
+    * operand order is part of the result: under ANSI arithmetic it
+    * decides which intermediate overflows.
+    */
+  private def d2Table(v: DataFrame, cents: DataFrame, g: Grain): DataFrame =
+    v.join(broadcast(cents.withColumn("cc", dotL(col("ce"), col("ce")))), g.keys)
+      .withColumn("d2", col(g.self) - lit(2L) * dotL(col(g.vec), col("ce")) + col("cc"))
+
+  /** The nearest centroid of every `(v_id, keys)` group of a [[d2Table]]:
+    * `(v_id, keys, carry, cell, d2)`, equal distances going to the lower
+    * cid. The `carry` columns are per-vector values that ride along.
+    * `cell` and `d2` are separate aggregates over one ordering, so a
+    * caller that drops `d2` does not compute it.
+    */
+  def nearestCell(d: DataFrame, g: Grain, carry: String*): DataFrame = {
+    val order = struct(col("d2"), col("cid"))
+    val aggs = carry.map(c => first(col(c)).as(c)) :+
+      min_by(col("cid"), order).as("cell") :+ min_by(col("d2"), order).as("d2")
+    d.groupBy(("v_id" +: g.keys).map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Per `keys` group, the per-dimension `floor(mean)` of the integer
+    * vectors in `vec`, as the array column `out`. Integer sums are
+    * order-free, and floor of the double division of a sum below 2^52
+    * by a count is exact, so the centroid is bit-reproducible in SQL.
+    * One (keys, dim) groupBy, map-side combined.
+    */
+  private def floorMean(
+      members: DataFrame, keys: Seq[String], vec: String, out: String): DataFrame = {
+    val ks = keys.map(col)
+    members.select(ks :+ posexplode(col(vec)).as(Seq("d", "x")): _*)
+      .groupBy(ks :+ col("d"): _*)
+      .agg(floor(sum(col("x")).cast("double") / count(lit(1))).cast("long").as("mu"))
+      .groupBy(ks: _*)
+      .agg(transform(array_sort(collect_list(struct(col("d"), col("mu")))),
+        _.getField("mu")).as(out))
+  }
+
+  /** Cosine of two integer vectors from their dot and self-dots: 0.0
+    * when either is the zero vector, else `idot / (sqrt(aa)·sqrt(bb))`,
+    * each step one correctly-rounded IEEE op, so the oracle reproduces
+    * it bit for bit.
+    */
+  def intCosine(idot: Column, aa: Column, bb: Column): Column =
+    when(aa === 0L || bb === 0L, lit(0.0))
+      .otherwise(idot.cast("double") / (sqrt(aa.cast("double")) * sqrt(bb.cast("double"))))
+
+  /** Deterministic fixed-iteration k-means codebook `(keys, cid, ce)`
+    * over a `g`-grain frame, one codebook per key value. Seeds are the
+    * rows of the `k` lowest `v_id`s (fewer when there are fewer
+    * vectors); each iteration assigns every vector to its
+    * [[nearestCell]] and moves each centroid to the [[floorMean]] of its
+    * members. Empty cells keep their previous centroid. `iters = 0` is
+    * the training-free lowest-id codebook.
+    *
+    * Scale shape: the codebook is a broadcast dimension each round,
+    * assignment is map-side and the mean is one (keys, cell, dim)
+    * groupBy: the classic Spark k-means sans MLlib, with every step a
+    * DataFrame op. A keyed grain seeds from the `k` lowest ids once for
+    * every key (a PQ vector has a row in every block), not from a
+    * per-key window over the corpus.
+    */
+  def kmeansCodebook(v: DataFrame, g: Grain, k: Int, iters: Int): DataFrame = {
+    val keys = g.keys.map(col)
+    val seeds =
+      if (g.keys.isEmpty) v.orderBy(col("v_id")).limit(k)
+      else v.join(broadcast(v.select(col("v_id")).distinct().orderBy(col("v_id")).limit(k)),
+        Seq("v_id"))
+    var cents = seeds.select(keys :+ col("v_id").as("cid") :+ col(g.vec).as("ce"): _*)
     for (_ <- 1 to iters) {
-      val assigned = v
-        .join(broadcast(cents.withColumn("cc", dotL(col("ce"), col("ce")))))
-        .withColumn("d2", col("aa") - lit(2L) * dotL(col("ie"), col("ce")) + col("cc"))
-        .groupBy(col("v_id"))
-        .agg(first(col("ie")).as("ie"),
-          min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"))
-      val perDim = assigned
-        .select(col("cell"), posexplode(col("ie")).as(Seq("d", "v")))
-        .groupBy(col("cell"), col("d"))
-        .agg(floor(sum(col("v")).cast("double") / count(lit(1))).cast("long").as("mu"))
-      val means = perDim.groupBy(col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("mu")))),
-          _.getField("mu")).as("me"))
+      val means = floorMean(nearestCell(d2Table(v, cents, g), g, g.vec),
+        g.keys :+ "cell", g.vec, "me")
       cents = cents
-        .join(means.withColumnRenamed("cell", "cid"), Seq("cid"), "left")
-        .select(col("cid"), coalesce(col("me"), col("ce")).as("ce"))
+        .join(means.withColumnRenamed("cell", "cid"), g.keys :+ "cid", "left")
+        .select(keys :+ col("cid") :+ coalesce(col("me"), col("ce")).as("ce"): _*)
     }
     cents
   }
@@ -215,84 +290,26 @@ object Similarity {
       embCol: String,
       numCells: Int,
       kmeansIters: Int = IvfKmeansIters): DataFrame = {
-    val v = vectors.select(col(idCol).as("v_id"), intEmbedding(col(embCol)).as("ie"))
-      .withColumn("aa", graft.functions.VectorExpressions.dotLong(col("ie"), col("ie")))
-    val cents = kmeansCodebook(v, numCells, kmeansIters)
-      .withColumn("cc", graft.functions.VectorExpressions.dotLong(col("ce"), col("ce")))
-    v.join(broadcast(cents))
-      .withColumn("d2",
-        col("aa") - lit(2L) * graft.functions.VectorExpressions.dotLong(col("ie"), col("ce"))
-          + col("cc"))
-      .drop("ce", "cc")
+    val v = ivfVectors(vectors, idCol, embCol)
+    d2Table(v, kmeansCodebook(v, Ivf, numCells, kmeansIters), Ivf).drop("ce", "cc")
   }
 
-  private def ivfArgmin(dists: DataFrame): DataFrame =
-    dists.groupBy(col("v_id"))
-      .agg(
-        first(col("ie")).as("ie"),
-        first(col("aa")).as("aa"),
-        min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"))
-
-  def ivfAssign(
-      vectors: DataFrame,
-      idCol: String,
-      embCol: String,
-      numCells: Int): DataFrame =
-    ivfArgmin(ivfDists(vectors, idCol, embCol, numCells))
+  /** `(v_id, ie, aa, cell)`: each vector's nearest cell in an
+    * [[ivfDists]] frame.
+    */
+  def ivfAssignFrom(dists: DataFrame): DataFrame =
+    nearestCell(dists, Ivf, "ie", "aa").drop("d2")
 
   /** Assignment against a FROZEN codebook — the incremental-index
     * append: a new batch lands in the nearest existing cell without
     * retraining (centroid drift is deferred to the next scheduled
-    * rebuild, the standard production trade). `v` carries the
-    * [[kmeansCodebook]] input grain (v_id, ie, aa); `cents` is a
-    * trained (cid, ce) codebook, broadcast — assignment is one
-    * map-side pass + a per-vector argmin, never a shuffle of the
-    * batch against the corpus.
+    * rebuild, the standard production trade). `v` is an [[Ivf]]-grain
+    * frame; `cents` is a trained (cid, ce) codebook, broadcast —
+    * assignment is one map-side pass + a per-vector argmin, never a
+    * shuffle of the batch against the corpus.
     */
-  def ivfAssignFrozen(v: DataFrame, cents: DataFrame): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
-    v.join(broadcast(cents.withColumn("cc", dotL(col("ce"), col("ce")))))
-      .withColumn("d2", col("aa") - lit(2L) * dotL(col("ie"), col("ce")) + col("cc"))
-      .groupBy(col("v_id"))
-      .agg(first(col("ie")).as("ie"), first(col("aa")).as("aa"),
-        min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"))
-  }
-
-  /** [[ivfAssign]] over a prebuilt [[ivfDists]] frame. */
-  def ivfAssignFrom(dists: DataFrame): DataFrame = ivfArgmin(dists)
-
-  /** IVF ANN top-k: queries probe their `nprobe` nearest cells and
-    * exact-rank only the vectors assigned there — the inverted-file
-    * analogue of [[annTopK]]'s hash buckets. Per-query candidate count
-    * is bounded by the probed cells' population (~ nprobe * N /
-    * numCells), never N.
-    *
-    * The final ranking is by exact COSINE over the integer embeddings —
-    * `idot / (sqrt(q·q) * sqrt(c·c))` — not by raw dot: raw-dot order
-    * diverges from the true neighbor order whenever corpus norms vary,
-    * which costs recall that no amount of probing recovers. Every step
-    * (integer dot, sqrt, divide) is a single correctly-rounded IEEE op,
-    * so the oracle reproduces the ranking bit-for-bit. This is the
-    * re-rank half of the probe-wider/exact-rank recall recipe; nprobe
-    * is the other half (see AnnRecallSpec's sweep).
-    */
-  def ivfTopK(
-      vectors: DataFrame,
-      idCol: String,
-      embCol: String,
-      numCells: Int,
-      nprobe: Int,
-      k: Int): DataFrame = {
-    // one distance frame feeds both the assignment argmin and the probe
-    // ranking (a self-join of derived frames — Spark evaluates each join
-    // child separately, so without persistence the scan + N*numCells dot
-    // products would run twice). MEMORY_AND_DISK: spill beats recompute.
-    // The entry stays resident until LRU eviction; callers running many
-    // sweeps can clear it via spark.catalog.clearCache().
-    val dists = ivfDists(vectors, idCol, embCol, numCells)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ivfTopKFrom(dists, nprobe, k)
-  }
+  def ivfAssignFrozen(v: DataFrame, cents: DataFrame): DataFrame =
+    ivfAssignFrom(d2Table(v, cents, Ivf))
 
   /** The deterministic `nQueries`-vector query panel over an
     * [[ivfDists]] frame: the vectors with the smallest
@@ -310,22 +327,37 @@ object Similarity {
       .orderBy(col("__b"), col("v_id")).limit(nQueries)
       .select(col("v_id"))
 
-  /** Restrict the probe (query) side of an IVF serving path to the
-    * deterministic panel; the index side stays the full corpus.
+  /** The `nprobe` nearest cells of every vector of a `dists` frame, by
+    * d2, ties to the lower cid: the probe (query) side of an IVF serving
+    * path, restricted to the `nQueries` panel when given (the index side
+    * stays the full corpus).
     */
-  private def restrictToPanel(dists: DataFrame, nQueries: Option[Int]): DataFrame =
-    nQueries match {
-      case Some(q) => dists.join(broadcast(queryPanel(dists, q)), Seq("v_id"))
-      case None => dists
-    }
+  private def probeCells(dists: DataFrame, nprobe: Int, nQueries: Option[Int]): DataFrame =
+    nQueries.fold(dists)(q => dists.join(broadcast(queryPanel(dists, q)), Seq("v_id")))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy(col("v_id")).orderBy(col("d2"), col("cid"))))
+      .filter(col("pr") <= nprobe)
 
-  /** [[ivfTopK]] over a prebuilt (already persisted) [[ivfDists]] frame —
-    * the setup/query split: the distance frame IS the IVF index, built
-    * once per corpus and probed by every retrieval query. `nQueries`
-    * bounds the query side to the deterministic hash-reservoir panel
-    * (the scale-safe way to serve a PINNED-cells index — see
-    * [[queryPanel]]); None keeps every corpus vector as a query, which
-    * is only linear when numCells tracks the corpus (√N law).
+  /** IVF ANN top-k over a prebuilt [[ivfDists]] frame (persist it: the
+    * assignment and the probes both read it): queries probe their `nprobe`
+    * nearest cells and exact-rank only the vectors assigned there — the
+    * inverted-file analogue of [[annTopK]]'s hash buckets. Per-query
+    * candidate count is bounded by the probed cells' population
+    * (~ nprobe * N / numCells), never N. The distance frame IS the IVF
+    * index, built once per corpus and probed by every retrieval query.
+    *
+    * The final ranking is by exact COSINE over the integer embeddings
+    * ([[intCosine]]), not by raw dot: raw-dot order diverges from the
+    * true neighbor order whenever corpus norms vary, which costs recall
+    * that no amount of probing recovers. This is the re-rank half of the
+    * probe-wider/exact-rank recall recipe; nprobe is the other half (see
+    * AnnRecallSpec's sweep).
+    *
+    * `nQueries` bounds the query side to the deterministic
+    * hash-reservoir panel (the scale-safe way to serve a PINNED-cells
+    * index — see [[queryPanel]]); None keeps every corpus vector as a
+    * query, which is only linear when numCells tracks the corpus (√N
+    * law).
     */
   def ivfTopKFrom(dists: DataFrame, nprobe: Int, k: Int,
       nQueries: Option[Int] = None): DataFrame =
@@ -343,11 +375,8 @@ object Similarity {
     */
   def ivfCandidatesFrom(dists: DataFrame, nprobe: Int,
       nQueries: Option[Int] = None): DataFrame = {
-    val assign = ivfArgmin(dists)
-    val probes = restrictToPanel(dists, nQueries)
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("v_id")).orderBy(col("d2"), col("cid"))))
-      .filter(col("pr") <= nprobe)
+    val assign = ivfAssignFrom(dists)
+    val probes = probeCells(dists, nprobe, nQueries)
       .select(col("v_id").as("q_id"), col("ie").as("q_ie"),
         col("aa").as("q_aa"), col("cid").as("cell"))
     probes
@@ -356,13 +385,7 @@ object Similarity {
         Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
-        graft.functions.VectorExpressions.dotLong(col("q_ie"), col("c_ie")).as("idot"),
-        col("q_aa"), col("c_aa"))
-      .withColumn("cos",
-        when(col("q_aa") === 0L || col("c_aa") === 0L, lit(0.0))
-          .otherwise(col("idot") /
-            (sqrt(col("q_aa").cast("double")) * sqrt(col("c_aa").cast("double")))))
-      .select(col("q_id"), col("c_id"), col("cos"))
+        intCosine(dotL(col("q_ie"), col("c_ie")), col("q_aa"), col("c_aa")).as("cos"))
   }
 
   /** Matryoshka-style two-stage serving funnel over the IVF index:
@@ -385,7 +408,7 @@ object Similarity {
       k: Int,
       nQueries: Option[Int] = None): DataFrame = {
     require(shortlist >= k, "shortlist must be at least k")
-    val assign = ivfArgmin(dists)
+    val assign = ivfAssignFrom(dists)
     // Shape discipline learned at sf1 (first cut: 433 s, 300× sf0.1):
     // 1. The coarse stage is SKINNY — candidate rows carry (ids, cell,
     //    prefix arrays) only; full vectors rejoin AFTER the shortlist
@@ -402,10 +425,7 @@ object Similarity {
     //    spilling task. Explicit repartition pins the fan-out across
     //    the cluster.
     val parts = dists.sparkSession.sessionState.conf.numShufflePartitions
-    val probes = restrictToPanel(dists, nQueries)
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("v_id")).orderBy(col("d2"), col("cid"))))
-      .filter(col("pr") <= nprobe)
+    val probes = probeCells(dists, nprobe, nQueries)
       .select(col("v_id").as("q_id"),
         slice(col("ie"), 1, prefixDims).as("q_pre"), col("cid").as("cell"))
       .repartition(parts, col("cell"))
@@ -415,9 +435,7 @@ object Similarity {
       .repartition(parts, col("cell"))
     val coarse = probes.join(cands, Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"),
-        graft.functions.VectorExpressions.dotLong(
-          col("q_pre"), col("c_pre")).as("pdot"))
+      .select(col("q_id"), col("c_id"), dotL(col("q_pre"), col("c_pre")).as("pdot"))
       .withColumn("crank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("pdot").desc, col("c_id"))))
       .filter(col("crank") <= shortlist)
@@ -428,12 +446,8 @@ object Similarity {
         col("aa").as("q_aa")), Seq("q_id"))
       .join(vecs.select(col("v_id").as("c_id"), col("ie").as("c_ie"),
         col("aa").as("c_aa")), Seq("c_id"))
-      .withColumn("idot", graft.functions.VectorExpressions.dotLong(
-        col("q_ie"), col("c_ie")))
       .withColumn("cos",
-        when(col("q_aa") === 0L || col("c_aa") === 0L, lit(0.0))
-          .otherwise(col("idot") /
-            (sqrt(col("q_aa").cast("double")) * sqrt(col("c_aa").cast("double")))))
+        intCosine(dotL(col("q_ie"), col("c_ie")), col("q_aa"), col("c_aa")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))))
       .filter(col("rank") <= k)
@@ -503,7 +517,7 @@ object Similarity {
     val pairs = q.as("q").join(v.as("c"), Seq("bucket"))
       .filter(col("q.v_id") =!= col("c.v_id"))
       .select(col("q.v_id").as("q_id"), col("c.v_id").as("c_id"),
-        graft.functions.VectorExpressions.dotLong(col("q.ie"), col("c.ie")).as("idot"))
+        dotL(col("q.ie"), col("c.ie")).as("idot"))
       .distinct() // a candidate can surface via several probes
     pairs
       .withColumn("rank", row_number().over(
@@ -517,12 +531,9 @@ object Similarity {
     * mislabeled/outlier sweep a training-data pipeline runs before
     * using labels for mixing or eval splits.
     *
-    * Determinism: the centroid is the per-dimension floor(mean) of the
-    * INTEGER embedding ([[intEmbedding]]) — integer sums are
-    * order-independent where float sums are not (the same trick as
-    * [[kmeansCodebook]]); the cosine then uses only single
-    * correctly-rounded IEEE ops per row. Ties break by ascending
-    * vec_id.
+    * Determinism: the centroid is the [[floorMean]] of the label's
+    * INTEGER embeddings ([[intEmbedding]]), the k-means centroid rule;
+    * the cosine is [[intCosine]]. Ties break by ascending vec_id.
     *
     * Scale shape: one (label, dim) groupBy for the centroids (map-side
     * combined), centroids broadcast back (one row per label), ranking a
@@ -534,24 +545,13 @@ object Similarity {
       embCol: String,
       labelCol: String,
       k: Int): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
     val v = embs.select(col(idCol).as("vec_id"), col(labelCol).as("label"),
         intEmbedding(col(embCol)).as("ie"))
       .withColumn("aa", dotL(col("ie"), col("ie")))
-    val perDim = v
-      .select(col("label"), posexplode(col("ie")).as(Seq("d", "x")))
-      .groupBy(col("label"), col("d"))
-      .agg(floor(sum(col("x")).cast("double") / count(lit(1))).cast("long").as("mu"))
-    val cents = perDim.groupBy(col("label"))
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("mu")))),
-        _.getField("mu")).as("ce"))
+    val cents = floorMean(v, Seq("label"), "ie", "ce")
       .withColumn("cc", dotL(col("ce"), col("ce")))
     v.join(broadcast(cents), Seq("label"))
-      .withColumn("idot", dotL(col("ie"), col("ce")))
-      .withColumn("cos",
-        when(col("aa") === 0 || col("cc") === 0, lit(0.0))
-          .otherwise(col("idot") /
-            (sqrt(col("aa").cast("double")) * sqrt(col("cc").cast("double")))))
+      .withColumn("cos", intCosine(dotL(col("ie"), col("ce")), col("aa"), col("cc")))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("label")).orderBy(col("cos").asc, col("vec_id"))))
       .filter(col("rank") <= k)
@@ -562,11 +562,9 @@ object Similarity {
   //
   // The standard embedding-compression layout for billion-vector ANN:
   // split each vector into `numBlocks` contiguous subvectors, k-means
-  // each subspace independently, store one small code per block — a
-  // 64-dim float vector becomes numBlocks bytes plus a shared codebook.
-  // Same deterministic integer k-means recipe as the IVF codebook
-  // (seeded by the lowest-id vectors, floor-of-mean refinement), run
-  // per block.
+  // each subspace independently ([[kmeansCodebook]] over the [[Pq]]
+  // grain), store one small code per block — a 64-dim float vector
+  // becomes numBlocks bytes plus a shared codebook.
 
   /** (v_id, block, sv, ss) — the per-block subvector frame. A narrow
     * explode of the integer embedding: no shuffle.
@@ -575,7 +573,6 @@ object Similarity {
       vectors: DataFrame, idCol: String, embCol: String,
       numBlocks: Int, dims: Int): DataFrame = {
     val sub = dims / numBlocks
-    val dotL = graft.functions.VectorExpressions.dotLong _
     vectors.select(col(idCol).as("v_id"), intEmbedding(col(embCol)).as("ie"))
       .select(col("v_id"), explode(transform(
         sequence(lit(0), lit(numBlocks - 1)),
@@ -585,68 +582,33 @@ object Similarity {
       .withColumn("ss", dotL(col("sv"), col("sv")))
   }
 
-  /** Per-block deterministic k-means codebook `(block, cid, ce)`: seeds
-    * are the `k` lowest-id vectors' subvectors (every vector contributes
-    * one subvector to every block, so the seed set is the same tiny
-    * TakeOrdered frame for all blocks — no per-block window over the
-    * corpus); each iteration reassigns by integer d2 (ties by cid) and
-    * takes the per-dimension floor(mean), empty cells keeping their
-    * centroid. The codebook (numBlocks x k rows) is broadcast every
-    * round.
-    */
-  def pqCodebook(sv: DataFrame, k: Int, iters: Int): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
-    val seeds = sv.select(col("v_id")).distinct().orderBy(col("v_id")).limit(k)
-    var cents = sv
-      .join(broadcast(seeds), Seq("v_id"))
-      .select(col("block"), col("v_id").as("cid"), col("sv").as("ce"))
-    for (_ <- 1 to iters) {
-      val assigned = sv
-        .join(broadcast(cents.withColumn("cc", dotL(col("ce"), col("ce")))),
-          Seq("block"))
-        .withColumn("d2",
-          col("ss") - lit(2L) * dotL(col("sv"), col("ce")) + col("cc"))
-        .groupBy(col("v_id"), col("block"))
-        .agg(first(col("sv")).as("sv"),
-          min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"))
-      val perDim = assigned
-        .select(col("block"), col("cell"), posexplode(col("sv")).as(Seq("d", "x")))
-        .groupBy(col("block"), col("cell"), col("d"))
-        .agg(floor(sum(col("x")).cast("double") / count(lit(1))).cast("long").as("mu"))
-      val means = perDim.groupBy(col("block"), col("cell"))
-        .agg(transform(array_sort(collect_list(struct(col("d"), col("mu")))),
-          _.getField("mu")).as("me"))
-      cents = cents
-        .join(means.withColumnRenamed("cell", "cid"), Seq("block", "cid"), "left")
-        .select(col("block"), col("cid"), coalesce(col("me"), col("ce")).as("ce"))
-    }
-    cents
-  }
-
   /** PQ encode: `(v_id, block, code, q_err)` — per block, the nearest
-    * codebook centroid (integer d2, ties by cid) and the residual d2 as
-    * a self-auditing quantization-error column. One broadcast join +
-    * one keyed argmin; the corpus never self-joins.
+    * codebook centroid ([[nearestCell]]) and its d2 as a self-auditing
+    * quantization-error column. One broadcast join + one keyed argmin;
+    * the corpus never self-joins.
     */
-  def pqAssign(
-      vectors: DataFrame, idCol: String, embCol: String,
-      numBlocks: Int, dims: Int, k: Int, iters: Int): DataFrame = {
-    val sv = pqSubvectors(vectors, idCol, embCol, numBlocks, dims)
-    pqAssignFrom(sv, pqCodebook(sv, k, iters))
-  }
+  def pqAssignFrom(sv: DataFrame, codebook: DataFrame): DataFrame =
+    nearestCell(d2Table(sv, codebook, Pq), Pq)
+      .select(col("v_id"), col("block"), col("cell").as("code"), col("d2").as("q_err"))
 
-  /** [[pqAssign]] over prebuilt subvector + codebook frames. */
-  def pqAssignFrom(sv: DataFrame, codebook: DataFrame): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
-    val cents = codebook.withColumn("cc", dotL(col("ce"), col("ce")))
-    sv.join(broadcast(cents), Seq("block"))
-      .withColumn("d2",
-        col("ss") - lit(2L) * dotL(col("sv"), col("ce")) + col("cc"))
-      .groupBy(col("v_id"), col("block"))
-      .agg(min_by(struct(col("cid"), col("d2")),
-        struct(col("d2"), col("cid"))).as("m"))
-      .select(col("v_id"), col("block"),
-        col("m.cid").as("code"), col("m.d2").as("q_err"))
+  /** The ADC scoring shared by [[pqAdcTopK]] and [[ivfPqTopK]]: the
+    * query subvectors' distance table `(q_id, block, cid, qd2)` to the
+    * codebook goes to `score`, which joins it to the candidates' codes
+    * and returns `(q_id, c_id, qd2)` rows; the per-pair sum of `qd2` is
+    * `approx_d2`, and each query keeps its `topK` smallest, ties to the
+    * lower c_id.
+    */
+  private def adcTopK(sv: DataFrame, codebook: DataFrame, queryPred: Column, topK: Int)(
+      score: DataFrame => DataFrame): DataFrame = {
+    val dtab = d2Table(sv.filter(queryPred), codebook, Pq)
+      .select(col("v_id").as("q_id"), col("block"), col("cid"), col("d2").as("qd2"))
+    score(dtab)
+      .groupBy(col("q_id"), col("c_id"))
+      .agg(sum(col("qd2")).as("approx_d2"))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("approx_d2").asc, col("c_id"))))
+      .filter(col("rank") <= topK)
+      .select(col("q_id"), col("c_id"), col("approx_d2"), col("rank"))
   }
 
   /** PQ ADC top-k (asymmetric distance computation): full-precision
@@ -660,23 +622,13 @@ object Similarity {
     */
   def pqAdcTopK(
       sv: DataFrame, codebook: DataFrame, codes: DataFrame,
-      queryPred: Column, topK: Int): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
-    val cents = codebook.withColumn("cc", dotL(col("ce"), col("ce")))
-    val dtab = sv.filter(queryPred)
-      .join(broadcast(cents), Seq("block"))
-      .select(col("v_id").as("q_id"), col("block"), col("cid"),
-        (col("ss") - lit(2L) * dotL(col("sv"), col("ce")) + col("cc")).as("qd2"))
-    codes.join(broadcast(dtab),
-        codes("block") === dtab("block") && codes("code") === dtab("cid") &&
-          codes("v_id") =!= dtab("q_id"))
-      .groupBy(col("q_id"), codes("v_id").as("c_id"))
-      .agg(sum(col("qd2")).as("approx_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("approx_d2").asc, col("c_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("c_id"), col("approx_d2"), col("rank"))
-  }
+      queryPred: Column, topK: Int): DataFrame =
+    adcTopK(sv, codebook, queryPred, topK) { dtab =>
+      codes.join(broadcast(dtab),
+          codes("block") === dtab("block") && codes("code") === dtab("cid") &&
+            codes("v_id") =!= dtab("q_id"))
+        .select(col("q_id"), codes("v_id").as("c_id"), col("qd2"))
+    }
 
   /** IVF + PQ — the production billion-vector serving architecture:
     * queries probe their `nprobe` nearest IVF cells (coarse index) and
@@ -691,31 +643,19 @@ object Similarity {
   def ivfPqTopK(
       dists: DataFrame, sv: DataFrame, codebook: DataFrame, codes: DataFrame,
       nprobe: Int, queryPred: Column, topK: Int): DataFrame = {
-    val dotL = graft.functions.VectorExpressions.dotLong _
     val assign = ivfAssignFrom(dists).select(col("v_id").as("c_id"), col("cell"))
-    val probes = dists.filter(queryPred)
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("v_id")).orderBy(col("d2").asc, col("cid"))))
-      .filter(col("pr") <= nprobe)
+    val cand = probeCells(dists.filter(queryPred), nprobe, None)
       .select(col("v_id").as("q_id"), col("cid").as("cell"))
-    val cand = probes.join(assign, Seq("cell"))
+      .join(assign, Seq("cell"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"))
-    val cents = codebook.withColumn("cc", dotL(col("ce"), col("ce")))
-    val dtab = sv.filter(queryPred)
-      .join(broadcast(cents), Seq("block"))
-      .select(col("v_id").as("q_id"), col("block"), col("cid"),
-        (col("ss") - lit(2L) * dotL(col("sv"), col("ce")) + col("cc")).as("qd2"))
-    cand.join(codes, cand("c_id") === codes("v_id"))
-      .join(broadcast(dtab),
-        dtab("q_id") === cand("q_id") && dtab("block") === codes("block") &&
-          dtab("cid") === codes("code"))
-      .groupBy(cand("q_id"), col("c_id"))
-      .agg(sum(col("qd2")).as("approx_d2"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("approx_d2").asc, col("c_id"))))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("c_id"), col("approx_d2"), col("rank"))
+    adcTopK(sv, codebook, queryPred, topK) { dtab =>
+      cand.join(codes, cand("c_id") === codes("v_id"))
+        .join(broadcast(dtab),
+          dtab("q_id") === cand("q_id") && dtab("block") === codes("block") &&
+            dtab("cid") === codes("code"))
+        .select(cand("q_id"), col("c_id"), col("qd2"))
+    }
   }
 
   /** Leading eigenvalue of each label's Gram matrix by POWER ITERATION

@@ -123,7 +123,7 @@ object SimilarityQueries {
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val sv = sharedPqSv(s, dir)
     Artifacts.memo(s, dir, "embeddings", "pq_cents")(
-      Similarity.pqCodebook(sv, PqK, PqIters))
+      Similarity.kmeansCodebook(sv, Similarity.Pq, PqK, PqIters))
   }
 
   private def sharedPqCodes(
@@ -164,12 +164,8 @@ object SimilarityQueries {
         col("v_id").as("b"), col("ie").as("ib"), col("aa").as("nb"), col("cell"))
       val pairs = lhs.join(rhs, Seq("cell"))
         .filter(col("a") < col("b"))
-        .withColumn("cos",
-          when(col("na") === 0 || col("nb") === 0, lit(0.0))
-            .otherwise(
-              graft.functions.VectorExpressions.dotLong(col("ia"), col("ib"))
-                .cast("double") /
-                (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double")))))
+        .withColumn("cos", Similarity.intCosine(
+          graft.functions.VectorExpressions.dotLong(col("ia"), col("ib")), col("na"), col("nb")))
         .filter(col("cos") >= SemMinCos)
         .select(col("a"), col("b"))
       graft.dedup.Dedup.connectedComponents(pairs, "a", "b")
@@ -184,7 +180,8 @@ object SimilarityQueries {
   /** The deterministic k-means iterations as CTEs: c0 is the lowest-id
     * seed codebook; each step reassigns (integer d2, ties by cid) and
     * takes per-dimension floor(mean), empty cells keeping their previous
-    * centroid — the exact mirror of Similarity.kmeansCodebook.
+    * centroid — the exact mirror of Similarity.kmeansCodebook over the
+    * Ivf grain.
     */
   private def kmeansCteSql(iters: Int,
       limitSql: String = IvfCells.toString, prefix: String = "",
@@ -216,7 +213,7 @@ object SimilarityQueries {
 
   /** Shared IVF prelude: integer embeddings, self-norms, the
     * deterministic k-means codebook, all pairwise cell distances, and
-    * the argmin cell assignment (mirrors Similarity.ivfAssign).
+    * the argmin cell assignment (mirrors Similarity.ivfAssignFrom).
     */
   private def ivfPreludeSqlWith(limitSql: String): String =
     s"""iv AS (SELECT vec_id, $intEmbSql AS ie FROM embeddings),
@@ -342,8 +339,8 @@ object SimilarityQueries {
   /** DuckDB mirror of the PQ pipeline ending in `fin(vec_id, block,
     * code, q_err)`, with `sv` (subvectors+self-dots) and `c1` (the
     * trained per-block codebook) reusable by the ADC query. Exact
-    * mirror of Similarity.pqSubvectors/pqCodebook/pqAssignFrom at
-    * blocks=8, k=16, iters=1.
+    * mirror of Similarity.pqSubvectors, kmeansCodebook over the Pq grain
+    * and pqAssignFrom at blocks=8, k=16, iters=1.
     */
   private lazy val pqCteSql: String =
     s"""pqiv AS (SELECT vec_id, $intEmbSql AS ie FROM embeddings),
@@ -403,14 +400,10 @@ object SimilarityQueries {
         // scheduled rebuild (the production serving trade). Output is
         // the merged per-cell occupancy (base/new/total), i.e. the
         // index catalog entry a router needs after the append.
-        val v = tbl(s, dir, "embeddings")
-          .select(col("vec_id").as("v_id"),
-            Similarity.intEmbedding(col("embedding")).as("ie"))
-          .withColumn("aa", graft.functions.VectorExpressions.dotLong(
-            col("ie"), col("ie")))
+        val v = Similarity.ivfVectors(tbl(s, dir, "embeddings"), "vec_id", "embedding")
         val base = v.filter(col("v_id") % 5 =!= 0)
         val batch = v.filter(col("v_id") % 5 === 0)
-        val cents = Similarity.kmeansCodebook(base, IvfCells,
+        val cents = Similarity.kmeansCodebook(base, Similarity.Ivf, IvfCells,
           Similarity.IvfKmeansIters)
         val nb = Similarity.ivfAssignFrozen(base, cents)
           .groupBy(col("cell")).agg(count(lit(1)).as("n_base"))
@@ -985,13 +978,10 @@ object SimilarityQueries {
         // is consumed by ONE aggregate chain, so each codebook trains
         // once; centroids ride broadcast, assignment is map-side.
         def rowFor(k: Int) = {
-          val perVec = Similarity.ivfDists(
-              tbl(s, dir, "embeddings"), "vec_id", "embedding", k)
-            .groupBy(col("v_id"))
-            .agg(min(col("d2")).as("d2min"),
-              min_by(col("cid"), struct(col("d2"), col("cid"))).as("cell"))
+          val perVec = Similarity.nearestCell(Similarity.ivfDists(
+            tbl(s, dir, "embeddings"), "vec_id", "embedding", k), Similarity.Ivf)
           perVec.groupBy(col("cell"))
-            .agg(sum(col("d2min")).as("ci"), count(lit(1)).as("n"))
+            .agg(sum(col("d2")).as("ci"), count(lit(1)).as("n"))
             .agg(sum(col("ci")).as("inertia"),
               count(lit(1)).as("n_cells_used"),
               max(col("n")).as("max_cell"))

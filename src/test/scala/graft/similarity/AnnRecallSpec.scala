@@ -2,13 +2,29 @@ package graft.similarity
 
 import graft.SparkSpec
 import graft.suite.Registry
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** ANN quality gate: LSH-bucketed top-k must recover a reasonable
   * fraction of the exact top-k — the check that the scale path is not
   * just fast but useful.
   */
 class AnnRecallSpec extends SparkSpec {
+
+  /** IVF top-k pairs of the queries `vec_id < 50` at (cells, nprobe):
+    * the distance frame is persisted for the probe, which reads it
+    * twice, and released after it.
+    */
+  private def ivfPairs(emb: DataFrame, cells: Int, np: Int, k: Int): Set[(Long, Long)] = {
+    val dists = Similarity.ivfDists(emb, "vec_id", "embedding", cells)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try Similarity.ivfTopKFrom(dists, nprobe = np, k = k)
+      .filter(col("q_id") < 50)
+      .select("q_id", "c_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    finally dists.unpersist()
+  }
 
   test("LSH ANN recall@3 vs brute-force cosine on real embeddings") {
     val dir = "/root/testdata/sf0.001"
@@ -36,7 +52,7 @@ class AnnRecallSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = Registry.tbl(spark, dir, "embeddings").cache()
 
-    val assign = Similarity.ivfAssign(emb, "vec_id", "embedding", 8)
+    val assign = Similarity.ivfAssignFrom(Similarity.ivfDists(emb, "vec_id", "embedding", 8))
     // every vector lands in exactly one cell
     assert(assign.count() === emb.count())
     assert(assign.select("cell").distinct().count() <= 8)
@@ -47,13 +63,7 @@ class AnnRecallSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     def recallAt(cells: Int, np: Int): Double = {
-      val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding",
-          numCells = cells, nprobe = np, k = 3)
-        .filter(col("q_id") < 50)
-        .select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache() // release ivfTopK's dists persist
-      emb.cache()
+      val ivf = ivfPairs(emb, cells, np, k = 3)
       (exact & ivf).size.toDouble / exact.size
     }
 
@@ -87,13 +97,7 @@ class AnnRecallSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     def recallAt10(np: Int): Double = {
-      val ivf = Similarity.ivfTopK(emb, "vec_id", "embedding",
-          numCells = 8, nprobe = np, k = 10)
-        .filter(col("q_id") < 50)
-        .select("q_id", "c_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
-      emb.cache()
+      val ivf = ivfPairs(emb, 8, np, k = 10)
       (exact & ivf).size.toDouble / exact.size
     }
 
@@ -148,5 +152,14 @@ class AnnRecallSpec extends SparkSpec {
     assert(byPd(4) <= byPd(8) && byPd(8) <= byPd(16),
       s"recall must be monotone in prefixDims: $byPd")
     spark.catalog.clearCache()
+  }
+
+  test("an IVF recall sweep leaves nothing cached in the session") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val emb = (0 until 60).map(i => (i.toLong,
+      Seq.tabulate(8)(d => ((i * 7 + d * 3) % 11 - 5) / 4.0f))).toDF("vec_id", "embedding")
+    for ((cells, np) <- Seq((8, 2), (16, 4))) ivfPairs(emb, cells, np, k = 3)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -17,8 +17,9 @@ class PqSpec extends SparkSpec {
   private def emb = spark.read.parquet(s"$dir/embeddings.parquet")
 
   test("codes are complete, in the codebook id range, and argmin-correct") {
-    val codes = Similarity.pqAssign(emb, "vec_id", "embedding",
-      blocks, dims, k, iters = 1).collect()
+    val sv = Similarity.pqSubvectors(emb, "vec_id", "embedding", blocks, dims)
+    val codebook = Similarity.kmeansCodebook(sv, Similarity.Pq, k, iters = 1)
+    val codes = Similarity.pqAssignFrom(sv, codebook).collect()
     val n = emb.count()
     assert(codes.length == n * blocks, "one code per (vector, block)")
 
@@ -28,8 +29,7 @@ class PqSpec extends SparkSpec {
       "every code must be a seed centroid id")
 
     // brute-force argmin over the same codebook for a sample of vectors
-    val sv = Similarity.pqSubvectors(emb, "vec_id", "embedding", blocks, dims)
-    val cents = Similarity.pqCodebook(sv, k, iters = 1).collect()
+    val cents = codebook.collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getSeq[Long](2).toArray)).toMap
     val sample = sv.filter(col("v_id") % 37 === 0).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
@@ -47,7 +47,7 @@ class PqSpec extends SparkSpec {
 
   test("ADC scores are exactly the sum of per-block code distances") {
     val sv = Similarity.pqSubvectors(emb, "vec_id", "embedding", blocks, dims)
-    val cents = Similarity.pqCodebook(sv, k, iters = 1)
+    val cents = Similarity.kmeansCodebook(sv, Similarity.Pq, k, iters = 1)
     val codes = Similarity.pqAssignFrom(sv, cents)
     val adc = Similarity.pqAdcTopK(sv, cents, codes,
       queryPred = col("v_id") < 10, topK = 3).collect()
@@ -90,7 +90,7 @@ class PqSpec extends SparkSpec {
   test("IVF+PQ: candidates come from probed cells, scores are exact ADC sums") {
     val dists = Similarity.ivfDists(emb, "vec_id", "embedding", numCells = 16)
     val sv = Similarity.pqSubvectors(emb, "vec_id", "embedding", blocks, dims)
-    val cents = Similarity.pqCodebook(sv, k, iters = 1)
+    val cents = Similarity.kmeansCodebook(sv, Similarity.Pq, k, iters = 1)
     val codes = Similarity.pqAssignFrom(sv, cents)
     val out = Similarity.ivfPqTopK(dists, sv, cents, codes,
       nprobe = 2, queryPred = col("v_id") < 10, topK = 3).collect()
@@ -129,9 +129,11 @@ class PqSpec extends SparkSpec {
   }
 
   test("one refinement sweep reduces total quantization error") {
-    def totalErr(iters: Int): Long =
-      Similarity.pqAssign(emb, "vec_id", "embedding", blocks, dims, k, iters)
+    def totalErr(iters: Int): Long = {
+      val sv = Similarity.pqSubvectors(emb, "vec_id", "embedding", blocks, dims)
+      Similarity.pqAssignFrom(sv, Similarity.kmeansCodebook(sv, Similarity.Pq, k, iters))
         .agg(sum(col("q_err"))).head().getLong(0)
+    }
     val untrained = totalErr(0)
     val trained = totalErr(1)
     assert(trained < untrained,

@@ -18,7 +18,8 @@ class SemanticDedupSpec extends SparkSpec {
 
     // independent reconstruction of the blocked pair graph: same
     // assignment operator, naive pair scoring collected locally
-    val assign = Similarity.ivfAssign(emb, "vec_id", "embedding", numCells = 16)
+    val assign = Similarity.ivfAssignFrom(
+        Similarity.ivfDists(emb, "vec_id", "embedding", numCells = 16))
       .select(col("v_id"), col("ie"), col("aa"), col("cell"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2), r.getLong(3)))

@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's DuckDB-oracle correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [prefix ...]
 
 Runs each oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB (with
 the sf tables registered as views), loads the Spark result parquet written
 by graft.Verify, canonicalizes both (columns sorted by name, rows sorted by
 all columns), and compares values exactly (floats: exact + 1e-9-tolerant
-verdicts reported separately).
+verdicts reported separately). With prefixes, only the queries whose name
+starts with one of them are checked (graft.Verify selects the same way); a
+filter that selects no query is a failure, not an empty pass.
 """
 import duckdb, json, sys, glob
 import pandas as pd
@@ -76,15 +78,18 @@ def cmp_frames(name, exp, got):
 
 def main():
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    prefixes = sys.argv[3:]
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    names = [n for n in sorted(oracle)
+             if not prefixes or any(n.startswith(p) for p in prefixes)]
+    if not names:
+        print(f"FAIL: no query selected by {prefixes or 'an empty oracle'}")
+        sys.exit(1)
     n_ok = n_fail = 0
-    for name in sorted(oracle):
-        if only and name not in only:
-            continue
+    for name in names:
         files = glob.glob(f"{outdir}/{name}/*.parquet")
         if not files:
             print(f"FAIL {name}: no spark output")
