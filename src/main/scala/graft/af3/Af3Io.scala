@@ -1,20 +1,23 @@
 package graft.af3
 
+import scala.reflect.ClassTag
 import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.JsonParser.NumberType
 import com.fasterxml.jackson.core.JsonToken._
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, GlobFilter, Path}
 
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{FileIndexRules, JsonFileReader, PaeBlockHitsExpr}
+import org.apache.spark.sql.graft.{ColumnBridge, FileIndexRules, JsonFileReader, PaeBlockHitsExpr}
 import org.apache.spark.sql.sources.IsNotNull
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.functions.Scalars
 
@@ -42,23 +45,13 @@ object Af3Io {
     StructField("token_res_ids", ArrayType(IntegerType)),
     StructField("_corrupt", StringType)))
 
-  private val summaryGlob = "*_summary_confidences_0.json"
-  private val fullDataGlob = "*_full_data_0.json"
+  private[af3] val summaryGlob = "*_summary_confidences_0.json"
+  private[af3] val fullDataGlob = "*_full_data_0.json"
+  private val modelGlob = "*.cif"
 
-  private def options(glob: String) = Map("multiLine" -> "true", "mode" -> "PERMISSIVE",
-    "columnNameOfCorruptRecord" -> "_corrupt", "recursiveFileLookup" -> "true",
-    "pathGlobFilter" -> glob)
-
-  private val summaryOptions = options(summaryGlob) + ("encoding" -> "UTF-8")
-  private val fullDataOptions = options(fullDataGlob)
-
-  private def rawSummaries(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.schema(summarySchema).options(summaryOptions).json(inputDir)
-      .withColumn("__path", input_file_name())
-
-  private def rawFullData(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.schema(fullDataSchema).options(fullDataOptions).json(inputDir)
-      .withColumn("__path", input_file_name())
+  private[af3] val fullDataOptions = Map("multiLine" -> "true", "mode" -> "PERMISSIVE",
+    "columnNameOfCorruptRecord" -> "_corrupt")
+  private[af3] val summaryOptions = fullDataOptions + ("encoding" -> "UTF-8")
 
   /** The bundle files under a tree, as URL-encoded paths, and its
     * AppleDouble `._` files ([[bundleFiles]]).
@@ -66,16 +59,17 @@ object Af3Io {
   private[af3] final case class BundleFiles(summaries: Seq[String], fullData: Seq[String],
       models: Seq[String], appleDouble: Seq[Path])
 
-  /** The files [[readSummaries]], [[readPaeLong]] and
-    * [[CifParser.readAtoms]] would read under `inputDir`, from one
-    * `listStatus` walk on the driver that applies their file index's
-    * rules: no file or directory whose name [[FileIndexRules.hidden]]
-    * marks, each scan's glob on the file name. Also every `._` file,
-    * in the directories walked; with `hiddenDirs` the walk enters hidden
-    * directories too, for their `._` files only.
+  /** The AF3 input files under `inputDir`, the one listing every AF3
+    * read goes through: one `listStatus` walk on the driver with the
+    * rules of Spark's file index, no file or directory whose name
+    * [[FileIndexRules.hidden]] marks, and each kind's glob on the file
+    * name. Also every `._` file, in the directories walked; with
+    * `hiddenDirs` the walk enters hidden directories too, for their `._`
+    * files only.
     */
-  private[af3] def bundleFiles(conf: Configuration, inputDir: String,
+  private[af3] def bundleFiles(spark: SparkSession, inputDir: String,
       hiddenDirs: Boolean = false): BundleFiles = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val visible = Vector.newBuilder[Path]
     val appleDouble = Vector.newBuilder[Path]
     def walk(fs: FileSystem, dir: Path, shown: Boolean): Unit = fs.listStatus(dir).foreach { st =>
@@ -93,21 +87,30 @@ object Af3Io {
       val g = new GlobFilter(glob)
       files.filter(g.accept).map(SparkPath.fromPath(_).urlEncoded)
     }
-    BundleFiles(matching(summaryGlob), matching(fullDataGlob), matching(CifParser.cifGlob),
+    BundleFiles(matching(summaryGlob), matching(fullDataGlob), matching(modelGlob),
       appleDouble.result())
   }
 
-  /** [[readSummaries]]' scan of one file, for a task that reads it
-    * itself: its options and full schema, `_corrupt` included. Its rows
-    * go through [[Af3Pipeline.passesGate]].
+  /** `files` as a Spark job's input, one task per file up to the default parallelism. */
+  private[af3] def perFile[T: ClassTag](spark: SparkSession, files: Seq[T]): RDD[T] = {
+    val sc = spark.sparkContext
+    sc.parallelize(files, math.max(1, math.min(files.size, sc.defaultParallelism)))
+  }
+
+  private def jobDir(url: String): UTF8String = UTF8String.fromString(Scalars.parentDirName(url))
+
+  /** The reader of one summary file: Spark's JSON parser with
+    * [[summaryOptions]] and the full [[summarySchema]], `_corrupt`
+    * included. [[readSummaries]] and [[runLog]] read with it; in a job's
+    * task its rows go through [[Af3Pipeline.passesGate]].
     */
   private[af3] def summaryReader(spark: SparkSession): JsonFileReader =
     JsonFileReader(spark, summaryOptions, summarySchema, Nil)
 
-  /** [[readPaeLong]]'s scan of one file, for a task that reads it
-    * itself: Spark's JSON parser with the options, pruned read schema and
-    * pushed not-null filters Spark plans for that scan. Its rows go
-    * through [[paeMatrices]].
+  /** The reader of one `full_data` file for its PAE matrices: Spark's
+    * JSON parser with [[fullDataOptions]], the read schema and the pushed
+    * not-null filters Spark plans for a `pae`/`token_res_ids` scan of
+    * [[fullDataSchema]]. Its rows go through [[paeMatrices]].
     */
   private[af3] def fullDataReader(spark: SparkSession): JsonFileReader =
     JsonFileReader(spark, fullDataOptions,
@@ -226,112 +229,90 @@ object Af3Io {
     } catch { case NonFatal(_) => None }
   }
 
-  /** Read all summaries under `inputDir` keyed by job_dir. Exactly one
-    * row per summary file; malformed files carry `_corrupt` and fall
-    * out at the gate (≙ return False, py:74-77).
+  /** Read all summaries under `inputDir` keyed by job_dir: the
+    * [[summaryReader]] rows of each file [[bundleFiles]] lists, in one
+    * Spark job. One row per JSON record (a top-level array gives one per
+    * element, an empty or blank file none); malformed files carry
+    * `_corrupt` and fall out at the gate (≙ return False, py:74-77).
     *
     * The reference's latin-1 re-read (py:68-73) is intentionally NOT
-    * mirrored as a second scan: Python's strict UTF-8 decoder throws on
-    * latin-1 bytes, but Spark's JSON reader decodes them with
-    * replacement characters and still parses the document — `_corrupt`
-    * here marks structural JSON corruption, which no alternate encoding
-    * could fix (proven by the latin-1 fixture parsing green under
-    * UTF-8). One scan covers both of the reference's cases.
+    * mirrored: Python's strict UTF-8 decoder throws on latin-1 bytes, but
+    * Spark's JSON parser decodes them with replacement characters and
+    * still parses the document — `_corrupt` marks structural JSON
+    * corruption, which no alternate encoding could fix (the latin-1
+    * fixture parses green under UTF-8).
     */
-  def readSummaries(spark: SparkSession, inputDir: String): DataFrame =
-    rawSummaries(spark, inputDir)
-      .withColumn("job_dir", Scalars.parentDirName(col("__path")))
-      .drop("__path")
+  def readSummaries(spark: SparkSession, inputDir: String): DataFrame = {
+    val reader = summaryReader(spark)
+    ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).summaries)
+      .flatMap { url =>
+        val job = InternalRow(jobDir(url))
+        reader.read(url).map(new JoinedRow(_, job))
+      }, summarySchema.add("job_dir", StringType, nullable = false))
+  }
 
   /** side_logging (reference py:16-21 + its ~40 call sites): the
     * reference logs one status line per file it touches; here the same
-    * information is an observability DataFrame — per-file status
-    * collected as data, queryable/joinable/sinkable like any other frame
-    * (and shardable at 100 TB, unlike a log file).
+    * information is a DataFrame, queryable/joinable/sinkable like any
+    * other frame.
     *
-    * One row per discovered bundle file:
-    * (job_dir, file, kind, status) with
-    * kind ∈ summary | full_data | cif | hidden and status ∈
-    * parsed | corrupt_json (py:74-77) | missing_keys (py:111-113) |
-    * no_atoms | skipped_hidden (py:560-566).
-    *
-    * Note on encodings: Spark's JSON reader decodes bad bytes with
-    * replacement characters rather than failing, so a latin-1 summary
-    * reads as `parsed` under UTF-8 — `_corrupt` marks structural JSON
-    * corruption only, which no re-read in another encoding could fix.
-    * (The reference's latin-1 retry, py:71-73, exists because Python's
-    * strict decoder throws where Spark's lenient one does not.)
+    * One [[bundleFiles]] walk, into hidden directories too, and one
+    * Spark job that reads each listed file with the pipeline's reader
+    * for it and gives it exactly one row: (job_dir, file, kind, status)
+    * with kind ∈ summary | full_data | cif | hidden and status ∈ parsed |
+    * corrupt_json (py:74-77) | missing_keys (py:111-113) | no_atoms |
+    * skipped_hidden (py:560-566). A JSON file with no record (empty or
+    * blank) or a corrupt one is `corrupt_json`, a `full_data` file with
+    * no record holding both keys `missing_keys`, a model file without
+    * atoms ([[CifParser.readModel]]) `no_atoms`. JSON is parsed against
+    * the full schema, as the gate reads a summary, so a mistyped field is
+    * `corrupt_json`; a latin-1 summary is `parsed` ([[readSummaries]]).
     */
   def runLog(spark: SparkSession, inputDir: String): DataFrame = {
-    val base = Scalars.baseName(col("__path"))
-
-    // hidden AppleDouble files of any kind: reported, never parsed.
-    // Spark's file index hides dot-files from every source, so this
-    // branch lists them through the Hadoop FileSystem directly — pure
-    // file metadata, the same driver-side listing any Spark scan does.
-    val hidden = {
-      import spark.implicits._
-      bundleFiles(spark.sparkContext.hadoopConfiguration, inputDir, hiddenDirs = true)
-        .appleDouble.map(p => (p.getParent.getName, p.getName)).toDF("job_dir", "file")
-        .select(col("job_dir"), col("file"),
-          lit("hidden").as("kind"), lit("skipped_hidden").as("status"))
+    import spark.implicits._
+    val files = bundleFiles(spark, inputDir, hiddenDirs = true)
+    // (job_dir, file, kind, url); the `._` files are never opened
+    val listed = Seq("summary" -> files.summaries, "full_data" -> files.fullData,
+      "cif" -> files.models).flatMap { case (kind, urls) =>
+        urls.map(u => (Scalars.parentDirName(u), u.substring(u.lastIndexOf('/') + 1), kind, u))
+      } ++ files.appleDouble.map(p => (p.getParent.getName, p.getName, "hidden", ""))
+    val summaries = summaryReader(spark)
+    val fullData = JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    def json(rows: Iterator[InternalRow], corrupt: Int)(keyed: InternalRow => Boolean) = {
+      var (records, bad, keys) = (0, false, false)
+      rows.foreach { r => records += 1; bad ||= !r.isNullAt(corrupt); keys ||= keyed(r) }
+      if (records == 0 || bad) "corrupt_json" else if (keys) "parsed" else "missing_keys"
     }
-
-    // summaries: one scan; _corrupt == structural corruption (see note).
-    // The status must come from a parse against the full schema, as the
-    // gate reads it: Spark refuses a JSON scan pruned to the corrupt
-    // column alone (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and a scan pruned
-    // to fewer fields would call a summary whose pruned field has the
-    // wrong type `parsed`. The RDD boundary stops the pruning without
-    // caching anything in the session.
-    val raw = rawSummaries(spark, inputDir)
-    val summaries = spark.createDataFrame(raw.rdd, raw.schema)
-      .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
-        lit("summary").as("kind"),
-        when(col("_corrupt").isNull, "parsed")
-          .otherwise("corrupt_json").as("status"))
-
-    // full_data: corrupt vs missing pae/token_res_ids vs parsed
-    val full = rawFullData(spark, inputDir)
-      .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"),
-        lit("full_data").as("kind"),
-        when(col("_corrupt").isNotNull, "corrupt_json")
-          .when(col("pae").isNull || col("token_res_ids").isNull, "missing_keys")
-          .otherwise("parsed").as("status"))
-
-    // cif model files: parsed iff the _atom_site loop yielded atoms
-    val cifCounts = CifParser.readAtomsDf(spark, inputDir)
-      .groupBy(col("job_dir"), col("model_idx"))
-      .agg(count(lit(1)).as("__n"))
-    val cifRe = "^(.*)_model_(\\d+)\\.cif$"
-    val cifs = CifParser.modelScan(spark, inputDir).select(col("path").as("__path"))
-      .select(Scalars.parentDirName(col("__path")).as("job_dir"), base.as("file"))
-      .withColumn("model_idx", regexp_extract(col("file"), cifRe, 2).cast("int"))
-      .join(cifCounts, Seq("job_dir", "model_idx"), "left")
-      .select(col("job_dir"), col("file"), lit("cif").as("kind"),
-        when(col("__n") > 0, "parsed").otherwise("no_atoms").as("status"))
-
-    summaries.unionByName(full).unionByName(cifs).unionByName(hidden)
+    perFile(spark, listed).map { case (job, file, kind, url) =>
+      (job, file, kind, kind match {
+        case "summary" => json(summaries.read(url), 3)(_ => true)
+        case "full_data" => json(fullData.read(url), 2)(r => !r.isNullAt(0) && !r.isNullAt(1))
+        case "cif" => if (CifParser.readModel(conf.value, url).hasNext) "parsed" else "no_atoms"
+        case _ => "skipped_hidden"
+      })
+    }.toDF("job_dir", "file", "kind", "status")
   }
 
   /** Read all full_data files under `inputDir`, one row per job:
     * `(job_dir, pae)` with the whole N x N matrix as
-    * `array<array<double>>` (the transpose of py:215 is a no-op here).
-    * A job's matrix is the unit of work of the PAE block count
-    * ([[Af3Pipeline.interactingResidues]]), so the working set per task is
-    * one complex's N^2 cells, never the N^2 rows a long form would
-    * materialize; the frame scales with the number of jobs.
+    * `array<array<double>>` (the transpose of py:215 is a no-op here),
+    * the [[paeMatrices]] of each file [[bundleFiles]] lists, in one Spark
+    * job. A job's matrix is the unit of work of the PAE block count
+    * ([[Af3Pipeline.interactingResidues]]): a task holds one complex's
+    * N^2 cells, never the N^2 rows a long form would materialize.
     *
-    * Decoding is strict on purpose: unlike [[readSummaries]] the scan
+    * Decoding is strict on purpose: unlike [[readSummaries]] the reader
     * sets no `encoding`, so a file with a byte that is not UTF-8, even in
     * a string of a key nothing reads, is dropped whole, and its job gets
     * no interacting residues. The reference's `extract_pae_data` returns
     * None on any error (py:107-124); its latin-1 retry (py:68-73) is for
-    * summaries only. [[fullDataReader]] decodes the same way.
+    * summaries only.
     */
-  def readPaeLong(spark: SparkSession, inputDir: String): DataFrame =
-    rawFullData(spark, inputDir)
-      // both keys must be present or the whole file is dropped (py:111-113)
-      .filter(col("pae").isNotNull && col("token_res_ids").isNotNull)
-      .select(Scalars.parentDirName(col("__path")).as("job_dir"), col("pae"))
+  def readPaeLong(spark: SparkSession, inputDir: String): DataFrame = {
+    val reader = fullDataReader(spark)
+    ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).fullData)
+      .flatMap(url => paeMatrices(reader.read(url)).iterator.map(InternalRow(jobDir(url), _))),
+      StructType(Seq(StructField("job_dir", StringType, nullable = false), fullDataSchema("pae"))))
+  }
 }

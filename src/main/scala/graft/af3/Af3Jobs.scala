@@ -1,6 +1,5 @@
 package graft.af3
 
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.JsonFileReader
 import org.apache.spark.util.SerializableConfiguration
@@ -48,17 +47,15 @@ object Af3Jobs {
     }
   }
 
-  /** Run the bundles under `inputDir` as one driver-side listing
-    * ([[Af3Io.bundleFiles]]) and one Spark job of one task per job
-    * ([[jobFiles]]); results of the binders, in job-name order. With
-    * `out`, each binder's task also writes its structure outputs
+  /** Run `jobs` ([[jobFiles]] of a driver-side listing) as one Spark job
+    * of one task per job; results of the binders, in job-name order.
+    * With `out`, each binder's task also writes its structure outputs
     * ([[CifWriter.writeJob]]).
     */
-  private[af3] def run(spark: SparkSession, inputDir: String, p: Af3Params,
+  private[af3] def run(spark: SparkSession, jobs: Seq[JobFiles], p: Af3Params,
       out: Option[Af3Outputs]): Seq[JobResult] = {
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val jobs = jobFiles(Af3Io.bundleFiles(conf.value, inputDir))
     if (jobs.isEmpty) return Nil
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val summaries = Af3Io.summaryReader(spark)
     val fullData = Af3Io.fullDataReader(spark)
     JsonFileReader.withSessionConf(spark) {
@@ -84,10 +81,7 @@ object Af3Jobs {
     }
     def parse(m: Int): Seq[CifAtom] = timed("parse_ns") {
       f.models.filter(_._1 == m).flatMap { case (_, url) =>
-        val path = SparkPath.fromUrlString(url).toPath
-        val in = path.getFileSystem(conf.value).open(path)
-        val bytes = try in.readAllBytes() finally in.close()
-        val atoms = CifParser.parseAtomSite(f.job, m, CifParser.decodeText(bytes)).toSeq
+        val atoms = CifParser.readModel(conf.value, url).toSeq
         add("models", 1); add("atoms", atoms.size)
         atoms
       }

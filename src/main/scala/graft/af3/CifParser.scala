@@ -1,7 +1,10 @@
 package graft.af3
 
+import org.apache.hadoop.conf.Configuration
+
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 /** One parsed `_atom_site` row. Core fields are what the reference
   * consumes via BioPython (chain = auth_asym_id, res_id = auth_seq_id ->
@@ -34,8 +37,9 @@ final case class CifAtom(
     b_iso: Option[Double] = None)
 
 /** mmCIF `_atom_site` reader: a single-pass tokenizer over one file's
-  * text, run inside executors — over a `binaryFile` scan ([[readAtoms]])
-  * or in a job's task ([[Af3Jobs]]). No Python/BioPython dependency.
+  * text, run inside executors: one model-file read ([[readModel]]) serves
+  * [[readAtoms]], a job's task ([[Af3Jobs]]) and [[Af3Io.runLog]]. No
+  * Python/BioPython dependency.
   *
   * Tokenization follows the CIF quoting rule BioPython implements
   * (py:146 via MMCIF2Dict): a `'` or `"` at token start opens a quoted
@@ -201,12 +205,6 @@ object CifParser {
 
   private val pathRe = ".*/([^/]+)/[^/]+_model_(\\d+)\\.cif$".r
 
-  private[af3] val cifGlob = "*.cif"
-
-  private[af3] def modelScan(spark: SparkSession, inputDir: String): DataFrame =
-    spark.read.format("binaryFile")
-      .options(Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> cifGlob)).load(inputDir)
-
   /** (job_dir, model_idx) of a `*.cif` path [[readAtoms]] reads, or
     * `None` for a name that is no model file.
     */
@@ -215,22 +213,32 @@ object CifParser {
     case _ => None
   }
 
-  /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
-    * atoms Dataset. `job_dir` = name of the containing folder, `model_idx`
-    * from the filename (py:348-349, 440-441). AppleDouble `._` siblings
-    * (py:560-566) never reach it: Spark's file index hides names that
-    * start with `.` or `_`.
+  /** The atoms of the model file at `url` (a URL-encoded path): its
+    * bytes, [[decodeText]], then [[parseAtomSite]] with the job and model
+    * of [[modelOf]]; none for a name that is no model file.
     */
-  def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] = {
+  private[af3] def readModel(conf: Configuration, url: String): Iterator[CifAtom] =
+    modelOf(url).iterator.flatMap { case (job, m) =>
+      val path = SparkPath.fromUrlString(url).toPath
+      val in = path.getFileSystem(conf).open(path)
+      val bytes = try in.readAllBytes() finally in.close()
+      parseAtomSite(job, m, decodeText(bytes))
+    }
+
+  /** The atoms of the model files at `urls`, in one Spark job. */
+  private[af3] def atomsOf(spark: SparkSession, urls: Seq[String]): Dataset[CifAtom] = {
     import spark.implicits._
-    modelScan(spark, inputDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap {
-        case (pathRe(job, m), content) => parseAtomSite(job, m.toInt, decodeText(content))
-        case _ => Iterator.empty
-      }
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    Af3Io.perFile(spark, urls).flatMap(readModel(conf.value, _)).toDS()
   }
+
+  /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
+    * atoms Dataset: [[readModel]] over each model file [[Af3Io.bundleFiles]]
+    * lists (py:348-349, 440-441). AppleDouble `._` siblings (py:560-566)
+    * never reach it: the listing hides names that start with `.` or `_`.
+    */
+  def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] =
+    atomsOf(spark, Af3Io.bundleFiles(spark, inputDir).models)
 
   def readAtomsDf(spark: SparkSession, inputDir: String): DataFrame =
     readAtoms(spark, inputDir).toDF()

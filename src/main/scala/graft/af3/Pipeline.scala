@@ -36,17 +36,19 @@ final case class PartnerIsland(job_dir: String, p_island: Long, partner_min: Int
   * ([[Af3Jobs]]; with `out` the tasks also write the structure outputs).
   * The analysis frames `info` .. `report` are local frames over the
   * collected results: nothing is cached or recomputed. Only `atoms`, for
-  * the `sink_*` queries, reads files again.
+  * the `sink_*` queries, reads files again: the binders' model files of
+  * the same listing.
   */
 final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
     out: Option[Af3Outputs] = None) {
   import spark.implicits._
 
-  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, inputDir, p, out)
+  private lazy val files = Af3Jobs.jobFiles(Af3Io.bundleFiles(spark, inputDir))
+  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, files, p, out)
   // in job-name order, which is the report's row order
   lazy val binderDirs: Seq[String] = jobs.map(_.job_dir)
-  lazy val atoms: DataFrame =
-    CifParser.readAtomsDf(spark, inputDir).filter(col("job_dir").isin(binderDirs: _*))
+  lazy val atoms: DataFrame = CifParser.atomsOf(spark,
+    files.filter(f => binderDirs.contains(f.job)).flatMap(_.models.map(_._2))).toDF()
   lazy val info: DataFrame = jobs.flatMap(j => j.info.map(c => (j.job_dir, c.chain,
     c.residue_length, c.sequence))).toDF("job_dir", "chain", "residue_length", "sequence")
   lazy val interacting: DataFrame =

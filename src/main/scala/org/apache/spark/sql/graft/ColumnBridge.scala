@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionColumnNode}
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark 4's classic Column internals: build a [[Column]] from
   * a Catalyst [[Expression]] and back. Lives inside the org.apache.spark
@@ -26,6 +29,10 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A DataFrame of `schema` over rows in Catalyst's internal form. */
+  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 
   /** A 1-row/1-column DataFrame as an uncorrelated scalar subquery
     * Column: evaluated once, its value becomes a query constant on

@@ -3,12 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.af3.Af3Params
 
@@ -310,36 +305,6 @@ class Af3RunSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_af3run_caches").toFile
     Af3Run.run(spark, fixtureDir, out.getPath, Af3Params())
     assert(spark.sharedState.cacheManager.isEmpty)
-  }
-
-  /** The Spark jobs `body` starts, counted by a listener on its job group.
-    * The listener bus is asynchronous: one more job, posted after the
-    * body's events, marks the point where all of them were delivered.
-    */
-  private def sparkJobs(body: => Unit): Int = {
-    val (group, markerGroup) = ("af3run-jobs", "af3run-jobs-marker")
-    val starts = new AtomicInteger
-    val markerJob = new AtomicInteger(-1)
-    val markerDone = new CountDownLatch(1)
-    def groupOf(e: SparkListenerJobStart) =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e) == group) starts.incrementAndGet()
-        else if (groupOf(e) == markerGroup) markerJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) markerDone.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "Af3Run.run")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(markerGroup, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerDone.await(30, TimeUnit.SECONDS))
-      starts.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("run takes 1 Spark job on the fixture tree and on an af3_screen tree") {

@@ -76,4 +76,40 @@ class Af3IoSpec extends SparkSpec {
     runLog(fixtureDir)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("runLog gives a 0-byte or blank summary, full_data and model file one row each") {
+    val root = Files.createTempDirectory("graft_run_log_empty")
+    for ((job, text) <- Seq("job_empty" -> "", "job_blank" -> " \n\t\n");
+        name <- Seq("summary_confidences_0.json", "full_data_0.json", "model_0.cif"))
+      write(root.resolve(job), s"${job}_$name", text)
+    assert(runLog(root.toString) === Seq(
+      ("job_blank", "job_blank_full_data_0.json", "full_data", "corrupt_json"),
+      ("job_blank", "job_blank_model_0.cif", "cif", "no_atoms"),
+      ("job_blank", "job_blank_summary_confidences_0.json", "summary", "corrupt_json"),
+      ("job_empty", "job_empty_full_data_0.json", "full_data", "corrupt_json"),
+      ("job_empty", "job_empty_model_0.cif", "cif", "no_atoms"),
+      ("job_empty", "job_empty_summary_confidences_0.json", "summary", "corrupt_json")))
+  }
+
+  test("runLog gives a file holding a top-level array of records one row") {
+    val root = Files.createTempDirectory("graft_run_log_array")
+    val job = root.resolve("job_array")
+    val summary = """{"iptm": 0.9, "ptm": 0.8, "chain_pair_pae_min": [[0.5, 3.0], [3.1, 0.6]]}"""
+    write(job, "job_array_summary_confidences_0.json", s"[$summary, $summary]")
+    // one record without pae: the file still holds one with both keys
+    write(job, "job_array_full_data_0.json",
+      """[{"token_res_ids": [1]}, {"pae": [[1.0]], "token_res_ids": [1]}]""")
+    assert(runLog(root.toString) === Seq(
+      ("job_array", "job_array_full_data_0.json", "full_data", "parsed"),
+      ("job_array", "job_array_summary_confidences_0.json", "summary", "parsed")))
+    // the readers keep one row per record
+    assert(Af3Io.readSummaries(spark, root.toString).count() === 2L)
+    assert(Af3Io.readPaeLong(spark, root.toString).count() === 1L)
+  }
+
+  test("runLog takes 1 Spark job on the fixture tree") {
+    var rows = 0
+    assert(sparkJobs { rows = Af3Io.runLog(spark, fixtureDir).collect().length } === 1)
+    assert(rows === 11)
+  }
 }

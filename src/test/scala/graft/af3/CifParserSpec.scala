@@ -196,4 +196,28 @@ class CifParserSpec extends SparkSpec {
     assert(out.map(_.res_id) === List(2))
     assert(out.map(_.ordinal) === List(1))
   }
+
+  test("readAtoms gives the schema and atoms of a binaryFile scan") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    // model files, a `*.cif` that is no model file, a `._` sibling and
+    // a 0-byte model
+    val jobDir = Files.createDirectories(Files.createTempDirectory("graft_cif_scan").resolve("job_x"))
+    val model = Paths.get(fixtureDir, "job_binder", "job_binder_model_0.cif")
+    for (name <- Seq("job_x_model_0.cif", "job_x_model_7.cif", "job_x_other.cif", "._job_x_model_1.cif"))
+      Files.copy(model, jobDir.resolve(name))
+    Files.write(jobDir.resolve("job_x_model_2.cif"), Array.emptyByteArray)
+    for (dir <- Seq(fixtureDir, jobDir.getParent.toString)) {
+      // the reference: Spark's file-index scan of the model bytes
+      val want = spark.read.format("binaryFile")
+        .options(Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "*.cif")).load(dir)
+        .select("path", "content").as[(String, Array[Byte])]
+        .flatMap { case (path, bytes) => CifParser.modelOf(path).iterator.flatMap {
+          case (job, m) => CifParser.parseAtomSite(job, m, CifParser.decodeText(bytes)) } }
+        .toDF()
+      val got = CifParser.readAtomsDf(spark, dir)
+      assert(got.schema === want.schema)
+      assert(got.collect().map(_.toString).sorted.toSeq === want.collect().map(_.toString).sorted.toSeq)
+    }
+  }
 }

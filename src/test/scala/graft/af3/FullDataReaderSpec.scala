@@ -3,20 +3,37 @@ package graft.af3
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{col, input_file_name}
 import org.apache.spark.sql.graft.PaeBlockHitsExpr
 
 import graft.SparkSpec
+import graft.functions.Scalars
 
-/** The in-task `full_data` reader ([[Af3Io.fullDataReader]] +
-  * [[Af3Io.paeMatrices]]) against the scan it stands in for,
-  * [[Af3Io.readPaeLong]]: over an edge corpus, both must keep and drop
-  * the same files and rows and yield every PAE cell with the same bits
-  * (`doubleToRawLongBits`) and the same nulls. The streamed block count
-  * ([[Af3Io.paeHits]]) must give what [[PaeBlockHitsExpr.hits]] gives
-  * over those matrices, for a grid of blocks and cutoffs.
+/** The `full_data` reader ([[Af3Io.fullDataReader]] +
+  * [[Af3Io.paeMatrices]]), which [[Af3Io.readPaeLong]] and a job's task
+  * read with, against Spark's own scan of the files, `readPaeLong` here:
+  * over an edge corpus, both must keep and drop the same files and rows
+  * and yield every PAE cell with the same bits (`doubleToRawLongBits`)
+  * and the same nulls. The streamed block count ([[Af3Io.paeHits]])
+  * must give what [[PaeBlockHitsExpr.hits]] gives over those matrices,
+  * for a grid of blocks and cutoffs.
   */
 class FullDataReaderSpec extends SparkSpec {
+
+  /** The reference: Spark's file-index scan of the `full_data` files
+    * under `tree`, with [[Af3Io]]'s schema and options, keeping the rows
+    * that hold both keys (py:111-113), keyed by the parent directory of
+    * `input_file_name`.
+    */
+  private def readPaeLong(tree: String): DataFrame =
+    spark.read.schema(Af3Io.fullDataSchema)
+      .options(Af3Io.fullDataOptions ++ Map("recursiveFileLookup" -> "true",
+        "pathGlobFilter" -> Af3Io.fullDataGlob))
+      .json(tree)
+      .filter(col("pae").isNotNull && col("token_res_ids").isNotNull)
+      .select(Scalars.parentDirName(input_file_name()).as("job_dir"), col("pae"))
 
   private val row = "[[1.0, 2.5], [3.0, 4.0]]"
 
@@ -86,7 +103,7 @@ class FullDataReaderSpec extends SparkSpec {
     ("utf16" -> s"""{"pae": $row, "token_res_ids": [1, 2]}""".getBytes("UTF-16"))
 
   private def fullDataFiles: Seq[String] =
-    Af3Io.bundleFiles(spark.sparkContext.hadoopConfiguration, tree).fullData
+    Af3Io.bundleFiles(spark, tree).fullData
 
   private lazy val tree: String = {
     val root = Files.createTempDirectory("graft_full_data_corpus")
@@ -115,7 +132,7 @@ class FullDataReaderSpec extends SparkSpec {
     }
 
   private def scan(): Map[String, Seq[Matrix]] =
-    Af3Io.readPaeLong(spark, tree).collect().toSeq
+    readPaeLong(tree).collect().toSeq
       .groupBy(_.getString(0))
       .map { case (job, rows) => job -> rows.map(r => fromScan(r.getSeq[collection.Seq[java.lang.Double]](1))) }
 
@@ -155,7 +172,7 @@ class FullDataReaderSpec extends SparkSpec {
       if (r == null) null else new GenericArrayData(r.map(c => c: Any).toArray)).toArray[Any])
 
   test("streamed PAE hits and cells equal PaeBlockHitsExpr.hits over readPaeLong's matrices") {
-    val scanned = Af3Io.readPaeLong(spark, tree).collect().toSeq.groupBy(_.getString(0))
+    val scanned = readPaeLong(tree).collect().toSeq.groupBy(_.getString(0))
       .map { case (job, rows) =>
         job -> rows.map(r => arrayData(r.getSeq[collection.Seq[java.lang.Double]](1))) }
     val reader = Af3Io.fullDataReader(spark)
@@ -192,5 +209,14 @@ class FullDataReaderSpec extends SparkSpec {
       "no_pae", "no_ids", "ids_null_cell", "ids_huge", "top_array", "two_objects",
       "truncated", "truncated_in_pae", "empty", "latin1_value", "pae_string")
       .subsetOf(fellBack))
+  }
+
+  test("readPaeLong gives the schema and rows of Spark's scan") {
+    val got = Af3Io.readPaeLong(spark, tree)
+    val want = readPaeLong(tree)
+    assert(got.schema === want.schema)
+    // Double.toString tells apart every value but NaN payloads
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    assert(rows(got) === rows(want))
   }
 }

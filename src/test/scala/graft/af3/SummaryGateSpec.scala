@@ -3,15 +3,32 @@ package graft.af3
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.input_file_name
+
 import graft.SparkSpec
+import graft.functions.Scalars
 
 /** The in-task gate ([[Af3Io.summaryReader]] + [[Af3Pipeline.passesGate]]
   * over the summaries [[Af3Jobs.jobFiles]] groups) against the DataFrame
-  * gate it stands in for, `Af3Pipeline.gate(Af3Io.readSummaries(..))`:
-  * over an edge corpus and a grid of parameters, both must pass the same
-  * jobs, and the reader must read every summary as the scan does.
+  * gate over Spark's own scan of the summaries, `Af3Pipeline.gate(
+  * readSummaries(..))`: over an edge corpus and a grid of parameters,
+  * both must pass the same jobs, and the reader, which
+  * [[Af3Io.readSummaries]] reads with, must read every summary as the
+  * scan does.
   */
 class SummaryGateSpec extends SparkSpec {
+
+  /** The reference: Spark's file-index scan of the summaries under
+    * `tree`, with [[Af3Io]]'s schema and options, keyed by the parent
+    * directory of `input_file_name`.
+    */
+  private def readSummaries(tree: String): DataFrame =
+    spark.read.schema(Af3Io.summarySchema)
+      .options(Af3Io.summaryOptions ++ Map("recursiveFileLookup" -> "true",
+        "pathGlobFilter" -> Af3Io.summaryGlob))
+      .json(tree)
+      .withColumn("job_dir", Scalars.parentDirName(input_file_name()))
 
   private val pae = "[[0.5, 3.0], [3.1, 0.6]]"
 
@@ -93,7 +110,7 @@ class SummaryGateSpec extends SparkSpec {
   }
 
   private def jobs: Seq[Af3Jobs.JobFiles] =
-    Af3Jobs.jobFiles(Af3Io.bundleFiles(spark.sparkContext.hadoopConfiguration, tree))
+    Af3Jobs.jobFiles(Af3Io.bundleFiles(spark, tree))
 
   private val params = Seq(
     Af3Params(),
@@ -116,7 +133,7 @@ class SummaryGateSpec extends SparkSpec {
 
   test("the in-task gate passes the jobs Af3Pipeline.gate(readSummaries) passes") {
     val reader = Af3Io.summaryReader(spark)
-    val summaries = Af3Io.readSummaries(spark, tree)
+    val summaries = readSummaries(tree)
     for (p <- params) {
       val want = Af3Pipeline.gate(summaries, p).select("job_dir").collect()
         .map(_.getString(0)).toSet
@@ -147,7 +164,7 @@ class SummaryGateSpec extends SparkSpec {
         })
       },
       r.isNullAt(3))
-    val want = Af3Io.readSummaries(spark, tree).queryExecution.toRdd
+    val want = readSummaries(tree).queryExecution.toRdd
       .map(r => r.getUTF8String(4).toString -> cells(r)).collect().toSeq
       .groupMap(_._1)(_._2).map { case (j, rs) => j -> rs.toSet }
     val reader = Af3Io.summaryReader(spark)
@@ -157,5 +174,14 @@ class SummaryGateSpec extends SparkSpec {
     // an empty or blank file has no row in either reader
     assert(got.keySet === corpus.map(_._1).toSet -- Set("hidden", "_tmp", "other", "empty",
       "blank"))
+  }
+
+  test("readSummaries gives the schema and rows of Spark's scan") {
+    val got = Af3Io.readSummaries(spark, tree)
+    val want = readSummaries(tree)
+    assert(got.schema === want.schema)
+    // Double.toString tells apart every value but NaN payloads
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    assert(rows(got) === rows(want))
   }
 }

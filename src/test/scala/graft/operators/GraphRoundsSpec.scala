@@ -1,9 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
@@ -369,39 +365,10 @@ class GraphRoundsSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
-  /** Spark jobs started by `run`, counted in a job group. */
-  private def jobs(run: () => Unit): Int = {
-    val (group, markerGroup) = ("graph-rounds-jobs", "graph-rounds-marker")
-    val starts = new AtomicInteger
-    val markerJob = new AtomicInteger(-1)
-    val markerDone = new CountDownLatch(1)
-    def groupOf(e: SparkListenerJobStart) =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e) == group) starts.incrementAndGet()
-        else if (groupOf(e) == markerGroup) markerJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) markerDone.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "graph rounds")
-      try run() finally sc.clearJobGroup()
-      // the listener bus is asynchronous: one more job, posted after the
-      // operator's events, marks the point where all of them were delivered
-      sc.setJobGroup(markerGroup, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerDone.await(30, TimeUnit.SECONDS))
-      starts.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("no operator runs more Spark jobs than its reference") {
     cases(1L, 5).foreach { case (name, got, ref) =>
-      val r = jobs(() => { ref().collect(); () })
-      val g = jobs(() => { got().collect(); () })
+      val r = sparkJobs(ref().collect())
+      val g = sparkJobs(got().collect())
       info(s"$name: $g jobs (reference $r)")
       assert(g <= r, s"$name: $g jobs, reference $r")
     }

@@ -1,9 +1,5 @@
 package graft.similarity
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -242,34 +238,10 @@ class PcaKernelSpec extends SparkSpec {
   }
 
   test("sim_pca_power runs at most 5 Spark jobs on sf0.001") {
-    val (group, markerGroup) = ("pca-kernel-jobs", "pca-kernel-marker")
-    val starts = new AtomicInteger
-    val markerJob = new AtomicInteger(-1)
-    val markerDone = new CountDownLatch(1)
-    def groupOf(e: SparkListenerJobStart) =
-      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (groupOf(e) == group) starts.incrementAndGet()
-        else if (groupOf(e) == markerGroup) markerJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) markerDone.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val q = graft.SparkEntry.queries("sim_pca_power")
-      sc.setJobGroup(group, "sim_pca_power")
-      val rows = try q(spark, sfDir).collect()
-        finally sc.clearJobGroup()
-      assert(rows.length === 10)
-      // the listener bus is asynchronous: one more job, posted after the
-      // query's events, marks the point where all of them were delivered
-      sc.setJobGroup(markerGroup, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerDone.await(30, TimeUnit.SECONDS))
-      info(s"${starts.get} jobs")
-      assert(starts.get >= 1 && starts.get <= 5, s"${starts.get} jobs")
-    } finally sc.removeSparkListener(listener)
+    var rows = Array.empty[Row]
+    val jobs = sparkJobs { rows = graft.SparkEntry.queries("sim_pca_power")(spark, sfDir).collect() }
+    assert(rows.length === 10)
+    info(s"$jobs jobs")
+    assert(jobs >= 1 && jobs <= 5, s"$jobs jobs")
   }
 }
