@@ -11,15 +11,13 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graft.{ColumnBridge, FileIndexRules, JsonFileReader, PaeBlockHitsExpr}
+import org.apache.spark.sql.graft.{ColumnBridge, FileIndexRules, JsonFileReader}
 import org.apache.spark.sql.sources.IsNotNull
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
-
-import graft.functions.Scalars
 
 /** AF3 bundle readers — explicit schemas, never inferred (SURVEY §1.2).
   * Every frame carries `job_dir` (parent folder name), the unit of work:
@@ -97,7 +95,17 @@ object Af3Io {
     sc.parallelize(files, math.max(1, math.min(files.size, sc.defaultParallelism)))
   }
 
-  private def jobDir(url: String): UTF8String = UTF8String.fromString(Scalars.parentDirName(url))
+  /** (job, file name) of the file at `url`, a URL-encoded path, decoded
+    * once: the names of its parent directory and of the file, the
+    * reference's `os.path.basename(os.path.dirname(p))` and
+    * `os.path.basename(p)` (py:115, 348-349, 522-523).
+    */
+  private[af3] def jobAndFile(url: String): (String, String) = {
+    val path = SparkPath.fromUrlString(url).toPath
+    (path.getParent.getName, path.getName)
+  }
+
+  private def jobDir(url: String): UTF8String = UTF8String.fromString(jobAndFile(url)._1)
 
   /** The reader of one summary file: Spark's JSON parser with
     * [[summaryOptions]] and the full [[summarySchema]], `_corrupt`
@@ -123,8 +131,63 @@ object Af3Io {
   private[af3] def paeMatrices(rows: Iterator[InternalRow]): Seq[ArrayData] =
     rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(_.getArray(0)).toSeq
 
+  /** The POI x partner block count of one job's PAE matrix (the
+    * reference's threshold count, py:185-224): for each partner column j
+    * in `[startPartner, endPartner)`, count the POI rows i in
+    * `[startPoi, endPoi)` with `pae[i][j] < cutoff`, and return the
+    * 1-based partner residue numbers `j - startPartner + 1` whose count
+    * is `>= minHits`, ascending. The matrix is read in place (row views,
+    * primitive `getDouble`), in two primitive loops over the POI rows,
+    * one to size the column counters, one to count. Cells that do not
+    * exist (ranges past the matrix, ragged rows, null rows) and null
+    * cells never count, as in the long form (every cell a row, then
+    * filter and count per column); NaN fails `<` as it does in Spark. A
+    * column counts only once it has a hit, so `minHits <= 0` still emits
+    * only columns with at least one cell under the cutoff, as the long
+    * form's groupBy did.
+    */
+  private[af3] def paeBlockHits(pae: ArrayData, startPoi: Long, endPoi: Long, startPartner: Long,
+      endPartner: Long, cutoff: Double, minHits: Int): ArrayData = {
+    val rows = pae.numElements().toLong
+    val iLo = math.min(math.max(startPoi, 0L), rows).toInt
+    val iHi = math.min(endPoi, rows).toInt
+    val jLo = math.max(startPartner, 0L)
+    var width = 0
+    var i = iLo
+    while (i < iHi) {
+      if (!pae.isNullAt(i))
+        width = math.max(width,
+          (math.min(endPartner, pae.getArray(i).numElements().toLong) - jLo).toInt)
+      i += 1
+    }
+    val counts = new Array[Int](width)
+    i = iLo
+    while (i < iHi) {
+      if (!pae.isNullAt(i)) {
+        val row = pae.getArray(i)
+        val n = (math.min(endPartner, row.numElements().toLong) - jLo).toInt
+        val base = jLo.toInt
+        var k = 0
+        while (k < n) {
+          if (!row.isNullAt(base + k) && row.getDouble(base + k) < cutoff) counts(k) += 1
+          k += 1
+        }
+      }
+      i += 1
+    }
+    val need = math.max(minHits, 1)
+    val res = new Array[Int](counts.count(_ >= need))
+    var k = 0
+    var r = 0
+    while (k < width) {
+      if (counts(k) >= need) { res(r) = (jLo + k - startPartner + 1).toInt; r += 1 }
+      k += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(res)
+  }
+
   /** One `full_data` file's partner hits for a PAE block, as
-    * [[PaeBlockHitsExpr.hits]] over its [[paeMatrices]] gives them, the
+    * [[paeBlockHits]] over its [[paeMatrices]] gives them, the
     * count of cells in those matrices' non-null rows, and whether the
     * token stream ([[streamPaeHits]]) served them or the file fell back
     * to the whole parse.
@@ -143,7 +206,7 @@ object Af3Io {
       if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum
     streamPaeHits(reader, url, block, cutoff, minHits).getOrElse {
       val ms = paeMatrices(reader.read(url))
-      PaeHits(ms.flatMap(m => PaeBlockHitsExpr.hits(m, a, b, c, d, cutoff, minHits).toIntArray())
+      PaeHits(ms.flatMap(m => paeBlockHits(m, a, b, c, d, cutoff, minHits).toIntArray())
         .toArray, ms.map(cells).sum, streamed = false)
     }
   }
@@ -220,7 +283,7 @@ object Af3Io {
       // a null pae drops the file, as readPaeLong's not-null filter does
       else if (paeNull) Some(PaeHits(Array.emptyIntArray, 0L, streamed = true))
       else {
-        // PaeBlockHitsExpr.hits' rule: a column counts once it has
+        // paeBlockHits' rule: a column counts once it has
         // max(minHits, 1) hits, numbered from 1 at start_partner
         val need = math.max(minHits, 1)
         Some(PaeHits(counts.indices.filter(counts(_) >= need)
@@ -274,7 +337,7 @@ object Af3Io {
     // (job_dir, file, kind, url); the `._` files are never opened
     val listed = Seq("summary" -> files.summaries, "full_data" -> files.fullData,
       "cif" -> files.models).flatMap { case (kind, urls) =>
-        urls.map(u => (Scalars.parentDirName(u), u.substring(u.lastIndexOf('/') + 1), kind, u))
+        urls.map { u => val (job, file) = jobAndFile(u); (job, file, kind, u) }
       } ++ files.appleDouble.map(p => (p.getParent.getName, p.getName, "hidden", ""))
     val summaries = summaryReader(spark)
     val fullData = JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil)

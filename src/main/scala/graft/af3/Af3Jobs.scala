@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.JsonFileReader
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.functions.Scalars
-
 /** One chain of a job's model 0 (agg_chain_info, py:152-176). */
 final case class ChainRow(chain: String, residue_length: Long, sequence: String)
 
@@ -41,8 +39,9 @@ object Af3Jobs {
   private[af3] def jobFiles(files: Af3Io.BundleFiles): Seq[JobFiles] = {
     val models = files.models.flatMap(u => CifParser.modelOf(u).map { case (j, m) => j -> (m, u) })
       .groupMap(_._1)(_._2)
-    val fullData = files.fullData.groupBy(Scalars.parentDirName)
-    files.summaries.groupBy(Scalars.parentDirName).toSeq.sortBy(_._1).map { case (j, s) =>
+    def job(url: String) = Af3Io.jobAndFile(url)._1
+    val fullData = files.fullData.groupBy(job)
+    files.summaries.groupBy(job).toSeq.sortBy(_._1).map { case (j, s) =>
       JobFiles(j, s.sorted, models.getOrElse(j, Nil).sorted, fullData.getOrElse(j, Nil).sorted)
     }
   }

@@ -203,13 +203,14 @@ object CifParser {
     out.iterator
   }
 
-  private val pathRe = ".*/([^/]+)/[^/]+_model_(\\d+)\\.cif$".r
+  private val modelName = ".+_model_(\\d+)\\.cif".r
 
-  /** (job_dir, model_idx) of a `*.cif` path [[readAtoms]] reads, or
-    * `None` for a name that is no model file.
+  /** (job_dir, model_idx) of a `*.cif` file [[readAtoms]] reads, at
+    * `url` (a URL-encoded path), or `None` for a name that is no model
+    * file.
     */
-  private[af3] def modelOf(path: String): Option[(String, Int)] = path match {
-    case pathRe(job, m) => Some((job, m.toInt))
+  private[af3] def modelOf(url: String): Option[(String, Int)] = Af3Io.jobAndFile(url) match {
+    case (job, modelName(m)) => Some((job, m.toInt))
     case _ => None
   }
 

@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 
 import graft.operators.SpatialJoin
-import graft.functions.{Scalars, VectorExpressions}
+import graft.functions.Scalars
 
 /** Analysis parameters — the reference CLI's 8 knobs with its defaults
   * (process_af3_outputs.py:581-592).
@@ -173,9 +174,12 @@ object Af3Pipeline {
     * tokens j with `count_{i in POI}(pae[i][j] < cutoff) >= min_residues`,
     * rebased to 1-based partner residue numbers. `paePerJob` is
     * [[Af3Io.readPaeLong]]'s one row per job; each job's [[paeBlock]] is
-    * broadcast-joined onto it and [[VectorExpressions.paeBlockHits]]
-    * counts the block in place. Out-of-bounds ranges, ragged rows and
-    * missing cells count nothing (≙ py's empty returns at 209-211).
+    * broadcast-joined onto it and [[Af3Io.paeBlockHits]] counts the block
+    * in place, over the join's internal rows. Out-of-bounds ranges,
+    * ragged rows and missing cells count nothing (≙ py's empty returns at
+    * 209-211). The count runs when this is called, as one action on the
+    * join, so an `observe` on `paePerJob` completes; the result is a
+    * local frame.
     */
   def interactingResidues(paePerJob: DataFrame, chainInfoDf: DataFrame, p: Af3Params): DataFrame = {
     import paePerJob.sparkSession.implicits._
@@ -185,11 +189,17 @@ object Af3Pipeline {
       .flatMapGroups((job, rows) => paeBlock(rows.map(r => (r._2, r._3)).toSeq, p)
         .map { case (a, b, c, d) => (job, a, b, c, d) })
       .toDF("job_dir", "start_poi", "end_poi", "start_partner", "end_partner")
-    paePerJob
-      .join(broadcast(off), Seq("job_dir"))
-      .select(col("job_dir"), explode(VectorExpressions.paeBlockHits(col("pae"),
-        col("start_poi"), col("end_poi"), col("start_partner"), col("end_partner"),
-        lit(p.maxPaeCutoff), lit(p.minResidues))).as("partner_res"))
+    val blocks = paePerJob.join(broadcast(off), Seq("job_dir"))
+      .select("job_dir", "pae", "start_poi", "end_poi", "start_partner", "end_partner")
+    val (cutoff, minHits) = (p.maxPaeCutoff, p.minResidues)
+    ColumnBridge.collectInternal(blocks) { r =>
+      if (r.isNullAt(1)) Nil
+      else {
+        val job = r.getUTF8String(0).toString
+        Af3Io.paeBlockHits(r.getArray(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
+          cutoff, minHits).toIntArray().map(job -> _)
+      }
+    }.toSeq.toDF("job_dir", "partner_res")
   }
 
   /** One job's POI and partner token ranges `(start_poi, end_poi,

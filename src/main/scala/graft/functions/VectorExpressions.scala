@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.{ColumnBridge, DotProductExpr, GraftDist3Expr, LongDotProductExpr, PaeBlockHitsExpr, PolyHashExpr, SortedIntersectSizeExpr, ZOrder2Expr}
+import org.apache.spark.sql.graft.{ColumnBridge, DotProductExpr, GraftDist3Expr, LongDotProductExpr, PolyHashExpr, SortedIntersectSizeExpr, ZOrder2Expr}
 
 /** Column-level entry points for the native vector expressions
   * (implemented in org.apache.spark.sql.graft — they need the
@@ -35,13 +35,4 @@ object VectorExpressions {
       bx: Column, by: Column, bz: Column): Column =
     ColumnBridge.column(GraftDist3Expr(
       Seq(ax, ay, az, bx, by, bz).map(ColumnBridge.expression)))
-
-  /** Partner residues (1-based) with `>= minHits` POI rows under `cutoff`
-    * in one job's PAE matrix (see PaeBlockHitsExpr for the edge rules).
-    */
-  def paeBlockHits(pae: Column, startPoi: Column, endPoi: Column, startPartner: Column,
-      endPartner: Column, cutoff: Column, minHits: Column): Column =
-    ColumnBridge.column(PaeBlockHitsExpr(
-      Seq(pae, startPoi, endPoi, startPartner, endPartner, cutoff, minHits)
-        .map(ColumnBridge.expression)))
 }

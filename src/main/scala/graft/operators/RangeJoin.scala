@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** 1-D interval-containment join (point-in-range) — the time-axis
@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object RangeJoin {
 
-  private def bucketOf(c: org.apache.spark.sql.Column, w: Long) =
+  /** The bucket of `c` at width `w`, as the bucketed joins here and
+    * [[graft.plans.RangeJoinRewrite]]'s key both sides.
+    */
+  private[graft] def bucketOf(c: Column, w: Double): Column =
     floor(c.cast("double") / w).cast("long")
 
   /** Join `points` (a `pointCol` value per row) to `intervals`
@@ -41,17 +44,18 @@ object RangeJoin {
       keys: Seq[String],
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
+    val w = bucketWidth.toDouble
     val clash = intervals.columns.toSet
       .intersect(points.columns.toSet) -- keys
     val iv0 = clash.foldLeft(intervals)((d, c) => d.withColumnRenamed(c, "i_" + c))
     def iCol(name: String) = col(if (clash(name)) "i_" + name else name)
-    val p = points.withColumn("__bkt", bucketOf(col(pointCol), bucketWidth))
+    val p = points.withColumn("__bkt", bucketOf(col(pointCol), w))
     // a malformed hi < lo interval can never contain a point, but its
     // DESCENDING bucket sequence would still explode (Spark auto-steps
     // -1) into spurious candidates — drop empty intervals pre-fan-out
     val iv = iv0.filter(iCol(loCol) <= iCol(hiCol)).withColumn("__bkt",
-      explode(sequence(bucketOf(iCol(loCol), bucketWidth),
-        bucketOf(iCol(hiCol), bucketWidth))))
+      explode(sequence(bucketOf(iCol(loCol), w),
+        bucketOf(iCol(hiCol), w))))
     p.join(iv, keys :+ "__bkt")
       .filter(col(pointCol) >= iCol(loCol) && col(pointCol) < iCol(hiCol))
       .drop("__bkt")
@@ -77,19 +81,20 @@ object RangeJoin {
       keys: Seq[String],
       bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
+    val w = bucketWidth.toDouble
     val clash = right.columns.toSet.intersect(left.columns.toSet) -- keys
     val r0 = clash.foldLeft(right)((d, c) => d.withColumnRenamed(c, "r_" + c))
     def rCol(name: String) = col(if (clash(name)) "r_" + name else name)
     val l = left.filter(col(lLoCol) <= col(lHiCol)).withColumn("__bkt",
-      explode(sequence(bucketOf(col(lLoCol), bucketWidth),
-        bucketOf(col(lHiCol), bucketWidth))))
+      explode(sequence(bucketOf(col(lLoCol), w),
+        bucketOf(col(lHiCol), w))))
     val r = r0.filter(rCol(rLoCol) <= rCol(rHiCol)).withColumn("__bkt",
-      explode(sequence(bucketOf(rCol(rLoCol), bucketWidth),
-        bucketOf(rCol(rHiCol), bucketWidth))))
+      explode(sequence(bucketOf(rCol(rLoCol), w),
+        bucketOf(rCol(rHiCol), w))))
     l.join(r, keys :+ "__bkt")
       .filter(col(lLoCol) <= rCol(rHiCol) && rCol(rLoCol) <= col(lHiCol))
       .filter(col("__bkt") ===
-        bucketOf(greatest(col(lLoCol), rCol(rLoCol)), bucketWidth))
+        bucketOf(greatest(col(lLoCol), rCol(rLoCol)), w))
       .drop("__bkt")
   }
 }

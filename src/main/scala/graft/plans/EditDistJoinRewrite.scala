@@ -1,12 +1,8 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, SHUFFLE_MERGE}
 import org.apache.spark.sql.functions.{array, array_distinct, array_intersect, array_min, col, concat, explode, length, lit, sequence, transform, when, xxhash64}
 import org.apache.spark.sql.graft.ColumnBridge
 
@@ -37,9 +33,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * for long texts the emission is large in absolute terms but still
   * dominates the O(n²·L²) nested loop it replaces asymptotically.
   *
-  * Injected via [[graft.GraftExtensions]]; kill switch
-  * `spark.graft.editDistJoinRewrite.enabled=false`. Any unexpected shape
-  * falls back to the untouched join with a logged warning.
+  * The pair join is planned SHUFFLE_MERGE; a hinted join is rewritten
+  * too, and the user's hint replaces that default.
   *
   * CAUTION for hand-blocked callers: a query that ALREADY does its own
   * FastSS blocking and then re-verifies with the plain two-argument
@@ -50,30 +45,20 @@ import org.apache.spark.sql.graft.ColumnBridge
   * use the thresholded form — `levenshtein(a, b, k) >= 0` — which this
   * rule deliberately never matches.
   */
-class EditDistJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
+class EditDistJoinRewrite(session: SparkSession)
+    extends JoinRewrite(session, "spark.graft.editDistJoinRewrite.enabled") {
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case x => Seq(x)
-  }
-
-  private def litInt(e: Expression): Option[Int] = e match {
-    case f if f.foldable =>
-      f.eval(null) match {
-        case i: java.lang.Integer => Some(i.intValue())
-        case l: java.lang.Long if l.longValue().isValidInt => Some(l.intValue())
-        case s: java.lang.Short => Some(s.intValue())
-        case b: java.lang.Byte => Some(b.intValue())
-        case _ => None
-      }
-    case _ => None
+  private def litInt(e: Expression): Option[Int] = literal(e) {
+    case n @ (_: java.lang.Integer | _: java.lang.Short | _: java.lang.Byte) =>
+      n.asInstanceOf[Number].intValue()
+    case l: java.lang.Long if l.longValue().isValidInt => l.intValue()
   }
 
   /** If `conj` bounds an un-thresholded levenshtein above by k ∈ {0,1},
     * return (left-side string expr, right-side string expr, k, the
     * matched levenshtein) oriented to the join's children.
     */
-  private def matchEd(conj: Expression, left: LogicalPlan, right: LogicalPlan)
+  private def matchEd(conj: Expression, join: Join)
       : Option[(Expression, Expression, Int, Levenshtein)] = {
     val bound = conj match {
       case LessThanOrEqual(l: Levenshtein, e) if l.threshold.isEmpty =>
@@ -90,18 +75,10 @@ class EditDistJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     }
     bound.filter { case (_, k) => k == 0 || k == 1 }.flatMap { case (l, k) =>
       val (a, b) = (l.left, l.right)
-      if (!a.deterministic || !b.deterministic) None
-      else {
-        val aRefs = a.references
-        val bRefs = b.references
-        if (aRefs.nonEmpty && bRefs.nonEmpty &&
-            aRefs.subsetOf(left.outputSet) && bRefs.subsetOf(right.outputSet))
-          Some((a, b, k, l))
-        else if (aRefs.nonEmpty && bRefs.nonEmpty &&
-            aRefs.subsetOf(right.outputSet) && bRefs.subsetOf(left.outputSet))
-          Some((b, a, k, l))
-        else None
-      }
+      if (!a.deterministic || !b.deterministic ||
+          a.references.isEmpty || b.references.isEmpty) None
+      else orient(Seq(a), Seq(b), join).map(aIsLeft =>
+        if (aIsLeft) (a, b, k, l) else (b, a, k, l))
     }
   }
 
@@ -138,92 +115,39 @@ class EditDistJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       v => xxhash64(v)))
   }
 
-  private def rewrite(
-      join: Join,
-      aE: Expression,
-      bE: Expression,
-      k: Int,
-      matched: Expression,
-      lev: Levenshtein,
-      allConjuncts: Seq[Expression]): LogicalPlan = {
-    val lDf = ColumnBridge.ofRows(session, join.left)
-    val rDf = ColumnBridge.ofRows(session, join.right)
-    val lK = lDf.withColumn("__graft_lks", keyCol(aE, k))
-      .withColumn("__graft_lk", explode(col("__graft_lks")))
-    val rK = rDf.withColumn("__graft_rks", keyCol(bE, k))
-      .withColumn("__graft_rk", explode(col("__graft_rks")))
-    // the matched conjunct re-verifies through the banded thresholded
-    // levenshtein (returns -1 above the band — and cannot re-match this
-    // rule); everything else rides along verbatim
-    val residual = allConjuncts.map { c =>
-      if (c eq matched)
-        GreaterThanOrEqual(
-          Levenshtein(lev.left, lev.right, Some(Literal(k))), Literal(0))
-      else c
-    }.reduce[Expression](And)
-    val dedupGate = lK("__graft_lk") ===
-      array_min(array_intersect(col("__graft_lks"), col("__graft_rks")))
-    val out = lK.join(rK, lK("__graft_lk") === rK("__graft_rk"), "inner")
-      .filter(dedupGate && ColumnBridge.column(residual))
-      .select(join.output.map(ColumnBridge.column): _*)
-    // r12: the variant join must never BROADCAST — Spark's size estimate
-    // of an exploded side stays at the scan's bytes, so it auto-built a
-    // hash relation ~|s|x the input table that grows with the corpus
-    // (sf1: 28.5M rows with array payloads — memory-thrash laps of
-    // 8-89 s, and past ~10x it crosses the 8 GB / 512M-row broadcast
-    // cap outright). SHUFFLE_MERGE is the graceful-spill strategy the
-    // r11 SHUFFLE_HASH negative already established; a since-deleted
-    // probe's round-robin minima at sf1: merge 7.8 s (worst lap 17 s) vs
-    // broadcast 7.7 s (worst lap 44 s). The hint goes on the Join node
-    // DIRECTLY (a Dataset .hint() here would leave a ResolvedHint the
-    // already-finished hint-elimination batch never merges — planner
-    // INTERNAL_ERROR); the user's own hint, if any, still wins below.
-    reapplyHint(applyMergeHint(out.queryExecution.analyzed), join.hint)
-  }
-
-  /** Set SHUFFLE_MERGE on the first (topmost) Join under unary nodes —
-    * the pair join this rule just built — leaving any nested joins from
-    * the original children untouched.
-    */
-  private def applyMergeHint(plan: LogicalPlan): LogicalPlan = plan match {
-    case j: Join if j.hint == JoinHint.NONE =>
-      j.copy(hint = JoinHint(None,
-        Some(org.apache.spark.sql.catalyst.plans.logical.HintInfo(
-          strategy = Some(org.apache.spark.sql.catalyst.plans.logical.SHUFFLE_MERGE)))))
-    case u if u.children.size == 1 =>
-      u.withNewChildren(Seq(applyMergeHint(u.children.head)))
-    case other => other
-  }
-
-  private def reapplyHint(plan: LogicalPlan, hint: JoinHint): LogicalPlan =
-    if (hint == JoinHint.NONE) plan
-    else plan match {
-      case j: Join => j.copy(hint = hint)
-      case u if u.children.size == 1 =>
-        u.withNewChildren(Seq(reapplyHint(u.children.head, hint)))
-      case other => other
-    }
-
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.editDistJoinRewrite.enabled", "true") == "true"
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
-      case j @ Join(left, right, jt, Some(cond), _) if jt == Inner || jt == Cross =>
-        val cs = conjuncts(cond)
-        cs.iterator
-          .map(c => (c, matchEd(c, left, right)))
-          .collectFirst { case (c, Some(m)) => (c, m) } match {
-          case Some((c, (aE, bE, k, lev))) =>
-            try rewrite(j, aE, bE, k, c, lev, cs)
-            catch {
-              case NonFatal(e) =>
-                logWarning(s"edit-distance join rewrite failed, keeping nested-loop join: $e")
-                j
-            }
-          case None => j
-        }
-    }
+  override protected def rewrite(join: Join, conjuncts: Seq[Expression]): Option[LogicalPlan] =
+    conjuncts.iterator.map(c => (c, matchEd(c, join)))
+      .collectFirst { case (c, Some(m)) => (c, m) }
+      .map { case (matched, (aE, bE, k, lev)) =>
+        val lK = frame(join.left).withColumn("__graft_lks", keyCol(aE, k))
+          .withColumn("__graft_lk", explode(col("__graft_lks")))
+        val rK = frame(join.right).withColumn("__graft_rks", keyCol(bE, k))
+          .withColumn("__graft_rk", explode(col("__graft_rks")))
+        // the matched conjunct re-verifies through the banded thresholded
+        // levenshtein (returns -1 above the band — and cannot re-match
+        // this rule); everything else rides along verbatim
+        val residual = conjuncts.map { c =>
+          if (c eq matched)
+            GreaterThanOrEqual(
+              Levenshtein(lev.left, lev.right, Some(Literal(k))), Literal(0))
+          else c
+        }.reduce[Expression](And)
+        val dedupGate = lK("__graft_lk") ===
+          array_min(array_intersect(col("__graft_lks"), col("__graft_rks")))
+        val out = lK.join(rK, lK("__graft_lk") === rK("__graft_rk"), "inner")
+          .filter(dedupGate && ColumnBridge.column(residual))
+          .select(join.output.map(ColumnBridge.column): _*)
+        // r12: the variant join must never BROADCAST — Spark's size
+        // estimate of an exploded side stays at the scan's bytes, so it
+        // auto-built a hash relation ~|s|x the input table that grows with
+        // the corpus (sf1: 28.5M rows with array payloads — memory-thrash
+        // laps of 8-89 s, and past ~10x it crosses the 8 GB / 512M-row
+        // broadcast cap outright). SHUFFLE_MERGE is the graceful-spill
+        // strategy the r11 SHUFFLE_HASH negative already established; a
+        // since-deleted probe's round-robin minima at sf1: merge 7.8 s
+        // (worst lap 17 s) vs broadcast 7.7 s (worst lap 44 s).
+        onTopJoin(out.queryExecution.analyzed)(_.copy(hint =
+          if (join.hint != JoinHint.NONE) join.hint
+          else JoinHint(None, Some(HintInfo(strategy = Some(SHUFFLE_MERGE))))))
+      }
 }

@@ -1,14 +1,11 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 import org.apache.spark.sql.functions.{col, explode, lit, sequence}
 import org.apache.spark.sql.graft.{ColumnBridge, GraftDist3Expr}
+import org.apache.spark.sql.types.Decimal
 
 /** Automatic ε-join recognition (SURVEY §7 item 4, the deferred piece of
   * the spatial-join story): an inner join whose condition bounds
@@ -30,45 +27,24 @@ import org.apache.spark.sql.graft.{ColumnBridge, GraftDist3Expr}
   * far above double rounding error) so the containment argument holds
   * for computed arithmetic too, not just exact reals — without it an
   * adversarial pair with |dx| within an ulp of ε could straddle two cell
-  * boundaries and silently vanish.
-  *
-  * Injected via [[graft.GraftExtensions]] as an operator-optimization
-  * rule (one instance per session — plan surgery analyzes the
-  * replacement subtree under the owning session, not whatever session is
-  * thread-active); the replacement subtree is built with the DataFrame
-  * API over the child plans (attribute ids preserved, so the rewritten
-  * join exposes the original output schema bit-for-bit; the original
-  * join's hint is re-applied). Any unexpected shape falls back to the
-  * untouched join — with a logged warning, so a silent O(n²) degrade is
-  * observable.
+  * boundaries and silently vanish. A hinted join is rewritten too, and
+  * its hint re-applied to the cell join.
   */
-class EpsJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
+class EpsJoinRewrite(session: SparkSession)
+    extends JoinRewrite(session, "spark.graft.epsJoinRewrite.enabled") {
   import EpsJoinRewrite._
 
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case x => Seq(x)
-  }
-
-  private def litDouble(e: Expression): Option[Double] = e match {
-    case f if f.foldable =>
-      f.eval(null) match {
-        case d: java.lang.Double => Some(d.doubleValue())
-        case f2: java.lang.Float => Some(f2.doubleValue())
-        case i: java.lang.Integer => Some(i.doubleValue())
-        case l: java.lang.Long => Some(l.doubleValue())
-        case d: java.math.BigDecimal => Some(d.doubleValue())
-        case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-        case _ => None
-      }
-    case _ => None
+  private def litDouble(e: Expression): Option[Double] = literal(e) {
+    case n @ (_: java.lang.Double | _: java.lang.Float | _: java.lang.Integer |
+        _: java.lang.Long | _: java.math.BigDecimal) => n.asInstanceOf[Number].doubleValue()
+    case d: Decimal => d.toDouble
   }
 
   /** If `conj` bounds a graft_dist3 above by a positive constant, return
     * (left-side coords, right-side coords, eps) oriented to the join's
     * children.
     */
-  private def matchEps(conj: Expression, left: LogicalPlan, right: LogicalPlan)
+  private def matchEps(conj: Expression, join: Join)
       : Option[(Seq[Expression], Seq[Expression], Double)] = {
     val bound = conj match {
       case LessThan(d: GraftDist3Expr, e) => litDouble(e).map((d, _))
@@ -78,17 +54,9 @@ class EpsJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
     bound.filter(_._2 > 0).flatMap { case (d, eps) =>
-      val a = d.children.take(3)
-      val b = d.children.drop(3)
-      val aRefs = AttributeSet(a.flatMap(_.references))
-      val bRefs = AttributeSet(b.flatMap(_.references))
-      if (aRefs.nonEmpty && bRefs.nonEmpty &&
-          aRefs.subsetOf(left.outputSet) && bRefs.subsetOf(right.outputSet))
-        Some((a, b, eps))
-      else if (aRefs.nonEmpty && bRefs.nonEmpty &&
-          aRefs.subsetOf(right.outputSet) && bRefs.subsetOf(left.outputSet))
-        Some((b, a, eps))
-      else None
+      val (a, b) = d.children.splitAt(3)
+      if (a.forall(_.references.isEmpty) || b.forall(_.references.isEmpty)) None
+      else orient(a, b, join).map(aIsLeft => if (aIsLeft) (a, b, eps) else (b, a, eps))
     }
   }
 
@@ -104,82 +72,34 @@ class EpsJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       org.apache.spark.sql.functions.sqrt(dx * dx + dy * dy + dz * dz))
   }
 
-  private def rewrite(
-      join: Join,
-      aC: Seq[Expression],
-      bC: Seq[Expression],
-      eps: Double,
-      allConjuncts: Seq[Expression]): LogicalPlan = {
-    val lDf = ColumnBridge.ofRows(session, join.left)
-    val rDf = ColumnBridge.ofRows(session, join.right)
-    val cs = graft.operators.SpatialJoin.cellSize(eps)
-    def cell(e: Expression) =
-      graft.operators.SpatialJoin.cellCol(ColumnBridge.column(e), cs)
+  override protected def rewrite(join: Join, conjuncts: Seq[Expression]): Option[LogicalPlan] =
+    conjuncts.iterator.flatMap(matchEps(_, join)).nextOption().map { case (aC, bC, eps) =>
+      val cs = graft.operators.SpatialJoin.cellSize(eps)
+      def cell(e: Expression) =
+        graft.operators.SpatialJoin.cellCol(ColumnBridge.column(e), cs)
 
-    val lC = CellCols.zip(aC).foldLeft(lDf) { case (df, (n, e)) =>
-      df.withColumn(n, cell(e))
-    }
-    val rExp = DeltaCols.foldLeft(rDf) { (df, n) =>
-      df.withColumn(n, explode(sequence(lit(-1L), lit(1L))))
-    }
-    val rC = NbrCols.zip(bC).zip(DeltaCols).foldLeft(rExp) {
-      case (df, ((n, e), dn)) => df.withColumn(n, cell(e) + col(dn))
-    }
-    val cellEq = CellCols.zip(NbrCols)
-      .map { case (cn, nn) => lC(cn) === rC(nn) }
-      .reduce(_ && _)
-    // the full original condition rides along as the residual, with every
-    // graft_dist3 re-expressed in raw arithmetic (bit-identical, and no
-    // longer a match for this rule)
-    val residual = allConjuncts
-      .map(_.transform { case d: GraftDist3Expr => rawDist(d.children) })
-      .reduce[Expression](And)
-    val out = lC.join(rC, cellEq, "inner")
-      .filter(ColumnBridge.column(residual))
-      .select(join.output.map(ColumnBridge.column): _*)
-    reapplyHint(out.queryExecution.analyzed, join.hint)
-  }
-
-  /** Carry the original join's hint onto the rewritten equi-join (the
-    * topmost Join under the rebuilt Project/Filter chain) — a user's
-    * explicit SHUFFLE_HASH/BROADCAST request must survive the rewrite.
-    */
-  private def reapplyHint(plan: LogicalPlan, hint: JoinHint): LogicalPlan =
-    if (hint == JoinHint.NONE) plan
-    else plan match {
-      case j: Join => j.copy(hint = hint)
-      case u if u.children.size == 1 =>
-        u.withNewChildren(Seq(reapplyHint(u.children.head, hint)))
-      case other => other
-    }
-
-  /** Runtime kill switch (`SET spark.graft.epsJoinRewrite.enabled=false`)
-    * — standard hygiene for an injected rewrite: any production surprise
-    * can be disabled per-session without a redeploy.
-    */
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.epsJoinRewrite.enabled", "true") == "true"
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
-      case j @ Join(left, right, jt, Some(cond), _) if jt == Inner || jt == Cross =>
-        val cs = conjuncts(cond)
-        cs.iterator
-          .flatMap(c => matchEps(c, left, right))
-          .nextOption() match {
-          case Some((aC, bC, eps)) =>
-            try rewrite(j, aC, bC, eps, cs)
-            catch {
-              case NonFatal(e) =>
-                // fall back to the untouched theta join, but LOUDLY: a
-                // silent fallback is an O(n²) cliff only visible in plans
-                logWarning(s"eps-join rewrite failed, keeping nested-loop join: $e")
-                j
-            }
-          case None => j
-        }
+      val lC = CellCols.zip(aC).foldLeft(frame(join.left)) { case (df, (n, e)) =>
+        df.withColumn(n, cell(e))
+      }
+      val rExp = DeltaCols.foldLeft(frame(join.right)) { (df, n) =>
+        df.withColumn(n, explode(sequence(lit(-1L), lit(1L))))
+      }
+      val rC = NbrCols.zip(bC).zip(DeltaCols).foldLeft(rExp) {
+        case (df, ((n, e), dn)) => df.withColumn(n, cell(e) + col(dn))
+      }
+      val cellEq = CellCols.zip(NbrCols)
+        .map { case (cn, nn) => lC(cn) === rC(nn) }
+        .reduce(_ && _)
+      // the full original condition rides along as the residual, with
+      // every graft_dist3 re-expressed in raw arithmetic (bit-identical,
+      // and no longer a match for this rule)
+      val residual = conjuncts
+        .map(_.transform { case d: GraftDist3Expr => rawDist(d.children) })
+        .reduce[Expression](And)
+      val out = lC.join(rC, cellEq, "inner")
+        .filter(ColumnBridge.column(residual))
+        .select(join.output.map(ColumnBridge.column): _*)
+      onTopJoin(out.queryExecution.analyzed)(_.copy(hint = join.hint))
     }
 }
 

@@ -1,17 +1,16 @@
 package graft.plans
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions.{col, explode, floor, greatest, lit, sequence}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LogicalPlan}
+import org.apache.spark.sql.functions.{col, explode, greatest, isnan, lit, sequence}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{BooleanType, DataType, NumericType}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, FloatType, NumericType}
+
+import graft.operators.RangeJoin.bucketOf
 
 /** Automatic 1-D range-join recognition — the time-axis sibling of
   * [[EpsJoinRewrite]]. Two patterns are recognized on inner joins:
@@ -76,13 +75,9 @@ import org.apache.spark.sql.types.{BooleanType, DataType, NumericType}
   * propagation cannot erase them). Joins carrying an explicit user hint
   * are left untouched — a hint is the user picking the strategy.
   */
-class RangeJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
+class RangeJoinRewrite(session: SparkSession)
+    extends JoinRewrite(session, "spark.graft.rangeJoinRewrite.enabled") {
   import RangeJoinRewrite._
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(a, b) => conjuncts(a) ++ conjuncts(b)
-    case x => Seq(x)
-  }
 
   /** Lower/upper bounds keyed by the canonicalized point expression:
     * `p >= lo` forms, oriented so the point is on the left.
@@ -119,7 +114,7 @@ class RangeJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * expressions' refs nonempty and in the other child, orientation
     * returned as pointIsLeft.
     */
-  private def matchRange(cs: Seq[Expression], left: LogicalPlan, right: LogicalPlan)
+  private def matchRange(cs: Seq[Expression], join: Join)
       : Option[(Expression, Expression, Expression, Boolean)] = {
     val lowers = cs.flatMap(asLower)
     val uppers = cs.flatMap(asUpper)
@@ -129,17 +124,8 @@ class RangeJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
       if p1.canonicalized == p2.canonicalized
     } yield (p1, lo, hi)
     pairs.iterator.flatMap { case (p, lo, hi) =>
-      if (!numeric(p, lo, hi)) None
-      else {
-        val pR = p.references
-        val bR = AttributeSet(lo.references ++ hi.references)
-        if (pR.isEmpty || lo.references.isEmpty || hi.references.isEmpty) None
-        else if (pR.subsetOf(left.outputSet) && bR.subsetOf(right.outputSet))
-          Some((p, lo, hi, true))
-        else if (pR.subsetOf(right.outputSet) && bR.subsetOf(left.outputSet))
-          Some((p, lo, hi, false))
-        else None
-      }
+      if (!numeric(p, lo, hi) || Seq(p, lo, hi).exists(_.references.isEmpty)) None
+      else orient(Seq(p), Seq(lo, hi), join).map((p, lo, hi, _))
     }.nextOption()
   }
 
@@ -154,26 +140,25 @@ class RangeJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * the fan-out guard just routes the mismatched axis to the fallback
     * — but the right pick is what makes the rewrite pay.
     */
-  private def matchOverlap(cs: Seq[Expression], left: LogicalPlan, right: LogicalPlan)
+  private def matchOverlap(cs: Seq[Expression], join: Join)
       : Option[(Expression, Expression, Expression, Expression)] = {
     val les = cs.flatMap(asLE).filter { case (x, y, _) =>
       x.references.nonEmpty && y.references.nonEmpty && numeric(x, y)
     }
-    val fromL = les.filter { case (x, y, _) =>
-      x.references.subsetOf(left.outputSet) && y.references.subsetOf(right.outputSet)
-    }
-    val fromR = les.filter { case (x, y, _) =>
-      x.references.subsetOf(right.outputSet) && y.references.subsetOf(left.outputSet)
-    }
+    def from(left: Boolean) =
+      les.filter { case (x, y, _) => orient(Seq(x), Seq(y), join).contains(left) }
     val candidates = for {
-      (aLo, bHi, s1) <- fromL
-      (bLo, aHi, s2) <- fromR
+      (aLo, bHi, s1) <- from(left = true)
+      (bLo, aHi, s2) <- from(left = false)
     } yield ((aLo, aHi, bLo, bHi), Seq(s1, s2).count(!_))
     candidates.sortBy(-_._2).headOption.map(_._1)
   }
 
-  private def bkt(e: Expression, w: Double) =
-    floor(ColumnBridge.column(e).cast("double") / w).cast("long")
+  private def bkt(e: Expression, w: Double) = bucketOf(ColumnBridge.column(e), w)
+
+  /** Every bucket of `[lo, hi]`, one row each. */
+  private def buckets(lo: Expression, hi: Expression, w: Double) =
+    explode(sequence(bkt(lo, w), bkt(hi, w)))
 
   /** NaN bound detection on float/double axes (`lit(false)` elsewhere —
     * no per-row cost on the common integer epoch axes). Under Spark's
@@ -185,240 +170,163 @@ class RangeJoinRewrite(session: SparkSession) extends Rule[LogicalPlan] {
     * which evaluates the original condition bit-exactly. `isnan(NULL)`
     * is false, so NULL bounds keep their drop-outright treatment.
     */
-  private def nanBound(e: Expression): org.apache.spark.sql.Column =
-    e.dataType match {
-      case org.apache.spark.sql.types.FloatType |
-          org.apache.spark.sql.types.DoubleType =>
-        org.apache.spark.sql.functions.isnan(ColumnBridge.column(e))
-      case _ => lit(false)
-    }
+  private def nanBound(e: Expression): Column = e.dataType match {
+    case FloatType | DoubleType => isnan(ColumnBridge.column(e))
+    case _ => lit(false)
+  }
+
+  /** The (good, bad) split of an interval side's rows. Good rows are
+    * bucketable: no NaN bound, `lo <= hi` and fewer than `cap` buckets.
+    * Bad rows take the fallback theta join: NaN-bounded (wrong bucket
+    * under NaN-largest ordering), too wide to explode and, when
+    * `malformedMatch` (the overlap case: the theta join CAN match a
+    * `hi < lo` "interval", e.g. a=[10,5] against b=[0,20]), malformed. A
+    * malformed interval never contains a point, and Spark's descending
+    * auto-step sequence would explode it, so the point case drops it
+    * outright. NULL bounds fall in neither branch: they null-reject the
+    * original conjuncts, so they can match nothing.
+    */
+  private def split(lo: Expression, hi: Expression, w: Double, cap: Long,
+      malformedMatch: Boolean): (Column, Column) = {
+    val span = bkt(hi, w) - bkt(lo, w)
+    val valid = ColumnBridge.column(lo) <= ColumnBridge.column(hi)
+    val nan = nanBound(lo) || nanBound(hi)
+    val skipped = if (malformedMatch) nan || ColumnBridge.column(lo) > ColumnBridge.column(hi)
+      else nan
+    (!nan && valid && span < lit(cap), skipped || (valid && span >= lit(cap)))
+  }
+
+  /** The branch-split guards go through PushdownBarrier: they must stay
+    * ABOVE the interval child so (a) the union branches share the
+    * child's exchange (ReuseExchange — unpinned, join_range_auto
+    * computed its sessionize twice) and (b) the good/bad partition is
+    * decided on the child's OUTPUT rows, not pushed through a merging
+    * aggregation onto pre-merge values.
+    */
+  private def pin(df: DataFrame, c: Column): DataFrame =
+    df.filter(ColumnBridge.column(PushdownBarrier(ColumnBridge.expression(c))))
 
   /** Marker columns + always-true cross-side conjunct that (a) tags the
     * fallback join so later optimizer passes skip it and (b) cannot be
     * constant-folded away (GuardMarker is non-foldable). The Or
     * references both sides, so predicate pushdown keeps it in the join
     * condition rather than pushing it below one child.
+    *
+    * `badIsLeft` names the side holding the guard-rejected rows; that
+    * side gets an explicit BROADCAST hint. Why (r12, sf10 probe):
+    * without it Spark broadcast the FULL other side — for
+    * join_overlap_auto that meant sorting and broadcasting the whole
+    * sessionize result once per fallback branch (sf10: 120 s vs 27 s for
+    * the explicit operator). With the (normally EMPTY) bad side as the
+    * build, the branch costs its build only, and AQE's empty-relation
+    * propagation prunes the full side's subtree entirely once the 0-row
+    * broadcast materializes. Pathological data now broadcasts its
+    * outlier rows — bounded by how many ≥maxFanout-bucket intervals
+    * exist, the regime the fallback was built for. A lost hint logs
+    * ([[onTopJoin]]), and PlanShapeSpec's build-side test pins the
+    * planned outcome.
     */
-  /** `badIsLeft` names the side holding the guard-rejected rows; that
-    * side gets an explicit BROADCAST hint (set on the Join node — see
-    * applyMergeHint's ResolvedHint caveat in EditDistJoinRewrite). Why
-    * (r12, sf10 probe): without it Spark broadcast the FULL other side
-    * — for join_overlap_auto that meant sorting and broadcasting the
-    * whole sessionize result once per fallback branch (sf10: 120 s vs
-    * 27 s for the explicit operator). With the (normally EMPTY) bad
-    * side as the build, the branch costs its build only, and AQE's
-    * empty-relation propagation prunes the full side's subtree
-    * entirely once the 0-row broadcast materializes. Pathological data
-    * now broadcasts its outlier rows — bounded by how many ≥maxFanout-
-    * bucket intervals exist, the regime the fallback was built for.
-    */
-  private def fallbackJoin(
-      l: org.apache.spark.sql.DataFrame,
-      r: org.apache.spark.sql.DataFrame,
-      residual: Expression,
-      badIsLeft: Boolean): org.apache.spark.sql.DataFrame = {
+  private def fallbackJoin(l: DataFrame, r: DataFrame, residual: Expression,
+      badIsLeft: Boolean): DataFrame = {
     val joined = l.withColumn(MarkerL, ColumnBridge.column(GuardMarker()))
       .join(r.withColumn(MarkerR, ColumnBridge.column(GuardMarker())),
         ColumnBridge.column(residual) && (col(MarkerL) || col(MarkerR)),
         "inner")
-    val analyzed = joined.queryExecution.analyzed
-    val hi = Some(org.apache.spark.sql.catalyst.plans.logical.HintInfo(
-      strategy = Some(org.apache.spark.sql.catalyst.plans.logical.BROADCAST)))
-    // recurse through unary wrappers to the Join (applyMergeHint's
-    // pattern); a silent fall-through here would leave the full-side
-    // broadcast invisible until an sf10 replay hits the 8 GB cap, so
-    // hint loss logs loudly (r12 advice) — and PlanShapeSpec's
-    // build-side test pins the planned outcome
-    def addHint(p: LogicalPlan): LogicalPlan = p match {
-      case j: Join if j.hint == JoinHint.NONE =>
-        j.copy(hint =
-          if (badIsLeft) JoinHint(hi, None) else JoinHint(None, hi))
-      case u if u.children.size == 1 =>
-        u.withNewChildren(Seq(addHint(u.children.head)))
-      case other =>
-        logWarning("range-rewrite fallbackJoin: no bare Join found under " +
-          s"the analyzed top (${other.nodeName}) — broadcast-bad-side " +
-          "hint NOT applied; the fallback may broadcast the full side")
-        other
-    }
-    ColumnBridge.ofRows(session, addHint(analyzed))
+    val hi = Some(HintInfo(strategy = Some(BROADCAST)))
+    frame(onTopJoin(joined.queryExecution.analyzed)(_.copy(hint =
+      if (badIsLeft) JoinHint(hi, None) else JoinHint(None, hi))))
   }
 
-  private def rewrite(
-      join: Join,
-      p: Expression,
-      lo: Expression,
-      hi: Expression,
-      pointIsLeft: Boolean,
-      width: Double,
-      maxFanout: Long,
-      allConjuncts: Seq[Expression]): LogicalPlan = {
-    val pDf = ColumnBridge.ofRows(session,
-      if (pointIsLeft) join.left else join.right)
-    val iDf = ColumnBridge.ofRows(session,
-      if (pointIsLeft) join.right else join.left)
-    // a malformed hi < lo interval can never contain a point (the bound
-    // pair implies lo <= p <= hi), and Spark's descending auto-step
-    // sequence would otherwise explode it — drop pre-fan-out. NULL
-    // bounds null-reject the original conjuncts, so they match nothing
-    // and the valid/wide filters dropping them is exact.
-    val span = bkt(hi, width) - bkt(lo, width)
-    val valid = ColumnBridge.column(lo) <= ColumnBridge.column(hi)
-    val nan = nanBound(lo) || nanBound(hi)
-    // the branch-split guards go through PushdownBarrier: they must
-    // stay ABOVE the interval child so (a) both branches share the
-    // child's exchange (ReuseExchange — unpinned, join_range_auto
-    // computed its sessionize twice) and (b) the good/wide partition is
-    // decided on the child's OUTPUT rows, not pushed through a merging
-    // aggregation onto pre-merge values
-    def pin(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      ColumnBridge.column(PushdownBarrier(ColumnBridge.expression(c)))
-    val pC = pDf.withColumn(PointBucket, bkt(p, width))
-    val iC = iDf.filter(pin(!nan && valid && span < lit(maxFanout)))
-      .withColumn(IntervalBucket, explode(sequence(bkt(lo, width), bkt(hi, width))))
-    val (lC, rC) = if (pointIsLeft) (pC, iC) else (iC, pC)
+  /** The rewritten plan: `l` and `r`, carrying the bucket columns
+    * PointBucket and IntervalBucket, joined on the bucket with the
+    * original condition (and `keep`) above as the exact residual, union
+    * the fallback joins of each `(left rows, right rows, badIsLeft)`.
+    */
+  private def bucketJoin(join: Join, cs: Seq[Expression], l: DataFrame, r: DataFrame,
+      keep: Option[Column], fallbacks: Seq[(DataFrame, DataFrame, Boolean)]): LogicalPlan = {
     // cross-side equality conjuncts (the join's real keys — user_id,
     // tenant, …) must STAY in the join condition next to the bucket, or
     // the equi-join degrades to bucket-only and every key shares every
-    // time bucket; the ofRows surgery preserves attribute ids, so the
+    // time bucket; the frame surgery preserves attribute ids, so the
     // original expressions resolve against the rebuilt children
-    val equi = allConjuncts.filter {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(join.left.outputSet) &&
-          b.references.subsetOf(join.right.outputSet)) ||
-          (a.references.subsetOf(join.right.outputSet) &&
-            b.references.subsetOf(join.left.outputSet))
+    val equi = cs.filter {
+      case EqualTo(a, b) => orient(Seq(a), Seq(b), join).nonEmpty
       case _ => false
     }
     val joinCond = equi.foldLeft(col(PointBucket) === col(IntervalBucket)) {
       (c, e) => c && ColumnBridge.column(e)
     }
-    val residual = allConjuncts.reduce[Expression](And)
+    val residual = cs.reduce[Expression](And)
     val outCols = join.output.map(ColumnBridge.column)
-    val main = lC.join(rC, joinCond, "inner")
-      .filter(ColumnBridge.column(residual))
+    val main = l.join(r, joinCond, "inner")
+      .filter(keep.foldLeft(ColumnBridge.column(residual))(_ && _))
       .select(outCols: _*)
+    fallbacks.foldLeft(main) { case (u, (fl, fr, badIsLeft)) =>
+      u.union(fallbackJoin(fl, fr, residual, badIsLeft).select(outCols: _*))
+    }.queryExecution.analyzed
+  }
+
+  private def rewritePoint(join: Join, cs: Seq[Expression], p: Expression, lo: Expression,
+      hi: Expression, pointIsLeft: Boolean, w: Double, cap: Long): LogicalPlan = {
+    val (pDf, iDf) =
+      if (pointIsLeft) (frame(join.left), frame(join.right))
+      else (frame(join.right), frame(join.left))
+    val (good, wide) = split(lo, hi, w, cap, malformedMatch = false)
+    val pC = pDf.withColumn(PointBucket, bkt(p, w))
+    val iC = pin(iDf, good).withColumn(IntervalBucket, buckets(lo, hi, w))
     // fan-out guard: intervals wider than the cap — or carrying a NaN
     // bound, whose bucket would be wrong — take the original theta join
     // (marker-tagged); normally zero rows
-    val wide = iDf.filter(pin(nan || (valid && span >= lit(maxFanout))))
-    val (fL, fR) = if (pointIsLeft) (pDf, wide) else (wide, pDf)
-    val fb = fallbackJoin(fL, fR, residual, badIsLeft = !pointIsLeft)
-      .select(outCols: _*)
-    main.union(fb).queryExecution.analyzed
+    if (pointIsLeft) bucketJoin(join, cs, pC, iC, None, Seq((pDf, pin(iDf, wide), false)))
+    else bucketJoin(join, cs, iC, pC, None, Seq((pin(iDf, wide), pDf, true)))
   }
 
-  private def rewriteOverlap(
-      join: Join,
-      aLo: Expression,
-      aHi: Expression,
-      bLo: Expression,
-      bHi: Expression,
-      width: Double,
-      maxFanout: Long,
-      allConjuncts: Seq[Expression]): LogicalPlan = {
-    val aDf = ColumnBridge.ofRows(session, join.left)
-    val bDf = ColumnBridge.ofRows(session, join.right)
-    // same pushdown pin as the point case: branch-split guards stay
-    // above the children so the union branches share each child's
-    // exchange and split on output rows, not pre-aggregation values
-    def pin(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      ColumnBridge.column(PushdownBarrier(ColumnBridge.expression(c)))
-    def lohi(lo: Expression, hi: Expression) = {
-      val span = bkt(hi, width) - bkt(lo, width)
-      val valid = ColumnBridge.column(lo) <= ColumnBridge.column(hi)
-      val nan = nanBound(lo) || nanBound(hi)
-      (!nan && valid && span < lit(maxFanout), // good: bucketable
-        // bad: malformed (the theta join CAN match hi < lo "intervals",
-        // e.g. a=[10,5] against b=[0,20]), too wide to explode, or
-        // NaN-bounded (wrong bucket under NaN-largest ordering). NULL
-        // bounds fall in neither branch — they null-reject the original
-        // conjuncts, so they can match nothing.
-        nan || (ColumnBridge.column(lo) > ColumnBridge.column(hi)) ||
-          (valid && span >= lit(maxFanout)))
-    }
-    val (goodA, badA) = lohi(aLo, aHi)
-    val (goodB, badB) = lohi(bLo, bHi)
-    val aC = aDf.filter(pin(goodA)).withColumn(PointBucket,
-      explode(sequence(bkt(aLo, width), bkt(aHi, width))))
-    val bC = bDf.filter(pin(goodB)).withColumn(IntervalBucket,
-      explode(sequence(bkt(bLo, width), bkt(bHi, width))))
-    val equi = allConjuncts.filter {
-      case EqualTo(a, b) =>
-        (a.references.subsetOf(join.left.outputSet) &&
-          b.references.subsetOf(join.right.outputSet)) ||
-          (a.references.subsetOf(join.right.outputSet) &&
-            b.references.subsetOf(join.left.outputSet))
-      case _ => false
-    }
-    val joinCond = equi.foldLeft(col(PointBucket) === col(IntervalBucket)) {
-      (c, e) => c && ColumnBridge.column(e)
-    }
-    val residual = allConjuncts.reduce[Expression](And)
-    val outCols = join.output.map(ColumnBridge.column)
+  private def rewriteOverlap(join: Join, cs: Seq[Expression], aLo: Expression,
+      aHi: Expression, bLo: Expression, bHi: Expression, w: Double, cap: Long): LogicalPlan = {
+    val (aDf, bDf) = (frame(join.left), frame(join.right))
+    val (goodA, badA) = split(aLo, aHi, w, cap, malformedMatch = true)
+    val (goodB, badB) = split(bLo, bHi, w, cap, malformedMatch = true)
+    val aC = pin(aDf, goodA).withColumn(PointBucket, buckets(aLo, aHi, w))
+    val bC = pin(bDf, goodB).withColumn(IntervalBucket, buckets(bLo, bHi, w))
     // exactly-once: keep only the first shared bucket — the one holding
     // the intersection start max(aLo, bLo)
-    val firstShared = col(PointBucket) ===
-      floor(greatest(ColumnBridge.column(aLo).cast("double"),
-        ColumnBridge.column(bLo).cast("double")) / width).cast("long")
-    val main = aC.join(bC, joinCond, "inner")
-      .filter(ColumnBridge.column(residual) && firstShared)
-      .select(outCols: _*)
-    // partition of pairs: (good,good) → main; (bad,*) → fb1;
-    // (good,bad) → fb2 — each qualifying pair in exactly one branch
-    val fb1 = fallbackJoin(aDf.filter(pin(badA)), bDf, residual, badIsLeft = true)
-      .select(outCols: _*)
-    val fb2 = fallbackJoin(aDf.filter(pin(goodA)), bDf.filter(pin(badB)), residual,
-        badIsLeft = false)
-      .select(outCols: _*)
-    main.union(fb1).union(fb2).queryExecution.analyzed
+    val firstShared = col(PointBucket) === bucketOf(greatest(
+      ColumnBridge.column(aLo).cast("double"), ColumnBridge.column(bLo).cast("double")), w)
+    // partition of pairs: (good,good) → main; (bad,*) → first fallback;
+    // (good,bad) → second — each qualifying pair in exactly one branch
+    bucketJoin(join, cs, aC, bC, Some(firstShared),
+      Seq((pin(aDf, badA), bDf, true), (pin(aDf, goodA), pin(bDf, badB), false)))
   }
-
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.rangeJoinRewrite.enabled", "true") == "true"
 
   /** The bin size, from conf; None ⇒ inactive. */
   private def bucketWidth: Option[Double] =
-    scala.util.Try(org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.rangeJoinRewrite.bucket", "")
+    scala.util.Try(SQLConf.get.getConfString("spark.graft.rangeJoinRewrite.bucket", "")
       .toDouble).toOption.filter(_ > 0)
 
   /** Max exploded rows per interval before the fallback branch takes
     * over (guards both OOM fan-out and sequence()'s 2^31 limit).
     */
   private def maxFanout: Long =
-    scala.util.Try(org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.rangeJoinRewrite.maxFanout", "4096")
+    scala.util.Try(SQLConf.get.getConfString("spark.graft.rangeJoinRewrite.maxFanout", "4096")
       .toLong).toOption.filter(_ > 0).getOrElse(4096L)
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else bucketWidth match {
-      case None => plan
-      case Some(w) =>
-        val cap = maxFanout
-        plan.transformUp {
-          case j @ Join(left, right, jt, Some(cond), hint)
-              if (jt == Inner || jt == Cross) && hint == JoinHint.NONE &&
-                !cond.references.exists(_.name.startsWith(BucketPrefix)) =>
-            val cs = conjuncts(cond)
-            try matchRange(cs, left, right) match {
-              case Some((p, lo, hi, pointIsLeft)) =>
-                rewrite(j, p, lo, hi, pointIsLeft, w, cap, cs)
-              case None =>
-                matchOverlap(cs, left, right) match {
-                  case Some((aLo, aHi, bLo, bHi)) =>
-                    rewriteOverlap(j, aLo, aHi, bLo, bHi, w, cap, cs)
-                  case None => j
-                }
-            } catch {
-              case NonFatal(e) =>
-                logWarning(
-                  s"range-join rewrite failed, keeping nested-loop join: $e")
-                j
-            }
-        }
+  override protected def enabled: Boolean = super.enabled && bucketWidth.nonEmpty
+
+  /** Hinted joins (the user picked the strategy) and the rule's own
+    * joins, whose conditions reference a `__graft_rb` attribute.
+    */
+  override protected def skips(join: Join): Boolean =
+    join.hint != JoinHint.NONE ||
+      join.condition.exists(_.references.exists(_.name.startsWith(BucketPrefix)))
+
+  override protected def rewrite(join: Join, cs: Seq[Expression]): Option[LogicalPlan] =
+    bucketWidth.flatMap { w =>
+      val cap = maxFanout
+      matchRange(cs, join).map { case (p, lo, hi, pointIsLeft) =>
+        rewritePoint(join, cs, p, lo, hi, pointIsLeft, w, cap)
+      }.orElse(matchOverlap(cs, join).map { case (aLo, aHi, bLo, bHi) =>
+        rewriteOverlap(join, cs, aLo, aHi, bLo, bHi, w, cap)
+      })
     }
 }
 

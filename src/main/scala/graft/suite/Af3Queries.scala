@@ -1,5 +1,7 @@
 package graft.suite
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.af3.{Af3Io, Af3Params, Af3Pipeline, CifParser}
@@ -151,9 +153,11 @@ object Af3Queries {
         // CSVs (atoms x contact-island membership).
         // this query fires two actions (the file sink + the returned
         // frame); `members` is a local frame of the per-job results and
-        // `sel` is cached, so the model files are parsed once
+        // `sel` a local frame of the collected atoms, so the model files
+        // are parsed once and nothing stays persisted
         val st = Af3Pipeline.stages(s, fx, p)
-        val sel = Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p).cache()
+        val atoms = Af3Pipeline.interactionCifAtoms(st.atoms, st.members, p)
+        val sel = s.createDataFrame(atoms.collect().toSeq.asJava, atoms.schema)
         graft.af3.CifWriter.writeKeyedText(
           graft.af3.CifWriter.renderCif(sel, concat(col("job_dir"), lit("_interaction"))),
           sys.props("java.io.tmpdir") + "/graft_cif_filtered", ".cif",

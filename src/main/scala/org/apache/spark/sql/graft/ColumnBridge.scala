@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graft
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionColumnNode}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark 4's classic Column internals: build a [[Column]] from
@@ -33,6 +36,15 @@ object ColumnBridge {
   /** A DataFrame of `schema` over rows in Catalyst's internal form. */
   def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow], schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `f` over the internal rows of `df`'s plan, collected, in one SQL
+    * execution of that plan, as a Dataset action runs it: its listeners,
+    * `observe` metrics included, see the plan complete.
+    */
+  def collectInternal[T: ClassTag](df: DataFrame)(f: InternalRow => IterableOnce[T]): Array[T] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.toRdd.flatMap(f).collect())
+  }
 
   /** A 1-row/1-column DataFrame as an uncorrelated scalar subquery
     * Column: evaluated once, its value becomes a query constant on

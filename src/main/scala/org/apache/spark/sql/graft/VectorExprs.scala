@@ -1,9 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType}
 
 /** Native codegen'd dot product over two `array<double>` columns.
   *
@@ -352,110 +352,4 @@ case class Log2Q10Expr(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** The POI x partner block count of one job's PAE matrix (the
-  * reference's threshold count, process_af3_outputs.py:185-224): for
-  * each partner column j in `[startPartner, endPartner)`, count the POI
-  * rows i in `[startPoi, endPoi)` with `pae[i][j] < cutoff`, and return
-  * the 1-based partner residue numbers `j - startPartner + 1` whose count
-  * is `>= minHits`, ascending.
-  *
-  * Why an Expression and not `posexplode` twice + filter + groupBy: the
-  * long form materializes all N^2 cells as rows to keep the block inside
-  * them, and shuffles those to count per column. This reads the job's
-  * `array<array<double>>` in place (row views, primitive `getDouble`)
-  * inside whole-stage codegen. Cells that do not exist (ranges past the
-  * matrix, ragged rows, null rows) and null cells never count, as in the
-  * long form; NaN fails `<` as it does in Spark. A column counts only
-  * once it has a hit, so
-  * `minHits <= 0` still emits only columns with at least one cell under
-  * the cutoff, as the long form's groupBy did.
-  */
-case class PaeBlockHitsExpr(children: Seq[Expression])
-    extends Expression with ImplicitCastInputTypes {
-
-  require(children.length == 7,
-    "graft_pae_block_hits takes (pae, startPoi, endPoi, startPartner, endPartner, cutoff, minHits)")
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(ArrayType(DoubleType)),
-    LongType, LongType, LongType, LongType, DoubleType, IntegerType)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def prettyName: String = "graft_pae_block_hits"
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val vs = children.map(_.eval(input))
-    if (vs.contains(null)) null
-    else PaeBlockHitsExpr.hits(vs(0).asInstanceOf[ArrayData], vs(1).asInstanceOf[Long],
-      vs(2).asInstanceOf[Long], vs(3).asInstanceOf[Long], vs(4).asInstanceOf[Long],
-      vs(5).asInstanceOf[Double], vs(6).asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(e => s"${e.isNull}").mkString(" || ")
-    val childCode = evals.map(_.code).reduce(_ + _)
-    val args = evals.map(_.value).mkString(", ")
-    ev.copy(code =
-      code"""
-        $childCode
-        boolean ${ev.isNull} = $anyNull;
-        ArrayData ${ev.value} = null;
-        if (!${ev.isNull}) {
-          ${ev.value} = org.apache.spark.sql.graft.PaeBlockHitsExpr.hits($args);
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
-}
-
-object PaeBlockHitsExpr {
-
-  /** The kernel both `eval` and the generated code call: two primitive
-    * loops over the POI rows, one to size the column counters, one to
-    * count.
-    */
-  def hits(pae: ArrayData, startPoi: Long, endPoi: Long, startPartner: Long,
-      endPartner: Long, cutoff: Double, minHits: Int): ArrayData = {
-    val rows = pae.numElements().toLong
-    val iLo = math.min(math.max(startPoi, 0L), rows).toInt
-    val iHi = math.min(endPoi, rows).toInt
-    val jLo = math.max(startPartner, 0L)
-    var width = 0
-    var i = iLo
-    while (i < iHi) {
-      if (!pae.isNullAt(i))
-        width = math.max(width,
-          (math.min(endPartner, pae.getArray(i).numElements().toLong) - jLo).toInt)
-      i += 1
-    }
-    val counts = new Array[Int](width)
-    i = iLo
-    while (i < iHi) {
-      if (!pae.isNullAt(i)) {
-        val row = pae.getArray(i)
-        val n = (math.min(endPartner, row.numElements().toLong) - jLo).toInt
-        val base = jLo.toInt
-        var k = 0
-        while (k < n) {
-          if (!row.isNullAt(base + k) && row.getDouble(base + k) < cutoff) counts(k) += 1
-          k += 1
-        }
-      }
-      i += 1
-    }
-    val need = math.max(minHits, 1)
-    val res = new Array[Int](counts.count(_ >= need))
-    var k = 0
-    var r = 0
-    while (k < width) {
-      if (counts(k) >= need) { res(r) = (jLo + k - startPartner + 1).toInt; r += 1 }
-      k += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(res)
-  }
 }

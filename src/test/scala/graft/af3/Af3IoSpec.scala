@@ -1,9 +1,11 @@
 package graft.af3
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
-import graft.SparkSpec
+import scala.jdk.CollectionConverters._
+
+import graft.{Af3Run, SparkSpec}
 
 class Af3IoSpec extends SparkSpec {
 
@@ -112,4 +114,44 @@ class Af3IoSpec extends SparkSpec {
     assert(sparkJobs { rows = Af3Io.runLog(spark, fixtureDir).collect().length } === 1)
     assert(rows === 11)
   }
+
+  /** A one-job tree: the fixture binder's files in a directory `job`,
+    * each renamed to start with `job` instead of `job_binder`.
+    */
+  private def binderCopy(job: String): Path = {
+    val root = Files.createTempDirectory("graft_job_name")
+    val src = Paths.get(fixtureDir, "job_binder")
+    Files.createDirectories(root.resolve(job))
+    Files.list(src).iterator.asScala.foreach { f =>
+      val name = f.getFileName.toString
+      if (!name.startsWith("."))
+        Files.copy(f, root.resolve(job).resolve(job + name.stripPrefix("job_binder")))
+    }
+    root
+  }
+
+  for (job <- Seq("job one", "job%41"))
+    test(s"a job in a directory '$job' is named '$job' by every read and by Af3Run") {
+      val root = binderCopy(job).toString
+      assert(Af3Io.readSummaries(spark, root).select("job_dir").distinct().collect()
+        .map(_.getString(0)).toSeq === Seq(job))
+      assert(Af3Io.readPaeLong(spark, root).select("job_dir").collect().map(_.getString(0)).toSeq ===
+        Seq(job))
+      assert(CifParser.readAtomsDf(spark, root).select("job_dir", "model_idx").distinct()
+        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted === (0 to 4).map(job -> _))
+      assert(runLog(root).map(r => (r._1, r._2)) === Seq("full_data_0.json", "model_0.cif",
+        "model_1.cif", "model_2.cif", "model_3.cif", "model_4.cif", "summary_confidences_0.json")
+        .map(n => (job, s"${job}_$n")))
+
+      val out = Files.createTempDirectory("graft_job_name_out")
+      assert(Af3Run.run(spark, root, out.toString, Af3Params()) === 1L)
+      val report = Files.readAllLines(out.resolve("interaction_analysis_PAE_15.0_max_dist_8.0.csv"))
+        .asScala.toSeq
+      assert(report.tail.map(_.split(',').head) === Seq(job))
+      val inter = "Interaction_cif_files_PAE_15.0_maxdist_8.0"
+      val written = Files.walk(out).iterator.asScala.filter(Files.isRegularFile(_))
+        .map(f => out.relativize(f).toString).filter(_.endsWith(".cif")).toSeq.sorted
+      assert(written === ((0 to 4).map(k => s"Overlays_$inter/$job/model_$k.cif") :+
+        s"$inter/${job}_interaction.cif").sorted)
+    }
 }

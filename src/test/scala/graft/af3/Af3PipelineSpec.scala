@@ -1,6 +1,11 @@
 package graft.af3
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+
 import graft.SparkSpec
+import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 
 class Af3PipelineSpec extends SparkSpec {
@@ -54,6 +59,15 @@ class Af3PipelineSpec extends SparkSpec {
     // partner B -> idx 1 -> range [4, 10): residues 1..6
     assert(out2.select("partner_res").collect().map(_.getInt(0)).sorted.toSeq ===
       (1 to 6).toSeq)
+  }
+
+  test("interactingResidues completes an observe on its PAE input") {
+    val obs = Observation("pae_rows")
+    val pae = Af3Io.readPaeLong(spark, fixtureDir).observe(obs, count(lit(1)).as("n"))
+    val info = Af3Pipeline.chainInfo(CifParser.readAtomsDf(spark, fixtureDir)
+      .filter(col("model_idx") === 0))
+    assert(Af3Pipeline.interactingResidues(pae, info, p).count() > 0)
+    assert(Await.result(Future(obs.get), 60.seconds)("n") === 1L)
   }
 
   test("chain info: lengths and sequences (vs oracle CSV)") {

@@ -6,7 +6,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.{col, input_file_name}
-import org.apache.spark.sql.graft.PaeBlockHitsExpr
 
 import graft.SparkSpec
 import graft.functions.Scalars
@@ -17,7 +16,7 @@ import graft.functions.Scalars
   * over an edge corpus, both must keep and drop the same files and rows
   * and yield every PAE cell with the same bits (`doubleToRawLongBits`)
   * and the same nulls. The streamed block count ([[Af3Io.paeHits]])
-  * must give what [[PaeBlockHitsExpr.hits]] gives over those matrices,
+  * must give what [[Af3Io.paeBlockHits]] gives over those matrices,
   * for a grid of blocks and cutoffs.
   */
 class FullDataReaderSpec extends SparkSpec {
@@ -186,7 +185,7 @@ class FullDataReaderSpec extends SparkSpec {
       val job = url.split("/").init.last
       val ms = scanned.getOrElse(job, Nil)
       val (a, b, c, d) = block
-      val wantHits = ms.flatMap(m => PaeBlockHitsExpr.hits(m, a, b, c, d, cutoff, minHits)
+      val wantHits = ms.flatMap(m => Af3Io.paeBlockHits(m, a, b, c, d, cutoff, minHits)
         .toIntArray().toSeq)
       val wantCells = ms.map(m => (0 until m.numElements())
         .map(i => if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum).sum

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
 import org.apache.spark.sql.functions._
 
 /** The automatic levenshtein-join rewrite: plans an equi-join, returns
@@ -72,5 +73,34 @@ class EditDistRewriteSpec extends SparkSpec {
     // count Join nodes: exactly one equi-join, no nested rewrite towers
     val joins = once.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
     assert(joins.size == 1)
+  }
+
+  /** The optimized plan's join keyed on the right side's variant hash. */
+  private def pairJoin(df: org.apache.spark.sql.DataFrame): Join = {
+    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size === 1, s"expected the one pair join:\n${df.queryExecution.optimizedPlan}")
+    assert(joins.head.condition.exists(_.references.exists(_.name == "__graft_rk")),
+      s"not the rewritten variant join: ${joins.head}")
+    joins.head
+  }
+
+  test("a user BROADCAST hint on an edit-distance join ends up on the rewritten pair join") {
+    val d = strings
+    val joined = d.as("a").join(broadcast(d.as("b")),
+      col("a.id") < col("b.id") && levenshtein(col("a.s"), col("b.s")) <= 1)
+    val j = pairJoin(joined)
+    assert(j.hint.rightHint.flatMap(_.strategy) === Some(BROADCAST))
+    assert(j.hint.leftHint.isEmpty)
+    assert(plan(joined).contains("BroadcastHashJoin"))
+  }
+
+  test("an unhinted edit-distance join plans a SortMergeJoin") {
+    val d = strings
+    val joined = d.as("a").join(d.as("b"),
+      col("a.id") < col("b.id") && levenshtein(col("a.s"), col("b.s")) <= 1)
+    pairJoin(joined)
+    val p = plan(joined)
+    assert(p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),
+      s"the pair join must shuffle-merge:\n$p")
   }
 }

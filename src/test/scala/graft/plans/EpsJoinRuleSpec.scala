@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.functions.VectorExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join}
 import org.apache.spark.sql.functions._
 
 class EpsJoinRuleSpec extends SparkSpec {
@@ -112,5 +113,30 @@ class EpsJoinRuleSpec extends SparkSpec {
     // NaN/Inf distances fail the residual exactly as they fail the
     // theta-join predicate — no errors, no phantom matches
     assert(got.toSeq === Seq((1L, 10L)))
+  }
+
+  test("spark.graft.epsJoinRewrite.enabled=false keeps the nested loop") {
+    spark.conf.set("spark.graft.epsJoinRewrite.enabled", "false")
+    val plan = try naive(0.3).queryExecution.executedPlan.toString
+      finally spark.conf.unset("spark.graft.epsJoinRewrite.enabled")
+    assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("CartesianProduct"),
+      s"disabled rule still rewrote:\n$plan")
+    assert(!plan.contains("Generate explode"))
+  }
+
+  test("a user BROADCAST hint on an eps join ends up on the rewritten cell equi-join") {
+    val a = points(200, 7).select(col("id").as("a_id"), col("x").as("ax"),
+      col("y").as("ay"), col("z").as("az"))
+    val b = points(200, 13).select(col("id").as("b_id"), col("x").as("bx"),
+      col("y").as("by"), col("z").as("bz"))
+    val df = a.join(broadcast(b), VectorExpressions.dist3(col("ax"), col("ay"), col("az"),
+      col("bx"), col("by"), col("bz")) < 0.3)
+    val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size === 1, s"expected the one cell join:\n${df.queryExecution.optimizedPlan}")
+    val j = joins.head
+    assert(j.condition.exists(_.references.exists(_.name == "__graft_nx")),
+      s"not the rewritten cell join: $j")
+    assert(j.hint.rightHint.flatMap(_.strategy) === Some(BROADCAST))
+    assert(j.hint.leftHint.isEmpty)
   }
 }
