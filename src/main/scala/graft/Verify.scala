@@ -17,6 +17,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = (args(0), args(1), args.drop(2).toSet)
     val spark = GraftSession.build("graft-verify")
+    // the artifact spill is keyed by input, not by code: a warm spill
+    // would serve artifacts an older build made to changed builders, and
+    // this run would check those. Wipe this sf dir's spills first.
+    suite.Artifacts.wipeSpill(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     val timeoutSec =
       sys.env.get("SPARK_GRAFT_QUERY_TIMEOUT_SEC").map(_.toLong).getOrElse(120L)

@@ -21,11 +21,6 @@ final case class MediaMeta(
     n_frames: Int,
     px_hash: Option[Long] = None)
 
-/** Output of the WAV decode stage: container properties from a REAL JDK
-  * `AudioSystem` decode plus a CRC32 over the decoded PCM bytes.
-  * `duration_ms` is integer floor arithmetic (frames * 1000 / rate) —
-  * exact and oracle-reproducible.
-  */
 /** Output of the MP4 container walk: movie-header properties read from
   * REAL ISO-BMFF box structure (no codec involved — container metadata
   * is pure byte arithmetic). `duration_ms = duration * 1000 / timescale`
@@ -95,6 +90,11 @@ final case class AudioDownsampled(
     n_frames_out: Long,
     pcm_crc_out: Long)
 
+/** Output of the WAV decode stage: container properties from a REAL JDK
+  * `AudioSystem` decode plus a CRC32 over the decoded PCM bytes.
+  * `duration_ms` is integer floor arithmetic (frames * 1000 / rate) —
+  * exact and oracle-reproducible.
+  */
 final case class AudioMeta(
     doc_id: Long,
     n_bytes: Long,
@@ -198,17 +198,6 @@ object Multimodal {
     */
   val MaxDecodePixels: Long = 64L * 1024 * 1024
 
-  /** Decode one blob. Lossless images decode for REAL: the JDK's
-    * ImageIO reads PNG/GIF/BMP pixels with no external codec, giving
-    * true dimensions plus a pixel fingerprint. JPEG stops at header
-    * dimensions — its decoded pixels are not bit-stable across JVM
-    * IDCT implementations, which would poison the deterministic
-    * px_hash contract. A recognizable-but-corrupt image falls back to
-    * its header dimensions (no pixel hash; JDK readers throw
-    * RuntimeExceptions, not just IOException, on corrupt payloads);
-    * anything else (audio/video — genuinely codec-less here) takes the
-    * deterministic stub.
-    */
   /** The lossless-decode gate shared by [[decodeOne]] and
     * [[aHashImages]]: Some(image) iff the blob carries a non-JPEG image
     * header with sane positive dimensions inside the bomb guard (a
@@ -226,6 +215,17 @@ object Multimodal {
       case _ => None
     }
 
+  /** Decode one blob. Lossless images decode for REAL: the JDK's
+    * ImageIO reads PNG/GIF/BMP pixels with no external codec, giving
+    * true dimensions plus a pixel fingerprint. JPEG stops at header
+    * dimensions — its decoded pixels are not bit-stable across JVM
+    * IDCT implementations, which would poison the deterministic
+    * px_hash contract. A recognizable-but-corrupt image falls back to
+    * its header dimensions (no pixel hash; JDK readers throw
+    * RuntimeExceptions, not just IOException, on corrupt payloads);
+    * anything else (audio/video — genuinely codec-less here) takes the
+    * deterministic stub.
+    */
   def decodeOne(b: MediaBlob): MediaMeta =
     parseImageHeader(b.content) match {
       case Some((fmt, w, h)) =>
@@ -562,15 +562,48 @@ object Multimodal {
     * not a parseable PCM WAV — including ordinary text bytes, which is
     * what routes non-audio payloads away from this path.
     */
-  def decodeWavPcm(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Long)] = {
-    // magic-number gate ('RIFF'....'WAVE') before AudioSystem: the
-    // corpus is overwhelmingly non-audio, and routing those through
-    // provider probing + UnsupportedAudioFileException costs more than
-    // the decode itself. WAV-only is already this function's contract.
-    val riffWave = bytes.length >= 12 &&
-      bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
-      bytes(8) == 'W' && bytes(9) == 'A' && bytes(10) == 'V' && bytes(11) == 'E'
-    if (!riffWave) None else try {
+  def decodeWavPcm(bytes: Array[Byte]): Option[(Int, Int, Int, Long, Long)] =
+    openPcmWav(bytes) { (f, frames, ais) =>
+      val crc = new java.util.zip.CRC32()
+      val buf = new Array[Byte](8192)
+      var n = ais.read(buf)
+      while (n > 0) { crc.update(buf, 0, n); n = ais.read(buf) }
+      Some((f.getSampleRate.toInt, f.getChannels,
+        f.getSampleSizeInBits, frames, crc.getValue))
+    }
+
+  /** 16-bit PCM sample decode: the interleaved int16 stream behind
+    * [[decodeAudio]]'s metadata, for feature extraction (RMS windows,
+    * silence detection). Same RIFF/WAVE gate and PCM contract; returns
+    * None for non-WAV bytes, non-16-bit formats, or absurd lengths.
+    */
+  def decodeWavPcm16Samples(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] =
+    openPcmWav(bytes) { (f, _, ais) =>
+      if (f.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
+          f.getSampleSizeInBits != 16) None
+      else {
+        val order = if (f.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+          else java.nio.ByteOrder.LITTLE_ENDIAN
+        val sb = java.nio.ByteBuffer.wrap(ais.readAllBytes()).order(order).asShortBuffer
+        val out = new Array[Short](sb.remaining)
+        sb.get(out)
+        Some((f.getSampleRate.toInt, f.getChannels, out))
+      }
+    }
+
+  /** Open a WAV payload with `AudioSystem` and hand `read` its format,
+    * frame count and stream, closing the stream after. None (read not
+    * called) unless the payload is RIFF/WAVE, its encoding raw PCM and
+    * its frame count in (0, [[MaxDecodeFrames]]]; None on any decode
+    * failure. The magic gate comes before AudioSystem: the corpus is
+    * overwhelmingly non-audio, and routing those through provider
+    * probing + UnsupportedAudioFileException costs more than the decode
+    * itself.
+    */
+  private def openPcmWav[A](bytes: Array[Byte])(
+      read: (javax.sound.sampled.AudioFormat, Long,
+        javax.sound.sampled.AudioInputStream) => Option[A]): Option[A] =
+    if (!isRiffForm(bytes, "WAVE")) None else try {
       val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
         new java.io.ByteArrayInputStream(bytes))
       try {
@@ -580,57 +613,9 @@ object Multimodal {
           enc == javax.sound.sampled.AudioFormat.Encoding.PCM_UNSIGNED
         val frames = ais.getFrameLength
         if (!pcm || frames <= 0 || frames > MaxDecodeFrames) None
-        else {
-          val crc = new java.util.zip.CRC32()
-          val buf = new Array[Byte](8192)
-          var n = ais.read(buf)
-          while (n > 0) { crc.update(buf, 0, n); n = ais.read(buf) }
-          Some((f.getSampleRate.toInt, f.getChannels,
-            f.getSampleSizeInBits, frames, crc.getValue))
-        }
+        else read(f, frames, ais)
       } finally ais.close()
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Batch audio decode: one row per blob that really decodes as PCM
-    * WAV; everything else (text bytes, images, video) is dropped by the
-    * [[decodeWavPcm]] gate. Same one-decoder-per-partition
-    * mapPartitions batch shape as [[decode]].
-    */
-  /** 16-bit PCM sample decode: the interleaved int16 stream behind
-    * [[decodeAudio]]'s metadata, for feature extraction (RMS windows,
-    * silence detection). Same RIFF/WAVE gate and PCM contract; returns
-    * None for non-WAV bytes, non-16-bit formats, or absurd lengths.
-    */
-  def decodeWavPcm16Samples(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
-    val riffWave = bytes.length >= 12 &&
-      bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
-      bytes(8) == 'W' && bytes(9) == 'A' && bytes(10) == 'V' && bytes(11) == 'E'
-    if (!riffWave) None else try {
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val f = ais.getFormat
-        val frames = ais.getFrameLength
-        if (f.getEncoding != javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED ||
-          f.getSampleSizeInBits != 16 || frames <= 0 || frames > MaxDecodeFrames)
-          None
-        else {
-          val data = ais.readAllBytes()
-          val n = data.length / 2
-          val out = new Array[Short](n)
-          var i = 0
-          while (i < n) {
-            out(i) =
-              (if (f.isBigEndian) ((data(2 * i) << 8) | (data(2 * i + 1) & 0xff))
-               else ((data(2 * i + 1) << 8) | (data(2 * i) & 0xff))).toShort
-            i += 1
-          }
-          Some((f.getSampleRate.toInt, f.getChannels, out))
-        }
-      } finally ais.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
 
   /** Batch windowed audio energy: decode 16-bit PCM, split the
     * interleaved sample stream into `win`-sample windows, and emit one
@@ -698,6 +683,11 @@ object Multimodal {
     }
   }
 
+  /** Batch audio decode: one row per blob that really decodes as PCM
+    * WAV; everything else (text bytes, images, video) is dropped by the
+    * [[decodeWavPcm]] gate. Same one-decoder-per-partition
+    * mapPartitions batch shape as [[decode]].
+    */
   def decodeAudio(blobs: Dataset[MediaBlob]): Dataset[AudioMeta] = {
     import blobs.sparkSession.implicits._
     blobs.mapPartitions { it =>
@@ -720,15 +710,6 @@ object Multimodal {
   private def fourcc(b: Array[Byte], off: Int): String =
     new String(b, off, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
 
-  /** Minimal ISO-BMFF (MP4) walk: top-level boxes to `moov`, then moov's
-    * children for `mvhd` (timescale + duration, version 0 and 1 layouts)
-    * and a `trak` count. Container metadata is pure byte arithmetic — no
-    * codec — which is exactly the part of "video decode" a JVM pipeline
-    * CAN do honestly; frame/pixel decode (which needs a real codec)
-    * stays in [[decodeStub]]. Returns None for anything that is not a
-    * well-formed ftyp-led MP4 — including ordinary text bytes, same
-    * routing role as the WAV magic gate.
-    */
   /** Box header at `off` within `[off, end)`: (type, payloadStart,
     * boxEnd). `size==1` is the 64-bit largesize form; `size==0` is the
     * legal "box extends to the end of the enclosing space" form (common
@@ -759,6 +740,21 @@ object Multimodal {
     None
   }
 
+  /** Payload bounds of the box reached from the payload `at` through
+    * the first child of each type in `path`.
+    */
+  private def mp4Path(
+      bytes: Array[Byte], at: (Long, Long), path: String*): Option[(Long, Long)] =
+    path.foldLeft(Option(at)) { (box, typ) =>
+      box.flatMap { case (start, end) => mp4Child(bytes, start, end, typ) }
+    }
+
+  /** The first trak's `mdia` payload bounds, where both halves of the
+    * sample table hang.
+    */
+  private def mp4Mdia(bytes: Array[Byte]): Option[(Long, Long)] =
+    mp4Moov(bytes).flatMap(mp4Path(bytes, _, "trak", "mdia"))
+
   /** Top-level walk to `moov`'s payload bounds; None when the bytes are
     * not a well-formed ftyp-led container.
     */
@@ -773,6 +769,15 @@ object Multimodal {
     None
   }
 
+  /** Minimal ISO-BMFF (MP4) walk: top-level boxes to `moov`, then moov's
+    * children for `mvhd` (timescale + duration, version 0 and 1 layouts)
+    * and a `trak` count. Container metadata is pure byte arithmetic — no
+    * codec — which is exactly the part of "video decode" a JVM pipeline
+    * CAN do honestly; frame/pixel decode (which needs a real codec)
+    * stays in [[decodeStub]]. Returns None for anything that is not a
+    * well-formed ftyp-led MP4 — including ordinary text bytes, same
+    * routing role as the WAV magic gate.
+    */
   def parseMp4Meta(bytes: Array[Byte]): Option[(Long, Long, Long, Long)] =
     mp4Moov(bytes) match {
       case None => None
@@ -781,7 +786,7 @@ object Multimodal {
         var ts = -1L; var dur = -1L; var tracks = 0L
         while (o < end) mp4Box(bytes, o, end) match {
           case Some(("trak", _, boxEnd)) => tracks += 1; o = boxEnd
-          case Some(("mvhd", p0, boxEnd)) =>
+          case Some(("mvhd", p0, boxEnd)) if p0 < boxEnd =>
             val p = p0.toInt
             val ver = bytes(p) & 0xff
             if (ver == 1 && p0 + 32 <= boxEnd) {
@@ -806,15 +811,8 @@ object Multimodal {
     * everything a pipeline needs to slice real frame payloads out of a
     * container; only decoding those payloads to pixels needs a codec.
     */
-  def parseMp4SampleTable(bytes: Array[Byte]): Option[Array[(Long, Long)]] = {
-    val stbl = for {
-      (mBody, mEnd) <- mp4Moov(bytes)
-      (tBody, tEnd) <- mp4Child(bytes, mBody, mEnd, "trak")
-      (dBody, dEnd) <- mp4Child(bytes, tBody, tEnd, "mdia")
-      (fBody, fEnd) <- mp4Child(bytes, dBody, dEnd, "minf")
-      s <- mp4Child(bytes, fBody, fEnd, "stbl")
-    } yield s
-    stbl.flatMap { case (sBody, sEnd) =>
+  def parseMp4SampleTable(bytes: Array[Byte]): Option[Array[(Long, Long)]] =
+    mp4Mdia(bytes).flatMap(mp4Path(bytes, _, "minf", "stbl")).flatMap { case (sBody, sEnd) =>
       val stsz = mp4Child(bytes, sBody, sEnd, "stsz")
       val stsc = mp4Child(bytes, sBody, sEnd, "stsc")
       val stco = mp4Child(bytes, sBody, sEnd, "stco")
@@ -825,7 +823,6 @@ object Multimodal {
         case _ => None
       }
     }
-  }
 
   private def expandSampleTable(
       bytes: Array[Byte],
@@ -885,13 +882,8 @@ object Multimodal {
     * before it.
     */
   def parseMp4FrameTimes(bytes: Array[Byte]): Option[(Long, Array[Long])] = {
-    val mdia = for {
-      (mBody, mEnd) <- mp4Moov(bytes)
-      (tBody, tEnd) <- mp4Child(bytes, mBody, mEnd, "trak")
-      d <- mp4Child(bytes, tBody, tEnd, "mdia")
-    } yield d
-    mdia.flatMap { case (dBody, dEnd) =>
-      val ts = mp4Child(bytes, dBody, dEnd, "mdhd").flatMap { case (hB, hE) =>
+    mp4Mdia(bytes).flatMap { mdia =>
+      val ts = mp4Path(bytes, mdia, "mdhd").flatMap { case (hB, hE) =>
         val p = hB.toInt
         if (hB + 4 > hE) None
         else {
@@ -901,11 +893,7 @@ object Multimodal {
           else None
         }
       }
-      val stts = for {
-        (fBody, fEnd) <- mp4Child(bytes, dBody, dEnd, "minf")
-        (sBody, sEnd) <- mp4Child(bytes, fBody, fEnd, "stbl")
-        t <- mp4Child(bytes, sBody, sEnd, "stts")
-      } yield t
+      val stts = mp4Path(bytes, mdia, "minf", "stbl", "stts")
       (ts, stts) match {
         case (Some(scale), Some((tB, tE))) if scale > 0 =>
           val p = tB.toInt
@@ -1002,30 +990,9 @@ object Multimodal {
     * directly, so expected values in oracles come from the arguments
     * alone — independent of the walker under test.
     */
-  def makeMp4(timescale: Int, duration: Int, nTracks: Int): Array[Byte] = {
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val out = new Array[Byte](8 + payload.length)
-      val sz = out.length
-      out(0) = (sz >>> 24).toByte; out(1) = (sz >>> 16).toByte
-      out(2) = (sz >>> 8).toByte; out(3) = sz.toByte
-      System.arraycopy(typ.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
-        0, out, 4, 4)
-      System.arraycopy(payload, 0, out, 8, payload.length)
-      out
-    }
-    def putBe32(a: Array[Byte], off: Int, v: Int): Unit = {
-      a(off) = (v >>> 24).toByte; a(off + 1) = (v >>> 16).toByte
-      a(off + 2) = (v >>> 8).toByte; a(off + 3) = v.toByte
-    }
-    val ftypPayload = new Array[Byte](8)
-    System.arraycopy("isom".getBytes, 0, ftypPayload, 0, 4)
-    val mvhdPayload = new Array[Byte](100) // version 0 layout, zeros elsewhere
-    putBe32(mvhdPayload, 12, timescale)
-    putBe32(mvhdPayload, 16, duration)
-    val moovPayload = box("mvhd", mvhdPayload) ++
-      Array.fill(nTracks)(box("trak", Array.emptyByteArray)).flatten
-    box("ftyp", ftypPayload) ++ box("moov", moovPayload)
-  }
+  def makeMp4(timescale: Int, duration: Int, nTracks: Int): Array[Byte] =
+    mp4Ftyp ++ mp4BoxBytes("moov", mp4Mvhd(timescale, duration) ++
+      Array.fill(nTracks)(mp4BoxBytes("trak", Array.emptyByteArray)).flatten)
 
   private def mp4BoxBytes(typ: String, payload: Array[Byte]): Array[Byte] = {
     val out = new Array[Byte](8 + payload.length)
@@ -1039,6 +1006,18 @@ object Multimodal {
   private def mp4PutBe32(a: Array[Byte], off: Int, v: Int): Unit = {
     a(off) = (v >>> 24).toByte; a(off + 1) = (v >>> 16).toByte
     a(off + 2) = (v >>> 8).toByte; a(off + 3) = v.toByte
+  }
+
+  /** The `ftyp` box every fixture MP4 opens with (brand `isom`). */
+  private def mp4Ftyp: Array[Byte] =
+    mp4BoxBytes("ftyp", "isom".getBytes("US-ASCII") ++ new Array[Byte](4))
+
+  /** A version-0 `mvhd` box: timescale and duration, zeros elsewhere. */
+  private def mp4Mvhd(timescale: Int, duration: Int): Array[Byte] = {
+    val payload = new Array[Byte](100)
+    mp4PutBe32(payload, 12, timescale)
+    mp4PutBe32(payload, 16, duration)
+    mp4BoxBytes("mvhd", payload)
   }
 
   /** Hand-assembled MP4 WITH a real sample table: ftyp + moov(mvhd +
@@ -1109,9 +1088,6 @@ object Multimodal {
       java.util.Arrays.fill(mdatPayload, p, p + sz, (i % 251).toByte); p += sz
     }
 
-    val mvhdPayload = new Array[Byte](100) // version 0 layout
-    mp4PutBe32(mvhdPayload, 12, timescale)
-    mp4PutBe32(mvhdPayload, 16, duration)
     val sttsBoxes =
       if (timeDeltas.isEmpty) Array.emptyByteArray
       else {
@@ -1134,13 +1110,10 @@ object Multimodal {
         mp4BoxBytes("mdhd", mdhdPayload)
       }
     val moov = mp4BoxBytes("moov",
-      mp4BoxBytes("mvhd", mvhdPayload) ++
+      mp4Mvhd(timescale, duration) ++
         mp4BoxBytes("trak",
           mp4BoxBytes("mdia", mdhdBoxes ++ mp4BoxBytes("minf", stbl))))
-    val ftypPayload = new Array[Byte](8)
-    System.arraycopy("isom".getBytes, 0, ftypPayload, 0, 4)
-    val bytes = mp4BoxBytes("ftyp", ftypPayload) ++ moov ++
-      mp4BoxBytes("mdat", mdatPayload)
+    val bytes = mp4Ftyp ++ moov ++ mp4BoxBytes("mdat", mdatPayload)
     assert(bytes.length - mdatPayload.length == dataStart,
       "layout arithmetic out of sync with assembly")
     bytes
@@ -1190,16 +1163,58 @@ object Multimodal {
     * [[makeWav]], kept separate so oracle CRCs come from pure
     * arithmetic, independent of the AudioSystem path under test.
     */
-  def pcm16Bytes(samples: Array[Short]): Array[Byte] = {
-    val out = new Array[Byte](samples.length * 2)
-    var i = 0
-    while (i < samples.length) {
-      out(2 * i) = (samples(i) & 0xff).toByte
-      out(2 * i + 1) = ((samples(i) >> 8) & 0xff).toByte
-      i += 1
+  def pcm16Bytes(samples: Array[Short]): Array[Byte] =
+    leBytes(samples.length * 2)(bb => samples.foreach(bb.putShort))
+
+  // ---- RIFF chunks (WAV, AVI) -------------------------------------------
+
+  private def le16(b: Array[Byte], off: Int): Int =
+    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
+  private def le32(b: Array[Byte], off: Int): Long =
+    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
+      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+
+  /** `bytes` open with `RIFF` and carry the form type `form` (`WAVE`,
+    * `AVI `): the magic gate in front of every RIFF parser.
+    */
+  private def isRiffForm(bytes: Array[Byte], form: String): Boolean =
+    bytes.length >= 12 &&
+      (0 until 4).forall(i => bytes(i) == "RIFF"(i) && bytes(8 + i) == form(i))
+
+  /** The chunks in `[start, end)` as `(fourcc, body offset, body size)`;
+    * an odd-sized body is followed by one pad byte. None as soon as a
+    * chunk overruns `end`; a tail shorter than a chunk header is ignored.
+    */
+  private def riffChunks(
+      bytes: Array[Byte], start: Long, end: Long): Option[Vector[(String, Long, Long)]] = {
+    val out = Vector.newBuilder[(String, Long, Long)]
+    var off = start
+    while (off + 8 <= end) {
+      val sz = le32(bytes, off.toInt + 4)
+      if (off + 8 + sz > end) return None
+      out += ((fourcc(bytes, off.toInt), off + 8, sz))
+      off += 8 + sz + (sz & 1)
     }
-    out
+    Some(out.result())
   }
+
+  /** `n` bytes filled little-endian by `put`. */
+  private def leBytes(n: Int)(put: java.nio.ByteBuffer => Unit): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    put(bb)
+    bb.array()
+  }
+
+  /** One RIFF chunk: fourcc, little-endian body size, body, and a pad
+    * byte after an odd-sized body.
+    */
+  private def riffChunk(id: String, body: Array[Byte]): Array[Byte] =
+    id.getBytes("US-ASCII") ++ leBytes(4)(_.putInt(body.length)) ++ body ++
+      new Array[Byte](body.length & 1)
+
+  /** A `RIFF` or `LIST` chunk of form/list type `typ` holding `chunks`. */
+  private def riffList(id: String, typ: String, chunks: Array[Byte]*): Array[Byte] =
+    riffChunk(id, typ.getBytes("US-ASCII") ++ chunks.flatten)
 
   /** Hand-assembled canonical RIFF/WAVE container (16-bit PCM, 44-byte
     * header) — deterministic bytes with no encoder in the loop.
@@ -1207,19 +1222,13 @@ object Multimodal {
   def makeWav(sampleRate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
     require(channels > 0 && samples.length % channels == 0,
       "sample count must be a whole number of frames")
-    val data = pcm16Bytes(samples)
     val blockAlign = channels * 2
-    val bb = java.nio.ByteBuffer.allocate(44 + data.length)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + data.length)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1).putShort(channels.toShort)       // PCM, channels
-      .putInt(sampleRate).putInt(sampleRate * blockAlign)
-      .putShort(blockAlign.toShort).putShort(16)    // block align, bits
-      .put("data".getBytes("US-ASCII")).putInt(data.length)
-      .put(data)
-    bb.array()
+    riffList("RIFF", "WAVE",
+      riffChunk("fmt ", leBytes(16)(_
+        .putShort(1).putShort(channels.toShort)       // PCM, channels
+        .putInt(sampleRate).putInt(sampleRate * blockAlign)
+        .putShort(blockAlign.toShort).putShort(16))), // block align, bits
+      riffChunk("data", pcm16Bytes(samples)))
   }
 
   /** Fixture WAV definitions: 0 = 8 kHz mono 64-sample ramp, 1 = 16 kHz
@@ -1237,25 +1246,14 @@ object Multimodal {
     case _ => (16000, 2, Array.tabulate(96)(i => ((i * 571) % 60000 - 30000).toShort))
   }
 
-  /** The fixture WAVs as blobs (doc_id -21 mono, -22 stereo — ids that
-    * can never collide with the documents table).
+  /** The first `n` fixture WAVs as blobs (doc_id -21 mono, -22 stereo,
+    * -23 the silence-flag fixture — ids that can never collide with the
+    * documents table). The metadata query takes 2 (its oracle hardcodes
+    * two rows), the windowed-RMS and decimation queries all 3.
     */
-  def fixtureWavBlobs(spark: SparkSession): Dataset[MediaBlob] = {
+  def fixtureWavBlobs(spark: SparkSession, n: Int): Dataset[MediaBlob] = {
     import spark.implicits._
-    (0 until 2).map { i =>
-      val (rate, ch, samples) = fixtureWavSamples(i)
-      MediaBlob(-21L - i, "audio", makeWav(rate, ch, samples))
-    }.toDS()
-  }
-
-  /** All three WAV fixtures (doc_id -21 mono, -22 stereo, -23 the
-    * silence-flag fixture) — the windowed-RMS query's input set;
-    * [[fixtureWavBlobs]] keeps the original pair for the metadata query
-    * whose oracle hardcodes two rows.
-    */
-  def fixtureWavBlobsRms(spark: SparkSession): Dataset[MediaBlob] = {
-    import spark.implicits._
-    (0 until 3).map { i =>
+    (0 until n).map { i =>
       val (rate, ch, samples) = fixtureWavSamples(i)
       MediaBlob(-21L - i, "audio", makeWav(rate, ch, samples))
     }.toDS()
@@ -1311,55 +1309,93 @@ object Multimodal {
     require(framePx.nonEmpty && framePx.forall(_.length == w * h),
       "each frame must carry w*h pixels")
     val stride = dibStride(w)
-    val frameBytes = stride * h
-    val moviContent = 4 + framePx.length * (8 + frameBytes)
-    val hdrlSize = 4 + 64 + (8 + 4 + 64 + 48) // 'hdrl' + avih + LIST strl
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviContent)
-    val bb = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-    cc("RIFF"); bb.putInt(riffSize); cc("AVI ")
-    cc("LIST"); bb.putInt(hdrlSize); cc("hdrl")
-    cc("avih"); bb.putInt(56)
-    bb.putInt(usPerFrame).putInt(0).putInt(0).putInt(0)
-      .putInt(framePx.length).putInt(0).putInt(1).putInt(frameBytes)
-      .putInt(w).putInt(h).putInt(0).putInt(0).putInt(0).putInt(0)
-    cc("LIST"); bb.putInt(4 + 64 + 48); cc("strl")
-    cc("strh"); bb.putInt(56)
-    cc("vids"); cc("DIB ")
-    bb.putInt(0).putInt(0).putInt(0)
-      .putInt(usPerFrame).putInt(1000000) // scale/rate: rate/scale = fps
-      .putInt(0).putInt(framePx.length).putInt(frameBytes).putInt(-1).putInt(0)
-      .putShort(0).putShort(0).putShort(w.toShort).putShort(h.toShort)
-    cc("strf"); bb.putInt(40)
-    bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-      .putInt(0).putInt(frameBytes).putInt(0).putInt(0).putInt(0).putInt(0)
-    cc("LIST"); bb.putInt(moviContent); cc("movi")
-    framePx.foreach { px =>
-      cc("00db"); bb.putInt(frameBytes)
-      var y = h - 1
-      while (y >= 0) { // bottom-up rows
+    makeAvi(w, h, usPerFrame, "DIB ", 0, "00db", framePx.map { px =>
+      val dib = new Array[Byte](stride * h) // row padding stays zero
+      var y = 0
+      while (y < h) {
+        val row = stride * (h - 1 - y) // bottom-up rows
         var x = 0
         while (x < w) {
           val p = px(y * w + x)
-          bb.put((p & 0xff).toByte)          // B
-            .put(((p >> 8) & 0xff).toByte)   // G
-            .put(((p >> 16) & 0xff).toByte)  // R
+          dib(row + 3 * x) = p.toByte              // B
+          dib(row + 3 * x + 1) = (p >> 8).toByte   // G
+          dib(row + 3 * x + 2) = (p >> 16).toByte  // R
           x += 1
         }
-        var pad = stride - w * 3
-        while (pad > 0) { bb.put(0.toByte); pad -= 1 }
-        y -= 1
+        y += 1
       }
-    }
-    bb.array()
+      dib
+    })
   }
 
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xffL) | ((b(off + 1) & 0xffL) << 8) |
-      ((b(off + 2) & 0xffL) << 16) | ((b(off + 3) & 0xffL) << 24)
+  /** RIFF/AVI container with one 'vids' stream: avih, a strl whose strh
+    * names the stream handler `handler` and whose strf carries the
+    * biCompression `comp`, then one `chunkId` chunk per frame payload in
+    * movi.
+    */
+  private def makeAvi(w: Int, h: Int, usPerFrame: Int, handler: String,
+      comp: Int, chunkId: String, frames: Seq[Array[Byte]]): Array[Byte] = {
+    val n = frames.length
+    val maxF = frames.map(_.length).max
+    riffList("RIFF", "AVI ",
+      riffList("LIST", "hdrl",
+        riffChunk("avih", leBytes(56)(_
+          .putInt(usPerFrame).putInt(0).putInt(0).putInt(0)
+          .putInt(n).putInt(0).putInt(1).putInt(maxF)
+          .putInt(w).putInt(h).putInt(0).putInt(0).putInt(0).putInt(0))),
+        riffList("LIST", "strl",
+          riffChunk("strh", leBytes(56)(_
+            .put("vids".getBytes("US-ASCII")).put(handler.getBytes("US-ASCII"))
+            .putInt(0).putInt(0).putInt(0)
+            .putInt(usPerFrame).putInt(1000000) // scale/rate: rate/scale = fps
+            .putInt(0).putInt(n).putInt(maxF).putInt(-1).putInt(0)
+            .putShort(0).putShort(0).putShort(w.toShort).putShort(h.toShort))),
+          riffChunk("strf", leBytes(40)(_
+            .putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
+            .putInt(comp).putInt(maxF).putInt(0).putInt(0).putInt(0).putInt(0))))),
+      riffList("LIST", "movi", frames.map(riffChunk(chunkId, _)): _*))
+  }
+
+  /** What the AVI parsers read from a RIFF/AVI container's headers. */
+  private final case class AviHeader(
+      w: Int, h: Int, usPerFrame: Int, bpp: Int, comp: Long,
+      movi: Vector[(String, Long, Long)]) {
+    def withFrames(fs: Seq[Array[Int]]): Option[(Int, Int, Int, Seq[Array[Int]])] =
+      if (fs.isEmpty) None else Some((w, h, usPerFrame, fs))
+  }
+
+  /** One walk over a RIFF/AVI container: width, height and µs/frame
+    * from the last `avih` of its `hdrl` lists, bits per pixel and
+    * biCompression from the last `strf` of their `strl` lists, and the
+    * chunks of the last `movi` list. None unless the bytes are RIFF/AVI
+    * with positive dimensions inside the [[MaxDecodePixels]] bomb guard
+    * and a `movi` list, or as soon as a chunk overruns its parent.
+    */
+  private def aviHeader(bytes: Array[Byte]): Option[AviHeader] = {
+    type Chunks = Vector[(String, Long, Long)]
+    def lists(chunks: Chunks, typ: String): Vector[(Long, Long)] = chunks.collect {
+      case ("LIST", body, sz) if sz >= 4 && fourcc(bytes, body.toInt) == typ =>
+        (body + 4, body + sz)
+    }
+    def walk(ranges: Vector[(Long, Long)]): Option[Chunks] =
+      ranges.foldLeft(Option(Vector.empty: Chunks)) { case (acc, (start, end)) =>
+        for (a <- acc; c <- riffChunks(bytes, start, end)) yield a ++ c
+      }
+    if (!isRiffForm(bytes, "AVI ")) None
+    else for {
+      top <- riffChunks(bytes, 12, math.min(bytes.length.toLong, 8L + le32(bytes, 4)))
+      hdrl <- walk(lists(top, "hdrl"))
+      strl <- walk(lists(hdrl, "strl"))
+      avih <- hdrl.findLast(c => c._1 == "avih" && c._3 >= 40).map(_._2.toInt)
+      strf <- strl.findLast(c => c._1 == "strf" && c._3 >= 20).map(_._2.toInt)
+      w = le32(bytes, avih + 32).toInt
+      h = le32(bytes, avih + 36).toInt
+      if w > 0 && h > 0 && w.toLong * h.toLong <= MaxDecodePixels
+      (moviStart, moviEnd) <- lists(top, "movi").lastOption
+      movi <- riffChunks(bytes, moviStart, moviEnd)
+    } yield AviHeader(w, h, le32(bytes, avih).toInt,
+      le16(bytes, strf + 14), le32(bytes, strf + 16), movi)
+  }
 
   /** Decode an uncompressed-DIB AVI: `(width, height, usPerFrame,
     * frames)` with row-major top-down 0xRRGGBB pixels per frame. Returns
@@ -1369,91 +1405,29 @@ object Multimodal {
     * but 'WAVE'), MP4, and codec'd AVIs away from this path.
     */
   def parseAviDib(
-      bytes: Array[Byte]): Option[(Int, Int, Int, Seq[Array[Int]])] = {
-    val isAvi = bytes.length >= 12 &&
-      bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
-      bytes(8) == 'A' && bytes(9) == 'V' && bytes(10) == 'I' && bytes(11) == ' '
-    if (!isAvi) return None
-    val end = math.min(bytes.length.toLong, 8L + le32(bytes, 4))
-    var w = 0; var h = 0; var us = 0; var bpp = 0; var comp = -1L
-    var moviStart = -1L; var moviEnd = -1L
-    // one pass over the top-level chunks; hdrl/strl walked inline
-    var off = 12L
-    while (off + 8 <= end) {
-      val id = fourcc(bytes, off.toInt)
-      val sz = le32(bytes, off.toInt + 4)
-      val body = off + 8
-      if (body + sz > end) return None
-      if (id == "LIST" && sz >= 4) {
-        val sub = fourcc(bytes, body.toInt)
-        if (sub == "hdrl") {
-          var o = body + 4
-          val hEnd = body + sz
-          while (o + 8 <= hEnd) {
-            val cid = fourcc(bytes, o.toInt)
-            val csz = le32(bytes, o.toInt + 4)
-            val cb = o + 8
-            if (cb + csz > hEnd) return None
-            if (cid == "avih" && csz >= 40) {
-              us = le32(bytes, cb.toInt).toInt
-              w = le32(bytes, cb.toInt + 32).toInt
-              h = le32(bytes, cb.toInt + 36).toInt
-            } else if (cid == "LIST" && csz >= 4 &&
-                fourcc(bytes, cb.toInt) == "strl") {
-              var so = cb + 4
-              val sEnd = cb + csz
-              while (so + 8 <= sEnd) {
-                val sid = fourcc(bytes, so.toInt)
-                val ssz = le32(bytes, so.toInt + 4)
-                if (so + 8 + ssz > sEnd) return None
-                if (sid == "strf" && ssz >= 20) {
-                  bpp = le16(bytes, so.toInt + 8 + 14)
-                  comp = le32(bytes, so.toInt + 8 + 16)
-                }
-                so += 8 + ssz + (ssz & 1)
-              }
+      bytes: Array[Byte]): Option[(Int, Int, Int, Seq[Array[Int]])] =
+    aviHeader(bytes).filter(a => a.bpp == 24 && a.comp == 0L).flatMap { a =>
+      val (w, h) = (a.w, a.h)
+      val stride = dibStride(w)
+      a.withFrames(a.movi.collect {
+        case (id, body, sz) if (id == "00db" || id == "00dc") && sz == stride.toLong * h =>
+          val px = new Array[Int](w * h)
+          var y = 0
+          while (y < h) {
+            val row = body + stride.toLong * (h - 1 - y) // bottom-up
+            var x = 0
+            while (x < w) {
+              val o = (row + x * 3).toInt
+              px(y * w + x) = (bytes(o) & 0xff) |               // B
+                ((bytes(o + 1) & 0xff) << 8) |                  // G
+                ((bytes(o + 2) & 0xff) << 16)                   // R -> 0xRRGGBB
+              x += 1
             }
-            o = cb + csz + (csz & 1)
+            y += 1
           }
-        } else if (sub == "movi") {
-          moviStart = body + 4; moviEnd = body + sz
-        }
-      }
-      off = body + sz + (sz & 1)
+          px
+      })
     }
-    if (w <= 0 || h <= 0 || bpp != 24 || comp != 0L ||
-        w.toLong * h.toLong > MaxDecodePixels ||
-        moviStart < 0) return None
-    val stride = dibStride(w)
-    val frames = Seq.newBuilder[Array[Int]]
-    var fo = moviStart
-    while (fo + 8 <= moviEnd) {
-      val id = fourcc(bytes, fo.toInt)
-      val sz = le32(bytes, fo.toInt + 4)
-      val body = fo + 8
-      if (body + sz > moviEnd) return None
-      if ((id == "00db" || id == "00dc") && sz == stride.toLong * h) {
-        val px = new Array[Int](w * h)
-        var y = 0
-        while (y < h) {
-          val row = body + stride.toLong * (h - 1 - y) // bottom-up
-          var x = 0
-          while (x < w) {
-            val o = (row + x * 3).toInt
-            px(y * w + x) = (bytes(o) & 0xff) |               // B
-              ((bytes(o + 1) & 0xff) << 8) |                  // G
-              ((bytes(o + 2) & 0xff) << 16)                   // R -> 0xRRGGBB
-            x += 1
-          }
-          y += 1
-        }
-        frames += px
-      }
-      fo = body + sz + (sz & 1)
-    }
-    val fs = frames.result()
-    if (fs.isEmpty) None else Some((w, h, us, fs))
-  }
 
   // ---- AVI (MJPEG) video frame decode -----------------------------------
   //
@@ -1500,35 +1474,7 @@ object Multimodal {
   def makeAviMjpg(
       w: Int, h: Int, usPerFrame: Int, jpegFrames: Seq[Array[Byte]]): Array[Byte] = {
     require(jpegFrames.nonEmpty, "at least one frame")
-    val moviContent = 4 + jpegFrames.map(f => 8 + f.length + (f.length & 1)).sum
-    val hdrlSize = 4 + 64 + (8 + 4 + 64 + 48)
-    val riffSize = 4 + (8 + hdrlSize) + (8 + moviContent)
-    val bb = java.nio.ByteBuffer.allocate(8 + riffSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    def cc(s: String) = bb.put(s.getBytes("US-ASCII"))
-    val maxF = jpegFrames.map(_.length).max
-    cc("RIFF"); bb.putInt(riffSize); cc("AVI ")
-    cc("LIST"); bb.putInt(hdrlSize); cc("hdrl")
-    cc("avih"); bb.putInt(56)
-    bb.putInt(usPerFrame).putInt(0).putInt(0).putInt(0)
-      .putInt(jpegFrames.length).putInt(0).putInt(1).putInt(maxF)
-      .putInt(w).putInt(h).putInt(0).putInt(0).putInt(0).putInt(0)
-    cc("LIST"); bb.putInt(4 + 64 + 48); cc("strl")
-    cc("strh"); bb.putInt(56)
-    cc("vids"); cc("MJPG")
-    bb.putInt(0).putInt(0).putInt(0)
-      .putInt(usPerFrame).putInt(1000000)
-      .putInt(0).putInt(jpegFrames.length).putInt(maxF).putInt(-1).putInt(0)
-      .putShort(0).putShort(0).putShort(w.toShort).putShort(h.toShort)
-    cc("strf"); bb.putInt(40)
-    bb.putInt(40).putInt(w).putInt(h).putShort(1).putShort(24)
-      .putInt(MjpgFourcc.toInt).putInt(maxF).putInt(0).putInt(0).putInt(0).putInt(0)
-    cc("LIST"); bb.putInt(moviContent); cc("movi")
-    jpegFrames.foreach { f =>
-      cc("00dc"); bb.putInt(f.length); bb.put(f)
-      if ((f.length & 1) == 1) bb.put(0.toByte)
-    }
-    bb.array()
+    makeAvi(w, h, usPerFrame, "MJPG", MjpgFourcc.toInt, "00dc", jpegFrames)
   }
 
   /** Decode an MJPEG AVI: `(width, height, usPerFrame, frames)` — the
@@ -1538,78 +1484,18 @@ object Multimodal {
     * frame survives or the container isn't an MJPG AVI.
     */
   def parseAviMjpg(
-      bytes: Array[Byte]): Option[(Int, Int, Int, Seq[Array[Int]])] = {
-    val isAvi = bytes.length >= 12 &&
-      bytes(0) == 'R' && bytes(1) == 'I' && bytes(2) == 'F' && bytes(3) == 'F' &&
-      bytes(8) == 'A' && bytes(9) == 'V' && bytes(10) == 'I' && bytes(11) == ' '
-    if (!isAvi) return None
-    val end = math.min(bytes.length.toLong, 8L + le32(bytes, 4))
-    var w = 0; var h = 0; var us = 0; var comp = -1L
-    var moviStart = -1L; var moviEnd = -1L
-    var off = 12L
-    while (off + 8 <= end) {
-      val id = fourcc(bytes, off.toInt)
-      val sz = le32(bytes, off.toInt + 4)
-      val body = off + 8
-      if (body + sz > end) return None
-      if (id == "LIST" && sz >= 4) {
-        val sub = fourcc(bytes, body.toInt)
-        if (sub == "hdrl") {
-          var o = body + 4
-          val hEnd = body + sz
-          while (o + 8 <= hEnd) {
-            val cid = fourcc(bytes, o.toInt)
-            val csz = le32(bytes, o.toInt + 4)
-            val cb = o + 8
-            if (cb + csz > hEnd) return None
-            if (cid == "avih" && csz >= 40) {
-              us = le32(bytes, cb.toInt).toInt
-              w = le32(bytes, cb.toInt + 32).toInt
-              h = le32(bytes, cb.toInt + 36).toInt
-            } else if (cid == "LIST" && csz >= 4 &&
-                fourcc(bytes, cb.toInt) == "strl") {
-              var so = cb + 4
-              val sEnd = cb + csz
-              while (so + 8 <= sEnd) {
-                val sid = fourcc(bytes, so.toInt)
-                val ssz = le32(bytes, so.toInt + 4)
-                if (so + 8 + ssz > sEnd) return None
-                if (sid == "strf" && ssz >= 20)
-                  comp = le32(bytes, so.toInt + 8 + 16)
-                so += 8 + ssz + (ssz & 1)
-              }
-            }
-            o = cb + csz + (csz & 1)
+      bytes: Array[Byte]): Option[(Int, Int, Int, Seq[Array[Int]])] =
+    aviHeader(bytes).filter(_.comp == MjpgFourcc).flatMap { a =>
+      a.withFrames(a.movi.flatMap {
+        case ("00dc", body, sz) if sz > 0 =>
+          decodeJpegPx(java.util.Arrays.copyOfRange(
+            bytes, body.toInt, (body + sz).toInt)).collect {
+            // the JPEG's own dimensions rule; require container agreement
+            case (jw, jh, px) if jw == a.w && jh == a.h => px
           }
-        } else if (sub == "movi") {
-          moviStart = body + 4; moviEnd = body + sz
-        }
-      }
-      off = body + sz + (sz & 1)
+        case _ => None
+      })
     }
-    if (w <= 0 || h <= 0 || comp != MjpgFourcc ||
-        w.toLong * h.toLong > MaxDecodePixels ||
-        moviStart < 0) return None
-    val frames = Seq.newBuilder[Array[Int]]
-    var fo = moviStart
-    while (fo + 8 <= moviEnd) {
-      val id = fourcc(bytes, fo.toInt)
-      val sz = le32(bytes, fo.toInt + 4)
-      val body = fo + 8
-      if (body + sz > moviEnd) return None
-      if (id == "00dc" && sz > 0) {
-        val payload = java.util.Arrays.copyOfRange(
-          bytes, body.toInt, (body + sz).toInt)
-        decodeJpegPx(payload).foreach { case (jw, jh, px) =>
-          // the JPEG's own dimensions rule; require container agreement
-          if (jw == w && jh == h) frames += px
-        }
-      }
-      fo = body + sz + (sz & 1)
-    }
-    val fs = frames.result()
-    if (fs.isEmpty) None else Some((w, h, us, fs))
-  }
 
   /** Batch REAL video frame decode: one row per frame of every blob that
     * parses as an uncompressed-DIB AVI (pure byte arithmetic) or an
@@ -1637,18 +1523,21 @@ object Multimodal {
     * 16x12@25fps sharing two frame patterns with 0; 2: 2-frame
     * 10x6@25fps (odd width exercises the stride-4 row padding).
     */
-  def fixtureAviFrames(which: Int): (Int, Int, Int, Seq[Array[Int]]) = {
-    def frame(w: Int, h: Int, img: Int): Array[Int] =
-      Array.tabulate(w * h) { i =>
-        val g = patternGray(img, (i % w) % PatternSize, (i / w) % PatternSize)
-        (g << 16) | (g << 8) | g
-      }
+  def fixtureAviFrames(which: Int): (Int, Int, Int, Seq[Array[Int]]) =
     which match {
-      case 0 => (16, 12, 100000, (0 until 4).map(frame(16, 12, _)))
-      case 1 => (16, 12, 40000, Seq(0, 1, 5).map(frame(16, 12, _)))
-      case _ => (10, 6, 40000, (2 until 4).map(frame(10, 6, _)))
+      case 0 => (16, 12, 100000, (0 until 4).map(grayFrame(16, 12, _)))
+      case 1 => (16, 12, 40000, Seq(0, 1, 5).map(grayFrame(16, 12, _)))
+      case _ => (10, 6, 40000, (2 until 4).map(grayFrame(10, 6, _)))
     }
-  }
+
+  /** Pattern `img` as a w x h frame of row-major 0xRRGGBB grays
+    * ([[patternGray]] tiled past PatternSize).
+    */
+  private def grayFrame(w: Int, h: Int, img: Int): Array[Int] =
+    Array.tabulate(w * h) { i =>
+      val g = patternGray(img, (i % w) % PatternSize, (i / w) % PatternSize)
+      (g << 16) | (g << 8) | g
+    }
 
   /** Scene-structured AVI fixture: frame pattern ids A,A,A,B,B,A,C,C —
     * three repeated-frame scenes plus a REVISIT of pattern A (a cut
@@ -1657,14 +1546,8 @@ object Multimodal {
     */
   val fixtureAviScenePatterns: Seq[Int] = Seq(0, 0, 0, 1, 1, 0, 2, 2)
 
-  def fixtureAviSceneFrames: (Int, Int, Int, Seq[Array[Int]]) = {
-    def frame(w: Int, h: Int, img: Int): Array[Int] =
-      Array.tabulate(w * h) { i =>
-        val g = patternGray(img, (i % w) % PatternSize, (i / w) % PatternSize)
-        (g << 16) | (g << 8) | g
-      }
-    (16, 12, 50000, fixtureAviScenePatterns.map(frame(16, 12, _)))
-  }
+  def fixtureAviSceneFrames: (Int, Int, Int, Seq[Array[Int]]) =
+    (16, 12, 50000, fixtureAviScenePatterns.map(grayFrame(16, 12, _)))
 
   def fixtureAviSceneBlob(spark: SparkSession): Dataset[MediaBlob] = {
     import spark.implicits._
@@ -1685,11 +1568,7 @@ object Multimodal {
     * bytes) — three pattern frames ImageIO-encoded once per JVM. */
   lazy val fixtureMjpgJpegs: (Int, Int, Int, Seq[Array[Byte]]) = {
     val (w, h, us) = (16, 12, 66000)
-    def frame(img: Int): Array[Int] = Array.tabulate(w * h) { i =>
-      val g = patternGray(img, (i % w) % PatternSize, (i / w) % PatternSize)
-      (g << 16) | (g << 8) | g
-    }
-    (w, h, us, (0 until 3).map(i => encodeJpeg(frame(i), w, h)))
+    (w, h, us, (0 until 3).map(i => encodeJpeg(grayFrame(w, h, i), w, h)))
   }
 
   /** The fixture MJPEG AVI as a blob (doc_id -54). */

@@ -75,7 +75,7 @@ object MultimodalQueries {
         // AudioSystem path under test
         Multimodal.decodeAudio(
           Multimodal.blobsFromDocuments(s, tbl(s, dir, "documents"))
-            .unionByName(Multimodal.fixtureWavBlobs(s)))
+            .unionByName(Multimodal.fixtureWavBlobs(s, 2)))
           .toDF()
           .select(col("doc_id"), col("n_bytes"),
             col("sample_rate").cast("long").as("sample_rate"),
@@ -108,7 +108,7 @@ object MultimodalQueries {
         // so the silence flag fires at least once.
         Multimodal.decodeAudioWindows(
           Multimodal.blobsFromDocuments(s, tbl(s, dir, "documents"))
-            .unionByName(Multimodal.fixtureWavBlobsRms(s)), win = 32)
+            .unionByName(Multimodal.fixtureWavBlobs(s, 3)), win = 32)
           .toDF()
           .select(col("doc_id"), col("win_id"),
             col("n").cast("long").as("n"), col("sumsq"),
@@ -146,7 +146,7 @@ object MultimodalQueries {
         // makeWav -> AudioSystem -> decimate.
         Multimodal.downsampleAudio2x(
           Multimodal.blobsFromDocuments(s, tbl(s, dir, "documents"))
-            .unionByName(Multimodal.fixtureWavBlobsRms(s)))
+            .unionByName(Multimodal.fixtureWavBlobs(s, 3)))
           .toDF()
           .orderBy("doc_id"),
       Some {

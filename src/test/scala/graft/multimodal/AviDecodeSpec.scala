@@ -112,6 +112,77 @@ class AviDecodeSpec extends SparkSpec {
     assert(kept.size == jpegs.size - 1)
   }
 
+  private def lenCrc(b: Array[Byte]): (Int, Long) = {
+    val c = new java.util.zip.CRC32()
+    c.update(b)
+    (b.length, c.getValue)
+  }
+
+  /** `a` with the little-endian int at `off` set to `v`. */
+  private def withLe32(a: Array[Byte], off: Int, v: Int): Array[Byte] = {
+    val b = a.clone()
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(off, v)
+    b
+  }
+
+  test("AVI writer bytes are pinned: makeAviDib on the fixtures, " +
+    "makeAviMjpg on even and odd payloads") {
+    val dib = (0 until 3).map(Multimodal.fixtureAviFrames) :+
+      Multimodal.fixtureAviSceneFrames
+    assert(dib.map { case (w, h, us, frames) =>
+      lenCrc(Multimodal.makeAviDib(w, h, us, frames))
+    } === Seq((2560, 238301977L), (1976, 869569781L), (624, 2454982656L),
+      (4896, 1194979616L)))
+    // ImageIO's JPEG bytes are JDK-specific: pin the container on
+    // synthetic payloads, an odd one between and after even ones
+    val even = Array.fill[Byte](36)(7)
+    val odd = Array.fill[Byte](37)(9)
+    assert(Seq(Seq(even, odd), Seq(odd, even, odd)).map(fs =>
+      lenCrc(Multimodal.makeAviMjpg(16, 12, 66000, fs))) ===
+      Seq((314, 3933984704L), (360, 985057436L)))
+  }
+
+  test("malformed AVIs parse to None in both parsers") {
+    // byte offsets of the layout both writers emit: avih body at 32
+    // (width 64, height 68), strf size at 168, LIST movi size at 216,
+    // 'movi' at 220, first frame chunk header at 224
+    val (w, h, us, frames) = Multimodal.fixtureAviFrames(0)
+    val (mw, mh, mus, jpegs) = Multimodal.fixtureMjpgJpegs
+    val dib = Multimodal.makeAviDib(w, h, us, frames)
+    val mjpg = Multimodal.makeAviMjpg(mw, mh, mus, jpegs)
+    assert(Multimodal.parseAviDib(dib).isDefined && Multimodal.parseAviMjpg(mjpg).isDefined)
+    for (avi <- Seq(dib, mjpg)) {
+      val moviSize = java.nio.ByteBuffer.wrap(avi)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt(216)
+      val cases = Seq(
+        "avih overruns hdrl" -> withLe32(avi, 28, 200),
+        "strf overruns strl" -> withLe32(avi, 168, 100),
+        "frame overruns movi" -> withLe32(avi, 228, moviSize),
+        "w*h > MaxDecodePixels" -> withLe32(withLe32(avi, 64, 65536), 68, 65536),
+        "negative height" -> withLe32(avi, 68, -12),
+        "empty movi" -> withLe32(withLe32(avi.take(224), 4, 216), 216, 4))
+      for ((what, bytes) <- cases) {
+        assert(Multimodal.parseAviDib(bytes).isEmpty, what)
+        assert(Multimodal.parseAviMjpg(bytes).isEmpty, what)
+      }
+    }
+  }
+
+  test("MJPEG AVI: odd-length payloads survive a write->parse round trip") {
+    val (w, h, us, jpegs) = Multimodal.fixtureMjpgJpegs
+    // the JPEG reader stops at EOI, so a trailing byte leaves the image
+    // intact while making the payload length odd
+    val odd = jpegs.map(j => if (j.length % 2 == 0) j :+ 0.toByte else j)
+    assert(odd.forall(_.length % 2 == 1))
+    val avi = Multimodal.makeAviMjpg(w, h, us, odd)
+    assert(avi.length == 224 + odd.map(j => 8 + j.length + 1).sum)
+    val Some((pw, ph, pus, frames)) = Multimodal.parseAviMjpg(avi)
+    assert((pw, ph, pus) == (w, h, us) && frames.size == odd.size)
+    frames.zip(jpegs).foreach { case (px, j) =>
+      assert(px.sameElements(Multimodal.decodeJpegPx(j).get._3))
+    }
+  }
+
   test("distributed MJPEG decode matches the fixture's expected rows") {
     val rows = Multimodal.decodeVideoFrames(Multimodal.fixtureMjpgBlobs(spark))
       .collect().sortBy(_.frame_idx)

@@ -96,7 +96,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("WAV decode: AudioSystem round-trip equals the pure-arithmetic fixture values") {
     import spark.implicits._
-    val mixed = Multimodal.fixtureWavBlobs(spark).unionByName(Seq(
+    val mixed = Multimodal.fixtureWavBlobs(spark, 2).unionByName(Seq(
       graft.multimodal.MediaBlob(7L, "audio", "not a wav at all".getBytes("UTF-8")),
       graft.multimodal.MediaBlob(8L, "audio",
         Multimodal.makeWav(8000, 1, Array.tabulate(4)(_.toShort)).take(20))
@@ -160,6 +160,18 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.parseMp4Meta(Array.emptyByteArray) === None)
     val truncated = Multimodal.makeMp4(600, 7207, 2).dropRight(5)
     assert(Multimodal.parseMp4Meta(truncated) === None)
+    // an empty 8-byte mvhd that ends the file, with and without a
+    // trailing box after moov
+    val emptyMvhd = new Array[Byte](8)
+    be32WithTarget(emptyMvhd, 0, 8); copy4cc(emptyMvhd, 4, "mvhd")
+    val moovEmpty = new Array[Byte](16)
+    be32WithTarget(moovEmpty, 0, 16); copy4cc(moovEmpty, 4, "moov")
+    System.arraycopy(emptyMvhd, 0, moovEmpty, 8, 8)
+    val free = new Array[Byte](8)
+    be32WithTarget(free, 0, 8); copy4cc(free, 4, "free")
+    assert((ftyp ++ moovEmpty).length === 32)
+    assert(Multimodal.parseMp4Meta(ftyp ++ moovEmpty) === None)
+    assert(Multimodal.parseMp4Meta(ftyp ++ moovEmpty ++ free) === None)
   }
 
   test("MP4 sample table: stsz/stsc/stco expansion matches independent arithmetic") {
@@ -293,6 +305,26 @@ class MultimodalSpec extends SparkSpec {
     val ns = Multimodal.decodeAudioWindows(Seq(b).toDS(), 32)
       .orderBy("win_id").collect().map(_.n).toSeq
     assert(ns === Seq(32, 8))
+  }
+
+  test("MP4 and WAV writer bytes are pinned on every fixture") {
+    def lenCrc(b: Array[Byte]): (Int, Long) = {
+      val c = new java.util.zip.CRC32()
+      c.update(b)
+      (b.length, c.getValue)
+    }
+    assert(Seq(Multimodal.makeMp4(600, 7207, 2), Multimodal.makeMp4(90000, 450000, 1))
+      .map(lenCrc) === Seq((148, 743445646L), (140, 12659985L)))
+    assert(Seq(
+      Multimodal.makeMp4WithSamples(1000, 25000, Array.tabulate(25)(16 + _), Seq((1, 3), (2, 4))),
+      Multimodal.makeMp4WithSamples(30, 300, Array.fill(10)(20), Seq((1, 10)), constantStsz = true),
+      Multimodal.makeMp4WithSamples(1000, 2000, Array.tabulate(12)(24 + _), Seq((1, 5)),
+        timeDeltas = Seq((8, 100), (4, 250)), mediaTimescale = 1000)
+    ).map(lenCrc) === Seq((1076, 1522674250L), (440, 2031043076L), (714, 4016548003L)))
+    assert((0 until 3).map { i =>
+      val (rate, ch, samples) = Multimodal.fixtureWavSamples(i)
+      lenCrc(Multimodal.makeWav(rate, ch, samples))
+    } === Seq((172, 1189024224L), (236, 3431308527L), (236, 145131086L)))
   }
 
   private def be32WithTarget(a: Array[Byte], off: Int, v: Int): Unit = {
