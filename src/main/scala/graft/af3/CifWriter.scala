@@ -26,20 +26,13 @@ object CifWriter {
     * quoting on write. Whitespace is [[CifParser.isCifSpace]], the
     * reader's own token separator.
     */
-  private def appendToken(sb: java.lang.StringBuilder, t: String): Unit =
+  private[af3] def appendToken(sb: java.lang.StringBuilder, t: String): Unit =
     if (t.indexOf('\'') >= 0) sb.append('"').append(t).append('"')
     // a bare token may not START with a quote char (the reader would
     // treat it as an opening quote), nor contain whitespace
     else if (t.isEmpty || t.charAt(0) == '"' || t.exists(CifParser.isCifSpace))
       sb.append('\'').append(t).append('\'')
     else sb.append(t)
-
-  /** `t` as a CIF value (see [[appendToken]]). */
-  private[af3] def cifToken(t: String): String = {
-    val sb = new java.lang.StringBuilder(t.length + 2)
-    appendToken(sb, t)
-    sb.toString
-  }
 
   private val scales = Array(1L, 10L, 100L, 1000L)
   private val formats = Array("%.0f", "%.1f", "%.2f", "%.3f")

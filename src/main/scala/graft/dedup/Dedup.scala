@@ -74,24 +74,12 @@ object Dedup {
     * < 2^31 * 2^20 < 2^52 — no overflow, and no corpus-dependent state
     * (the round-1 form multiplied by the vocabulary size, which required
     * a driver-side count of the global vocab).
-    */
-  def shingles3(wordIds: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    wordIds
-      .withColumn("w1", lead(col("word_id"), 1).over(w))
-      .withColumn("w2", lead(col("word_id"), 2).over(w))
-      .filter(col("w2").isNotNull)
-      .withColumn("shingle",
-        ((col("word_id") * ShingleBase + col("w1")) % MinhashP * ShingleBase + col("w2"))
-          % MinhashP)
-      .select(col("doc_id"), col("shingle")).distinct()
-  }
-
-  /** Same shingles, computed array-side per document: tokenize, hash
-    * each token, and chain consecutive triples with `transform` over an
-    * index sequence — all narrow operations, so the only shuffle is the
-    * final distinct (the window form pays an extra sort+shuffle for the
-    * `lead` ordering). Identical values to [[shingles3]].
+    *
+    * Computed array-side per document: tokenize, hash each token, and
+    * chain consecutive triples with `transform` over an index sequence —
+    * all narrow operations, so the only shuffle is the final distinct (a
+    * `lead` window over the exploded words pays an extra sort+shuffle;
+    * DedupSpec keeps that form and pins identical values).
     */
   def shingles3FromText(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val wid = transform(TextFunctions.tokens(col(textCol)), w => wordId(w))
@@ -425,11 +413,6 @@ object Dedup {
 
   // ---- n-gram / unigram Jaccard ----------------------------------------
 
-  /** Pairwise Jaccard similarity over distinct-token sets, computed only
-    * within `blockCol` blocks (at scale: block on LSH bucket / source /
-    * language to bound the pair space). Intersections via equi-join on
-    * (block, word) — shuffle-partitioned, no cross join.
-    */
   /** Per-doc sorted distinct word-id set as one compact long array —
     * sorted ONCE at build time so every downstream pair intersection is
     * a zero-alloc two-pointer merge (SortedIntersectSizeExpr).
@@ -445,11 +428,10 @@ object Dedup {
   /** Exact unigram-Jaccard verification over an existing candidate pair
     * frame `(a, b)`: the pair space is whatever the candidate generator
     * produced — at scale the banded-MinHash index, whose bucket
-    * populations stay at the base density as the corpus grows. This is
-    * the scale-correct form of [[jaccardPairs]]: blocking on any
-    * BOUNDED-cardinality column (source, language) makes the pair space
-    * Σ n_block², i.e. quadratic in corpus size — measured 27× wall at
-    * 10× rows before this re-base (SCALE.md round-5).
+    * populations stay at the base density as the corpus grows. Blocking
+    * on a BOUNDED-cardinality column (source, language) instead makes
+    * the pair space Σ n_block², i.e. quadratic in corpus size — measured
+    * 27× wall at 10× rows before this re-base (SCALE.md round-5).
     */
   def jaccardVerify(
       cands: DataFrame,
@@ -463,49 +445,6 @@ object Dedup {
         col("words").as("wa"), col("n_words").as("na")), Seq("a"))
       .join(sets.select(col("doc_id").as("b"),
         col("words").as("wb"), col("n_words").as("nb")), Seq("b"))
-      .withColumn("n_inter",
-        graft.functions.VectorExpressions.sortedIntersectSize(
-          col("wa"), col("wb")).cast("int"))
-      .withColumn("jaccard",
-        col("n_inter").cast("double") /
-          (col("na") + col("nb") - col("n_inter")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("a"), col("b"), col("jaccard"))
-  }
-
-  def jaccardPairs(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      blockCol: String,
-      minJaccard: Double): DataFrame = {
-    // Per-doc distinct word-hash set as one compact long array, then a
-    // shuffle join on the block key with array_intersect per pair.
-    // Avoids the 25M-row word-level join shape (explode + equi-join on
-    // (block, word)) that dominates at scale — pair count is bounded by
-    // the blocking, intersection is O(n+m). The block join is a plain
-    // shuffle hash join: both sides are unbounded at 100 TB, so no
-    // broadcast hint (the round-1 broadcast of the full word-set frame
-    // was an OOM at scale).
-    // sort each word set ONCE at build time so the per-pair intersection
-    // is a zero-alloc two-pointer merge (SortedIntersectSizeExpr) instead
-    // of array_intersect's materialize-plus-hash-set — the pair loop is
-    // the hot path, the sort is per doc
-    val wordSets = docs
-      .select(col(blockCol).as("blk"), col(idCol).as("doc_id"),
-        explode(TextFunctions.tokens(col(textCol))).as("word"))
-      .groupBy(col("blk"), col("doc_id"))
-      .agg(sort_array(collect_set(wordId(col("word")))).as("words"))
-      .withColumn("n_words", size(col("words")))
-    val x = wordSets.select(col("blk"), col("doc_id").as("a"),
-      col("words").as("wa"), col("n_words").as("na"))
-    val y = wordSets.select(col("blk"), col("doc_id").as("b"),
-      col("words").as("wb"), col("n_words").as("nb"))
-    // shuffle_hash (not broadcast: the word-set side is unbounded at
-    // 100 TB; not sort-merge: no ordering needed, per-partition hash
-    // build on the bounded block is cheaper than sorting both sides)
-    x.join(y.hint("shuffle_hash"), Seq("blk"))
-      .filter(col("a") < col("b"))
       .withColumn("n_inter",
         graft.functions.VectorExpressions.sortedIntersectSize(
           col("wa"), col("wb")).cast("int"))

@@ -40,13 +40,11 @@ object PortableLog {
     */
   val boundaries: Array[Double] = Array.tabulate(Q)(k => math.pow(2.0, k.toDouble / Q))
 
-  private lazy val boundaryCol: Column = typedLit(boundaries.toIndexedSeq)
-
   /** floor-ish(Q·log2(n)) as an exact BIGINT column; n must be >= 1.
     *
     * Backed by the native [[org.apache.spark.sql.graft.Log2Q10Expr]]
-    * (round 10): the original higher-order `filter(boundaryCol, ...)`
-    * form evaluated 1024 boxed comparisons per CALL — applied at fact
+    * (round 10): the original higher-order `filter` over the boundary
+    * table evaluated 1024 boxed comparisons per CALL — applied at fact
     * grain that dominated whole queries (text_bm25_topk spent 9.5 of
     * 9.8 s at sf1 inside the two idf logs before they were hoisted).
     * The expression is a codegen'd exponent-extract + binary search
@@ -58,17 +56,6 @@ object PortableLog {
     org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.graft.Log2Q10Expr(
         org.apache.spark.sql.graft.ColumnBridge.expression(n.cast("long"))))
-
-  /** The HOF reference form of [[log2q10]] — kept for the equivalence
-    * spec only.
-    */
-  private[graft] def log2q10Hof(n: Column): Column = {
-    val nl = n.cast("long")
-    val e = (length(bin(nl)) - 1).cast("int")
-    // exact: numerator < 2^53, denominator a power of two
-    val x = nl.cast("double") / call_function("shiftleft", lit(1L), e).cast("double")
-    e.cast("long") * Q + size(filter(boundaryCol, v => x >= v)).cast("long") - 1
-  }
 
   /** Scalar runtime of the native expression — replicates the column
     * form exactly, including the out-of-contract n <= 0 inputs

@@ -43,8 +43,6 @@ object Scalars {
   def mapLookup(m: Map[String, String], key: Column, default: String): Column =
     coalesce(try_element_at(typedLit(m), key), lit(default))
 
-  def seq1(resName: Column): Column = mapLookup(seq1Map, resName, "X")
-
   /** `m[i][j]` 0-based nested-array index → Spark's 1-based element_at
     * (py:97; the off-by-one hazard flagged in SURVEY §2.7).
     */
@@ -94,19 +92,13 @@ object Scalars {
     * fingerprinting): fold over characters, `acc = (acc*131 + codepoint)
     * mod p` with p = 9007199254740881 (largest prime < 2^53, so the
     * accumulator never overflows a signed 64-bit long: acc*131 + c <
-    * 2^53·131 < 2^63). Pure `aggregate` higher-order function — codegen
-    * friendly, and exactly reproducible in ANSI SQL via a left fold.
+    * 2^53·131 < 2^63). Exactly reproducible in ANSI SQL via a left
+    * fold.
     */
   val polyHashP: Long = 9007199254740881L
 
-  /** Native codegen'd form (PolyHashExpr) — the HOF fold below is kept
-    * as the reference implementation the spec equates against.
+  /** Native codegen'd form (PolyHashExpr); PolyHashSpec keeps the
+    * `aggregate` fold as the reference it equates against.
     */
   def polyHash(s: Column): Column = VectorExpressions.polyHash(s)
-
-  def polyHashFold(s: Column): Column =
-    aggregate(
-      split(s, ""),
-      lit(0L),
-      (acc, ch) => (acc * lit(131L) + ascii(ch)) % lit(polyHashP))
 }

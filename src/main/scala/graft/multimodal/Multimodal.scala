@@ -1366,10 +1366,13 @@ object Multimodal {
 
   /** One walk over a RIFF/AVI container: width, height and µs/frame
     * from the last `avih` of its `hdrl` lists, bits per pixel and
-    * biCompression from the last `strf` of their `strl` lists, and the
-    * chunks of the last `movi` list. None unless the bytes are RIFF/AVI
-    * with positive dimensions inside the [[MaxDecodePixels]] bomb guard
-    * and a `movi` list, or as soon as a chunk overruns its parent.
+    * biCompression from the last `strf` of the first `strl` list whose
+    * `strh` names a `vids` stream (an audio stream's `strf` is a
+    * WAVEFORMAT, not a BITMAPINFOHEADER), and the chunks of the last
+    * `movi` list. None unless the bytes are RIFF/AVI with positive
+    * dimensions inside the [[MaxDecodePixels]] bomb guard, a video
+    * stream and a `movi` list, or as soon as a chunk overruns its
+    * parent.
     */
   private def aviHeader(bytes: Array[Byte]): Option[AviHeader] = {
     type Chunks = Vector[(String, Long, Long)]
@@ -1377,17 +1380,21 @@ object Multimodal {
       case ("LIST", body, sz) if sz >= 4 && fourcc(bytes, body.toInt) == typ =>
         (body + 4, body + sz)
     }
-    def walk(ranges: Vector[(Long, Long)]): Option[Chunks] =
-      ranges.foldLeft(Option(Vector.empty: Chunks)) { case (acc, (start, end)) =>
-        for (a <- acc; c <- riffChunks(bytes, start, end)) yield a ++ c
+    def walk(ranges: Vector[(Long, Long)]): Option[Vector[Chunks]] =
+      ranges.foldLeft(Option(Vector.empty[Chunks])) { case (acc, (start, end)) =>
+        for (a <- acc; c <- riffChunks(bytes, start, end)) yield a :+ c
       }
+    def isVideo(strl: Chunks): Boolean = strl.exists { case (id, body, sz) =>
+      id == "strh" && sz >= 4 && fourcc(bytes, body.toInt) == "vids"
+    }
     if (!isRiffForm(bytes, "AVI ")) None
     else for {
       top <- riffChunks(bytes, 12, math.min(bytes.length.toLong, 8L + le32(bytes, 4)))
-      hdrl <- walk(lists(top, "hdrl"))
-      strl <- walk(lists(hdrl, "strl"))
+      hdrl <- walk(lists(top, "hdrl")).map(_.flatten)
+      strls <- walk(lists(hdrl, "strl"))
       avih <- hdrl.findLast(c => c._1 == "avih" && c._3 >= 40).map(_._2.toInt)
-      strf <- strl.findLast(c => c._1 == "strf" && c._3 >= 20).map(_._2.toInt)
+      strf <- strls.find(isVideo).flatMap(_.findLast(c => c._1 == "strf" && c._3 >= 20))
+        .map(_._2.toInt)
       w = le32(bytes, avih + 32).toInt
       h = le32(bytes, avih + 36).toInt
       if w > 0 && h > 0 && w.toLong * h.toLong <= MaxDecodePixels

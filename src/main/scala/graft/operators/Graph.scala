@@ -21,17 +21,12 @@ import org.apache.spark.sql.graft.ColumnBridge
 object Graph {
 
   /** Distinct undirected co-occurrence edges `(src < dst by id)` from a
-    * (group, item) membership table: items sharing a group are adjacent.
-    * The within-group pair fan-out is a self-equi-join on the group key —
-    * quadratic only in per-group membership (bounded by the data model,
-    * e.g. parts-per-order), never in table size.
-    */
-  def cooccurrenceEdges(df: DataFrame, groupCol: String, itemCol: String): DataFrame =
-    weightedCooccurrenceEdges(df, groupCol, itemCol).select("src", "dst")
-
-  /** Like [[cooccurrenceEdges]] but keeping the co-occurrence SUPPORT
-    * (number of shared groups) per edge. Support is the
-    * frequent-itemset noise gate: in a transactional graph the
+    * (group, item) membership table, with the co-occurrence SUPPORT
+    * (number of shared groups) per edge: items sharing a group are
+    * adjacent. The within-group pair fan-out is a self-equi-join on the
+    * group key — quadratic only in per-group membership (bounded by the
+    * data model, e.g. parts-per-order), never in table size. Support is
+    * the frequent-itemset noise gate: in a transactional graph the
     * once-co-occurring pairs are random noise that grows linearly with
     * data volume, while support-thresholded edges track the true
     * affinity structure (measured here: 1.2M raw edges -> 3.6k at
@@ -68,23 +63,20 @@ object Graph {
       .select(col("u"), col("vkey.k2").as("v"), col("vkey"))
   }
 
-  /** All triangles, each exactly once, as corner rows (a, b, c) — order
-    * of corners within a row follows the degree orientation, so treat
-    * them as a set. Three hash equi-joins: wedges out of each vertex's
-    * oriented out-neighborhood (ordered pairs, so no wedge repeats),
-    * closed by an edge lookup. With degree orientation the wedge volume
-    * is O(E^1.5) — the hub-vertex fan-out a raw id-orientation suffers
-    * is structurally impossible here.
-    */
-  def triangles(edges: DataFrame): DataFrame =
-    trianglesFromOriented(orientByDegree(edges))
-
-  /** [[triangles]] with the orientation step supplied by the caller —
-    * the oriented-edge frame appears THREE times in the plan (both
+  /** All triangles of the graph whose degree-oriented edges are `o`
+    * ([[orientByDegree]]), each exactly once, as corner rows (a, b, c) —
+    * order of corners within a row follows the degree orientation, so
+    * treat them as a set. Three hash equi-joins: wedges out of each
+    * vertex's oriented out-neighborhood (ordered pairs, so no wedge
+    * repeats), closed by an edge lookup. With degree orientation the
+    * wedge volume is O(E^1.5) — the hub-vertex fan-out a raw
+    * id-orientation suffers is structurally impossible here.
+    *
+    * The oriented-edge frame appears THREE times in the plan (both
     * wedge sides and the closing lookup), so callers running repeatedly
     * should persist it (e.g. as a session artifact): against an
-    * unpersisted input, AQE re-plans each subtree independently and
-    * the orientation's shuffles run three times over.
+    * unpersisted input, AQE re-plans each subtree independently and the
+    * orientation's shuffles run three times over.
     */
   def trianglesFromOriented(o: DataFrame): DataFrame = {
     val w = o.as("e1").join(o.as("e2"),

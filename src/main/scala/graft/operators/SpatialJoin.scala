@@ -122,25 +122,4 @@ object SpatialJoin {
       partCols: Seq[String] = Nil): DataFrame =
     epsJoin(points, points, eps, partCols, "a_", "b_")
       .filter(col("a_" + idCol) < col("b_" + idCol))
-
-  /** Brute-force reference implementation (cross + filter) for
-    * property-testing the grid join; never used at scale.
-    */
-  def epsJoinBrute(
-      left: DataFrame,
-      right: DataFrame,
-      eps: Double,
-      partCols: Seq[String] = Nil,
-      leftPrefix: String = "l_",
-      rightPrefix: String = "r_"): DataFrame = {
-    val l = prefixed(left, partCols, leftPrefix)
-    val r = prefixed(right, partCols, rightPrefix)
-    val dx = col(leftPrefix + "x") - col(rightPrefix + "x")
-    val dy = col(leftPrefix + "y") - col(rightPrefix + "y")
-    val dz = col(leftPrefix + "z") - col(rightPrefix + "z")
-    val joined = if (partCols.nonEmpty) l.join(r, partCols) else l.crossJoin(r)
-    joined
-      .withColumn("dist_sq", dx * dx + dy * dy + dz * dz)
-      .filter(col("dist_sq") <= lit(eps * eps))
-  }
 }

@@ -2,6 +2,8 @@ package graft.similarity
 
 import java.math.BigInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.{Aggregator, Window}
@@ -30,9 +32,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
-
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
 
   /** Symmetric int8 quantization of an embedding column — the storage
@@ -57,32 +56,6 @@ object Similarity {
           .as("q"))
   }
 
-  /** Brute-force cosine top-k: each query vector against the full corpus.
-    * O(|Q| * N) — the baseline; keep |Q| bounded or use [[lshBuckets]].
-    * The per-query ranking is one window over the join result,
-    * partitioned by query id (shuffle on query id only).
-    */
-  def cosineTopK(
-      queries: DataFrame,
-      corpus: DataFrame,
-      idCol: String,
-      embCol: String,
-      k: Int): DataFrame = {
-    // precompute per-vector norms once (not per pair: N+Q sqrts, not N*Q)
-    val q = queries.select(col(idCol).as("q_id"), asDouble(col(embCol)).as("q_emb"))
-      .withColumn("q_norm", norm(col("q_emb")))
-    val c = corpus.select(col(idCol).as("c_id"), asDouble(col(embCol)).as("c_emb"))
-      .withColumn("c_norm", norm(col("c_emb")))
-    val scored = q.crossJoin(c)
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("cos", dot(col("q_emb"), col("c_emb")) / (col("q_norm") * col("c_norm")))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
-  }
-
   /** Brute-force cosine top-k with the query side bounded BY
     * CONSTRUCTION: the query set is the `nQueries` corpus vectors with
     * the smallest (hash_bucket(id), id) — a deterministic hash
@@ -92,8 +65,9 @@ object Similarity {
     * ONE corpus scan — O(nQueries·N) arithmetic. The plan is a
     * BroadcastNestedLoopJoin whose broadcast side is PROVABLY bounded
     * (the limit sits in its subtree), which PlanShapeSpec verifies
-    * STRUCTURALLY — no name-based exception. [[cosineTopK]] remains the
-    * unbounded spec-only form.
+    * STRUCTURALLY — no name-based exception. SimilaritySpec keeps the
+    * unbounded form (every query against the corpus) as the exact
+    * reference for the ANN recall specs.
     */
   def cosineTopKSampled(
       corpus: DataFrame,
@@ -258,21 +232,28 @@ object Similarity {
     * groupBy: the classic Spark k-means sans MLlib, with every step a
     * DataFrame op. A keyed grain seeds from the `k` lowest ids once for
     * every key (a PQ vector has a row in every block), not from a
-    * per-key window over the corpus.
+    * per-key window over the corpus. The seeds and each round's
+    * codebook (k x dims cells per key) are collected and fed back as a
+    * local relation, as MLlib keeps its centres on the driver: the
+    * returned codebook's plan reads nothing, and round r plans one
+    * codebook, not the 2^r copies of the earlier rounds a lazily
+    * chained codebook holds.
     */
   def kmeansCodebook(v: DataFrame, g: Grain, k: Int, iters: Int): DataFrame = {
     val keys = g.keys.map(col)
+    def onDriver(cb: DataFrame): DataFrame =
+      v.sparkSession.createDataFrame(cb.collect().toSeq.asJava, cb.schema)
     val seeds =
       if (g.keys.isEmpty) v.orderBy(col("v_id")).limit(k)
       else v.join(broadcast(v.select(col("v_id")).distinct().orderBy(col("v_id")).limit(k)),
         Seq("v_id"))
-    var cents = seeds.select(keys :+ col("v_id").as("cid") :+ col(g.vec).as("ce"): _*)
+    var cents = onDriver(seeds.select(keys :+ col("v_id").as("cid") :+ col(g.vec).as("ce"): _*))
     for (_ <- 1 to iters) {
       val means = floorMean(nearestCell(d2Table(v, cents, g), g, g.vec),
         g.keys :+ "cell", g.vec, "me")
-      cents = cents
+      cents = onDriver(cents
         .join(means.withColumnRenamed("cell", "cid"), g.keys :+ "cid", "left")
-        .select(keys :+ col("cid") :+ coalesce(col("me"), col("ce")).as("ce"): _*)
+        .select(keys :+ col("cid") :+ coalesce(col("me"), col("ce")).as("ce"): _*))
     }
     cents
   }

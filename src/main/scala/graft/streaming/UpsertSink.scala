@@ -1,30 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** Idempotent keyed upsert sink — the `foreachBatch` MERGE pattern that
-  * turns an append stream into a continuously-maintained latest-state
-  * table (the lakehouse upsert every CDC/session-state pipeline ends
-  * in).
+/** The state semantics of a keyed upsert sink — the `foreachBatch`
+  * MERGE pattern that turns an append stream into a latest-state table.
   *
   * Semantics: last-writer-wins per key under a caller-supplied TOTAL
   * order (`orderCols` must be tie-broken — e.g. event time + unique id),
   * so the merge is associative, order-independent across batches, and
-  * REPLAY-IDEMPOTENT: merging the same rows twice is a no-op. On top of
-  * that algebraic idempotence the sink records the last applied batch id
-  * in the state directory and skips batches it has already seen — the
-  * standard exactly-once recipe for a sink Spark can't transactionally
-  * commit to (checkpoint replays a batch after a crash; the marker makes
-  * the replay a no-op even for a non-idempotent downstream).
+  * REPLAY-IDEMPOTENT: merging the same rows twice is a no-op
+  * (UpsertSinkSpec folds it over micro-batches against the one-shot
+  * merge).
   *
-  * Scale shape: one map-side-combined `max_by` aggregation per batch
-  * over (state ∪ batch) — state stays at one row per key, batches are
-  * micro-batch-sized, and nothing here is a window or a sort. On a real
-  * lake the overwrite would be a transactional table commit; here state
-  * is parquet double-buffered through an eager materialization so the
-  * read of generation N never races the write of N+1.
+  * Scale shape: one map-side-combined `max_by` aggregation over
+  * (state ∪ batch) — state stays at one row per key, and nothing here
+  * is a window or a sort.
   */
 object UpsertSink {
 
@@ -44,55 +35,4 @@ object UpsertSink {
         struct(orderCols.map(col): _*)).as("__r"))
       .select(col("__r.*"))
   }
-
-  private def batchMarker(statePath: String) =
-    java.nio.file.Paths.get(statePath, "_last_applied_batch")
-
-  /** Apply one micro-batch to the parquet state at `statePath`.
-    * Public so specs (and replays) can drive it batch-by-batch.
-    */
-  def applyBatch(
-      batch: DataFrame,
-      batchId: Long,
-      statePath: String,
-      keys: Seq[String],
-      orderCols: Seq[String]): Unit = {
-    val marker = batchMarker(statePath)
-    val last =
-      if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker)).trim.toLong
-      else -1L
-    if (batchId <= last) return // replayed batch: already applied
-    val spark = batch.sparkSession
-    val stateDir = new java.io.File(statePath, "state")
-    val cur =
-      if (stateDir.exists()) spark.read.parquet(stateDir.toString)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], batch.schema)
-    // eager materialization double-buffers the generation: the merged
-    // frame is computed (reading generation N) BEFORE the overwrite
-    // starts deleting N's files
-    val merged = mergeBatch(cur, batch, keys, orderCols).localCheckpoint(true)
-    merged.write.mode("overwrite").parquet(stateDir.toString)
-    org.apache.spark.sql.graft.ColumnBridge.unpersistCheckpoint(merged)
-    java.nio.file.Files.createDirectories(marker.getParent)
-    java.nio.file.Files.write(marker, batchId.toString.getBytes)
-  }
-
-  /** The streaming writer: `stream.writeStream` → foreachBatch upsert. */
-  def upsertStream(
-      stream: DataFrame,
-      statePath: String,
-      keys: Seq[String],
-      orderCols: Seq[String]): DataStreamWriter[Row] = {
-    val f: (DataFrame, Long) => Unit =
-      (batch, id) => applyBatch(batch, id, statePath, keys, orderCols)
-    stream.writeStream
-      .foreachBatch(f)
-      .trigger(Trigger.AvailableNow())
-  }
-
-  /** Read the current state table. */
-  def readState(spark: org.apache.spark.sql.SparkSession, statePath: String): DataFrame =
-    spark.read.parquet(new java.io.File(statePath, "state").toString)
 }

@@ -81,12 +81,11 @@ object StreamingQueries {
         // exactly-once ingestion from an at-least-once transport: the
         // event stream arrives doubled (simulated redelivery), the
         // ingest stage collapses it by delivery key before any
-        // downstream aggregation. Batch form here; IngestDedupSpec
-        // proves the watermark-bounded streaming form produces the same
-        // rows on the same doubled input.
+        // downstream aggregation. Redelivered records are
+        // byte-identical, so dropDuplicates' arbitrary survivor is
+        // deterministic.
         val e = tbl(s, dir, "events")
-        graft.streaming.IngestDedup.dedupBatch(
-            e.unionByName(e), Seq("event_id"))
+        e.unionByName(e).dropDuplicates(Seq("event_id"))
           .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
           .orderBy("user_id")
       },
@@ -199,11 +198,11 @@ object StreamingQueries {
       (s, dir) => {
         // the foreachBatch MERGE sink's state semantics: latest event
         // per user under the tie-broken (sec, event_id) total order —
-        // the SAME mergeBatch code path the streaming upsert sink folds
-        // micro-batch by micro-batch (UpsertSinkSpec proves the
-        // streamed state converges to this one-shot merge, that
-        // replays are no-ops, and that late deliveries can't regress a
-        // key). One max_by aggregation, no window.
+        // the mergeBatch a sink folds micro-batch by micro-batch
+        // (UpsertSinkSpec proves the folded state converges to this
+        // one-shot merge, that replays are no-ops, and that late
+        // deliveries can't regress a key). One max_by aggregation, no
+        // window.
         val e = tbl(s, dir, "events")
           .select(col("user_id"), col("event_id"), col("event_type"),
             round(col("value") * 100).cast("long").as("value_c"),

@@ -8,12 +8,12 @@ import org.scalacheck.rng.Seed
 
 import graft.SparkSpec
 import graft.functions.Scalars
-import graft.operators.{Islands, SpatialJoin}
+import graft.operators.{Islands, SpatialJoinSpec}
 
 /** The per-job kernels of the AF3 analysis tail (PAE block count,
   * in-task ε-contacts, nested islands) against the relational
   * formulations they replaced, rebuilt here: a long-form PAE count over
-  * exploded cells, [[SpatialJoin.epsJoinBrute]] and
+  * exploded cells, [[graft.operators.SpatialJoinSpec.epsJoinBrute]] and
   * [[Islands.assignIds]]. Generators run from fixed seeds; the FIXTURES.md
   * edges also get a hand-built case each.
   */
@@ -191,7 +191,7 @@ class Af3KernelsSpec extends SparkSpec {
       .join(interacting.withColumnRenamed("partner_res", "res_id"),
         Seq("job_dir", "res_id"), "left_semi")
       .select($"job_dir", $"res_id".as("partner_res"), $"x", $"y", $"z")
-    SpatialJoin.epsJoinBrute(partner, poi, q.maxDist, Seq("job_dir"), "p_", "q_")
+    SpatialJoinSpec.epsJoinBrute(partner, poi, q.maxDist, Seq("job_dir"), "p_", "q_")
       .select($"job_dir", $"p_partner_res", $"q_poi_res")
       .as[(String, Int, Int)].collect().toSet
   }

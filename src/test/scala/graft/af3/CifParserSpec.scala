@@ -117,7 +117,11 @@ class CifParserSpec extends SparkSpec {
       }.filter(t => !(t.contains("'") && t.contains("\""))) // CIF can't quote both
         .filter(t => t.nonEmpty && !t.head.isWhitespace && !t.last.isWhitespace)
       if (toks.nonEmpty) {
-        val line = toks.map(CifWriter.cifToken).mkString(" ")
+        val line = toks.map { t =>
+          val sb = new java.lang.StringBuilder
+          CifWriter.appendToken(sb, t)
+          sb.toString
+        }.mkString(" ")
         assert(CifParser.tokenize(line).toSeq === toks,
           s"line <$line> tokens ${toks.mkString("|")}")
       }

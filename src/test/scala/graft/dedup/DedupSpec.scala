@@ -1,9 +1,28 @@
 package graft.dedup
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The window form of [[Dedup.shingles3FromText]]: the same 3-word
+    * hash chain over `(doc_id, pos, word_id)` rows, via `lead`.
+    */
+  private def shingles3(wordIds: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    wordIds
+      .withColumn("w1", lead(col("word_id"), 1).over(w))
+      .withColumn("w2", lead(col("word_id"), 2).over(w))
+      .filter(col("w2").isNotNull)
+      .withColumn("shingle",
+        ((col("word_id") * Dedup.ShingleBase + col("w1")) % Dedup.MinhashP
+          * Dedup.ShingleBase + col("w2")) % Dedup.MinhashP)
+      .select(col("doc_id"), col("shingle")).distinct()
+  }
 
   private val docs = Seq(
     (1L, "a b c d e", "s1"),
@@ -24,7 +43,7 @@ class DedupSpec extends SparkSpec {
 
   test("identical texts share the full minhash signature; disjoint texts do not") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val sig = Dedup.minhashSignature(Dedup.shingles3(ids), 8)
+    val sig = Dedup.minhashSignature(shingles3(ids), 8)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     assert(sig(1L) === sig(2L))
     assert(sig(1L) !== sig(4L))
@@ -32,7 +51,7 @@ class DedupSpec extends SparkSpec {
 
   test("LSH candidates contain the exact-dup pair, not the disjoint pair") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val sig = Dedup.minhashSignature(Dedup.shingles3(ids), 8)
+    val sig = Dedup.minhashSignature(shingles3(ids), 8)
     val pairs = Dedup.lshCandidates(Dedup.lshBandKeys(sig, 8))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
@@ -49,7 +68,7 @@ class DedupSpec extends SparkSpec {
 
   test("array-side shingles equal the window-form shingles") {
     val ids = Dedup.docWordIds(docs, "doc_id", "text")
-    val viaWindow = Dedup.shingles3(ids)
+    val viaWindow = shingles3(ids)
     val viaArray = Dedup.shingles3FromText(docs, "doc_id", "text")
     assert(viaWindow.exceptAll(viaArray).isEmpty && viaArray.exceptAll(viaWindow).isEmpty)
   }
@@ -171,7 +190,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccard pairs: dup pair = 1.0, near pair = 5/6, cross-block pair absent") {
-    val got = Dedup.jaccardPairs(docs, "doc_id", "text", "source", 0.5)
+    // candidates: every same-source pair, as a blocking generator gives
+    val cands = docs.as("x").join(docs.as("y"),
+        $"x.source" === $"y.source" && $"x.doc_id" < $"y.doc_id")
+      .select($"x.doc_id".as("a"), $"y.doc_id".as("b"))
+    val got = Dedup.jaccardVerify(cands, docs, "doc_id", "text", 0.5)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(got((1L, 2L)) === 1.0)
     assert(math.abs(got((1L, 3L)) - 5.0 / 6.0) < 1e-15)

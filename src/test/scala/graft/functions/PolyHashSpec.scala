@@ -1,10 +1,20 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class PolyHashSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The reference form: a higher-order `aggregate` fold over the
+    * string's characters, `acc = (acc*131 + codepoint) mod p`.
+    */
+  private def polyHashFold(s: Column): Column =
+    aggregate(
+      split(s, ""),
+      lit(0L),
+      (acc, ch) => (acc * lit(131L) + ascii(ch)) % lit(Scalars.polyHashP))
 
   test("native polyHash == HOF fold on random strings (incl. unicode), and via SQL") {
     val rnd = new scala.util.Random(7)
@@ -21,7 +31,7 @@ class PolyHashSpec extends SparkSpec {
     val df = strs.toDF("s").cache()
     val both = df.select(
       Scalars.polyHash(col("s")).as("native"),
-      Scalars.polyHashFold(col("s")).as("fold"))
+      polyHashFold(col("s")).as("fold"))
     assert(both.filter(col("native") =!= col("fold")).count() === 0)
     // SQL registration
     df.createOrReplaceTempView("phs")

@@ -1,10 +1,24 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 class PortableLogSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The HOF reference form of [[PortableLog.log2q10]]: exponent from
+    * `bin()`'s length, then the count of boundary-table steps at or
+    * below the mantissa.
+    */
+  private def log2q10Hof(n: Column): Column = {
+    val nl = n.cast("long")
+    val e = (length(bin(nl)) - 1).cast("int")
+    // exact: numerator < 2^53, denominator a power of two
+    val x = nl.cast("double") / call_function("shiftleft", lit(1L), e).cast("double")
+    val table = typedLit(PortableLog.boundaries.toIndexedSeq)
+    e.cast("long") * PortableLog.Q + size(filter(table, v => x >= v)).cast("long") - 1
+  }
 
   test("log2q10 == floor(1024*log2 n) within one table-boundary step") {
     val rnd = new scala.util.Random(11)
@@ -49,7 +63,7 @@ class PortableLogSpec extends SparkSpec {
       (1 to 500).map(_ => math.abs(rnd.nextLong()) % (1L << 52) + 1)
     val rows = ns.toDF("n")
       .select(col("n"), PortableLog.log2q10(col("n")).as("fast"),
-        PortableLog.log2q10Hof(col("n")).as("ref"))
+        log2q10Hof(col("n")).as("ref"))
       .collect()
     rows.foreach { r =>
       assert(r.getLong(1) == r.getLong(2),

@@ -142,9 +142,52 @@ class AviDecodeSpec extends SparkSpec {
       Seq((314, 3933984704L), (360, 985057436L)))
   }
 
+  /** `avi` with a second, audio stream: an `auds` strl (56-byte strh,
+    * 40-byte WAVEFORMATEXTENSIBLE strf: 16-bit PCM stereo at 48 kHz)
+    * appended to its `hdrl` list, the LIST and RIFF sizes grown to match.
+    */
+  private def withAudioStream(avi: Array[Byte]): Array[Byte] = {
+    def le(n: Int)(put: java.nio.ByteBuffer => Unit): Array[Byte] = {
+      val bb = java.nio.ByteBuffer.allocate(n).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      put(bb)
+      bb.array()
+    }
+    def chunk(id: String, body: Array[Byte]): Array[Byte] =
+      id.getBytes("US-ASCII") ++ le(4)(_.putInt(body.length)) ++ body
+    val strh = le(56)(_.put("auds".getBytes("US-ASCII")).putInt(0).putInt(0)
+      .putInt(0).putInt(0).putInt(1).putInt(48000))
+    val pcmGuid = Array(1, 0, 0, 0, 0, 0, 0x10, 0, 0x80, 0, 0, 0xaa, 0, 0x38, 0x9b, 0x71)
+      .map(_.toByte)
+    val strf = le(40)(_.putShort(0xfffe.toShort).putShort(2).putInt(48000)
+      .putInt(192000).putShort(4).putShort(16).putShort(22).putShort(16)
+      .putInt(3).put(pcmGuid))
+    val strl = chunk("LIST",
+      "strl".getBytes("US-ASCII") ++ chunk("strh", strh) ++ chunk("strf", strf))
+    val in = java.nio.ByteBuffer.wrap(avi).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val hdrlEnd = 20 + in.getInt(16)
+    withLe32(withLe32(avi.take(hdrlEnd) ++ strl ++ avi.drop(hdrlEnd),
+      16, in.getInt(16) + strl.length), 4, in.getInt(4) + strl.length)
+  }
+
+  test("a DIB or MJPEG AVI with a second, audio stream decodes its video stream") {
+    val (w, h, us, frames) = Multimodal.fixtureAviFrames(0)
+    val (mw, mh, mus, jpegs) = Multimodal.fixtureMjpgJpegs
+    for ((avi, parse) <- Seq[(Array[Byte], Array[Byte] => Option[(Int, Int, Int, Seq[Array[Int]])])](
+        Multimodal.makeAviDib(w, h, us, frames) -> Multimodal.parseAviDib,
+        Multimodal.makeAviMjpg(mw, mh, mus, jpegs) -> Multimodal.parseAviMjpg)) {
+      val Some((pw, ph, pus, want)) = parse(avi)
+      val withAudio = withAudioStream(avi)
+      assert(withAudio.length == avi.length + 124)
+      val Some((aw, ah, aus, got)) = parse(withAudio)
+      assert((aw, ah, aus) == (pw, ph, pus) && got.size == want.size)
+      got.zip(want).foreach { case (a, b) => assert(a.sameElements(b)) }
+    }
+  }
+
   test("malformed AVIs parse to None in both parsers") {
     // byte offsets of the layout both writers emit: avih body at 32
-    // (width 64, height 68), strf size at 168, LIST movi size at 216,
+    // (width 64, height 68), strh fccType at 108, strf size at 168,
+    // LIST movi size at 216,
     // 'movi' at 220, first frame chunk header at 224
     val (w, h, us, frames) = Multimodal.fixtureAviFrames(0)
     val (mw, mh, mus, jpegs) = Multimodal.fixtureMjpgJpegs
@@ -160,7 +203,12 @@ class AviDecodeSpec extends SparkSpec {
         "frame overruns movi" -> withLe32(avi, 228, moviSize),
         "w*h > MaxDecodePixels" -> withLe32(withLe32(avi, 64, 65536), 68, 65536),
         "negative height" -> withLe32(avi, 68, -12),
-        "empty movi" -> withLe32(withLe32(avi.take(224), 4, 216), 216, 4))
+        "empty movi" -> withLe32(withLe32(avi.take(224), 4, 216), 216, 4),
+        "no vids strh" -> {
+          val b = avi.clone()
+          System.arraycopy("auds".getBytes("US-ASCII"), 0, b, 108, 4)
+          b
+        })
       for ((what, bytes) <- cases) {
         assert(Multimodal.parseAviDib(bytes).isEmpty, what)
         assert(Multimodal.parseAviMjpg(bytes).isEmpty, what)

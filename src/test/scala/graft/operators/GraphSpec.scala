@@ -22,7 +22,7 @@ class GraphSpec extends SparkSpec {
     (4L, 5L), (6L, 7L), (6L, 8L), (7L, 8L)).toDF("src", "dst")
 
   test("triangles: exact count and corner sets on a hand-countable graph") {
-    val tri = Graph.triangles(fixtureEdges)
+    val tri = Graph.trianglesFromOriented(Graph.orientByDegree(fixtureEdges))
       .select(array_sort(array($"a", $"b", $"c")).as("t"))
       .collect().map(_.getSeq[Long](0)).sortBy(_.mkString(","))
     assert(tri.length == 5)
@@ -32,11 +32,12 @@ class GraphSpec extends SparkSpec {
   }
 
   test("degree orientation agrees with naive id-oriented enumeration on real data") {
-    val edges = Graph.cooccurrenceEdges(
-      spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_partkey")),
-      "l_orderkey", "l_partkey")
-    val oriented = Graph.triangles(edges)
+    val edges = Graph.weightedCooccurrenceEdges(
+        spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+          .select(col("l_orderkey"), col("l_partkey")),
+        "l_orderkey", "l_partkey")
+      .select("src", "dst")
+    val oriented = Graph.trianglesFromOriented(Graph.orientByDegree(edges))
       .select(array_sort(array($"a", $"b", $"c")).as("t"))
     // naive: three-way join on id-oriented edges (src < dst already)
     val e = edges

@@ -1,11 +1,44 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
 
+object SpatialJoinSpec {
+
+  /** Brute-force ε-join (cross + filter), the reference the grid join is
+    * property-tested against; the output columns match
+    * [[SpatialJoin.epsJoin]]'s (`partCols` kept, every other column
+    * prefixed) plus `dist_sq`.
+    */
+  def epsJoinBrute(
+      left: DataFrame,
+      right: DataFrame,
+      eps: Double,
+      partCols: Seq[String] = Nil,
+      leftPrefix: String = "l_",
+      rightPrefix: String = "r_"): DataFrame = {
+    def prefixed(df: DataFrame, p: String): DataFrame =
+      df.columns.filterNot(partCols.contains)
+        .foldLeft(df) { (d, c) => d.withColumnRenamed(c, p + c) }
+    val l = prefixed(left, leftPrefix)
+    val r = prefixed(right, rightPrefix)
+    val dx = col(leftPrefix + "x") - col(rightPrefix + "x")
+    val dy = col(leftPrefix + "y") - col(rightPrefix + "y")
+    val dz = col(leftPrefix + "z") - col(rightPrefix + "z")
+    val joined = if (partCols.nonEmpty) l.join(r, partCols) else l.crossJoin(r)
+    joined
+      .withColumn("dist_sq", dx * dx + dy * dy + dz * dz)
+      .filter(col("dist_sq") <= lit(eps * eps))
+  }
+}
+
 class SpatialJoinSpec extends SparkSpec {
+  import SpatialJoinSpec.epsJoinBrute
   import spark.implicits._
 
-  private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select("l_id", "r_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("property: grid eps-join == brute-force eps-join (seeded)") {
@@ -18,7 +51,7 @@ class SpatialJoinSpec extends SparkSpec {
         .map { case ((x, y, z), i) => (i.toLong, x, y, z) }
         .toDF("id", "x", "y", "z")
       val grid = pairs(SpatialJoin.epsJoin(df, df, eps))
-      val brute = pairs(SpatialJoin.epsJoinBrute(df, df, eps))
+      val brute = pairs(epsJoinBrute(df, df, eps))
       assert(grid === brute, s"trial=$trial eps=$eps n=$n")
     }
   }

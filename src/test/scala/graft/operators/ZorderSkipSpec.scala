@@ -1,18 +1,19 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import graft.functions.VectorExpressions
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-/** Proves the z-order layout actually skips data: the same 2-D range
-  * predicate over the same rows reads strictly fewer rows from a
-  * z-ordered parquet table than from a lexicographically sorted one,
-  * which in turn reads fewer than an unclustered one — with identical
-  * query results. "Rows read" is the scan operator's own numOutputRows
-  * metric: rows surviving parquet row-group/page stats pruning, before
-  * Spark's residual filter.
+/** Proves a layout clustered by the `graft_zorder2` key actually skips
+  * data: the same 2-D range predicate over the same rows reads strictly
+  * fewer rows from a z-ordered parquet table than from a
+  * lexicographically sorted one, which in turn reads fewer than an
+  * unclustered one — with identical query results. "Rows read" is the
+  * scan operator's own numOutputRows metric: rows surviving parquet
+  * row-group/page stats pruning, before Spark's residual filter.
   */
 class ZorderSkipSpec extends SparkSpec {
 
@@ -27,6 +28,17 @@ class ZorderSkipSpec extends SparkSpec {
     scans(df.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum
   }
 
+  /** Range-partition by `keys` into 8 files, sort within each by the
+    * same keys, and write parquet with 16 KiB row groups; the keys need
+    * not be columns, so nothing extra lands in the files.
+    */
+  private def writeClustered(df: DataFrame, keys: Seq[Column], path: String): Unit =
+    df.repartitionByRange(8, keys: _*)
+      .sortWithinPartitions(keys: _*)
+      .write.mode("overwrite")
+      .option("parquet.block.size", (16 * 1024).toString)
+      .parquet(path)
+
   test("z-ordered layout prunes more row groups than lex sort; both beat unclustered") {
     val li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity")
@@ -35,9 +47,10 @@ class ZorderSkipSpec extends SparkSpec {
     // identical file count + row-group size everywhere — layout is the
     // only variable. repartition() (round-robin) destroys any incidental
     // input clustering for the baseline.
-    Zorder.writeClustered(li.repartition(8), Seq(lit(1)), s"$base/unclustered", 8, 16 * 1024)
-    Zorder.writeClustered(li, Seq(col("l_partkey"), col("l_suppkey")), s"$base/lex", 8, 16 * 1024)
-    Zorder.writeZOrdered(li, "l_partkey", "l_suppkey", s"$base/zorder", 8, 16 * 1024)
+    writeClustered(li.repartition(8), Seq(lit(1)), s"$base/unclustered")
+    writeClustered(li, Seq(col("l_partkey"), col("l_suppkey")), s"$base/lex")
+    writeClustered(li, Seq(VectorExpressions.zorder2(col("l_partkey"), col("l_suppkey"))),
+      s"$base/zorder")
 
     // both dimensions individually broad (25% each), conjunction ~6% —
     // the shape where a single-column sort can't prune on the second dim

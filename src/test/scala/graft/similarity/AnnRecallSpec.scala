@@ -31,7 +31,7 @@ class AnnRecallSpec extends SparkSpec {
     val emb = Registry.tbl(spark, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 50)
 
-    val exact = Similarity.cosineTopK(queries, emb, "vec_id", "embedding", k = 3)
+    val exact = SimilaritySpec.cosineTopK(queries, emb, "vec_id", "embedding", k = 3)
       .select("q_id", "c_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ann = Similarity.annTopK(emb, "vec_id", "embedding", 4, 64, k = 3,
@@ -57,7 +57,7 @@ class AnnRecallSpec extends SparkSpec {
     assert(assign.count() === emb.count())
     assert(assign.select("cell").distinct().count() <= 8)
 
-    val exact = Similarity.cosineTopK(emb.filter(col("vec_id") < 50), emb,
+    val exact = SimilaritySpec.cosineTopK(emb.filter(col("vec_id") < 50), emb,
         "vec_id", "embedding", k = 3)
       .select("q_id", "c_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -91,7 +91,7 @@ class AnnRecallSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val emb = Registry.tbl(spark, dir, "embeddings").cache()
 
-    val exact = Similarity.cosineTopK(emb.filter(col("vec_id") < 50), emb,
+    val exact = SimilaritySpec.cosineTopK(emb.filter(col("vec_id") < 50), emb,
         "vec_id", "embedding", k = 10)
       .select("q_id", "c_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -121,7 +121,7 @@ class AnnRecallSpec extends SparkSpec {
       .filter(col("q_id") < 50).select("q_id", "c_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-    val exact = setOf(Similarity.cosineTopK(
+    val exact = setOf(SimilaritySpec.cosineTopK(
       emb.filter(col("vec_id") < 50), emb, "vec_id", "embedding", k = 3))
     val ivf = setOf(Similarity.ivfTopKFrom(dists, nprobe = 4, k = 3))
     // full-width shortlist (prefix = all 64 dims) ranks identically to

@@ -365,6 +365,22 @@ class KmeansKernelSpec extends SparkSpec {
         Reference.labelOutliers(emb, k))
   }
 
+  test("the k-means plan reads its input once at iters 0, 2 and 6") {
+    val emb = graft.suite.Registry.tbl(spark, "/root/testdata/sf0.001", "embeddings")
+    def scans(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => 1
+    }.size
+    val iters = Seq(0, 2, 6)
+    assert(iters.map(i => scans(Similarity.ivfDists(emb, "vec_id", "embedding", 16, i))) ===
+      Seq(1, 1, 1))
+    // the codebooks themselves are local relations
+    assert(iters.map(i => scans(Similarity.kmeansCodebook(ivfVectors(emb), Similarity.Ivf,
+      16, i))) === Seq(0, 0, 0))
+    assert(iters.map(i => scans(Similarity.kmeansCodebook(
+      Similarity.pqSubvectors(emb, "vec_id", "embedding", 4, 64), Similarity.Pq, 16, i))) ===
+      Seq(0, 0, 0))
+  }
+
   test("the corpora hold equal-d2 ties, an empty cell, an all-zero vector and k above n") {
     for ((name, emb, k) <- cases) {
       val v = ivfVectors(emb)

@@ -1,10 +1,43 @@
 package graft.similarity
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+object SimilaritySpec {
+
+  def cosine(a: Column, b: Column): Column =
+    Similarity.dot(a, b) / (Similarity.norm(a) * Similarity.norm(b))
+
+  /** Brute-force cosine top-k, the exact reference of the ANN specs:
+    * each query vector against the full corpus, ranked per query by
+    * (cos desc, c_id).
+    */
+  def cosineTopK(
+      queries: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
+      embCol: String,
+      k: Int): DataFrame = {
+    def side(df: DataFrame, p: String) =
+      df.select(col(idCol).as(s"${p}_id"),
+          transform(col(embCol), _.cast("double")).as(s"${p}_emb"))
+        .withColumn(s"${p}_norm", Similarity.norm(col(s"${p}_emb")))
+    side(queries, "q").crossJoin(side(corpus, "c"))
+      .filter(col("q_id") =!= col("c_id"))
+      .withColumn("cos", Similarity.dot(col("q_emb"), col("c_emb")) /
+        (col("q_norm") * col("c_norm")))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
+  }
+}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
+  import SimilaritySpec.{cosine, cosineTopK}
 
   private val vecs = Seq(
     (0L, Seq(1.0f, 0.0f, 0.0f, 0.0f)),
@@ -14,7 +47,7 @@ class SimilaritySpec extends SparkSpec {
   ).toDF("vec_id", "embedding")
 
   test("cosine top-k ranks by similarity with deterministic tiebreak") {
-    val got = Similarity.cosineTopK(
+    val got = cosineTopK(
       vecs.filter(col("vec_id") === 0), vecs, "vec_id", "embedding", k = 3)
       .orderBy("rank").collect().map(r => (r.getLong(1), r.getInt(3)))
     assert(got.toSeq === Seq((1L, 1), (2L, 2), (3L, 3)))
@@ -22,7 +55,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("cosine of identical vectors is exactly 1.0 for unit vectors") {
     val c = vecs.as("a").join(vecs.as("b"), col("a.vec_id") === col("b.vec_id"))
-      .select(Similarity.cosine(
+      .select(cosine(
         transform(col("a.embedding"), _.cast("double")),
         transform(col("b.embedding"), _.cast("double"))).as("c"))
       .collect().map(_.getDouble(0))
@@ -67,7 +100,7 @@ class SimilaritySpec extends SparkSpec {
     // every blocked pair is a true >= minCos pair (verification is exact)
     val brute = vecs.as("x").join(vecs.as("y"), col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
-        Similarity.cosine(transform(col("x.embedding"), _.cast("double")),
+        cosine(transform(col("x.embedding"), _.cast("double")),
           transform(col("y.embedding"), _.cast("double"))).as("cos"))
       .filter(col("cos") >= 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.suite.Registry
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 class SessionsSpec extends SparkSpec {
 
@@ -17,11 +18,16 @@ class SessionsSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("events.parquet"))
-    // ts is a nanos LONG in the raw file; the helper rebuilds the
+    // ts is a nanos LONG in the raw file; normalizeTs rebuilds the
     // timestamp the same way Registry.tbl does
     val raw = spark.read.parquet(dir.toString)
-    Sessions.runAvailableNow(spark, dir.toString, raw,
-      "15 minutes", queryName = "sessions_test")
+    val q = Sessions.sessionize(
+        Registry.normalizeTs(spark.readStream.schema(raw.schema).parquet(dir.toString))
+          .withWatermark("ts", "1 hour"), "15 minutes")
+      .writeStream.format("memory").queryName("sessions_test")
+      .outputMode(OutputMode.Complete())
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
     val streamed = spark.table("sessions_test")
 
     assert(streamed.count() === batch.count())
@@ -43,9 +49,9 @@ class SessionsSpec extends SparkSpec {
           .option("recursiveFileLookup", "true").parquet(dir.toString)
           .withWatermark("ts", "1 hour"), "15 minutes")
         .writeStream.format("memory").queryName(qn)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
+        .outputMode(OutputMode.Complete())
         .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     runOnce("incr_1")
@@ -86,7 +92,7 @@ class SessionsSpec extends SparkSpec {
         df.collect().groupBy(_.getLong(0)).foreach { case (u, rs) => acc(u) = rs.toSeq }
         ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
 
     val streamed = acc.values.flatten.toSeq
@@ -99,36 +105,6 @@ class SessionsSpec extends SparkSpec {
     // sanity: the bridge event merged user 1 into one island spanning 1000..9600
     assert(streamed.filter(_._1 == 1L).map(t => (t._3, t._4, t._5)) ===
       Seq((1000L, 9600L, 8L)))
-  }
-
-  test("streaming dedup keeps the first arrival across micro-batches") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup")
-    Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
-      .repartition(1).write.parquet(s"$dir/b0")
-    Thread.sleep(1100) // file source orders batches by mtime: force b0 < b1
-    Seq((3L, "alpha beta"), (4L, "delta")).toDF("doc_id", "text") // 3 dups 1
-      .repartition(1).write.parquet(s"$dir/b1")
-
-    val acc = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    val q = Sessions.dedupByFingerprint(
-        spark.readStream.schema("doc_id LONG, text STRING")
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString),
-        "text")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        acc.synchronized {
-          acc ++= df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("text")))
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    // doc 3 (late duplicate of doc 1's text) never surfaces
-    assert(acc.map(_._1).sorted.toSeq === Seq(1L, 2L, 4L))
-    assert(acc.map(_._2).toSet === Set("alpha beta", "gamma", "delta"))
   }
 
   test("runToSink: Append-mode sessions land in the parquet sink once finalized") {
@@ -145,107 +121,22 @@ class SessionsSpec extends SparkSpec {
     Seq((2L, ts(999000))).toDF("user_id", "ts")
       .repartition(1).write.parquet(s"$dir/b1")
 
-    val schemaSource = spark.read.option("recursiveFileLookup", "true")
-      .parquet(dir.toString)
-    // two AvailableNow runs: watermark state persists in the checkpoint,
-    // so the second run (no new data) finalizes what the first advanced
-    Sessions.runToSink(spark, dir.toString, schemaSource, "15 minutes",
-      out, ckpt, lateness = "10 seconds")
+    // sessionize in Append mode into a checkpointed parquet sink: the
+    // far-future event advances the watermark, and the no-data batch
+    // that follows emits user 1's now-final session exactly once
+    val q = Sessions.sessionize(
+        spark.readStream.schema("user_id LONG, ts TIMESTAMP")
+          .option("recursiveFileLookup", "true").parquet(dir.toString)
+          .withWatermark("ts", "10 seconds"), "15 minutes")
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append())
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
     val got = spark.read.parquet(out)
     assert(got.filter(col("user_id") === 1).count() === 1)
     val r = got.filter(col("user_id") === 1).head()
     assert(r.getAs[Long]("session_start") === 1000L)
     assert(r.getAs[Long]("n_events") === 2L)
-  }
-
-  test("bounded islands: state evicts after the watermark passes the horizon") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bisl")
-    def ts(s: Long) = new java.sql.Timestamp(s * 1000)
-    def write(name: String, rows: Seq[(Long, java.sql.Timestamp)]): Unit = {
-      rows.toDF("user_id", "ts").repartition(1).write.parquet(s"$dir/$name")
-      Thread.sleep(1100) // file source orders batches by mtime
-    }
-    // b0: user 1 is active around t=1000 (timeout arms at ~1065)
-    write("b0", Seq((1L, ts(1000)), (1L, ts(1005))))
-    // b1: user 2 far in the future -> watermark jumps past user 1's horizon
-    write("b1", Seq((2L, ts(100000))))
-    // b2: more user-2 data; user 1 has no data this batch, so its timed-out
-    // state is evicted here
-    write("b2", Seq((2L, ts(100005))))
-    // b3: user 1 reappears -> must start a FRESH island set (old state gone)
-    write("b3", Seq((1L, ts(101000))))
-
-    val acc = scala.collection.concurrent.TrieMap.empty[Long, Seq[org.apache.spark.sql.Row]]
-    val q = Sessions.statefulIslandsBounded(spark,
-        spark.readStream.schema("user_id LONG, ts TIMESTAMP")
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString),
-        maxGapSec = 2000L, horizonSec = 60L, lateness = "10 seconds")
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.collect().groupBy(_.getLong(0)).foreach { case (u, rs) => acc(u) = rs.toSeq }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    // user 1's final snapshot holds ONLY the post-eviction island: with
-    // unbounded state the 1000-1005 span would have survived (gap 2000s
-    // would even have merged it with 101000... no wait, 101000-1005 >
-    // 2000, so it would sit alongside as a second island)
-    val u1 = acc(1L).map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(u1 === Seq((101000L, 101000L, 1L)))
-    // within the horizon, results match the unbounded operator: user 2
-    val u2 = acc(2L).map(r => (r.getLong(2), r.getLong(3), r.getLong(4)))
-    assert(u2 === Seq((100000L, 100005L, 2L)))
-  }
-
-  test("bounded dedup: dup inside horizon suppressed, beyond horizon re-admitted") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bdedup")
-    def ts(s: Long) = new java.sql.Timestamp(s * 1000)
-    def write(name: String, rows: Seq[(Long, java.sql.Timestamp, String)]): Unit = {
-      rows.toDF("doc_id", "ts", "text").repartition(1).write.parquet(s"$dir/$name")
-      Thread.sleep(1100)
-    }
-    write("b0", Seq((1L, ts(1000), "alpha beta"), (2L, ts(1001), "gamma")))
-    // in-horizon duplicate of doc 1 -> suppressed
-    write("b1", Seq((3L, ts(1005), "alpha beta")))
-    // far-future batch advances the watermark past doc 1's state
-    write("b2", Seq((4L, ts(100000), "delta")))
-    // state eviction lands at batch commit: one more batch under the
-    // advanced watermark so the expired fingerprints are actually purged
-    write("b3", Seq((6L, ts(100005), "epsilon")))
-    // same text, way past the horizon -> state evicted, re-admitted
-    write("b4", Seq((5L, ts(100010), "alpha beta")))
-
-    val acc = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = Sessions.dedupByFingerprintBounded(
-        spark.readStream.schema("doc_id LONG, ts TIMESTAMP, text STRING")
-          .option("recursiveFileLookup", "true")
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString),
-        "text", "ts", horizon = "10 seconds")
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        acc.synchronized { acc ++= df.collect().map(_.getAs[Long]("doc_id")) }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-
-    assert(acc.sorted.toSeq === Seq(1L, 2L, 4L, 5L, 6L)) // 3 suppressed, 5 re-admitted
-  }
-
-  test("stateful flatMapGroupsWithState span == batch min/max/count") {
-    val events = Registry.tbl(spark, sfDir, "events")
-    val got = Sessions.statefulCounts(spark, events)
-    val expected = events
-      .select(col("user_id"), unix_timestamp(col("ts")).as("sec"))
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_events"), min(col("sec")).as("first_sec"),
-        max(col("sec")).as("last_sec"))
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 }

@@ -4,15 +4,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Sessions.foldSpans]] (the r12 sorted-sweep batch fold inside
   * statefulIslands) must produce EXACTLY the island set of the per-event
-  * [[Sessions.insertSpan]] fold it replaced — same spans, same order,
+  * `insertSpan` fold it replaced — same spans, same order,
   * same counts — for any arrival order and any prior state, or the
   * operator's batch≡stream contract (SessionsSpec) silently breaks.
   * Plain JVM property test: no Spark session needed.
   */
 class StatefulIslandsFoldSpec extends AnyFunSuite {
 
+  /** Merge one event second into a user's island set: every span within
+    * `gap` of `sec` (including spans the new value bridges) collapses
+    * into one. Pure function — the same result for any arrival order.
+    */
+  private def insertSpan(spans: List[IslandSpan], sec: Long, gap: Long): List[IslandSpan] = {
+    val (touch, rest) = spans.partition(s => sec >= s.lo - gap && sec <= s.hi + gap)
+    val merged = IslandSpan(
+      (sec :: touch.map(_.lo)).min,
+      (sec :: touch.map(_.hi)).max,
+      touch.map(_.n).sum + 1)
+    (merged :: rest).sortBy(_.lo)
+  }
+
   private def foldRef(spans: List[IslandSpan], evs: Seq[Long], gap: Long) =
-    evs.foldLeft(spans)((sp, e) => Sessions.insertSpan(sp, e, gap))
+    evs.foldLeft(spans)((sp, e) => insertSpan(sp, e, gap))
 
   test("foldSpans == repeated insertSpan on random event batches") {
     val rnd = new scala.util.Random(42)

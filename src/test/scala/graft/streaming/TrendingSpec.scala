@@ -22,11 +22,12 @@ class TrendingSpec extends SparkSpec {
     val events = Registry.normalizeTs(raw)
     val delay = "1 hour"
 
-    val stream = Trending.windowCountsStream(
+    val stream = Trending.windowCounts(
       Registry.normalizeTs(
         spark.readStream.schema(raw.schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.toString)),
-      "event_type", "1 day", delay)
+          .option("maxFilesPerTrigger", "1").parquet(dir.toString))
+        .withWatermark("ts", delay),
+      "event_type", "1 day")
     val q = stream
       .select(col("w.start").as("ws"), col("w.end").as("we"),
         col("event_type"), col("n"))

