@@ -57,17 +57,16 @@ object Af3Run {
     * one task per job directory that holds a summary, which applies the
     * gate and, for a binder, writes the job's interaction CIF, overlay
     * CIFs and PyMOL script; then the driver writes the CSV report
-    * (py:578). Returns the number of report rows and prints one `AF3RUN`
+    * (py:578) from the rows it builds ([[Af3Stages.reportRows]]), with no
+    * query plan. Returns the number of report rows and prints one `AF3RUN`
     * line with the summed task counters.
     */
   def run(spark: SparkSession, inputDir: String, outBase: String, p: Af3Params): Long = {
     val inter = s"Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
     val out = Af3Outputs(s"$outBase/$inter", s"$outBase/Overlays_$inter")
     val st = Af3Pipeline.stages(spark, inputDir, p, Some(out))
-    CifWriter.writeReportCsv(st.report, outBase, p)
-    // one report row per kept contact island: a job with contacts has
-    // both chains in its chain info, so the report drops none
-    val n = st.jobs.map(_.islands.map(_.contact_islands.size).sum).sum.toLong
+    CifWriter.writeReportRows(spark, st.reportRows, outBase, p)
+    val n = st.reportRows.size.toLong
     val sums = Af3Jobs.Counters.zipWithIndex.map { case (k, i) =>
       val v = st.jobs.map(_.counters(i)).sum
       if (k.endsWith("_ns")) k.stripSuffix("_ns") + f"_ms=${v / 1e6}%.1f" else s"$k=$v"

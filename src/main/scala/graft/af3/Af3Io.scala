@@ -7,6 +7,7 @@ import com.fasterxml.jackson.core.JsonParser.NumberType
 import com.fasterxml.jackson.core.JsonToken._
 import org.apache.hadoop.fs.{FileSystem, GlobFilter, Path}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -87,6 +88,22 @@ object Af3Io {
     }
     BundleFiles(matching(summaryGlob), matching(fullDataGlob), matching(modelGlob),
       appleDouble.result())
+  }
+
+  /** `value` broadcast for the tasks of the Spark jobs `body` runs, and
+    * destroyed once `body` returns or throws. A task closure then holds
+    * the handle, and each executor fetches the value once per job, as
+    * Spark's file scans ship their `broadcastedHadoopConf`: no task
+    * deserializes a Hadoop conf of its own. Every task thread of an
+    * executor reads the one value, so it must be read-only. A reader
+    * whose frame outlives the call broadcasts with
+    * `sparkContext.broadcast` instead and leaves the broadcast to Spark's
+    * `ContextCleaner`, as a file scan does.
+    */
+  private[af3] def withBroadcast[T: ClassTag, R](spark: SparkSession, value: T)(
+      body: Broadcast[T] => R): R = {
+    val b = spark.sparkContext.broadcast(value)
+    try body(b) finally b.destroy()
   }
 
   /** `files` as a Spark job's input, one task per file up to the default parallelism. */
@@ -294,8 +311,9 @@ object Af3Io {
 
   /** Read all summaries under `inputDir` keyed by job_dir: the
     * [[summaryReader]] rows of each file [[bundleFiles]] lists, in one
-    * Spark job. One row per JSON record (a top-level array gives one per
-    * element, an empty or blank file none); malformed files carry
+    * Spark job, the reader broadcast to its tasks ([[withBroadcast]]).
+    * One row per JSON record (a top-level array gives one per element, an
+    * empty or blank file none); malformed files carry
     * `_corrupt` and fall out at the gate (≙ return False, py:74-77).
     *
     * The reference's latin-1 re-read (py:68-73) is intentionally NOT
@@ -306,11 +324,11 @@ object Af3Io {
     * fixture parses green under UTF-8).
     */
   def readSummaries(spark: SparkSession, inputDir: String): DataFrame = {
-    val reader = summaryReader(spark)
+    val reader = spark.sparkContext.broadcast(summaryReader(spark))
     ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).summaries)
       .flatMap { url =>
         val job = InternalRow(jobDir(url))
-        reader.read(url).map(new JoinedRow(_, job))
+        reader.value.read(url).map(new JoinedRow(_, job))
       }, summarySchema.add("job_dir", StringType, nullable = false))
   }
 
@@ -321,10 +339,11 @@ object Af3Io {
     *
     * One [[bundleFiles]] walk, into hidden directories too, and one
     * Spark job that reads each listed file with the pipeline's reader
-    * for it and gives it exactly one row: (job_dir, file, kind, status)
-    * with kind ∈ summary | full_data | cif | hidden and status ∈ parsed |
-    * corrupt_json (py:74-77) | missing_keys (py:111-113) | no_atoms |
-    * skipped_hidden (py:560-566). A JSON file with no record (empty or
+    * for it (the readers and the conf in one broadcast,
+    * [[withBroadcast]]) and gives it exactly one row: (job_dir, file,
+    * kind, status) with kind ∈ summary | full_data | cif | hidden and
+    * status ∈ parsed | corrupt_json (py:74-77) | missing_keys
+    * (py:111-113) | no_atoms | skipped_hidden (py:560-566). A JSON file with no record (empty or
     * blank) or a corrupt one is `corrupt_json`, a `full_data` file with
     * no record holding both keys `missing_keys`, a model file without
     * atoms ([[CifParser.readModel]]) `no_atoms`. JSON is parsed against
@@ -339,15 +358,16 @@ object Af3Io {
       "cif" -> files.models).flatMap { case (kind, urls) =>
         urls.map { u => val (job, file) = jobAndFile(u); (job, file, kind, u) }
       } ++ files.appleDouble.map(p => (p.getParent.getName, p.getName, "hidden", ""))
-    val summaries = summaryReader(spark)
-    val fullData = JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil)
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val readers = spark.sparkContext.broadcast((summaryReader(spark),
+      JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil),
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     def json(rows: Iterator[InternalRow], corrupt: Int)(keyed: InternalRow => Boolean) = {
       var (records, bad, keys) = (0, false, false)
       rows.foreach { r => records += 1; bad ||= !r.isNullAt(corrupt); keys ||= keyed(r) }
       if (records == 0 || bad) "corrupt_json" else if (keys) "parsed" else "missing_keys"
     }
     perFile(spark, listed).map { case (job, file, kind, url) =>
+      val (summaries, fullData, conf) = readers.value
       (job, file, kind, kind match {
         case "summary" => json(summaries.read(url), 3)(_ => true)
         case "full_data" => json(fullData.read(url), 2)(r => !r.isNullAt(0) && !r.isNullAt(1))
@@ -361,7 +381,8 @@ object Af3Io {
     * `(job_dir, pae)` with the whole N x N matrix as
     * `array<array<double>>` (the transpose of py:215 is a no-op here),
     * the [[paeMatrices]] of each file [[bundleFiles]] lists, in one Spark
-    * job. A job's matrix is the unit of work of the PAE block count
+    * job, the reader broadcast to its tasks ([[withBroadcast]]). A job's
+    * matrix is the unit of work of the PAE block count
     * ([[Af3Pipeline.interactingResidues]]): a task holds one complex's
     * N^2 cells, never the N^2 rows a long form would materialize.
     *
@@ -373,9 +394,10 @@ object Af3Io {
     * summaries only.
     */
   def readPaeLong(spark: SparkSession, inputDir: String): DataFrame = {
-    val reader = fullDataReader(spark)
+    val reader = spark.sparkContext.broadcast(fullDataReader(spark))
     ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).fullData)
-      .flatMap(url => paeMatrices(reader.read(url)).iterator.map(InternalRow(jobDir(url), _))),
+      .flatMap(url =>
+        paeMatrices(reader.value.read(url)).iterator.map(InternalRow(jobDir(url), _))),
       StructType(Seq(StructField("job_dir", StringType, nullable = false), fullDataSchema("pae"))))
   }
 }

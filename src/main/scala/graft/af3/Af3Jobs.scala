@@ -46,30 +46,41 @@ object Af3Jobs {
     }
   }
 
+  /** What a job's task reads with: the session's Hadoop conf and the
+    * summary and `full_data` readers. Every field is read-only, as all
+    * task threads of an executor share one instance.
+    */
+  private final case class TaskState(conf: SerializableConfiguration,
+      summaries: JsonFileReader, fullData: JsonFileReader)
+
   /** Run `jobs` ([[jobFiles]] of a driver-side listing) as one Spark job
     * of one task per job; results of the binders, in job-name order.
-    * With `out`, each binder's task also writes its structure outputs
+    * The [[TaskState]] reaches the tasks in one broadcast, destroyed
+    * when the job ends ([[Af3Io.withBroadcast]]), so a task closure holds
+    * the handle, `p`, `out` and its job's file list. With `out`, each
+    * binder's task also writes its structure outputs
     * ([[CifWriter.writeJob]]).
     */
   private[af3] def run(spark: SparkSession, jobs: Seq[JobFiles], p: Af3Params,
       out: Option[Af3Outputs]): Seq[JobResult] = {
     if (jobs.isEmpty) return Nil
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val summaries = Af3Io.summaryReader(spark)
-    val fullData = Af3Io.fullDataReader(spark)
-    JsonFileReader.withSessionConf(spark) {
-      spark.sparkContext.parallelize(jobs, jobs.size)
-        .flatMap(runJob(_, p, summaries, fullData, conf, out))
-        .collect().toSeq
+    val state = TaskState(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      Af3Io.summaryReader(spark), Af3Io.fullDataReader(spark))
+    Af3Io.withBroadcast(spark, state) { shared =>
+      JsonFileReader.withSessionConf(spark) {
+        spark.sparkContext.parallelize(jobs, jobs.size)
+          .flatMap(runJob(_, p, shared.value, out))
+          .collect().toSeq
+      }
     }
   }
 
   /** One job's task: `None` unless one of its summaries passes the gate
     * ([[Af3Pipeline.passesGate]]), before any other file is opened.
     */
-  private def runJob(f: JobFiles, p: Af3Params, summaries: JsonFileReader,
-      fullData: JsonFileReader, conf: SerializableConfiguration,
+  private def runJob(f: JobFiles, p: Af3Params, state: TaskState,
       out: Option[Af3Outputs]): Option[JobResult] = {
+    val TaskState(conf, summaries, fullData) = state
     if (!f.summaries.exists(u => summaries.read(u).exists(Af3Pipeline.passesGate(_, p))))
       return None
     val counters = scala.collection.mutable.LinkedHashMap(Counters.map(_ -> 0L): _*)

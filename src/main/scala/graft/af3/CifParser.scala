@@ -226,11 +226,16 @@ object CifParser {
       parseAtomSite(job, m, decodeText(bytes))
     }
 
-  /** The atoms of the model files at `urls`, in one Spark job. */
+  /** The atoms of the model files at `urls`, in one Spark job. The
+    * session's Hadoop conf reaches the tasks in one broadcast, left to
+    * Spark's `ContextCleaner` as the Dataset may run again
+    * ([[Af3Io.withBroadcast]]).
+    */
   private[af3] def atomsOf(spark: SparkSession, urls: Seq[String]): Dataset[CifAtom] = {
     import spark.implicits._
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    Af3Io.perFile(spark, urls).flatMap(readModel(conf.value, _)).toDS()
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+    Af3Io.perFile(spark, urls).flatMap(readModel(conf.value.value, _)).toDS()
   }
 
   /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed

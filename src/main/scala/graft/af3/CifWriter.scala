@@ -1,9 +1,11 @@
 package graft.af3
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** mmCIF and PyMOL rendering + per-key text file sinks.
@@ -13,10 +15,12 @@ import org.apache.spark.util.SerializableConfiguration
   * native writers produce one *directory* per partition; AF3 consumers
   * expect single named files, so each executor task streams its keys'
   * rows to exact paths, in a deterministic order. An `_atom_site` line
-  * has one renderer ([[atomLine]]) and a `.pml` one ([[pml]]). All file
-  * IO goes through the Hadoop FileSystem API with the session's
-  * configuration shipped to executors, so the sinks work on any cluster
-  * filesystem (HDFS/S3/local), not only a driver-shared local disk.
+  * has one renderer ([[appendAtom]]) and a `.pml` one ([[pml]]). All file
+  * IO goes through the Hadoop FileSystem API with the session's Hadoop
+  * configuration, broadcast once per Spark job ([[Af3Io.withBroadcast]])
+  * and read-only in the tasks, which share one copy per executor, so the
+  * sinks work on any cluster filesystem (HDFS/S3/local), not only a
+  * driver-shared local disk.
   */
 object CifWriter {
 
@@ -65,53 +69,68 @@ object CifWriter {
     } else sb.append(String.format(java.util.Locale.US, formats(digits), Double.box(x)))
   }
 
-  /** The atom fields [[atomLine]] renders, in its column order. Numbers
-    * come as doubles and `res_id` as it is, so callers can sort on it.
+  /** The atom fields of a frame that [[renderCif]] maps onto a
+    * [[CifAtom]] for [[appendAtom]], in its column order. Numbers come as
+    * doubles and `res_id` as an int, so callers can sort on it.
     */
   private val lineCols: Seq[Column] =
     (Seq("group_pdb", "type_symbol", "atom_name", "alt_id", "res_name", "label_asym_id",
       "entity_id", "label_seq_id", "ins_code").map(c => col(c).cast("string").as(c)) ++
       Seq("x", "y", "z", "occupancy", "b_iso").map(c => col(c).cast("double").as(c)) :+
-      col("res_id") :+ col("chain").cast("string").as("chain"))
+      col("res_id").cast("int").as("res_id") :+ col("chain").cast("string").as("chain"))
 
-  /** One full-fidelity `_atom_site` row (the field set BioPython's
-    * MMCIFIO preserves: type_symbol, alt id, label_* ids, insertion
-    * code, occupancy, B-factor — py:341-345) from the [[lineCols]] of
-    * `r` starting at column `o`. A non-null `relabel` replaces both
-    * chain ids (the overlays' A/B); `modelNum` fills pdbx_PDB_model_num
-    * and is left out when null. Every other null field is written as its
-    * CIF unknown marker, so no field shifts.
+  /** Bits of [[appendAtom]]'s `unknown`: a number with no value. */
+  private val UnknownX = 1
+  private val UnknownY = 2
+  private val UnknownZ = 4
+  private val UnknownResId = 8
+
+  /** Append one full-fidelity `_atom_site` line of `a` to `sb` (the field
+    * set BioPython's MMCIFIO preserves: type_symbol, alt id, label_* ids,
+    * insertion code, occupancy, B-factor — py:341-345). A non-null
+    * `relabel` replaces both chain ids (the overlays' A/B); `modelNum`
+    * fills pdbx_PDB_model_num and is left out when null. A null string
+    * field, an empty occupancy or B-factor and a number flagged in
+    * `unknown` are written as their CIF unknown marker, so no field
+    * shifts.
     */
-  private def atomLine(r: Row, o: Int, serial: Int, relabel: String, modelNum: String): String = {
-    val sb = new java.lang.StringBuilder(96)
-    def str(i: Int, dflt: String) =
-      if (relabel != null && (i == 5 || i == 15)) relabel
-      else if (r.isNullAt(o + i)) dflt
-      else r.getString(o + i)
-    def num(i: Int, digits: Int): Unit =
-      if (r.isNullAt(o + i)) sb.append('?') else appendFixed(sb, r.getDouble(o + i), digits)
-    sb.append(str(0, "ATOM")).append(' ').append(serial).append(' ')
-      .append(str(1, "?")).append(' ')
-    appendToken(sb, str(2, "?"))
-    sb.append(' ').append(str(3, ".")).append(' ').append(str(4, "?")).append(' ')
-      .append(str(5, "?")).append(' ').append(str(6, "?")).append(' ')
-      .append(str(7, "?")).append(' ').append(str(8, "?")).append(' ')
-    num(9, 3); sb.append(' '); num(10, 3); sb.append(' '); num(11, 3); sb.append(' ')
-    num(12, 2); sb.append(' '); num(13, 2); sb.append(' ')
-    sb.append(if (r.isNullAt(o + 14)) "?" else r.get(o + 14).toString).append(' ')
-      .append(str(15, "?"))
+  private def appendAtom(sb: java.lang.StringBuilder, a: CifAtom, unknown: Int, serial: Int,
+      relabel: String, modelNum: String): Unit = {
+    def str(v: String, dflt: String): Unit = sb.append(if (v == null) dflt else v).append(' ')
+    def num(v: Double, flag: Int, digits: Int): Unit = {
+      if ((unknown & flag) != 0) sb.append('?') else appendFixed(sb, v, digits)
+      sb.append(' ')
+    }
+    def opt(v: Option[Double]): Unit = {
+      if (v.isEmpty) sb.append('?') else appendFixed(sb, v.get, 2)
+      sb.append(' ')
+    }
+    str(a.group_pdb, "ATOM")
+    sb.append(serial).append(' ')
+    str(a.type_symbol, "?")
+    appendToken(sb, if (a.atom_name == null) "?" else a.atom_name)
+    sb.append(' ')
+    str(a.alt_id, ".")
+    str(a.res_name, "?")
+    str(if (relabel != null) relabel else a.label_asym_id, "?")
+    str(a.entity_id, "?")
+    str(a.label_seq_id, "?")
+    str(a.ins_code, "?")
+    num(a.x, UnknownX, 3); num(a.y, UnknownY, 3); num(a.z, UnknownZ, 3)
+    opt(a.occupancy); opt(a.b_iso)
+    if ((unknown & UnknownResId) != 0) sb.append('?') else sb.append(a.res_id)
+    sb.append(' ').append(if (relabel != null) relabel else if (a.chain == null) "?" else a.chain)
     if (modelNum != null) sb.append(' ').append(modelNum)
-    sb.toString
   }
 
-  /** Render atoms as `_atom_site` mmCIF rows ([[atomLine]]). Atom order
-    * is the source file order (`ordinal`, ties broken by chain, res_id
-    * and atom_name), not a re-sort, and serials are renumbered
-    * sequentially in that order, matching MMCIFIO's writer. Returns
-    * (file_key, ord, line) — callers pick `file_key` (e.g. job_dir or
-    * job_dir/model_idx) and feed [[writeKeyedText]]. `modelNum` fills
-    * pdbx_PDB_model_num (AF3 source files are single-model, so the
-    * default is 1).
+  /** Render atoms as `_atom_site` mmCIF rows ([[appendAtom]] over each
+    * row's [[lineCols]], null fields flagged unknown). Atom order is the
+    * source file order (`ordinal`, ties broken by chain, res_id and
+    * atom_name), not a re-sort, and serials are renumbered sequentially in
+    * that order, matching MMCIFIO's writer. Returns (file_key, ord, line)
+    * — callers pick `file_key` (e.g. job_dir or job_dir/model_idx) and
+    * feed [[writeKeyedText]]. `modelNum` fills pdbx_PDB_model_num (AF3
+    * source files are single-model, so the default is 1).
     */
   def renderCif(
       atoms: DataFrame,
@@ -127,11 +146,26 @@ object CifWriter {
       .mapPartitions { (rows: Iterator[Row]) =>
         var key: String = null
         var serial = 0
+        val sb = new java.lang.StringBuilder(96)
         rows.map { r =>
           val k = r.getString(0)
           if (k != key) { key = k; serial = 0 }
           serial += 1
-          (k, serial, atomLine(r, 3, serial, null, r.getString(1)))
+          // lineCols start at column 3
+          def isNull(i: Int) = r.isNullAt(3 + i)
+          def str(i: Int) = if (isNull(i)) null else r.getString(3 + i)
+          def num(i: Int) = if (isNull(i)) 0.0 else r.getDouble(3 + i)
+          def opt(i: Int) = if (isNull(i)) None else Some(r.getDouble(3 + i))
+          def flag(i: Int, bit: Int) = if (isNull(i)) bit else 0
+          val unknown = flag(9, UnknownX) | flag(10, UnknownY) | flag(11, UnknownZ) |
+            flag(14, UnknownResId)
+          val a = CifAtom(null, 0, str(15), if (isNull(14)) 0 else r.getInt(3 + 14), str(4),
+            str(2), num(9), num(10), num(11), group_pdb = str(0), type_symbol = str(1),
+            alt_id = str(3), label_asym_id = str(5), entity_id = str(6), label_seq_id = str(7),
+            ins_code = str(8), occupancy = opt(12), b_iso = opt(13))
+          sb.setLength(0)
+          appendAtom(sb, a, unknown, serial, null, r.getString(1))
+          (k, serial, sb.toString)
         }
       }
       .toDF("file_key", "ord", "line")
@@ -213,7 +247,7 @@ object CifWriter {
     /** Start the file with `data_<key>` and the `_atom_site` loop header. */
     def cifHeader(): Unit = { out.write(s"data_$key\n"); out.write(header) }
 
-    def line(l: String): Unit = { out.write(l); out.write("\n") }
+    def line(l: CharSequence): Unit = { out.append(l); out.write('\n') }
 
     def commit(): Unit = {
       out.close()
@@ -243,37 +277,34 @@ object CifWriter {
       outDir: String,
       suffix: String,
       withCifHeader: Boolean = false): Unit = {
-    // ship the session's Hadoop conf to the tasks: a fresh
-    // Configuration() there would drop every spark.hadoop.* setting
-    // (credentials, custom schemes)
+    // the session's Hadoop conf, not a fresh Configuration() in the task,
+    // which would drop every spark.hadoop.* setting (credentials, custom
+    // schemes)
     val conf = new SerializableConfiguration(
       rendered.sparkSession.sparkContext.hadoopConfiguration)
-    rendered
-      .repartition(col("file_key"))
-      .sortWithinPartitions(col("file_key"), col("ord"))
-      .select("file_key", "line")
-      .foreachPartition { (rows: Iterator[Row]) =>
-        var file: KeyedFile = null
-        try {
-          rows.foreach { r =>
-            val key = r.getString(0)
-            if (file == null || key != file.key) {
-              if (file != null) file.commit()
-              file = null
-              file = new KeyedFile(outDir, key, suffix, conf.value)
-              if (withCifHeader) file.cifHeader()
+    Af3Io.withBroadcast(rendered.sparkSession, conf) { shared =>
+      rendered
+        .repartition(col("file_key"))
+        .sortWithinPartitions(col("file_key"), col("ord"))
+        .select("file_key", "line")
+        .foreachPartition { (rows: Iterator[Row]) =>
+          var file: KeyedFile = null
+          try {
+            rows.foreach { r =>
+              val key = r.getString(0)
+              if (file == null || key != file.key) {
+                if (file != null) file.commit()
+                file = null
+                file = new KeyedFile(outDir, key, suffix, shared.value.value)
+                if (withCifHeader) file.cifHeader()
+              }
+              file.line(r.getString(1))
             }
-            file.line(r.getString(1))
-          }
-          if (file != null) file.commit()
-        } finally if (file != null) file.abort()
-      }
+            if (file != null) file.commit()
+          } finally if (file != null) file.abort()
+        }
+    }
   }
-
-  /** [[atomLine]]'s columns ([[lineCols]]) of a parsed atom. */
-  private def lineRow(a: CifAtom): Row = Row(a.group_pdb, a.type_symbol, a.atom_name, a.alt_id,
-    a.res_name, a.label_asym_id, a.entity_id, a.label_seq_id, a.ins_code, a.x, a.y, a.z,
-    a.occupancy.getOrElse(null), a.b_iso.getOrElse(null), a.res_id, a.chain)
 
   /** [[graft.Af3Run]]'s structure outputs of one job, from its task: per
     * model (ascending, pulled one at a time) the overlay CIF
@@ -282,8 +313,9 @@ object CifWriter {
     * (py:326-345), then `<job>/align_and_save.pml` over every model with
     * atoms (py:472, 533-535). An atom gets one line per
     * [[Af3Pipeline.sinkRoles]] role, in file order (ordinal; then role,
-    * res_id and atom_name when two files share a model). The bytes are
-    * those of [[writeKeyedText]] over [[renderCif]] of
+    * res_id and atom_name when two files share a model: a model whose
+    * ordinals ascend, as one parsed file's do, is in that order already).
+    * The bytes are those of [[writeKeyedText]] over [[renderCif]] of
     * [[Af3Pipeline.interactionCifAtoms]] / [[Af3Pipeline.modelExtractAtoms]]
     * and over [[Af3Pipeline.pymolScripts]]. Returns the files written.
     */
@@ -291,31 +323,38 @@ object CifWriter {
       members: Set[Int], p: Af3Params, out: Af3Outputs,
       conf: org.apache.hadoop.conf.Configuration): Int = {
     val listed = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val sb = new java.lang.StringBuilder(96)
     var files = 0
     for ((m, atoms) <- models if atoms.nonEmpty) {
       listed += m
-      val kept = atoms.map(a => a -> Af3Pipeline.sinkRoles(a, members, p)).filter(_._2.nonEmpty)
-        .sortBy { case (a, roles) => (a.ordinal, roles.head, a.res_id, a.atom_name) }
+      val roles = atoms.map(a => a -> Af3Pipeline.sinkRoles(a, members, p)).filter(_._2.nonEmpty)
+      val ascending = atoms.iterator.zip(atoms.iterator.drop(1))
+        .forall { case (a, b) => a.ordinal < b.ordinal }
+      val kept = if (ascending) roles
+        else roles.sortBy { case (a, rs) => (a.ordinal, rs.head, a.res_id, a.atom_name) }
       var overlay: KeyedFile = null
       var interaction: KeyedFile = null
       try {
         var serial = 0
-        for ((a, roles) <- kept; label <- roles) {
+        for ((a, rs) <- kept; label <- rs) {
           serial += 1
-          val r = lineRow(a)
           // a file is held before its header is written, so a failed
           // write still reaches the abort below
           if (overlay == null) {
             overlay = new KeyedFile(out.overlayDir, s"$job/model_$m", ".cif", conf)
             overlay.cifHeader()
           }
-          overlay.line(atomLine(r, 0, serial, label, "1"))
+          sb.setLength(0)
+          appendAtom(sb, a, 0, serial, label, "1")
+          overlay.line(sb)
           if (m == 0) {
             if (interaction == null) {
               interaction = new KeyedFile(out.interactionDir, s"${job}_interaction", ".cif", conf)
               interaction.cifHeader()
             }
-            interaction.line(atomLine(r, 0, serial, null, "1"))
+            sb.setLength(0)
+            appendAtom(sb, a, 0, serial, null, "1")
+            interaction.line(sb)
           }
         }
         for (f <- Seq(overlay, interaction) if f != null) { f.commit(); files += 1 }
@@ -331,44 +370,67 @@ object CifWriter {
     files
   }
 
-  /** The reference's dynamic-named CSV report sink (py:304-318): exact
-    * reference headers (chain ids interpolated into column names,
-    * py:306-312) and a single file named
+  /** The report's column names (py:306-312): the reference's headers,
+    * chain ids interpolated, by the names [[Af3Pipeline.report]] gives.
+    */
+  private def reportHeaders(p: Af3Params): Seq[(String, String)] = Seq(
+    "folder_name" -> "Folder_name",
+    "contact_residues_poi" -> s"Contact_residues_POI_chain_${p.poiChain}",
+    "contact_sequence" -> "Contact_sequence",
+    "interacting_residues_partner" -> s"Interacting_residues_Partner_chain_${p.partnerChain}",
+    "interacting_sequence" -> "Interacting_sequence")
+
+  /** The reference's dynamic-named CSV report sink (py:304-318) over a
+    * report frame ([[Af3Pipeline.report]]'s columns): its rows, collected,
+    * go through [[writeReport]]. A local frame such as [[Af3Stages.report]]
+    * runs no Spark job.
+    */
+  def writeReportCsv(report: DataFrame, outDir: String, p: Af3Params): Unit = {
+    val renamed = reportHeaders(p).foldLeft(report) { case (df, (from, to)) =>
+      df.withColumnRenamed(from, to)
+    }
+    val qe = renamed.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("writeReportCsv"))(
+      qe.executedPlan.executeCollect())
+    writeReport(renamed.sparkSession, renamed.schema, rows.iterator, outDir, p)
+  }
+
+  /** [[writeReportCsv]] over report rows built on the driver, in
+    * [[Af3Pipeline.reportSchema]]: no query plan and no Spark job.
+    */
+  private[graft] def writeReportRows(spark: SparkSession, rows: Seq[InternalRow], outDir: String,
+      p: Af3Params): Unit = {
+    val names = reportHeaders(p).toMap
+    writeReport(spark, StructType(Af3Pipeline.reportSchema.map(f => f.copy(name = names(f.name)))),
+      rows.iterator, outDir, p)
+  }
+
+  /** The one report writer under [[writeReportCsv]] and [[writeReportRows]]:
+    * exact reference headers (`schema`'s names) and a single file named
     * `interaction_analysis_PAE_{pae}_max_dist_{d}.csv`, not a part-file
     * directory, so downstream tooling written for the reference reads it
-    * unchanged. The driver renders the rows with Spark's own CSV writer
+    * unchanged. The driver renders `rows` with Spark's own CSV writer
     * (`UnivocityGenerator`, `CSVOptions` with `header=true`), the bytes
     * `write.option("header", "true").csv` gives, and writes them through
     * the Hadoop FileSystem of `outDir` (local, HDFS, or object store
     * alike) as the part file of a temp dir, `.<name>.tmp/part-00000.csv`,
-    * renamed into place. A local frame such as [[Af3Stages.report]] runs
-    * no Spark job.
+    * renamed into place.
     */
-  def writeReportCsv(report: DataFrame, outDir: String, p: Af3Params): Unit = {
-    val renamed = report
-      .withColumnRenamed("folder_name", "Folder_name")
-      .withColumnRenamed("contact_residues_poi",
-        s"Contact_residues_POI_chain_${p.poiChain}")
-      .withColumnRenamed("contact_sequence", "Contact_sequence")
-      .withColumnRenamed("interacting_residues_partner",
-        s"Interacting_residues_Partner_chain_${p.partnerChain}")
-      .withColumnRenamed("interacting_sequence", "Interacting_sequence")
+  private def writeReport(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
+      outDir: String, p: Af3Params): Unit = {
     val name = s"interaction_analysis_PAE_${p.maxPaeCutoff}_max_dist_${p.maxDist}"
-    val qe = renamed.queryExecution
-    val rows = SQLExecution.withNewExecutionId(qe, Some("writeReportCsv"))(
-      qe.executedPlan.executeCollect())
-    val sql = qe.sparkSession.sessionState.conf
+    val sql = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
     val options = new CSVOptions(Map("header" -> "true"), sql.csvColumnPruning,
       sql.sessionLocalTimeZone)
     val target = new org.apache.hadoop.fs.Path(outDir, s"$name.csv")
     val tmpDir = new org.apache.hadoop.fs.Path(outDir, s".$name.tmp")
     val part = new org.apache.hadoop.fs.Path(tmpDir, "part-00000.csv")
-    val fs = rawFs(target, qe.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = rawFs(target, spark.sparkContext.hadoopConfiguration)
     fs.delete(tmpDir, true)
     val writer = new java.io.OutputStreamWriter(fs.create(part, true),
       java.nio.charset.Charset.forName(options.charset))
     try {
-      val gen = new UnivocityGenerator(renamed.schema, writer, options)
+      val gen = new UnivocityGenerator(schema, writer, options)
       gen.writeHeaders()
       rows.foreach(gen.write)
       gen.close()

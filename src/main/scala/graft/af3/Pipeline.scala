@@ -2,10 +2,14 @@ package graft.af3
 
 import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.SpatialJoin
 import graft.functions.Scalars
@@ -61,18 +65,11 @@ final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
   private lazy val nested: DataFrame = jobs.flatMap(_.islands).toDF()
   lazy val members: DataFrame = Af3Pipeline.membersOf(nested)
   lazy val islands: DataFrame = Af3Pipeline.contactIslandsOf(nested)
-  /** [[Af3Pipeline.report]]'s rows, joined in Scala: a job lacking the
-    * POI or the partner chain has none, as the inner joins drop it.
-    */
-  lazy val report: DataFrame = Af3Pipeline.reportOf((for {
-    j <- jobs
-    poi <- j.info.filter(_.chain == p.poiChain)
-    partner <- j.info.filter(_.chain == p.partnerChain)
-    i <- j.islands
-    c <- i.contact_islands
-  } yield (j.job_dir, c.contact_min, c.contact_max, poi.sequence, i.partner_min,
-    i.partner_max, partner.sequence)).toDF("job_dir", "contact_min", "contact_max",
-    "poi_sequence", "partner_min", "partner_max", "partner_sequence"))
+  /** The report rows of the binders' results ([[Af3Pipeline.reportRowsOf]]). */
+  private[graft] lazy val reportRows: Seq[InternalRow] = Af3Pipeline.reportRowsOf(jobs, p)
+  /** A local frame of [[reportRows]]. */
+  lazy val report: DataFrame = ColumnBridge.ofRows(spark,
+    LocalRelation(DataTypeUtils.toAttributes(Af3Pipeline.reportSchema), reportRows))
 }
 
 /** The reference pipeline (E1-E3, SURVEY §3): each rule is one per-job
@@ -273,14 +270,7 @@ object Af3Pipeline {
       .select(col("job_dir"), col("sequence").as("poi_sequence"))
     val partnerSeq = chainInfoDf.filter(col("chain") === p.partnerChain)
       .select(col("job_dir"), col("sequence").as("partner_sequence"))
-    reportOf(islands.join(poiSeq, Seq("job_dir")).join(partnerSeq, Seq("job_dir")))
-  }
-
-  /** The report columns of island rows that carry their job's
-    * `poi_sequence` and `partner_sequence`.
-    */
-  private[af3] def reportOf(rows: DataFrame): DataFrame =
-    rows.select(
+    islands.join(poiSeq, Seq("job_dir")).join(partnerSeq, Seq("job_dir")).select(
       col("job_dir").as("folder_name"),
       Scalars.rangeLabel(col("contact_min"), col("contact_max"))
         .as("contact_residues_poi"),
@@ -290,6 +280,40 @@ object Af3Pipeline {
         .as("interacting_residues_partner"),
       Scalars.substrRange(col("partner_sequence"), col("partner_min"), col("partner_max"))
         .as("interacting_sequence"))
+  }
+
+  /** [[report]]'s rows over per-job results, in [[reportSchema]] and in
+    * the order of `jobs`, built on the driver with the report's rules: the
+    * ranges `min-max` and the sequences
+    * `UTF8String.substringSQL(min, max - min + 1)`, the function
+    * `Scalars.substrRange` compiles to. A job lacking the POI or the
+    * partner chain has none, as the inner joins drop it.
+    */
+  private[graft] def reportRowsOf(jobs: Seq[JobResult], p: Af3Params): Seq[InternalRow] = {
+    def range(min: Int, max: Int) = UTF8String.fromString(s"$min-$max")
+    def substr(s: String, min: Int, max: Int) =
+      UTF8String.fromString(s).substringSQL(min, max - min + 1)
+    for {
+      j <- jobs
+      poi <- j.info.filter(_.chain == p.poiChain)
+      partner <- j.info.filter(_.chain == p.partnerChain)
+      i <- j.islands
+      c <- i.contact_islands
+    } yield InternalRow(UTF8String.fromString(j.job_dir), range(c.contact_min, c.contact_max),
+      substr(poi.sequence, c.contact_min, c.contact_max), range(i.partner_min, i.partner_max),
+      substr(partner.sequence, i.partner_min, i.partner_max))
+  }
+
+  /** The columns of [[Af3Stages.report]]: [[report]]'s, typed as its
+    * projection types them over non-null ranges and nullable names and
+    * sequences.
+    */
+  private[graft] val reportSchema: StructType = StructType(Seq(
+    StructField("folder_name", StringType),
+    StructField("contact_residues_poi", StringType, nullable = false),
+    StructField("contact_sequence", StringType),
+    StructField("interacting_residues_partner", StringType, nullable = false),
+    StructField("interacting_sequence", StringType)))
 
   /** The relabeled chains an atom takes in the structure sinks, in
     * output order: "A" for the POI chain, "B" for a partner residue

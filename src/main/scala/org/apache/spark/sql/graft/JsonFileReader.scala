@@ -20,7 +20,12 @@ import org.apache.spark.util.SerializableConfiguration
   * each file it reads, with `schema` the scan's pruned read schema and
   * `filters` its pushed data filters. A task that reads the file itself
   * therefore gets the rows that scan would get: the same parse mode,
-  * partial results and corrupt-record handling. Build it on the driver.
+  * partial results and corrupt-record handling. Build it on the driver
+  * and ship it in a broadcast, as a scan ships its Hadoop conf: then
+  * every task thread of an executor calls one shared instance, which is
+  * why it is read-only. Each [[read]] and [[tokens]] builds its own
+  * parser and stream; the options, the conf and the lazily built Jackson
+  * factory (thread-safe once built) are only read.
   */
 final class JsonFileReader private (options: JSONOptionsInRead, schema: StructType,
     filters: Seq[Filter], conf: SerializableConfiguration) extends Serializable {

@@ -3,7 +3,11 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+
+import org.apache.spark.BroadcastBlocks
+import org.scalatest.concurrent.Eventually._
 
 import graft.af3.Af3Params
 
@@ -300,11 +304,37 @@ class Af3RunSpec extends SparkSpec {
       Seq(job, name, "hidden", "skipped_hidden") }).sortBy(_.mkString("\t")))
   }
 
+  /** Assert that no broadcast made since `before` (the driver's broadcast
+    * ids) is left but the jobs' task binaries, which Spark's
+    * `ContextCleaner` owns: the broadcast an AF3 job ships its task state
+    * in is destroyed without it.
+    */
+  private def assertNoBroadcastLeft(before: Set[Long]): Unit =
+    eventually(timeout(30.seconds), interval(50.millis)) {
+      val left = BroadcastBlocks.values().filter { case (id, v) =>
+        !before(id) && !v.isInstanceOf[Array[Byte]]
+      }
+      assert(left.isEmpty, left.map { case (id, v) => s"$id: ${v.getClass.getName}" })
+    }
+
   test("run releases every cache it makes in the caller's session") {
     spark.catalog.clearCache()
+    val before = BroadcastBlocks.values().keySet
     val out = Files.createTempDirectory("graft_af3run_caches").toFile
     Af3Run.run(spark, fixtureDir, out.getPath, Af3Params())
     assert(spark.sharedState.cacheManager.isEmpty)
+    assertNoBroadcastLeft(before)
+  }
+
+  test("run destroys its broadcast when a task throws") {
+    // an output dir under a regular file: the binder's task fails to
+    // create its first overlay
+    val blocker = Files.createTempFile("graft_af3run_unwritable", "").toFile
+    val before = BroadcastBlocks.values().keySet
+    intercept[Exception] {
+      Af3Run.run(spark, fixtureDir, new File(blocker, "out").getPath, Af3Params())
+    }
+    assertNoBroadcastLeft(before)
   }
 
   test("run takes 1 Spark job on the fixture tree and on an af3_screen tree") {

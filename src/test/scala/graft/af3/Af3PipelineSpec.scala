@@ -7,6 +7,7 @@ import scala.concurrent.duration._
 import graft.SparkSpec
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 class Af3PipelineSpec extends SparkSpec {
   private val p = Af3Params()
@@ -154,5 +155,55 @@ class Af3PipelineSpec extends SparkSpec {
     val rep = Af3Pipeline.stages(spark, fixtureDir, p).report
     assert(rep.collect().map(_.toSeq).toSeq ===
       Seq(Seq("job_binder", "2-8", "CDEFGHI", "2-6", "RSTVW")))
+  }
+
+  test("af3_report's schema: names, types and nullability") {
+    val rep = Af3Pipeline.stages(spark, fixtureDir, p).report
+    assert(rep.schema === StructType(Seq(
+      StructField("folder_name", StringType),
+      StructField("contact_residues_poi", StringType, nullable = false),
+      StructField("contact_sequence", StringType),
+      StructField("interacting_residues_partner", StringType, nullable = false),
+      StructField("interacting_sequence", StringType))))
+  }
+
+  test("the CLI's report rows equal report's DataFrame rows on edge ranges and chains") {
+    import spark.implicits._
+    def island(job: String, id: Long, pMin: Int, pMax: Int, contacts: (Int, Int)*) =
+      PartnerIsland(job, id, pMin, pMax, pMin to pMax,
+        contacts.zipWithIndex.map { case ((a, b), k) => ContactIsland(k.toLong, a, b, 3L) })
+    def job(name: String, chains: Seq[(String, String)], islands: PartnerIsland*) =
+      JobResult(name, chains.map { case (c, s) => ChainRow(c, s.length.toLong, s) }, Nil, Nil,
+        islands, Nil)
+    val ab = Seq("A" -> "ACDEFGHIKL", "B" -> "MNPQRS")
+    val jobs = Seq(
+      // residue numbers <= 0: substring counts a negative start from the end
+      job("j_nonpositive", ab, island("j_nonpositive", 0, -4, -2, (-3, 0), (0, 2)),
+        island("j_nonpositive", 1, 0, 2, (-12, -10))),
+      // ranges past the end of either sequence
+      job("j_past_end", ab, island("j_past_end", 0, 5, 9, (8, 14), (11, 13)),
+        island("j_past_end", 2, 20, 22, (30, 32))),
+      // a job lacking the partner chain, and one lacking the POI chain
+      job("j_no_partner", Seq("A" -> "ACDEF"), island("j_no_partner", 0, 1, 3, (1, 3))),
+      job("j_no_poi", Seq("B" -> "MNPQ"), island("j_no_poi", 0, 1, 3, (1, 3))),
+      job("j_plain", ab ++ Seq("C" -> "WY"), island("j_plain", 0, 2, 4, (1, 3), (5, 9))))
+    def frames(q: Af3Params) = {
+      val info = jobs.flatMap(j => j.info.map(c => (j.job_dir, c.chain, c.residue_length,
+        c.sequence))).toDF("job_dir", "chain", "residue_length", "sequence")
+      Af3Pipeline.report(Af3Pipeline.contactIslandsOf(jobs.flatMap(_.islands).toDF()), info, q)
+    }
+    for (q <- Seq(p, p.copy(poiChain = "B", partnerChain = "B"),
+        p.copy(poiChain = "A", partnerChain = "A"), p.copy(poiChain = "C"))) {
+      val scala = Af3Pipeline.reportRowsOf(jobs, q).map(r => (0 until 5).map(r.getUTF8String(_)
+        .toString))
+      val df = frames(q).collect().map(r => (0 until 5).map(r.getString)).toSeq
+      assert(scala.sortBy(_.mkString(",")) === df.sortBy(_.mkString(",")), q)
+    }
+    val rows = Af3Pipeline.reportRowsOf(jobs, p).map(r => (0 until 5).map(r.getUTF8String(_)
+      .toString).mkString(","))
+    assert(rows === Seq(
+      "j_nonpositive,-3-0,IKL,-4--2,PQR", "j_nonpositive,0-2,ACD,-4--2,PQR",
+      "j_nonpositive,-12--10,A,0-2,MNP", "j_past_end,8-14,IKL,5-9,RS", "j_past_end,11-13,,5-9,RS",
+      "j_past_end,30-32,,20-22,", "j_plain,1-3,ACD,2-4,NPQ", "j_plain,5-9,FGHIK,2-4,NPQ"))
   }
 }

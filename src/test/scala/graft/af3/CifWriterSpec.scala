@@ -107,6 +107,67 @@ class CifWriterSpec extends SparkSpec {
       ("k", 1, "ATOM 1 ? ? . ALA ? ? ? ? 0.000 0.000 0.000 ? ? 1 B 1")))
   }
 
+  test("renderCif writes every null field of a row as its CIF unknown marker") {
+    val fields = Seq("group_pdb", "type_symbol", "atom_name", "alt_id", "res_name",
+      "label_asym_id", "entity_id", "label_seq_id", "ins_code", "x", "y", "z", "occupancy",
+      "b_iso", "res_id", "chain")
+    val atoms = fields.foldLeft(Seq(CifAtom("j", 0, "A", 7, "GLY", "CA", 1.0, 2.0, 3.0,
+        ordinal = 1, occupancy = Some(1.0), b_iso = Some(2.0))).toDF()) { (df, c) =>
+      df.withColumn(c, lit(null).cast(df.schema(c).dataType))
+    }
+    assert(CifWriter.renderCif(atoms, col("job_dir"), lit(null)).collect()
+      .map(_.getString(2)).toSeq === Seq("ATOM 1 ? ? . ? ? ? ? ? ? ? ? ? ? ? ?"))
+  }
+
+  /** The lines of the `_atom_site` loop of a written CIF. */
+  private def atomLines(f: File): Seq[String] =
+    Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString)
+      .filter(l => l.startsWith("ATOM") || l.startsWith("HETATM"))
+
+  private def atom(chain: String, res: Int, name: String, ordinal: Int): CifAtom =
+    CifAtom("j", 0, chain, res, "GLY", name, res.toDouble, 0.5, -0.25, ordinal = ordinal,
+      label_asym_id = s"L$chain", occupancy = Some(1.0), b_iso = Some(50.0))
+
+  test("writeJob sorts a model whose ordinals do not ascend by (ordinal, role, res_id, name)") {
+    val out = Files.createTempDirectory("graft_write_job_sort").toFile
+    val o = Af3Outputs(new File(out, "inter").getPath, new File(out, "over").getPath)
+    // two files of model 0: the ordinals restart, and B 3 is in no island
+    val model0 = Seq(atom("A", 1, "N", 1), atom("B", 2, "CA", 2), atom("B", 3, "N", 3),
+      atom("A", 2, "CA", 1), atom("B", 2, "N", 2), atom("A", 1, "CA", 3))
+    assert(CifWriter.writeJob("j", Iterator(0 -> model0), Set(2), Af3Params(), o,
+      spark.sparkContext.hadoopConfiguration) === 3)
+    val rest = "0.500 -0.250 1.00 50.00"
+    assert(atomLines(new File(out, "over/j/model_0.cif")) === Seq(
+      s"ATOM 1 ? N . GLY A ? ? ? 1.000 $rest 1 A 1",
+      s"ATOM 2 ? CA . GLY A ? ? ? 2.000 $rest 2 A 1",
+      s"ATOM 3 ? CA . GLY B ? ? ? 2.000 $rest 2 B 1",
+      s"ATOM 4 ? N . GLY B ? ? ? 2.000 $rest 2 B 1",
+      s"ATOM 5 ? CA . GLY A ? ? ? 1.000 $rest 1 A 1"))
+    assert(atomLines(new File(out, "inter/j_interaction.cif")) === Seq(
+      s"ATOM 1 ? N . GLY LA ? ? ? 1.000 $rest 1 A 1",
+      s"ATOM 2 ? CA . GLY LA ? ? ? 2.000 $rest 2 A 1",
+      s"ATOM 3 ? CA . GLY LB ? ? ? 2.000 $rest 2 B 1",
+      s"ATOM 4 ? N . GLY LB ? ? ? 2.000 $rest 2 B 1",
+      s"ATOM 5 ? CA . GLY LA ? ? ? 1.000 $rest 1 A 1"))
+  }
+
+  test("writeJob writes an atom in both roles twice when the POI is the partner chain") {
+    val out = Files.createTempDirectory("graft_write_job_roles").toFile
+    val o = Af3Outputs(new File(out, "inter").getPath, new File(out, "over").getPath)
+    val model0 = Seq(atom("A", 1, "N", 1), atom("A", 2, "CA", 2), atom("B", 1, "N", 3))
+    CifWriter.writeJob("j", Iterator(0 -> model0), Set(1),
+      Af3Params(poiChain = "A", partnerChain = "A"), o, spark.sparkContext.hadoopConfiguration)
+    val rest = "0.500 -0.250 1.00 50.00"
+    assert(atomLines(new File(out, "over/j/model_0.cif")) === Seq(
+      s"ATOM 1 ? N . GLY A ? ? ? 1.000 $rest 1 A 1",
+      s"ATOM 2 ? N . GLY B ? ? ? 1.000 $rest 1 B 1",
+      s"ATOM 3 ? CA . GLY A ? ? ? 2.000 $rest 2 A 1"))
+    assert(atomLines(new File(out, "inter/j_interaction.cif")) === Seq(
+      s"ATOM 1 ? N . GLY LA ? ? ? 1.000 $rest 1 A 1",
+      s"ATOM 2 ? N . GLY LA ? ? ? 1.000 $rest 1 A 1",
+      s"ATOM 3 ? CA . GLY LA ? ? ? 2.000 $rest 2 A 1"))
+  }
+
   test("writeReportCsv fails on a rename that returns false and keeps the report") {
     spark.sparkContext.hadoopConfiguration
       .set("fs.renamefails.impl", classOf[ReportRenameFailsFs].getName)
