@@ -65,7 +65,7 @@ object Af3Run {
     val inter = s"Interaction_cif_files_PAE_${p.maxPaeCutoff}_maxdist_${p.maxDist}"
     val out = Af3Outputs(s"$outBase/$inter", s"$outBase/Overlays_$inter")
     val st = Af3Pipeline.stages(spark, inputDir, p, Some(out))
-    CifWriter.writeReportRows(spark, st.reportRows, outBase, p)
+    CifWriter.writeReportRows(spark, st.state.conf, st.reportRows, outBase, p)
     val n = st.reportRows.size.toLong
     val sums = Af3Jobs.Counters.zipWithIndex.map { case (k, i) =>
       val v = st.jobs.map(_.counters(i)).sum

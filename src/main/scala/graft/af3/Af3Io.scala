@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.core.JsonParser.NumberType
 import com.fasterxml.jackson.core.JsonToken._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, GlobFilter, Path}
 
 import org.apache.spark.broadcast.Broadcast
@@ -52,6 +53,36 @@ object Af3Io {
     "columnNameOfCorruptRecord" -> "_corrupt")
   private[af3] val summaryOptions = fullDataOptions + ("encoding" -> "UTF-8")
 
+  /** What every AF3 Spark job's tasks read and write with, in one
+    * broadcast ([[withBroadcast]], [[perFile]]): the session's Hadoop
+    * conf, as a Spark file scan reads with (the context's conf and the
+    * session's settings), and the JSON readers, which open files with it.
+    * The driver lists ([[bundleFiles]]) and writes the report with it
+    * too. All task threads of an executor share the value: it is read-only.
+    * `summaries` reads a summary ([[summaryOptions]], [[summarySchema]])
+    * for [[Af3Pipeline.passesGate]], [[readSummaries]] and [[runLog]];
+    * `fullData` a `full_data` file for its [[paeMatrices]] (the read
+    * schema and not-null filters Spark plans for a `pae`/`token_res_ids`
+    * scan); `fullDataRecords` one in the full [[fullDataSchema]], for
+    * [[runLog]]'s statuses.
+    */
+  private[graft] final case class TaskState(hadoopConf: SerializableConfiguration,
+      summaries: JsonFileReader, fullData: JsonFileReader, fullDataRecords: JsonFileReader) {
+    def conf: Configuration = hadoopConf.value
+  }
+
+  private[graft] object TaskState {
+    def apply(spark: SparkSession): TaskState = {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      TaskState(new SerializableConfiguration(session.sessionState.newHadoopConf()),
+        JsonFileReader(spark, summaryOptions, summarySchema, Nil),
+        JsonFileReader(spark, fullDataOptions,
+          StructType(fullDataSchema.filter(_.name != "_corrupt")),
+          Seq(IsNotNull("pae"), IsNotNull("token_res_ids"))),
+        JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil))
+    }
+  }
+
   /** The bundle files under a tree, as URL-encoded paths, and its
     * AppleDouble `._` files ([[bundleFiles]]).
     */
@@ -59,16 +90,15 @@ object Af3Io {
       models: Seq[String], appleDouble: Seq[Path])
 
   /** The AF3 input files under `inputDir`, the one listing every AF3
-    * read goes through: one `listStatus` walk on the driver with the
-    * rules of Spark's file index, no file or directory whose name
-    * [[FileIndexRules.hidden]] marks, and each kind's glob on the file
-    * name. Also every `._` file, in the directories walked; with
+    * read goes through: one `listStatus` walk on the driver with `conf`
+    * ([[TaskState]]) and the rules of Spark's file index, no file or
+    * directory whose name [[FileIndexRules.hidden]] marks, and each
+    * kind's glob on the file name. Also every `._` file, in the directories walked; with
     * `hiddenDirs` the walk enters hidden directories too, for their `._`
     * files only.
     */
-  private[af3] def bundleFiles(spark: SparkSession, inputDir: String,
+  private[af3] def bundleFiles(conf: Configuration, inputDir: String,
       hiddenDirs: Boolean = false): BundleFiles = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val visible = Vector.newBuilder[Path]
     val appleDouble = Vector.newBuilder[Path]
     def walk(fs: FileSystem, dir: Path, shown: Boolean): Unit = fs.listStatus(dir).foreach { st =>
@@ -90,26 +120,29 @@ object Af3Io {
       appleDouble.result())
   }
 
-  /** `value` broadcast for the tasks of the Spark jobs `body` runs, and
-    * destroyed once `body` returns or throws. A task closure then holds
-    * the handle, and each executor fetches the value once per job, as
-    * Spark's file scans ship their `broadcastedHadoopConf`: no task
-    * deserializes a Hadoop conf of its own. Every task thread of an
-    * executor reads the one value, so it must be read-only. A reader
-    * whose frame outlives the call broadcasts with
-    * `sparkContext.broadcast` instead and leaves the broadcast to Spark's
-    * `ContextCleaner`, as a file scan does.
+  /** `state` broadcast for the tasks of the Spark jobs `body` runs, and
+    * destroyed once `body` returns or throws. A task closure holds the
+    * handle, and each executor fetches the one conf once per job, as
+    * Spark's file scans ship their `broadcastedHadoopConf`. A frame that
+    * outlives the call reads through [[perFile]] instead.
     */
-  private[af3] def withBroadcast[T: ClassTag, R](spark: SparkSession, value: T)(
-      body: Broadcast[T] => R): R = {
-    val b = spark.sparkContext.broadcast(value)
+  private[af3] def withBroadcast[R](spark: SparkSession, state: TaskState)(
+      body: Broadcast[TaskState] => R): R = {
+    val b = spark.sparkContext.broadcast(state)
     try body(b) finally b.destroy()
   }
 
-  /** `files` as a Spark job's input, one task per file up to the default parallelism. */
-  private[af3] def perFile[T: ClassTag](spark: SparkSession, files: Seq[T]): RDD[T] = {
+  /** `read` over each of `files` in one Spark job, one task per file up
+    * to the default parallelism, with `state` in one broadcast. The frames
+    * built on it are lazy and may run again, so the broadcast is left to
+    * Spark's `ContextCleaner`, as a file scan leaves its conf.
+    */
+  private[af3] def perFile[T: ClassTag, U: ClassTag](spark: SparkSession, state: TaskState,
+      files: Seq[T])(read: (TaskState, T) => IterableOnce[U]): RDD[U] = {
     val sc = spark.sparkContext
+    val shared = sc.broadcast(state)
     sc.parallelize(files, math.max(1, math.min(files.size, sc.defaultParallelism)))
+      .flatMap(read(shared.value, _))
   }
 
   /** (job, file name) of the file at `url`, a URL-encoded path, decoded
@@ -124,26 +157,8 @@ object Af3Io {
 
   private def jobDir(url: String): UTF8String = UTF8String.fromString(jobAndFile(url)._1)
 
-  /** The reader of one summary file: Spark's JSON parser with
-    * [[summaryOptions]] and the full [[summarySchema]], `_corrupt`
-    * included. [[readSummaries]] and [[runLog]] read with it; in a job's
-    * task its rows go through [[Af3Pipeline.passesGate]].
-    */
-  private[af3] def summaryReader(spark: SparkSession): JsonFileReader =
-    JsonFileReader(spark, summaryOptions, summarySchema, Nil)
-
-  /** The reader of one `full_data` file for its PAE matrices: Spark's
-    * JSON parser with [[fullDataOptions]], the read schema and the pushed
-    * not-null filters Spark plans for a `pae`/`token_res_ids` scan of
-    * [[fullDataSchema]]. Its rows go through [[paeMatrices]].
-    */
-  private[af3] def fullDataReader(spark: SparkSession): JsonFileReader =
-    JsonFileReader(spark, fullDataOptions,
-      StructType(fullDataSchema.filter(_.name != "_corrupt")),
-      Seq(IsNotNull("pae"), IsNotNull("token_res_ids")))
-
   /** The PAE matrices [[readPaeLong]] keeps from the rows of one file
-    * ([[fullDataReader]]): both keys must be present (py:111-113).
+    * ([[TaskState.fullData]]): both keys must be present (py:111-113).
     */
   private[af3] def paeMatrices(rows: Iterator[InternalRow]): Seq[ArrayData] =
     rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).map(_.getArray(0)).toSeq
@@ -214,15 +229,15 @@ object Af3Io {
   /** [[PaeHits]] of the file at `url` for the block `(start_poi,
     * end_poi, start_partner, end_partner)` of [[Af3Pipeline.paeBlock]]:
     * streamed when the file has the shape [[streamPaeHits]] reads, else
-    * from `reader`'s rows, as [[readPaeLong]] reads the file.
+    * from `state.fullData`'s rows, as [[readPaeLong]] reads the file.
     */
-  private[af3] def paeHits(reader: JsonFileReader, url: String, block: (Long, Long, Long, Long),
+  private[af3] def paeHits(state: TaskState, url: String, block: (Long, Long, Long, Long),
       cutoff: Double, minHits: Int): PaeHits = {
     val (a, b, c, d) = block
     def cells(m: ArrayData) = (0 until m.numElements()).map(i =>
       if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum
-    streamPaeHits(reader, url, block, cutoff, minHits).getOrElse {
-      val ms = paeMatrices(reader.read(url))
+    streamPaeHits(state, url, block, cutoff, minHits).getOrElse {
+      val ms = paeMatrices(state.fullData.read(state.conf, url))
       PaeHits(ms.flatMap(m => paeBlockHits(m, a, b, c, d, cutoff, minHits).toIntArray())
         .toArray, ms.map(cells).sum, streamed = false)
     }
@@ -239,11 +254,11 @@ object Af3Io {
     * decode error included, gives `None`, and nothing of the stream is
     * counted.
     */
-  private def streamPaeHits(reader: JsonFileReader, url: String,
+  private def streamPaeHits(state: TaskState, url: String,
       block: (Long, Long, Long, Long), cutoff: Double, minHits: Int): Option[PaeHits] = {
     val (startPoi, endPoi, startPartner, endPartner) = block
     val jLo = math.max(startPartner, 0L)
-    try reader.tokens(url) { in =>
+    try state.fullData.tokens(state.conf, url) { in =>
       val counts = new Array[Int](math.max(endPartner - jLo, 0L).toInt)
       var cells = 0L
       // the pae value: false unless it is null or a matrix of numbers
@@ -310,8 +325,8 @@ object Af3Io {
   }
 
   /** Read all summaries under `inputDir` keyed by job_dir: the
-    * [[summaryReader]] rows of each file [[bundleFiles]] lists, in one
-    * Spark job, the reader broadcast to its tasks ([[withBroadcast]]).
+    * [[TaskState.summaries]] rows of each file [[bundleFiles]] lists, in
+    * one Spark job ([[perFile]]).
     * One row per JSON record (a top-level array gives one per element, an
     * empty or blank file none); malformed files carry
     * `_corrupt` and fall out at the gate (≙ return False, py:74-77).
@@ -324,11 +339,11 @@ object Af3Io {
     * fixture parses green under UTF-8).
     */
   def readSummaries(spark: SparkSession, inputDir: String): DataFrame = {
-    val reader = spark.sparkContext.broadcast(summaryReader(spark))
-    ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).summaries)
-      .flatMap { url =>
+    val state = TaskState(spark)
+    ColumnBridge.ofInternalRows(spark,
+      perFile(spark, state, bundleFiles(state.conf, inputDir).summaries) { (s, url) =>
         val job = InternalRow(jobDir(url))
-        reader.value.read(url).map(new JoinedRow(_, job))
+        s.summaries.read(s.conf, url).map[InternalRow](new JoinedRow(_, job))
       }, summarySchema.add("job_dir", StringType, nullable = false))
   }
 
@@ -338,10 +353,9 @@ object Af3Io {
     * other frame.
     *
     * One [[bundleFiles]] walk, into hidden directories too, and one
-    * Spark job that reads each listed file with the pipeline's reader
-    * for it (the readers and the conf in one broadcast,
-    * [[withBroadcast]]) and gives it exactly one row: (job_dir, file,
-    * kind, status) with kind ∈ summary | full_data | cif | hidden and
+    * Spark job ([[perFile]]) that reads each listed file with the
+    * pipeline's reader for it and gives it exactly one row: (job_dir,
+    * file, kind, status) with kind ∈ summary | full_data | cif | hidden and
     * status ∈ parsed | corrupt_json (py:74-77) | missing_keys
     * (py:111-113) | no_atoms | skipped_hidden (py:560-566). A JSON file with no record (empty or
     * blank) or a corrupt one is `corrupt_json`, a `full_data` file with
@@ -352,28 +366,26 @@ object Af3Io {
     */
   def runLog(spark: SparkSession, inputDir: String): DataFrame = {
     import spark.implicits._
-    val files = bundleFiles(spark, inputDir, hiddenDirs = true)
+    val state = TaskState(spark)
+    val files = bundleFiles(state.conf, inputDir, hiddenDirs = true)
     // (job_dir, file, kind, url); the `._` files are never opened
     val listed = Seq("summary" -> files.summaries, "full_data" -> files.fullData,
       "cif" -> files.models).flatMap { case (kind, urls) =>
         urls.map { u => val (job, file) = jobAndFile(u); (job, file, kind, u) }
       } ++ files.appleDouble.map(p => (p.getParent.getName, p.getName, "hidden", ""))
-    val readers = spark.sparkContext.broadcast((summaryReader(spark),
-      JsonFileReader(spark, fullDataOptions, fullDataSchema, Nil),
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)))
     def json(rows: Iterator[InternalRow], corrupt: Int)(keyed: InternalRow => Boolean) = {
       var (records, bad, keys) = (0, false, false)
       rows.foreach { r => records += 1; bad ||= !r.isNullAt(corrupt); keys ||= keyed(r) }
       if (records == 0 || bad) "corrupt_json" else if (keys) "parsed" else "missing_keys"
     }
-    perFile(spark, listed).map { case (job, file, kind, url) =>
-      val (summaries, fullData, conf) = readers.value
-      (job, file, kind, kind match {
-        case "summary" => json(summaries.read(url), 3)(_ => true)
-        case "full_data" => json(fullData.read(url), 2)(r => !r.isNullAt(0) && !r.isNullAt(1))
-        case "cif" => if (CifParser.readModel(conf.value, url).hasNext) "parsed" else "no_atoms"
+    perFile(spark, state, listed) { case (s, (job, file, kind, url)) =>
+      Some((job, file, kind, kind match {
+        case "summary" => json(s.summaries.read(s.conf, url), 3)(_ => true)
+        case "full_data" =>
+          json(s.fullDataRecords.read(s.conf, url), 2)(r => !r.isNullAt(0) && !r.isNullAt(1))
+        case "cif" => if (CifParser.readModel(s.conf, url).hasNext) "parsed" else "no_atoms"
         case _ => "skipped_hidden"
-      })
+      }))
     }.toDF("job_dir", "file", "kind", "status")
   }
 
@@ -381,10 +393,9 @@ object Af3Io {
     * `(job_dir, pae)` with the whole N x N matrix as
     * `array<array<double>>` (the transpose of py:215 is a no-op here),
     * the [[paeMatrices]] of each file [[bundleFiles]] lists, in one Spark
-    * job, the reader broadcast to its tasks ([[withBroadcast]]). A job's
-    * matrix is the unit of work of the PAE block count
-    * ([[Af3Pipeline.interactingResidues]]): a task holds one complex's
-    * N^2 cells, never the N^2 rows a long form would materialize.
+    * job ([[perFile]]). A job's matrix is the unit of work of the PAE
+    * block count ([[Af3Pipeline.interactingResidues]]): a task holds one
+    * complex's N^2 cells, never the N^2 rows a long form would make.
     *
     * Decoding is strict on purpose: unlike [[readSummaries]] the reader
     * sets no `encoding`, so a file with a byte that is not UTF-8, even in
@@ -394,10 +405,11 @@ object Af3Io {
     * summaries only.
     */
   def readPaeLong(spark: SparkSession, inputDir: String): DataFrame = {
-    val reader = spark.sparkContext.broadcast(fullDataReader(spark))
-    ColumnBridge.ofInternalRows(spark, perFile(spark, bundleFiles(spark, inputDir).fullData)
-      .flatMap(url =>
-        paeMatrices(reader.value.read(url)).iterator.map(InternalRow(jobDir(url), _))),
+    val state = TaskState(spark)
+    ColumnBridge.ofInternalRows(spark,
+      perFile(spark, state, bundleFiles(state.conf, inputDir).fullData) { (s, url) =>
+        paeMatrices(s.fullData.read(s.conf, url)).iterator.map(InternalRow(jobDir(url), _))
+      },
       StructType(Seq(StructField("job_dir", StringType, nullable = false), fullDataSchema("pae"))))
   }
 }

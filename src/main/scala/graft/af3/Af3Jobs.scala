@@ -2,7 +2,6 @@ package graft.af3
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.JsonFileReader
-import org.apache.spark.util.SerializableConfiguration
 
 /** One chain of a job's model 0 (agg_chain_info, py:152-176). */
 final case class ChainRow(chain: String, residue_length: Long, sequence: String)
@@ -46,26 +45,16 @@ object Af3Jobs {
     }
   }
 
-  /** What a job's task reads with: the session's Hadoop conf and the
-    * summary and `full_data` readers. Every field is read-only, as all
-    * task threads of an executor share one instance.
-    */
-  private final case class TaskState(conf: SerializableConfiguration,
-      summaries: JsonFileReader, fullData: JsonFileReader)
-
   /** Run `jobs` ([[jobFiles]] of a driver-side listing) as one Spark job
     * of one task per job; results of the binders, in job-name order.
-    * The [[TaskState]] reaches the tasks in one broadcast, destroyed
-    * when the job ends ([[Af3Io.withBroadcast]]), so a task closure holds
-    * the handle, `p`, `out` and its job's file list. With `out`, each
-    * binder's task also writes its structure outputs
-    * ([[CifWriter.writeJob]]).
+    * `state` reaches the tasks in one broadcast, destroyed when the job
+    * ends ([[Af3Io.withBroadcast]]), so a task closure holds the handle,
+    * `p`, `out` and its job's file list. With `out`, each binder's task
+    * also writes its structure outputs ([[CifWriter.writeJob]]).
     */
-  private[af3] def run(spark: SparkSession, jobs: Seq[JobFiles], p: Af3Params,
-      out: Option[Af3Outputs]): Seq[JobResult] = {
+  private[af3] def run(spark: SparkSession, state: Af3Io.TaskState, jobs: Seq[JobFiles],
+      p: Af3Params, out: Option[Af3Outputs]): Seq[JobResult] = {
     if (jobs.isEmpty) return Nil
-    val state = TaskState(new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
-      Af3Io.summaryReader(spark), Af3Io.fullDataReader(spark))
     Af3Io.withBroadcast(spark, state) { shared =>
       JsonFileReader.withSessionConf(spark) {
         spark.sparkContext.parallelize(jobs, jobs.size)
@@ -78,10 +67,10 @@ object Af3Jobs {
   /** One job's task: `None` unless one of its summaries passes the gate
     * ([[Af3Pipeline.passesGate]]), before any other file is opened.
     */
-  private def runJob(f: JobFiles, p: Af3Params, state: TaskState,
+  private def runJob(f: JobFiles, p: Af3Params, state: Af3Io.TaskState,
       out: Option[Af3Outputs]): Option[JobResult] = {
-    val TaskState(conf, summaries, fullData) = state
-    if (!f.summaries.exists(u => summaries.read(u).exists(Af3Pipeline.passesGate(_, p))))
+    if (!f.summaries.exists(u =>
+        state.summaries.read(state.conf, u).exists(Af3Pipeline.passesGate(_, p))))
       return None
     val counters = scala.collection.mutable.LinkedHashMap(Counters.map(_ -> 0L): _*)
     def add(k: String, n: Long): Unit = counters(k) += n
@@ -91,7 +80,7 @@ object Af3Jobs {
     }
     def parse(m: Int): Seq[CifAtom] = timed("parse_ns") {
       f.models.filter(_._1 == m).flatMap { case (_, url) =>
-        val atoms = CifParser.readModel(conf.value, url).toSeq
+        val atoms = CifParser.readModel(state.conf, url).toSeq
         add("models", 1); add("atoms", atoms.size)
         atoms
       }
@@ -102,7 +91,7 @@ object Af3Jobs {
     val interacting = timed("pae_ns") {
       Af3Pipeline.paeBlock(info.map(c => (c.chain, c.residue_length)), p).toSeq.flatMap { block =>
         f.fullData.flatMap { url =>
-          val h = Af3Io.paeHits(fullData, url, block, p.maxPaeCutoff, p.minResidues)
+          val h = Af3Io.paeHits(state, url, block, p.maxPaeCutoff, p.minResidues)
           add("pae_cells", h.cells)
           h.hits
         }
@@ -119,7 +108,7 @@ object Af3Jobs {
         .map(m => m -> (if (m == 0) model0 else parse(m)))
       val parsed = counters("parse_ns")
       val t0 = System.nanoTime()
-      add("files", CifWriter.writeJob(f.job, byModel, members, p, o, conf.value))
+      add("files", CifWriter.writeJob(f.job, byModel, members, p, o, state.conf))
       // the sink's time without the parses of models 1.. it pulled
       add("sinks_ns", System.nanoTime() - t0 - (counters("parse_ns") - parsed))
     }

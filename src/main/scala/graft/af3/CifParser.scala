@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
 
 /** One parsed `_atom_site` row. Core fields are what the reference
   * consumes via BioPython (chain = auth_asym_id, res_id = auth_seq_id ->
@@ -226,16 +225,13 @@ object CifParser {
       parseAtomSite(job, m, decodeText(bytes))
     }
 
-  /** The atoms of the model files at `urls`, in one Spark job. The
-    * session's Hadoop conf reaches the tasks in one broadcast, left to
-    * Spark's `ContextCleaner` as the Dataset may run again
-    * ([[Af3Io.withBroadcast]]).
+  /** The atoms of the model files at `urls`, in one Spark job whose
+    * tasks read with `state`'s conf ([[Af3Io.perFile]]).
     */
-  private[af3] def atomsOf(spark: SparkSession, urls: Seq[String]): Dataset[CifAtom] = {
+  private[af3] def atomsOf(spark: SparkSession, state: Af3Io.TaskState,
+      urls: Seq[String]): Dataset[CifAtom] = {
     import spark.implicits._
-    val conf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    Af3Io.perFile(spark, urls).flatMap(readModel(conf.value.value, _)).toDS()
+    Af3Io.perFile(spark, state, urls)((s, url) => readModel(s.conf, url)).toDS()
   }
 
   /** Read all `*_model_*.cif` under `inputDir` (recursive) into a typed
@@ -243,8 +239,10 @@ object CifParser {
     * lists (py:348-349, 440-441). AppleDouble `._` siblings (py:560-566)
     * never reach it: the listing hides names that start with `.` or `_`.
     */
-  def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] =
-    atomsOf(spark, Af3Io.bundleFiles(spark, inputDir).models)
+  def readAtoms(spark: SparkSession, inputDir: String): Dataset[CifAtom] = {
+    val state = Af3Io.TaskState(spark)
+    atomsOf(spark, state, Af3Io.bundleFiles(state.conf, inputDir).models)
+  }
 
   def readAtomsDf(spark: SparkSession, inputDir: String): DataFrame =
     readAtoms(spark, inputDir).toDF()

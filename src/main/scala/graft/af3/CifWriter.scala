@@ -1,12 +1,16 @@
 package graft.af3
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
+
+import graft.suite.Artifacts.deleteOrWarn
 
 /** mmCIF and PyMOL rendering + per-key text file sinks.
   *
@@ -16,11 +20,12 @@ import org.apache.spark.util.SerializableConfiguration
   * expect single named files, so each executor task streams its keys'
   * rows to exact paths, in a deterministic order. An `_atom_site` line
   * has one renderer ([[appendAtom]]) and a `.pml` one ([[pml]]). All file
-  * IO goes through the Hadoop FileSystem API with the session's Hadoop
-  * configuration, broadcast once per Spark job ([[Af3Io.withBroadcast]])
-  * and read-only in the tasks, which share one copy per executor, so the
-  * sinks work on any cluster filesystem (HDFS/S3/local), not only a
-  * driver-shared local disk.
+  * IO goes through the Hadoop FileSystem API with the session's conf in
+  * one [[Af3Io.TaskState]], broadcast once per Spark job
+  * ([[Af3Io.withBroadcast]]) and read-only in the tasks, so the sinks work
+  * on any cluster filesystem (HDFS/S3/local). A temp that a failed delete
+  * leaves behind is logged (`Artifacts.deleteOrWarn`): it masks no
+  * failure and fails no output already in place.
   */
 object CifWriter {
 
@@ -212,18 +217,16 @@ object CifWriter {
     * (which would silently change behavior for every other writer in
     * the executor). HDFS/object stores pass through unchanged.
     */
-  private def rawFs(path: org.apache.hadoop.fs.Path,
-      conf: org.apache.hadoop.conf.Configuration): org.apache.hadoop.fs.FileSystem =
+  private def rawFs(path: Path, conf: Configuration): FileSystem =
     path.getFileSystem(conf) match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+      case c: ChecksumFileSystem => c.getRawFileSystem
       case o => o
     }
 
   /** Hadoop rename reports most failures via `false`, not an exception:
     * an unchecked rename would drop output silently.
     */
-  private def renameOrFail(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+  private def renameOrFail(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst)) sys.error(s"rename $src -> $dst failed")
 
   /** One output file `outDir/<key><suffix>`, written from an executor
@@ -233,12 +236,11 @@ object CifWriter {
     * complete file.
     */
   private final class KeyedFile(outDir: String, val key: String, suffix: String,
-      conf: org.apache.hadoop.conf.Configuration) {
+      conf: Configuration) {
     private val attempt = Option(org.apache.spark.TaskContext.get())
       .map(_.taskAttemptId()).getOrElse(0L)
-    private val finalPath = new org.apache.hadoop.fs.Path(outDir, key + suffix)
-    private val tmpPath = new org.apache.hadoop.fs.Path(outDir,
-      s".${key.replace('/', '_')}$suffix.__attempt_$attempt")
+    private val finalPath = new Path(outDir, key + suffix)
+    private val tmpPath = new Path(outDir, s".${key.replace('/', '_')}$suffix.__attempt_$attempt")
     private val fs = rawFs(finalPath, conf)
     private var renamed = false
     private val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
@@ -259,11 +261,11 @@ object CifWriter {
 
     /** Failure path: a temp that was never renamed (whether or not the
       * writer reached close — e.g. [[commit]]'s rename threw) must not
-      * survive as an orphan in outDir. A no-op after a commit.
+      * survive as an orphan in outDir unlogged. A no-op after a commit.
       */
     def abort(): Unit = {
       out.close()
-      if (!renamed && fs.exists(tmpPath)) fs.delete(tmpPath, false)
+      if (!renamed && fs.exists(tmpPath)) deleteOrWarn(fs, tmpPath)
     }
   }
 
@@ -277,12 +279,9 @@ object CifWriter {
       outDir: String,
       suffix: String,
       withCifHeader: Boolean = false): Unit = {
-    // the session's Hadoop conf, not a fresh Configuration() in the task,
-    // which would drop every spark.hadoop.* setting (credentials, custom
-    // schemes)
-    val conf = new SerializableConfiguration(
-      rendered.sparkSession.sparkContext.hadoopConfiguration)
-    Af3Io.withBroadcast(rendered.sparkSession, conf) { shared =>
+    // the session's conf: a fresh Configuration() in the task would drop
+    // every spark.hadoop.* and session setting (credentials, custom schemes)
+    Af3Io.withBroadcast(rendered.sparkSession, Af3Io.TaskState(rendered.sparkSession)) { shared =>
       rendered
         .repartition(col("file_key"))
         .sortWithinPartitions(col("file_key"), col("ord"))
@@ -295,7 +294,7 @@ object CifWriter {
               if (file == null || key != file.key) {
                 if (file != null) file.commit()
                 file = null
-                file = new KeyedFile(outDir, key, suffix, shared.value.value)
+                file = new KeyedFile(outDir, key, suffix, shared.value.conf)
                 if (withCifHeader) file.cifHeader()
               }
               file.line(r.getString(1))
@@ -320,8 +319,7 @@ object CifWriter {
     * and over [[Af3Pipeline.pymolScripts]]. Returns the files written.
     */
   private[af3] def writeJob(job: String, models: Iterator[(Int, Seq[CifAtom])],
-      members: Set[Int], p: Af3Params, out: Af3Outputs,
-      conf: org.apache.hadoop.conf.Configuration): Int = {
+      members: Set[Int], p: Af3Params, out: Af3Outputs, conf: Configuration): Int = {
     val listed = scala.collection.mutable.ArrayBuffer.empty[Int]
     val sb = new java.lang.StringBuilder(96)
     var files = 0
@@ -392,16 +390,19 @@ object CifWriter {
     val qe = renamed.queryExecution
     val rows = SQLExecution.withNewExecutionId(qe, Some("writeReportCsv"))(
       qe.executedPlan.executeCollect())
-    writeReport(renamed.sparkSession, renamed.schema, rows.iterator, outDir, p)
+    val spark = renamed.sparkSession
+    writeReport(spark, Af3Io.TaskState(spark).conf, renamed.schema, rows.iterator, outDir, p)
   }
 
   /** [[writeReportCsv]] over report rows built on the driver, in
-    * [[Af3Pipeline.reportSchema]]: no query plan and no Spark job.
+    * [[Af3Pipeline.reportSchema]], written with `conf` ([[Af3Stages.state]]):
+    * no query plan and no Spark job.
     */
-  private[graft] def writeReportRows(spark: SparkSession, rows: Seq[InternalRow], outDir: String,
-      p: Af3Params): Unit = {
+  private[graft] def writeReportRows(spark: SparkSession, conf: Configuration,
+      rows: Seq[InternalRow], outDir: String, p: Af3Params): Unit = {
     val names = reportHeaders(p).toMap
-    writeReport(spark, StructType(Af3Pipeline.reportSchema.map(f => f.copy(name = names(f.name)))),
+    writeReport(spark, conf,
+      StructType(Af3Pipeline.reportSchema.map(f => f.copy(name = names(f.name)))),
       rows.iterator, outDir, p)
   }
 
@@ -412,20 +413,19 @@ object CifWriter {
     * unchanged. The driver renders `rows` with Spark's own CSV writer
     * (`UnivocityGenerator`, `CSVOptions` with `header=true`), the bytes
     * `write.option("header", "true").csv` gives, and writes them through
-    * the Hadoop FileSystem of `outDir` (local, HDFS, or object store
-    * alike) as the part file of a temp dir, `.<name>.tmp/part-00000.csv`,
-    * renamed into place.
+    * `outDir`'s Hadoop FileSystem under `conf` (local, HDFS, or object
+    * store) as `.<name>.tmp/part-00000.csv`, renamed into place.
     */
-  private def writeReport(spark: SparkSession, schema: StructType, rows: Iterator[InternalRow],
-      outDir: String, p: Af3Params): Unit = {
+  private def writeReport(spark: SparkSession, conf: Configuration, schema: StructType,
+      rows: Iterator[InternalRow], outDir: String, p: Af3Params): Unit = {
     val name = s"interaction_analysis_PAE_${p.maxPaeCutoff}_max_dist_${p.maxDist}"
     val sql = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
     val options = new CSVOptions(Map("header" -> "true"), sql.csvColumnPruning,
       sql.sessionLocalTimeZone)
-    val target = new org.apache.hadoop.fs.Path(outDir, s"$name.csv")
-    val tmpDir = new org.apache.hadoop.fs.Path(outDir, s".$name.tmp")
-    val part = new org.apache.hadoop.fs.Path(tmpDir, "part-00000.csv")
-    val fs = rawFs(target, spark.sparkContext.hadoopConfiguration)
+    val target = new Path(outDir, s"$name.csv")
+    val tmpDir = new Path(outDir, s".$name.tmp")
+    val part = new Path(tmpDir, "part-00000.csv")
+    val fs = rawFs(target, conf)
     fs.delete(tmpDir, true)
     val writer = new java.io.OutputStreamWriter(fs.create(part, true),
       java.nio.charset.Charset.forName(options.charset))
@@ -435,11 +435,11 @@ object CifWriter {
       rows.foreach(gen.write)
       gen.close()
     } catch {
-      case e: Throwable => writer.close(); fs.delete(tmpDir, true); throw e
+      case e: Throwable => writer.close(); deleteOrWarn(fs, tmpDir); throw e
     }
     if (fs.exists(target)) fs.delete(target, false)
     // a failed rename leaves the temp dir (and the report in it) in place
     renameOrFail(fs, part, target)
-    fs.delete(tmpDir, true)
+    deleteOrWarn(fs, tmpDir)
   }
 }

@@ -48,11 +48,12 @@ final case class Af3Stages(spark: SparkSession, inputDir: String, p: Af3Params,
     out: Option[Af3Outputs] = None) {
   import spark.implicits._
 
-  private lazy val files = Af3Jobs.jobFiles(Af3Io.bundleFiles(spark, inputDir))
-  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, files, p, out)
+  private[graft] lazy val state = Af3Io.TaskState(spark)
+  private lazy val files = Af3Jobs.jobFiles(Af3Io.bundleFiles(state.conf, inputDir))
+  lazy val jobs: Seq[JobResult] = Af3Jobs.run(spark, state, files, p, out)
   // in job-name order, which is the report's row order
   lazy val binderDirs: Seq[String] = jobs.map(_.job_dir)
-  lazy val atoms: DataFrame = CifParser.atomsOf(spark,
+  lazy val atoms: DataFrame = CifParser.atomsOf(spark, state,
     files.filter(f => binderDirs.contains(f.job)).flatMap(_.models.map(_._2))).toDF()
   lazy val info: DataFrame = jobs.flatMap(j => j.info.map(c => (j.job_dir, c.chain,
     c.residue_length, c.sequence))).toDF("job_dir", "chain", "residue_length", "sequence")
@@ -112,7 +113,7 @@ object Af3Pipeline {
 
   /** [[gate]]'s rule over one row of [[Af3Io.readSummaries]]' scan, in
     * [[Af3Io.summarySchema]] order, for a task that reads the summary
-    * itself ([[Af3Io.summaryReader]]): the comparisons are Spark SQL's
+    * itself ([[Af3Io.TaskState]]'s `summaries`): the comparisons are Spark SQL's
     * (`SQLOrderingUtil.compareDoubles`: NaN above every number, -0.0
     * equal to 0.0), and an out-of-bounds or null PAE cell fails as the
     * null `get` does.

@@ -143,7 +143,7 @@ object Artifacts {
     * failure either: a delete that throws or returns `false` leaves one
     * stderr line with the path and the cause.
     */
-  private def deleteOrWarn(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def deleteOrWarn(fs: org.apache.hadoop.fs.FileSystem,
       path: org.apache.hadoop.fs.Path): Unit = {
     val cause =
       try { if (fs.delete(path, true)) None else Some("delete returned false") }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -11,33 +12,31 @@ import org.apache.spark.sql.execution.datasources.{CodecStreams, PartitionedFile
 import org.apache.spark.sql.execution.datasources.json.MultiLineJsonDataSource
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Spark's multi-line JSON reader for one file, callable from any task:
-  * the options, Hadoop conf, `JacksonParser` and `FailureSafeParser`
-  * (through `MultiLineJsonDataSource.readFile`) that a
-  * `spark.read.schema(schema).options(options).json(..)` scan builds for
-  * each file it reads, with `schema` the scan's pruned read schema and
-  * `filters` its pushed data filters. A task that reads the file itself
-  * therefore gets the rows that scan would get: the same parse mode,
-  * partial results and corrupt-record handling. Build it on the driver
-  * and ship it in a broadcast, as a scan ships its Hadoop conf: then
-  * every task thread of an executor calls one shared instance, which is
-  * why it is read-only. Each [[read]] and [[tokens]] builds its own
-  * parser and stream; the options, the conf and the lazily built Jackson
-  * factory (thread-safe once built) are only read.
+  * the options, `JacksonParser` and `FailureSafeParser` (through
+  * `MultiLineJsonDataSource.readFile`) a `spark.read.schema(schema)
+  * .options(options).json(..)` scan builds for each file, with `schema`
+  * its pruned read schema and `filters` its pushed data filters, so a
+  * task gets the rows that scan would: the same parse mode, partial
+  * results and corrupt-record handling. It holds no Hadoop conf: [[read]]
+  * and [[tokens]] open the file with the caller's. Built on the driver
+  * and broadcast, one instance serves every task thread of an executor,
+  * so it is read-only: each call builds its own parser and stream, and
+  * the options and the lazily built Jackson factory (thread-safe once
+  * built) are only read.
   */
 final class JsonFileReader private (options: JSONOptionsInRead, schema: StructType,
-    filters: Seq[Filter], conf: SerializableConfiguration) extends Serializable {
+    filters: Seq[Filter]) extends Serializable {
 
-  /** The rows of the file at `url` (a URL-encoded path). */
-  def read(url: String): Iterator[InternalRow] = {
+  /** The rows of the file at `url` (a URL-encoded path), opened with `conf`. */
+  def read(conf: Configuration, url: String): Iterator[InternalRow] = {
     val parser = new JacksonParser(
       StructType(schema.filterNot(_.name == options.columnNameOfCorruptRecord)), options,
       allowArrayAsStructs = true, filters)
     val file = PartitionedFile(InternalRow.empty, SparkPath.fromUrlString(url), 0L, 0L,
       Array.empty[String], 0L, 0L, Map.empty[String, Any])
-    MultiLineJsonDataSource.readFile(conf.value, file, parser, schema)
+    MultiLineJsonDataSource.readFile(conf, file, parser, schema)
   }
 
   @transient private lazy val factory: JsonFactory = options.buildJsonFactory()
@@ -47,8 +46,8 @@ final class JsonFileReader private (options: JSONOptionsInRead, schema: StructTy
     * options build and the same decoding (the `encoding` option, or
     * Jackson's detection without it). The stream is closed after `body`.
     */
-  def tokens[T](url: String)(body: JsonParser => T): T = {
-    val in = CodecStreams.createInputStreamWithCloseResource(conf.value,
+  def tokens[T](conf: Configuration, url: String)(body: JsonParser => T): T = {
+    val in = CodecStreams.createInputStreamWithCloseResource(conf,
       SparkPath.fromUrlString(url).toPath)
     val parser = try options.encoding
       .map(CreateJacksonParser.inputStream(_, factory, in))
@@ -68,8 +67,7 @@ object JsonFileReader {
     val parsed = new JSONOptionsInRead(options, state.conf.sessionLocalTimeZone,
       state.conf.columnNameOfCorruptRecord)
     require(parsed.multiLine, "JsonFileReader reads whole-file (multiLine) JSON only")
-    new JsonFileReader(parsed, schema, filters,
-      new SerializableConfiguration(state.newHadoopConfWithOptions(options)))
+    new JsonFileReader(parsed, schema, filters)
   }
 
   /** Run `body`, which launches the jobs that call [[JsonFileReader.read]],

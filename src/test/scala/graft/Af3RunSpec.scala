@@ -1,17 +1,28 @@
 package graft
 
 import java.io.File
+import java.net.URI
 import java.nio.file.Files
 
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.RawLocalFileSystem
 import org.apache.spark.BroadcastBlocks
+import org.apache.spark.sql.DataFrame
 import org.scalatest.concurrent.Eventually._
 
-import graft.af3.Af3Params
+import graft.af3.{Af3Io, Af3Params, CifParser, CifWriter}
+
+/** A local filesystem under a scheme that a spec maps to it only through
+  * the session's conf (`spark.conf.set`), never the context's.
+  */
+class SessionConfFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("sessionconf:///")
+}
 
 class Af3RunSpec extends SparkSpec {
+  import spark.implicits._
 
   /** Every file under `dir`, relative, hidden ones included. */
   private def listRel(dir: File): Set[String] = {
@@ -135,6 +146,35 @@ class Af3RunSpec extends SparkSpec {
 
   private def digests(out: File): Map[String, String] =
     listRel(out).toSeq.map(f => f -> sha256(new File(out, f))).toMap
+
+  test("every AF3 read and write honors a filesystem set only on the session") {
+    val src = new File(fixtureDir).toPath
+    val tree = Files.createTempDirectory("graft_session_fs")
+    Files.walk(src).forEach { p =>
+      val to = tree.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+    val out = Files.createTempDirectory("graft_session_fs_out").toFile
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def reads(dir: String): Seq[Seq[String]] = Seq(Af3Io.readSummaries(spark, dir),
+      Af3Io.readPaeLong(spark, dir), Af3Io.runLog(spark, dir),
+      CifParser.readAtoms(spark, dir).toDF()).map(rows)
+    val want = reads(s"file://$tree")
+    assert(want.forall(_.nonEmpty))
+    val keys = Seq("fs.sessionconf.impl" -> classOf[SessionConfFs].getName,
+      // no cached instance to fall back on: each read resolves the scheme
+      // from the conf it was given
+      "fs.sessionconf.impl.disable.cache" -> "true")
+    try {
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      Af3Run.run(spark, s"sessionconf://$tree", s"sessionconf://$out/run", Af3Params())
+      assert(digests(new File(out, "run")) === goldenDigests)
+      assert(reads(s"sessionconf://$tree") === want)
+      CifWriter.writeKeyedText(Seq(("k", 2, "b"), ("k", 1, "a")).toDF("file_key", "ord", "line"),
+        s"sessionconf://$out/keyed", ".txt")
+      assert(lines(new File(out, "keyed/k.txt")) === Seq("a", "b"))
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
 
   /** Every `_atom_site` row of a written CIF. */
   private def atomRows(f: File): Seq[String] =

@@ -1,6 +1,6 @@
 package graft.af3
 
-import java.io.File
+import java.io.{ByteArrayOutputStream, File, PrintStream}
 import java.net.URI
 import java.nio.file.Files
 
@@ -18,6 +18,17 @@ class ReportRenameFailsFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("renamefails:///")
   override def rename(src: Path, dst: Path): Boolean =
     !dst.getName.startsWith("interaction_analysis_") && super.rename(src, dst)
+}
+
+/** A local filesystem under its own scheme whose deletes report failure
+  * the way Hadoop does: `false`, no exception, nothing deleted. A rename
+  * onto a `.cif` file fails the same way; every other rename succeeds.
+  */
+class DeleteRefusedFs extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("deleterefused:///")
+  override def delete(f: Path, recursive: Boolean): Boolean = false
+  override def rename(src: Path, dst: Path): Boolean =
+    !dst.getName.endsWith(".cif") && super.rename(src, dst)
 }
 
 /** A local filesystem under a scheme that only the session's Hadoop conf
@@ -188,5 +199,51 @@ class CifWriterSpec extends SparkSpec {
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
     assert(parts.size === 1)
     assert(Files.readAllLines(parts.head.toPath).contains("job_binder,2-8,CDEFGHI,2-6,RSTVW"))
+  }
+
+  /** What `body` prints to stderr, and its outcome. */
+  private def stderrOf[T](body: => T): (String, scala.util.Try[T]) = {
+    val err = new ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new PrintStream(err, true))
+    val outcome = try scala.util.Try(body) finally System.setErr(saved)
+    (err.toString, outcome)
+  }
+
+  test("writeReportCsv logs a temp dir it cannot delete and keeps the report") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.deleterefused.impl", classOf[DeleteRefusedFs].getName)
+    val out = Files.createTempDirectory("graft_report_delete").toFile
+    val p = Af3Params()
+    val report = spark.createDataFrame(Seq(("job_binder", "2-8", "CDEFGHI", "2-6", "RSTVW")))
+      .toDF("folder_name", "contact_residues_poi", "contact_sequence",
+        "interacting_residues_partner", "interacting_sequence")
+
+    val (log, outcome) = stderrOf(
+      CifWriter.writeReportCsv(report, s"deleterefused://${out.getPath}", p))
+    assert(outcome.isSuccess, outcome)
+    val name = s"interaction_analysis_PAE_${p.maxPaeCutoff}_max_dist_${p.maxDist}"
+    assert(Files.readAllLines(new File(out, s"$name.csv").toPath)
+      .contains("job_binder,2-8,CDEFGHI,2-6,RSTVW"))
+    assert(new File(out, s".$name.tmp").isDirectory)
+    assert(log.contains(s".$name.tmp: delete returned false"), log)
+  }
+
+  test("a keyed file whose temp cannot be deleted after a failed commit is logged") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.deleterefused.impl", classOf[DeleteRefusedFs].getName)
+    val out = Files.createTempDirectory("graft_keyed_delete").toFile
+    val o = Af3Outputs(s"deleterefused://${out.getPath}/inter",
+      s"deleterefused://${out.getPath}/over")
+    val (log, outcome) = stderrOf(CifWriter.writeJob("j", Iterator(0 -> Seq(atom("A", 1, "N", 1))),
+      Set.empty, Af3Params(), o, spark.sparkContext.hadoopConfiguration))
+    // the commit's failure, not the delete's, reaches the caller
+    assert(outcome.failed.get.getMessage.contains("rename"), outcome)
+    // the temps of both files stay, each with a line that names it
+    val temps = Seq("over/.j_model_0.cif.__attempt_0", "inter/.j_interaction.cif.__attempt_0")
+    for (t <- temps) {
+      assert(new File(out, t).isFile, t)
+      assert(log.contains(s"$t: delete returned false"), log)
+    }
   }
 }

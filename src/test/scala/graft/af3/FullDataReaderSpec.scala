@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.{col, input_file_name}
 import graft.SparkSpec
 import graft.functions.Scalars
 
-/** The `full_data` reader ([[Af3Io.fullDataReader]] +
+/** The `full_data` reader ([[Af3Io.TaskState]]'s `fullData` +
   * [[Af3Io.paeMatrices]]), which [[Af3Io.readPaeLong]] and a job's task
   * read with, against Spark's own scan of the files, `readPaeLong` here:
   * over an edge corpus, both must keep and drop the same files and rows
@@ -102,7 +102,7 @@ class FullDataReaderSpec extends SparkSpec {
     ("utf16" -> s"""{"pae": $row, "token_res_ids": [1, 2]}""".getBytes("UTF-16"))
 
   private def fullDataFiles: Seq[String] =
-    Af3Io.bundleFiles(spark, tree).fullData
+    Af3Io.bundleFiles(Af3Io.TaskState(spark).conf, tree).fullData
 
   private lazy val tree: String = {
     val root = Files.createTempDirectory("graft_full_data_corpus")
@@ -136,9 +136,10 @@ class FullDataReaderSpec extends SparkSpec {
       .map { case (job, rows) => job -> rows.map(r => fromScan(r.getSeq[collection.Seq[java.lang.Double]](1))) }
 
   private def inTask(): Map[String, Seq[Matrix]] = {
-    val reader = Af3Io.fullDataReader(spark)
+    val state = Af3Io.TaskState(spark)
     fullDataFiles.map { url =>
-      url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).map(fromTask)
+      url.split("/").init.last ->
+        Af3Io.paeMatrices(state.fullData.read(state.conf, url)).map(fromTask)
     }.filter(_._2.nonEmpty).toMap
   }
 
@@ -157,10 +158,11 @@ class FullDataReaderSpec extends SparkSpec {
   }
 
   test("the reader is serializable and reads the same inside a task") {
-    val reader = Af3Io.fullDataReader(spark)
+    val state = Af3Io.TaskState(spark)
     val urls = fullDataFiles
     val kept = spark.sparkContext.parallelize(urls, 4)
-      .map(url => url.split("/").init.last -> Af3Io.paeMatrices(reader.read(url)).size)
+      .map(url =>
+        url.split("/").init.last -> Af3Io.paeMatrices(state.fullData.read(state.conf, url)).size)
       .collect().toMap
     assert(kept.filter(_._2 > 0) === inTask().map { case (job, ms) => job -> ms.size })
   }
@@ -174,7 +176,7 @@ class FullDataReaderSpec extends SparkSpec {
     val scanned = readPaeLong(tree).collect().toSeq.groupBy(_.getString(0))
       .map { case (job, rows) =>
         job -> rows.map(r => arrayData(r.getSeq[collection.Seq[java.lang.Double]](1))) }
-    val reader = Af3Io.fullDataReader(spark)
+    val state = Af3Io.TaskState(spark)
     // empty, in range, ragged, partly and wholly out of range, inverted
     val blocks = Seq((0L, 0L, 0L, 0L), (0L, 1L, 1L, 2L), (0L, 2L, 0L, 2L), (1L, 4L, 0L, 4L),
       (0L, 5L, 2L, 6L), (3L, 9L, 4L, 9L), (7L, 9L, 7L, 9L), (2L, 1L, 3L, 1L))
@@ -189,7 +191,7 @@ class FullDataReaderSpec extends SparkSpec {
         .toIntArray().toSeq)
       val wantCells = ms.map(m => (0 until m.numElements())
         .map(i => if (m.isNullAt(i)) 0L else m.getArray(i).numElements().toLong).sum).sum
-      val got = Af3Io.paeHits(reader, url, block, cutoff, minHits)
+      val got = Af3Io.paeHits(state, url, block, cutoff, minHits)
       val at = s"job $job, block $block, cutoff $cutoff, min $minHits"
       assert(got.hits.toSeq === wantHits, at)
       // a stream that aborts part-way counts none of the cells it read

@@ -9,13 +9,13 @@ import org.apache.spark.sql.functions.input_file_name
 import graft.SparkSpec
 import graft.functions.Scalars
 
-/** The in-task gate ([[Af3Io.summaryReader]] + [[Af3Pipeline.passesGate]]
-  * over the summaries [[Af3Jobs.jobFiles]] groups) against the DataFrame
-  * gate over Spark's own scan of the summaries, `Af3Pipeline.gate(
-  * readSummaries(..))`: over an edge corpus and a grid of parameters,
-  * both must pass the same jobs, and the reader, which
-  * [[Af3Io.readSummaries]] reads with, must read every summary as the
-  * scan does.
+/** The in-task gate ([[Af3Io.TaskState]]'s `summaries` +
+  * [[Af3Pipeline.passesGate]] over the summaries [[Af3Jobs.jobFiles]]
+  * groups) against the DataFrame gate over Spark's own scan of the
+  * summaries, `Af3Pipeline.gate(readSummaries(..))`: over an edge
+  * corpus and a grid of parameters, both must pass the same jobs, and
+  * the reader, which [[Af3Io.readSummaries]] reads with, must read every
+  * summary as the scan does.
   */
 class SummaryGateSpec extends SparkSpec {
 
@@ -110,7 +110,7 @@ class SummaryGateSpec extends SparkSpec {
   }
 
   private def jobs: Seq[Af3Jobs.JobFiles] =
-    Af3Jobs.jobFiles(Af3Io.bundleFiles(spark, tree))
+    Af3Jobs.jobFiles(Af3Io.bundleFiles(Af3Io.TaskState(spark).conf, tree))
 
   private val params = Seq(
     Af3Params(),
@@ -132,12 +132,12 @@ class SummaryGateSpec extends SparkSpec {
     Af3Params(minPtmCutoff = Double.NegativeInfinity, maxPaeCutoff = -1.0))
 
   test("the in-task gate passes the jobs Af3Pipeline.gate(readSummaries) passes") {
-    val reader = Af3Io.summaryReader(spark)
+    val state = Af3Io.TaskState(spark)
     val summaries = readSummaries(tree)
     for (p <- params) {
       val want = Af3Pipeline.gate(summaries, p).select("job_dir").collect()
         .map(_.getString(0)).toSet
-      val got = jobs.filter(_.summaries.exists(u => reader.read(u).exists(
+      val got = jobs.filter(_.summaries.exists(u => state.summaries.read(state.conf, u).exists(
         Af3Pipeline.passesGate(_, p)))).map(_.job).toSet
       assert(got === want, s"params $p")
     }
@@ -167,8 +167,9 @@ class SummaryGateSpec extends SparkSpec {
     val want = readSummaries(tree).queryExecution.toRdd
       .map(r => r.getUTF8String(4).toString -> cells(r)).collect().toSeq
       .groupMap(_._1)(_._2).map { case (j, rs) => j -> rs.toSet }
-    val reader = Af3Io.summaryReader(spark)
-    val got = jobs.map(j => j.job -> j.summaries.flatMap(u => reader.read(u).map(cells)).toSet)
+    val state = Af3Io.TaskState(spark)
+    val got = jobs.map(j =>
+        j.job -> j.summaries.flatMap(u => state.summaries.read(state.conf, u).map(cells)).toSet)
       .filter(_._2.nonEmpty).toMap
     assert(got === want)
     // an empty or blank file has no row in either reader

@@ -72,25 +72,24 @@ class TaskClosureSpec extends SparkSpec {
 
   spark.sparkContext.hadoopConfiguration.set("fs.gated.impl", classOf[GatedFs].getName)
 
-  /** The classes in the task binary of each stage `action` has submitted
-    * when its tasks first open or create a gated file, by broadcast id.
+  /** The broadcasts `action` has made when its tasks first open or
+    * create a gated file, by id: the task binary of each stage it has
+    * submitted (an `Array[Byte]`) and the values its jobs ship.
     */
-  private def shipped(action: => Unit): Map[Long, Set[Class[_]]] = {
+  private def broadcasts(action: => Unit): Map[Long, Any] = {
     val before = BroadcastBlocks.values().keySet
-    GatedFs.holding(action) {
-      BroadcastBlocks.values().collect { case (id, b: Array[Byte]) if !before(id) =>
-        id -> BroadcastBlocks.classesIn(b)
-      }
-    }
+    GatedFs.holding(action)(BroadcastBlocks.values().filter { case (id, _) => !before(id) })
   }
 
   private def isConf(c: Class[_]): Boolean =
     classOf[Configuration].isAssignableFrom(c) || c == classOf[SerializableConfiguration]
 
-  test("no AF3 Spark job ships a Hadoop conf in its task closure") {
+  private lazy val out = Files.createTempDirectory("graft_task_closure").toFile
+
+  /** Each AF3 Spark job, by its entry point, over the fixture tree. */
+  private lazy val sites = {
     val tree = s"gated://$fixtureDir"
-    val out = Files.createTempDirectory("graft_task_closure").toFile
-    val sites = Seq[(String, () => Unit)](
+    Seq[(String, () => Unit)](
       "Af3Run.run" -> (() => Af3Run.run(spark, tree, new File(out, "run").getPath, Af3Params())),
       "readSummaries" -> (() => Af3Io.readSummaries(spark, tree).count()),
       "readPaeLong" -> (() => Af3Io.readPaeLong(spark, tree).count()),
@@ -98,13 +97,31 @@ class TaskClosureSpec extends SparkSpec {
       "readAtoms" -> (() => CifParser.readAtoms(spark, tree).count()),
       "writeKeyedText" -> (() => CifWriter.writeKeyedText(
         Seq(("k", 1, "line")).toDF("file_key", "ord", "line"), s"gated://$out/keyed", ".txt")))
+  }
+
+  test("no AF3 Spark job ships a Hadoop conf in its task closure") {
     for ((site, action) <- sites) {
-      val binaries = shipped(action())
+      val binaries = broadcasts(action()).collect { case (id, b: Array[Byte]) =>
+        id -> BroadcastBlocks.classesIn(b)
+      }
       assert(binaries.nonEmpty, site)
       for ((id, classes) <- binaries)
         assert(!classes.exists(isConf), s"$site: task binary $id holds " +
           classes.filter(isConf).map(_.getName).mkString(", "))
     }
     assert(Files.readAllLines(new File(out, "keyed/k.txt").toPath).toArray.toSeq === Seq("line"))
+  }
+
+  test("every AF3 Spark job broadcasts exactly one Hadoop conf") {
+    for ((site, action) <- sites) {
+      val values = broadcasts(action()).values.filterNot(_.isInstanceOf[Array[Byte]])
+        .map(BroadcastBlocks.serialized).toSeq
+      val confs = values.map(BroadcastBlocks.instancesIn(_).collect {
+        case (c, n) if isConf(c) => n
+      }.sum).sum
+      info(s"$site: ${values.size} broadcast value(s), ${values.map(_.length).sum} bytes, " +
+        s"$confs Hadoop conf(s)")
+      assert(confs === 1, site)
+    }
   }
 }
